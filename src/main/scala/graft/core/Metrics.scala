@@ -24,7 +24,7 @@ import java.util.concurrent.ConcurrentHashMap
   * same way the reference's HTTP listener is (SURVEY §2.7).
   *
   * Phase breakdown is OPT-IN: the merge plan is normally one fused Spark
-  * job (strictly better than the reference's five serialized statements),
+  * plan (strictly better than the reference's five serialized statements),
   * so per-phase walls don't exist unless the merge materializes phase
   * boundaries. `enablePhaseBreakdown(true)` makes
   * [[graft.merge.CdcMerge.merge]] localCheckpoint each phase — the same

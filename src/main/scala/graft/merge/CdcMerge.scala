@@ -19,9 +19,13 @@ import org.apache.spark.sql.functions._
   *    micro-batch's keys. A micro-batch is bounded (reference default 10Mi,
   *    REDSHIFTSINK.md:53), so we `broadcast` the stage keys: the target is
   *    never shuffled, which is the difference between O(batch) and
-  *    O(target) network at 100 TB targets.
-  *  - R5 skipMerge: insert-only batches append directly, skipping both
-  *    shuffles entirely (load_processor.go:774-825).
+  *    O(target) network at 100 TB targets. The keys come from the RAW
+  *    stage, not the deduped one: dedupe keeps one row per PK, so the key
+  *    set is the same, and the dedupe shuffle then runs once (for the
+  *    inserted rows) instead of twice.
+  *  - R5 skipMerge: insert-only batches append directly, skipping the
+  *    dedupe shuffle, the key broadcast and the target rewrite
+  *    (load_processor.go:774-825).
   */
 object CdcMerge {
 
@@ -38,11 +42,13 @@ object CdcMerge {
 
   /** R2 — delete-common: drop target rows whose PK appears in the stage
     * (redshift.go:700-753). Stage keys are broadcast by default — the
-    * micro-batch is small, the target is not. */
+    * micro-batch is small, the target is not. Duplicate stage keys are
+    * harmless (a left-anti join only asks whether a key exists), so the
+    * keys are not distinct'ed: that would be a shuffle of its own. */
   def deleteCommon(
       target: DataFrame, stage: DataFrame, pks: Seq[String],
       broadcastStage: Boolean = true): DataFrame = {
-    val keys = stage.select(pks.map(col): _*).distinct()
+    val keys = stage.select(pks.map(col): _*)
     target.join(if (broadcastStage) broadcast(keys) else keys, pks, "left_anti")
   }
 
@@ -70,8 +76,10 @@ object CdcMerge {
     * target's columns.
     *
     * Normally ONE fused Spark plan — Catalyst pipelines all four phases
-    * into a single job, which is strictly better than the reference's
-    * serialized SQL statements. When
+    * into a single write, which is strictly better than the reference's
+    * serialized SQL statements. Under AQE that write runs three jobs:
+    * the broadcast of the raw stage's keys (R2), the one PK shuffle of
+    * the dedupe (R1), and the write itself. When
     * [[graft.core.Metrics.enablePhaseBreakdown]] is on, each phase is
     * localCheckpoint'ed so its wall time is observable under the
     * reference's histogram names (dedupe / deletecommon / deleteop;
@@ -85,7 +93,7 @@ object CdcMerge {
     graft.core.Metrics.mergeRecorder() match {
       case None =>
         val deduped = dedupe(stage, pks)
-        val kept = deleteCommon(target, deduped, pks, broadcastStage)
+        val kept = deleteCommon(target, stage, pks, broadcastStage)
         val inserted = insertable(dropDeleteOps(deduped))
         // allowMissingColumns = add-column schema evolution (D4's
         // transact-able class) for free: old target rows read NULL for
@@ -95,7 +103,7 @@ object CdcMerge {
         val deduped = rec.time("dedupe")(
           dedupe(stage, pks).localCheckpoint())
         val kept = rec.time("deletecommon")(
-          deleteCommon(target, deduped, pks, broadcastStage)
+          deleteCommon(target, stage, pks, broadcastStage)
             .localCheckpoint())
         val inserted = rec.time("deleteop")(
           insertable(dropDeleteOps(deduped)).localCheckpoint())

@@ -7,7 +7,7 @@ import graft.merge.CdcMerge
 import graft.schema.DebeziumSchema
 import graft.sources.{ConfluentAvro, SchemaFetcher}
 import graft.warehouse.TableStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -166,101 +166,115 @@ object CdcStream {
       catalog: TableStore,
       cfg: TopicConfig,
       tag: String): Seq[Job] = {
+    // Primary keys come from the Kafka key schema (the reference's
+    // schemaIdKey, serializer/message.go:25-37): one framed key's schema
+    // id, resolved against the registry. Keys get the same framing guard
+    // as values: with a non-Avro key converter upstream (JSON/string
+    // keys), schemaId would yield garbage and schemaById would kill the
+    // stream — unframed keys fall back to the no-key-schema PK path.
+    val keySid =
+      if (batch.columns.contains("key"))
+        when(ConfluentAvro.isFramed(col("key")), ConfluentAvro.schemaId(col("key")))
+      else lit(null).cast(IntegerType)
+    // The batch header — schema ids (one per concurrent schema version:
+    // almost always 1, briefly 2 during a migration), the batcher byte
+    // and message counters and the key schema id — rides the ONE job
+    // that checkpoints the framed batch, as an observed metric. Every
+    // later step reads the checkpoint, so the source is fetched once per
+    // trigger, not once per action.
+    val hdrAggs = Seq(collect_set(col("__sid")).as("sids"),
+      sum(octet_length(col("value"))).as("bytes"),
+      count(lit(1)).as("n"), min(col("__ksid")).as("ksid"))
+    val hdrObs = Observation()
     // Tombstones out (P11), then corrupt frames: anything without the
     // Confluent magic byte cannot be decoded — drop rather than kill the
     // stream (the reference's deserializer rejects them per message,
     // serializer.go:56-64).
     val frames = DebeziumTransform.dropTombstones(batch)
       .filter(ConfluentAvro.isFramed(col("value")))
-      .withColumn("__sid", ConfluentAvro.schemaId(col("value")))
-    // Schema ids in this batch: tiny driver-side set (one per concurrent
-    // schema version — almost always 1, briefly 2 during a migration).
-    // The batcher byte counter rides the SAME aggregation job — no extra
-    // scan of the batch for observability.
-    val hdr = frames.agg(collect_set(col("__sid")).as("__sids"),
-      sum(octet_length(col("value"))).as("__bytes"),
-      count(lit(1)).as("__n")).head()
+      .select(col("offset"), col("value"),
+        ConfluentAvro.schemaId(col("value")).as("__sid"), keySid.as("__ksid"))
+      .observe(hdrObs, hdrAggs.head, hdrAggs.tail: _*)
+      .localCheckpoint()
+    Metrics.deferUnpersist(frames)
+    val hdr = observedRow(hdrObs, frames, hdrAggs)
     val sids = hdr.getSeq[Int](0).toArray
     Metrics.add(tag, "batcher_bytes_processed",
       if (hdr.isNullAt(1)) 0L else hdr.getLong(1))
     Metrics.add(tag, "batcher_messages_processed", hdr.getLong(2))
-
-    // Primary keys come from the Kafka key schema (the reference's
-    // schemaIdKey, serializer/message.go:25-37): sample one key frame,
-    // resolve its schema id against the registry.
-    // Keys get the same framing guard as values: with a non-Avro key
-    // converter upstream (JSON/string keys), schemaId would yield garbage
-    // or null and schemaById would kill the stream — fall back to the
-    // no-key-schema PK path instead.
     val keySchemaJson: Option[String] =
-      if (frames.columns.contains("key"))
-        frames.filter(ConfluentAvro.isFramed(col("key")))
-          .select(ConfluentAvro.schemaId(col("key")))
-          .limit(1).collect().headOption
-          .map(r => fetcher.schemaById(r.getInt(0)))
-      else None
+      if (hdr.isNullAt(3)) None else Some(fetcher.schemaById(hdr.getInt(3)))
 
     sids.sorted.map { sid =>
       val group = frames.filter(col("__sid") === sid)
       val (masked, spec) =
         decodeGroup(group, fetcher.schemaById(sid), cfg, keySchemaJson)
-      val cached = masked.cache()
-      try {
-        // copystage analog: the first action populates the cached
-        // decode→transform→mask result — the reference's staging-table
-        // COPY (load_processor.go:386-444 stage population). Per-op
-        // counts (R6) and the offset bounds ride ONE fused aggregate:
-        // every driver-side action here is a full job launch per
-        // trigger, and the audit header doesn't need two of them.
-        def opCount(op: String) =
-          sum(when(col(Cdc.OperationColumn) === op, 1L).otherwise(0L))
-        val hdr2 = Metrics.time(tag, "loader_copystage_seconds")(
-          cached.agg(
-            opCount(Cdc.OpCreate), opCount(Cdc.OpUpdate),
-            opCount(Cdc.OpDelete),
-            min(col(Cdc.OffsetColumn).cast(LongType)),
-            max(col(Cdc.OffsetColumn).cast(LongType))).head())
-        def cnt(i: Int) = if (hdr2.isNullAt(i)) 0L else hdr2.getLong(i)
-        val (creates, updates, deletes) = (cnt(0), cnt(1), cnt(2))
-        val (startOff, endOff) = (cnt(3), cnt(4))
-        // R5 applies only when the batch's columns match the live table:
-        // parquet append doesn't widen the read schema, so a schema change
-        // (D4 add/drop column) must go through the merge rewrite — the
-        // reference likewise migrates the table before any load
-        // (load_processor.go:395-444).
-        val skip = CdcMerge.skipMergeEligible(creates, updates, deletes) &&
-          appendGateOk(catalog, cfg, cached)
+      // copystage analog: ONE job checkpoints the decode→transform→mask
+      // result — the reference's staging-table COPY
+      // (load_processor.go:386-444 stage population) — and the per-op
+      // counts (R6) and offset bounds ride it as an observed metric.
+      // The checkpoint lives until processBatch drains it, after the
+      // target write.
+      def opCount(op: String) =
+        sum(when(col(Cdc.OperationColumn) === op, 1L).otherwise(0L))
+      val stageAggs = Seq(
+        opCount(Cdc.OpCreate).as("c"), opCount(Cdc.OpUpdate).as("u"),
+        opCount(Cdc.OpDelete).as("d"),
+        min(col(Cdc.OffsetColumn).cast(LongType)).as("lo"),
+        max(col(Cdc.OffsetColumn).cast(LongType)).as("hi"))
+      val stageObs = Observation()
+      val stage = Metrics.time(tag, "loader_copystage_seconds")(
+        masked.observe(stageObs, stageAggs.head, stageAggs.tail: _*)
+          .localCheckpoint())
+      Metrics.deferUnpersist(stage)
+      val hdr2 = observedRow(stageObs, stage, stageAggs)
+      def cnt(i: Int) = if (hdr2.isNullAt(i)) 0L else hdr2.getLong(i)
+      val (creates, updates, deletes) = (cnt(0), cnt(1), cnt(2))
+      val (startOff, endOff) = (cnt(3), cnt(4))
+      // R5 applies only when the batch's columns match the live table:
+      // parquet append doesn't widen the read schema, so a schema change
+      // (D4 add/drop column) must go through the merge rewrite — the
+      // reference likewise migrates the table before any load
+      // (load_processor.go:395-444).
+      val skip = CdcMerge.skipMergeEligible(creates, updates, deletes) &&
+        appendGateOk(catalog, cfg, stage)
 
-        // PK precedence: explicit config > key schema > first column.
-        val pks =
-          if (cfg.primaryKeys.nonEmpty) cfg.primaryKeys
-          else if (spec.primaryKeys.nonEmpty) spec.primaryKeys
-          else Seq(spec.columns.head.lowerName)
-        // copytarget: the write into the live table (with phase breakdown
-        // on, the merge phases checkpoint themselves first, so this is
-        // the write proper; off, it's the whole fused merge job)
-        Metrics.time(tag, "loader_copytarget_seconds") {
-          if (skip)
-            catalog.append(cfg.targetSchema, cfg.targetTable,
-              CdcMerge.insertable(cached), pks)
-          else
-            catalog.merge(cfg.targetSchema, cfg.targetTable, cached, pks)
-        }
-        Metrics.add(tag, "loader_messages_loaded",
-          creates + updates + deletes)
+      // PK precedence: explicit config > key schema > first column.
+      val pks =
+        if (cfg.primaryKeys.nonEmpty) cfg.primaryKeys
+        else if (spec.primaryKeys.nonEmpty) spec.primaryKeys
+        else Seq(spec.columns.head.lowerName)
+      // copytarget: the write into the live table (with phase breakdown
+      // on, the merge phases checkpoint themselves first, so this is
+      // the write proper; off, it's the whole fused merge job)
+      Metrics.time(tag, "loader_copytarget_seconds") {
+        if (skip)
+          catalog.append(cfg.targetSchema, cfg.targetTable,
+            CdcMerge.insertable(stage), pks)
+        else
+          catalog.merge(cfg.targetSchema, cfg.targetTable, stage, pks)
+      }
+      Metrics.add(tag, "loader_messages_loaded",
+        creates + updates + deletes)
 
-        Job(
-          upstreamTopic = cfg.topic,
-          startOffset = startOff,
-          endOffset = endOff,
-          schemaId = sid,
-          skipMerge = skip,
-          createEvents = creates,
-          updateEvents = updates,
-          deleteEvents = deletes)
-      } finally cached.unpersist()
+      Job(
+        upstreamTopic = cfg.topic,
+        startOffset = startOff,
+        endOffset = endOff,
+        schemaId = sid,
+        skipMerge = skip,
+        createEvents = creates,
+        updateEvents = updates,
+        deleteEvents = deletes)
     }.toSeq
   }
+
+  /** The observed header row of a checkpoint, or — if the metric never
+    * arrives (see [[Observed]]) — the same aggregates recounted over the
+    * checkpoint, one extra job on cached blocks. */
+  private def observedRow(obs: Observation, checkpoint: DataFrame,
+      aggs: Seq[Column]): Row =
+    Observed.row(obs).getOrElse(checkpoint.agg(aggs.head, aggs.tail: _*).head())
 
   /** One query per topic (T7/O2: the reference's per-topic consumer
     * fleet). Each topic gets its own checkpoint subdirectory and target

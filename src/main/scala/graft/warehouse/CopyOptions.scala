@@ -6,9 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.Shims
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.{DataType, StringType, StructField}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's COPY value policies (tipoca-stream
@@ -116,19 +115,27 @@ object CopyOptions {
     * width gets ACCEPTINVCHARS then TRUNCATECOLUMNS before the write —
     * what the reference's `COPY … TRUNCATECOLUMNS ACCEPTINVCHARS` does
     * server-side on every load (redshift.go:875-887). Non-string and
-    * undeclared columns pass through untouched. */
+    * undeclared columns pass through untouched, in place.
+    *
+    * One `select` over all columns: a `withColumn` per clamped column
+    * would re-analyse the growing plan once per column, on every
+    * trigger. */
   def clamp(df: DataFrame, spec: TableSpec,
-      replacement: String = "?"): DataFrame =
-    spec.columns.foldLeft(df) { (d, c) =>
-      varcharBytes(c) match {
-        case Some(nBytes) if d.columns.contains(c.lowerName) &&
-            d.schema(c.lowerName).dataType == StringType =>
-          d.withColumn(c.lowerName,
-            truncateColumns(acceptInvChars(col(c.lowerName), replacement),
-              nBytes))
-        case _ => d
-      }
-    }
+      replacement: String = "?"): DataFrame = {
+    val widths = spec.columns
+      .flatMap(c => varcharBytes(c).map(c.lowerName -> _)).toMap
+    val fields = df.schema.fields
+    def clamped(f: StructField) =
+      f.dataType == StringType && widths.contains(f.name)
+    if (!fields.exists(clamped)) df
+    else df.select(fields.toIndexedSeq.map { f =>
+      val c = df.col(s"`${f.name.replace("`", "``")}`")
+      if (clamped(f))
+        truncateColumns(acceptInvChars(c, replacement), widths(f.name))
+          .as(f.name)
+      else c
+    }: _*)
+  }
 }
 
 /** Whole-character UTF-8 byte truncation (TRUNCATECOLUMNS). */

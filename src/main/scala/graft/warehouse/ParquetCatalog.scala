@@ -2,7 +2,11 @@ package graft.warehouse
 
 import graft.merge.CdcMerge
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
+import scala.util.Try
 
 /** Spark-native warehouse: each table is a parquet directory under
   * `root/<schema>/<table>`. Replaces the reference's Redshift target for
@@ -28,6 +32,10 @@ final class ParquetCatalog(spark: SparkSession, root: String)
 
   def tablePath(schema: String, table: String): String = s"$root/$schema/$table"
 
+  /** Footer key under which Spark's parquet writer stores the row schema
+    * (`ParquetReadSupport.SPARK_METADATA_KEY`). */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
   def exists(schema: String, table: String): Boolean = {
     recoverSwap(schema, table)
     fs.exists(new Path(tablePath(schema, table)))
@@ -44,10 +52,49 @@ final class ParquetCatalog(spark: SparkSession, root: String)
   private def recoverSwap(schema: String, table: String): Unit =
     AtomicDir.recover(fs, new Path(tablePath(schema, table)))
 
+  /** The table as a DataFrame, with the schema `spark.read.parquet` would
+    * infer but without its inference job: schema inference launches a
+    * Spark job to read one footer, and every merge and read loads the
+    * table. The Spark schema the writer stored in that footer's key-value
+    * metadata is read here on the driver instead ([[writtenSchema]]);
+    * directories without it (foreign writers, partitioned layouts) fall
+    * back to inference. */
   def load(schema: String, table: String): DataFrame = {
     recoverSwap(schema, table)
-    spark.read.parquet(tablePath(schema, table))
+    val path = tablePath(schema, table)
+    writtenSchema(new Path(path)) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path)
+    }
   }
+
+  /** The Spark schema stored in the footer that parquet schema inference
+    * reads when it does not merge schemas: `_common_metadata`, else
+    * `_metadata`, else the first data file by path. Hidden entries are
+    * the ones Spark's file listing skips. None when schema merging is on,
+    * the directory holds a visible subdirectory (a partitioned layout),
+    * or the footer carries no Spark schema. */
+  private def writtenSchema(dir: Path): Option[StructType] =
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+    else Try {
+      def hidden(n: String) = (n.startsWith("_") && !n.contains("=")) ||
+        n.startsWith(".") || n.endsWith("._COPYING_")
+      val (dirs, files) = fs.listStatus(dir).partition(_.isDirectory)
+      val paths = files.map(_.getPath).sortBy(_.toString)
+      def named(n: String) = paths.find(_.getName == n)
+      val footer =
+        if (dirs.exists(d => !hidden(d.getPath.getName))) None
+        else named("_common_metadata").orElse(named("_metadata"))
+          .orElse(paths.find(p => !hidden(p.getName)))
+      footer.flatMap { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f,
+          spark.sparkContext.hadoopConfiguration))
+        val kv = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+          finally reader.close()
+        Option(kv.get(SparkSchemaKey)).map(j =>
+          DataType.fromJson(j).asInstanceOf[StructType])
+      }
+    }.toOption.flatten
 
   /** Create-or-replace from a DataFrame (D3 analogue — schema is carried by
     * parquet, no DDL needed). */

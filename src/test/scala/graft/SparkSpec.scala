@@ -27,4 +27,17 @@ trait SparkSpec extends AnyFunSuite {
   /** One-column helper: collect a single column as values. */
   def col1[T](df: DataFrame): Seq[T] =
     df.collect().toSeq.map(_.getAs[T](0))
+
+  /** Spark jobs started while `f` runs, with its result. */
+  def jobsDuring[T](f: => T): (Int, T) = {
+    import org.apache.spark.sql.graft.Shims
+    val lst = new graft.tools.TailProfile.JobWindows
+    Shims.waitListenerBus(spark, 10000L)
+    spark.sparkContext.addSparkListener(lst)
+    try {
+      val out = f
+      Shims.waitListenerBus(spark, 10000L)
+      (lst.jobs.size, out)
+    } finally spark.sparkContext.removeSparkListener(lst)
+  }
 }

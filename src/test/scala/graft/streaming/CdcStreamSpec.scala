@@ -216,6 +216,101 @@ class CdcStreamSpec extends SparkSpec {
     val loaded = cat.load("inventory", "users")
       .select("name").as[String].head()
     assert(loaded == "é" * 510, s"len=${loaded.length}")
+    // the clamp keeps every column in place: same names, order, types
+    // and nullability as the unclamped transform
+    val frames = toDf(Seq(1L -> create(1, big, 1)))
+    val spec = graft.schema.DebeziumSchema.parseEnvelope(envelopeSchemaJson)
+    val envType = graft.cdc.DebeziumTransform.envelopeSchema(
+      CdcStream.payloadStructType(spec))
+    val unclamped = graft.cdc.DebeziumTransform(frames
+      .withColumn("__env",
+        ConfluentAvro.decode(col("value"), envelopeSchemaJson, envType))
+      .select(col("offset"), col("__env.before").as("before"),
+        col("__env.after").as("after")), spec)
+    val (clamped, _) = CdcStream.decodeGroup(frames, envelopeSchemaJson, cfg)
+    assert(clamped.schema == unclamped.schema)
+  }
+
+  test("job-count guard: one single-schema processBatch runs 5 Spark " +
+      "jobs on the merge path and 4 on the skip-merge append path") {
+    // header checkpoint + stage checkpoint, then the write's own jobs:
+    // merge = broadcast of the stage keys + dedupe shuffle + write;
+    // append = distinct shuffle + write. A re-added driver action
+    // (aggregate, sample, schema-inference read) fails this.
+    val cat = new ParquetCatalog(spark, tmp())
+    CdcStream.processBatch(
+      toDf(Seq(10L -> create(1, "ada", 6807), 11L -> create(2, "bob", 0))),
+      fetcher, cat, cfg)
+    val (mergeJobs, merged) = jobsDuring(CdcStream.processBatch(
+      toDf(Seq(12L -> update(1, "ada", "eva"), 13L -> delete(2, "bob"))),
+      fetcher, cat, cfg))
+    assert(!merged.head.skipMerge)
+    assert(mergeJobs == 5, s"merge path ran $mergeJobs jobs")
+    val (appendJobs, appended) = jobsDuring(CdcStream.processBatch(
+      toDf(Seq(14L -> create(3, "kim", 7))), fetcher, cat, cfg))
+    assert(appended.head.skipMerge)
+    assert(appendJobs == 4, s"append path ran $appendJobs jobs")
+    assert(cat.load("inventory", "users")
+      .select("id", "name").as[(String, String)].collect().toMap ==
+      Map("1" -> "eva", "3" -> "kim"))
+  }
+
+  test("header: a batch of only tombstones and unframed frames yields " +
+      "no Job and no table") {
+    val cat = new ParquetCatalog(spark, tmp())
+    // null sum, null key-schema id and an empty schema-id set
+    val junk = Seq[(Long, Array[Byte], Array[Byte])](
+      (1L, "k1".getBytes("UTF-8"), null),
+      (2L, null, Array.empty[Byte]),
+      (3L, "k3".getBytes("UTF-8"), "not framed".getBytes("UTF-8"))
+    ).toDF("offset", "key", "value")
+    assert(CdcStream.processBatch(junk, fetcher, cat, cfg).isEmpty)
+    assert(!cat.exists("inventory", "users"))
+  }
+
+  test("header: a batch without a key column still processes, PK from " +
+      "the first column") {
+    val cat = new ParquetCatalog(spark, tmp())
+    val batch = toDf(Seq(1L -> create(1, "ada", 1), 2L -> create(2, "ada", 2)))
+    assert(!batch.columns.contains("key"))
+    val jobs = CdcStream.processBatch(batch, fetcher, cat, cfg)
+    assert(jobs.map(j => (j.createEvents, j.startOffset, j.endOffset)) ==
+      Seq((2L, 1L, 2L)))
+    assert(cat.load("inventory", "users").count() == 2)
+  }
+
+  test("header: unframed (JSON) keys fall back to the first-column PK") {
+    val cat = new ParquetCatalog(spark, tmp())
+    // the fetcher knows no key schema: resolving a garbage id would throw
+    def json(name: String) = s"""{"name": "$name"}""".getBytes("UTF-8")
+    val batch = Seq(
+      (1L, json("ada"), frame(1, None, Some(User(1, Some("ada"), None)))),
+      (2L, json("ada"), frame(1, None, Some(User(2, Some("ada"), None))))
+    ).toDF("offset", "key", "value")
+    CdcStream.processBatch(batch, fetcher, cat, cfg)
+    // PK=id keeps both rows (a name key would dedupe them to one)
+    assert(cat.load("inventory", "users").select("id").as[String]
+      .collect().toSet == Set("1", "2"))
+  }
+
+  test("header: two schema ids yield two Jobs with their own counts and " +
+      "offsets") {
+    val cat = new ParquetCatalog(spark, tmp())
+    val f2 = new StaticSchemaFetcher(
+      Map(1 -> envelopeSchemaJson, 2 -> envelopeSchemaJson))
+    def fr(sid: Int, off: Long, e: (Option[User], Option[User])) =
+      (off, frame(sid, e._1, e._2))
+    val mixed = Seq(
+      fr(1, 1L, create(1, "a", 1)), fr(2, 2L, create(2, "b", 2)),
+      fr(1, 3L, create(3, "c", 3)), fr(2, 4L, update(2, "b", "b2")),
+      fr(2, 5L, delete(9, "z"))).toDF("offset", "value")
+    val jobs = CdcStream.processBatch(mixed, f2, cat, cfg)
+    assert(jobs.map(j => (j.schemaId, j.createEvents, j.updateEvents,
+      j.deleteEvents, j.startOffset, j.endOffset)) == Seq(
+      (1, 2L, 0L, 0L, 1L, 3L), (2, 1L, 1L, 1L, 2L, 5L)))
+    assert(cat.load("inventory", "users")
+      .select("id", "name").as[(String, String)].collect().toMap ==
+      Map("1" -> "a", "2" -> "b2", "3" -> "c"))
   }
 
   test("R5 skipMerge: insert-only batch into existing table appends") {

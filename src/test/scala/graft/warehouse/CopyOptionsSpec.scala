@@ -67,11 +67,16 @@ class CopyOptionsSpec extends SparkSpec {
     assert(CopyOptions.varcharBytes(spec.column("name").get).contains(8))
     assert(CopyOptions.varcharBytes(spec.column("secret").get).contains(50))
     assert(CopyOptions.varcharBytes(spec.column("n").get).isEmpty)
-    val df = Seq(("héllo wide value", "x" * 60, 7))
-      .toDF("name", "secret", "n")
-    val out = CopyOptions.clamp(df, spec).head()
+    val df = Seq(("héllo wide value", 7, "x" * 60, "free text"))
+      .toDF("name", "n", "secret", "undeclared")
+    val clamped = CopyOptions.clamp(df, spec)
+    // one projection, every column in place: order, names, types and
+    // nullability unchanged, non-string and undeclared columns included
+    assert(clamped.schema == df.schema)
+    val out = clamped.head()
     assert(out.getString(0) == "héllo w") // 8 bytes: h+é(2)+l+l+o+' '+w
-    assert(out.getString(1) == "x" * 50)
-    assert(out.getInt(2) == 7)
+    assert(out.getInt(1) == 7)
+    assert(out.getString(2) == "x" * 50)
+    assert(out.getString(3) == "free text")
   }
 }

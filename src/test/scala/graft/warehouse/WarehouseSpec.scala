@@ -191,4 +191,63 @@ class ParquetCatalogSpec extends SparkSpec {
     cat.append("s", "t", Seq((2, "b")).toDF("pk", "v"))
     assert(cat.load("s", "t").count() == 2)
   }
+
+  test("load returns the schema spark.read.parquet infers, after every " +
+      "lifecycle step, without a schema-inference job") {
+    val cat = new ParquetCatalog(spark, tmp())
+    def sameSchema(table: String): Unit = {
+      val (jobs, loaded) = jobsDuring(cat.load("s", table).schema)
+      assert(jobs == 0, s"load of $table ran $jobs jobs")
+      assert(loaded == spark.read.parquet(cat.tablePath("s", table)).schema)
+    }
+    def stage(rows: (String, String, Int, String)*) =
+      rows.toDF(Cdc.OffsetColumn, Cdc.OperationColumn, "pk", "v")
+    cat.save("s", "t", Seq((1, "a"), (2, "b")).toDF("pk", "v"))
+    sameSchema("t")
+    cat.merge("s", "t", stage(("3", Cdc.OpUpdate, 1, "a2"),
+      ("4", Cdc.OpDelete, 2, "b")), Seq("pk"))
+    sameSchema("t")
+    // D4 add-column merge: the rewritten table gains `email`
+    cat.merge("s", "t", Seq(("5", Cdc.OpCreate, 3, "c", 7L))
+      .toDF(Cdc.OffsetColumn, Cdc.OperationColumn, "pk", "v", "email"),
+      Seq("pk"))
+    sameSchema("t")
+    assert(cat.load("s", "t").columns.toSeq == Seq("pk", "v", "email"))
+    cat.migrate("s", "t")(_.withColumn("n", lit(1.5)))
+    sameSchema("t")
+    cat.save("s", "t_reload_2", Seq((1, "new")).toDF("pk", "v"))
+    sameSchema("t_reload_2")
+    cat.release("s", "t", "_reload_2")
+    sameSchema("t")
+    assert(cat.load("s", "t").as[(Int, String)].collect().toSeq ==
+      Seq((1, "new")))
+  }
+
+  test("load falls back to inference for directories without a Spark " +
+      "footer schema") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val root = tmp()
+    val cat = new ParquetCatalog(spark, root)
+    def inferred(table: String) =
+      spark.read.parquet(cat.tablePath("s", table)).schema
+    // written by plain parquet: the footer carries no Spark schema
+    val mt = MessageTypeParser.parseMessageType(
+      "message m { required int32 pk; optional binary v (UTF8); }")
+    val w = ExampleParquetWriter.builder(
+      new org.apache.hadoop.fs.Path(s"$root/s/raw/part-0.parquet"))
+      .withType(mt).build()
+    try w.write(new SimpleGroupFactory(mt).newGroup()
+      .append("pk", 1).append("v", "a"))
+    finally w.close()
+    assert(cat.load("s", "raw").schema == inferred("raw"))
+    assert(cat.load("s", "raw").as[(Int, String)].collect().toSeq ==
+      Seq((1, "a")))
+    // written by plain Spark with partitionBy: the data sits in subdirs
+    Seq((1, "a", "x"), (2, "b", "y")).toDF("pk", "v", "p")
+      .write.partitionBy("p").parquet(cat.tablePath("s", "parted"))
+    assert(cat.load("s", "parted").schema == inferred("parted"))
+    assert(cat.load("s", "parted").columns.toSeq == Seq("pk", "v", "p"))
+  }
 }
