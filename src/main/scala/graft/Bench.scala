@@ -50,8 +50,7 @@ object Bench {
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
 
-    // Host-noise canary (defined before the index builds so the build
-    // window gets its own bracket): the same fixed cheap query timed at
+    // Host-noise canary: the same fixed cheap query timed at
     // section boundaries. Code cannot regress between two timings of the
     // same query, so a large POSITIVE delta means the host got slower
     // under that window — phantom regressions self-diagnose. A NEGATIVE
@@ -90,13 +89,6 @@ object Bench {
         run() // warm-up: pays the one-time codegen, not host state
         (1 to 2).map(_ => time(run())).min
       } catch { case _: Throwable => -1.0 }
-    // bracket the index-build section: r8's minhash_sigs 128.9 s (vs
-    // ~40 s typical) had no same-window control, so host contention vs a
-    // build-path regression could not be told apart from the artifact
-    // alone. canary_build_delta_pct positive = the host was slow while
-    // the builds ran — discount index_build_sec accordingly.
-    val canaryPreBuild = canarySec()
-
     // --- section harness: every post-catalog section is bracketed by
     // canary samples and wall-clock timestamps; a section whose
     // bracketing canary delta exceeds ±rerunPct gets ONE automatic
@@ -117,10 +109,11 @@ object Bench {
     val sectionMetas = scala.collection.mutable.ArrayBuffer[SectionMeta]()
     val rerunPct =
       sys.env.getOrElse("SPARK_GRAFT_SECTION_RERUN_PCT", "15").toDouble
-    var lastCanary = canaryPreBuild
-    // the shuffle canary shares the boundary cadence but never triggers
+    // both are seeded from the catalog's opening brackets below; the
+    // shuffle canary shares the boundary cadence but never triggers
     // reruns; its "before" is the previous boundary's sample
-    var lastCanary2 = canary2Sec()
+    var lastCanary = -1.0
+    var lastCanary2 = -1.0
     def section[A](name: String)(body: => A): A = {
       def skewedAt(before: Double, after: Double): Boolean =
         before > 0 && after > 0 &&
@@ -149,26 +142,6 @@ object Bench {
       res
     }
 
-    // Persisted-index builds run ONCE per session (IndexStore memoizes)
-    // and are reported as their own metric: the indexed catalog entries
-    // (q_x_ann_*_pruned, q_x_minhash_incr) then time the PROBE — the
-    // served-path cost the index design pays for — instead of
-    // re-attributing an amortized build to every query.
-    // Each build in its OWN try: one failure must not skip the others —
-    // a skipped build silently executes inside the timed cold run of its
-    // catalog queries and index_build_sec under-reports.
-    def tryBuild(kind: String)(b: => Unit): Unit =
-      try b catch {
-        case e: Throwable => System.err.println(
-          s"[bench] $kind index build failed — its catalog queries will " +
-            s"pay the build in-query: ${e.getMessage}")
-      }
-    tryBuild("annIvf")(IndexStore.annIvf(spark, sfDir))
-    tryBuild("annIvfPq")(IndexStore.annIvfPq(spark, sfDir))
-    tryBuild("minhashSigs")(IndexStore.minhashSigs(spark, sfDir))
-    tryBuild("dsirRatios")(IndexStore.dsirRatios(spark, sfDir))
-    val indexBuilds: Map[String, Double] = IndexStore.buildSecs(sfDir)
-
     // Per-query MIN over nRuns executions: the first execution pays Catalyst
     // analysis + whole-stage-codegen javac + JIT warm-up (measured 5-70x the
     // steady-state cost for the expression-heavy text queries); min-of-N
@@ -180,11 +153,9 @@ object Bench {
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
 
     // canary sample bracketing the catalog loop (pairs with canary_end).
-    // min-of-3 for the brackets that set canary_window_factor (VERDICT
-    // r16 #1: the official artifact's opening sample landed in the
-    // index-build tail and shipped a garbage 4.075 factor; one extra
+    // min-of-3 for the brackets that set canary_window_factor: one extra
     // sample after the 3 warmups makes a single contended read
-    // non-binding)
+    // non-binding
     val canaryStart = canarySec(samples = 3)
     val canary2Start = canary2Sec()
 
@@ -227,8 +198,8 @@ object Bench {
                   s"[bench] $name run $i failed: ${e.getMessage}")
                 (-1.0, "")
             } finally
-              // queries that localCheckpoint intermediates (minhash
-              // ingest) defer the unpersist; freeing per run keeps
+              // queries that localCheckpoint intermediates (the merge's
+              // phase breakdown) defer the unpersist; freeing per run keeps
               // nRuns+1 executions from pinning that many checkpoint
               // copies for the session
               graft.core.Metrics.drainUnpersist()
@@ -379,13 +350,16 @@ object Bench {
     }
     val epochCommonRaw: Option[(Int, Double, Double)] =
       epochRef.map(er => commonTotals(er.queries, results))
-    // ADVICE r18 #2: the floor is half the REF set (not half the live
-    // head) — catalog growth alone must never erode the epoch-relative
-    // guard into the env constant; only a stale/partial EPOCH.json or
-    // mass query renames shrink ref coverage.
+    // The floor is half the SMALLER of the ref set and the live head
+    // set: catalog growth alone must never erode the epoch-relative
+    // guard into the env constant (head > ref), and neither must a
+    // deliberately cut catalog (head < ref, every head query shared);
+    // only a stale/partial EPOCH.json or mass query renames shrink the
+    // common set below it.
+    val headLiveN = results.count(_._2 >= 0)
     val minCommonN = math.max(8,
-      epochRef.map(_.queries.count(_._2 >= 0) / 2)
-        .getOrElse(results.count(_._2 >= 0) / 2))
+      epochRef.map(er => math.min(er.queries.count(_._2 >= 0), headLiveN) / 2)
+        .getOrElse(headLiveN / 2))
     val epochCommonTooSmall = epochCommonRaw.exists(_._1 < minCommonN)
     val epochCommon: Option[(Double, Double)] = epochCommonRaw
       .filter(_._1 >= minCommonN).map(c => (c._2, c._3))
@@ -397,24 +371,10 @@ object Bench {
       epochRef.filter(_.queriesCpu.nonEmpty)
         .map(er => commonTotals(er.queriesCpu, cpuByQuery))
     val minCommonNCpu = math.max(8,
-      epochRef.map(_.queriesCpu.count(_._2 >= 0) / 2).getOrElse(0))
+      epochRef.map(er => math.min(er.queriesCpu.count(_._2 >= 0),
+        cpuByQuery.count(_._2 >= 0)) / 2).getOrElse(0))
     val epochCommonCpu: Option[(Double, Double)] = epochCommonCpuRaw
       .filter(_._1 >= minCommonNCpu).map(c => (c._2, c._3))
-    // Reviewed composite-budget entries (the Expand-allowlist pattern):
-    // a chained multi-stage pipeline is k solo queries in ONE entry —
-    // its stages are budget-checked individually by their solo twins
-    // (mojibake, dedup_keep, contamination, qnorm, quota_trim,
-    // interleave), and its wall is stage-COUNT-bound (measured: a 4×
-    // corpus slice moves it < 10%), so the composite carries a
-    // multiplier instead of hiding behind an exemption.
-    // q_x_bpe_merges (r16): 64 strict-order BPE merges in ONE entry —
-    // 64 sequential data-dependent stages (each merge re-ranks the pair
-    // table); per-stage cost is budget-fine (0.074 s/merge, BpeSweep),
-    // the entry is stage-COUNT-bound exactly like the pipeline composite
-    val compositeBudgetX: Map[String, Double] =
-      Map("q_x_pipeline" -> 2.0, "q_x_bpe_merges" -> 2.0)
-    def budgetOf(n: String): Double =
-      queryBudget * compositeBudgetX.getOrElse(n, 1.0)
     val sfBudgeted = sfDir.contains("sf0.1") // budgets are sf0.1-calibrated
     // Budget-basis chain: epoch CPU (drift-immune) → epoch wall →
     // env constant; the source field names which leg evaluated
@@ -436,7 +396,7 @@ object Bench {
       epochCommon.map { case (head, ref) => head > ref * epochMult }
     val queryViolationsRaw: Seq[(String, Double)] =
       if (!sfBudgeted) Seq.empty
-      else results.toSeq.filter { case (n, s) => s > budgetOf(n) }
+      else results.toSeq.filter { case (n, s) => s > queryBudget }
         .sortBy(-_._2)
     val canaryEnd = canarySec(samples = 3)
     val canary2End = canary2Sec()
@@ -485,7 +445,7 @@ object Bench {
           .minOption.getOrElse(-1.0)
         val ca = canarySec()
         BudgetRerun(name, raw, rmin, rcpu, cb, ca,
-          healed = rmin >= 0 && rmin <= budgetOf(name))
+          healed = rmin >= 0 && rmin <= queryBudget)
       }
     // keep the section harness's rolling canary honest about the time
     // the reruns consumed
@@ -826,8 +786,8 @@ object Bench {
     // resident-stream answer when batches touch every bucket. Its bill
     // arrives at read time (delta resolve) and is bounded by compaction;
     // compactEvery is set above nRuns so the timed merges stay pure
-    // O(batch) appends (the fold cost is the catalog's q_x_* compaction
-    // story, measured elsewhere).
+    // O(batch) appends (the fold cost is CompactionSpec's and
+    // MorReadAmp's story).
     def plainStore(p: String): graft.warehouse.TableStore =
       new graft.warehouse.ParquetCatalog(spark, p)
     def bucketedStore(p: String): graft.warehouse.TableStore =
@@ -1056,351 +1016,8 @@ object Bench {
     val streamEps = if (streamSec > 0) streamEvents / streamSec else 0.0
     def eps2(sec: Double, n: Long): Double = if (sec > 0) n / sec else 0.0
 
-    // Streaming semantic dedup e2e: MemoryStream micro-batches of
-    // embeddings through SemDedupStream's foreachBatch body — per
-    // trigger a pruned-scan dedup against the growing IVF index, a
-    // within-batch keep, the survivor indexAppend, and the compaction
-    // cadence (every 4 batches here). Batch vectors are a deterministic
-    // (seeded) mix of corpus near-dups and novel vectors, pre-generated
-    // OUTSIDE the timed window. events/s = vectors decided per second.
-    // Runs TWICE — small batches (the latency shape) and big batches
-    // (the throughput shape): per-trigger driver actions are a fixed
-    // floor, so events/s scaling ~linearly with batch size is the
-    // attribution test for "floor = trigger overhead, not probe math".
-    def semDedupBench(nB: Int, per: Int)
-        : (Double, Long, Long, Long, Map[String, Double]) = try {
-      import graft.ops.Ivf
-      import spark.implicits._
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_bench_semdedup").toString
-      val idxPath = dir + "/idx"
-      val emb = Tables.read(spark, sfDir, "embeddings").cache()
-      val corpus = emb.select("vec_id", "embedding").collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      // k sizes the probe: each batch row exact-compares against its own
-      // cell only (≈ corpus/k rows), so cell count is the per-event-work
-      // knob — production guidance k ≈ corpus/1000 (SemDedup scaladoc).
-      // Env-tunable for A/B; k must be trained on a corpus that supports
-      // it (k=64 on the sf0.001 seed's ~100 vectors degenerates: skewed
-      // cells made keep/append SLOWER, measured 311 vs 531 ev/s).
-      val k = sys.env.getOrElse("SPARK_GRAFT_SEMDEDUP_CELLS", "16").toInt
-      val model = Ivf.train(emb, "vec_id", "embedding", k = k, iters = 2)
-      Ivf.index(emb, "embedding", model, idxPath)
-      emb.unpersist()
-      val dim = corpus.head._2.length
-      val rnd = new scala.util.Random(42)
-      var nextId = corpus.map(_._1).max + 1
-      val batches = (0 until nB).map { _ =>
-        (0 until per).map { i =>
-          val id = nextId; nextId += 1
-          // ~half near-dups of corpus rows (tiny perturbation), half new
-          if (i % 2 == 0) {
-            val (_, base) = corpus(rnd.nextInt(corpus.length))
-            (id, base.map(x => x + (rnd.nextFloat() - 0.5f) * 0.01f))
-          } else
-            (id, Array.fill(dim)(rnd.nextFloat() * 2 - 1))
-        }
-      }
-      val s = new graft.streaming.SemDedupStream(spark, idxPath,
-        "vec_id", "embedding", threshold = 0.9, compactEvery = 4)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val mem = MemoryStream[(Long, Array[Float])]
-      val q = mem.toDF().toDF("vec_id", "embedding").writeStream
-        .option("checkpointLocation", dir + "/_ckpt")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          s.processBatch(b, id); ()
-        }
-        .start()
-      val sec = try time {
-        batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-      } finally {
-        q.stop()
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(dir))
-      }
-      val (_, app, drop) = s.stats
-      (sec, nB.toLong * per, app, drop, s.phaseTotals)
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] semdedup stream bench failed: ${e.getMessage}")
-        (-1.0, 0L, 0L, 0L, Map.empty[String, Double])
-    }
-    val ((semSec, semEvents, semAppended, semDropped, semPhases),
-      (semBigSec, semBigEvents, semBigPhases)) = section("semdedup") {
-      def semRate(t: (Double, Long, Long, Long, Map[String, Double]))
-          : Double = if (t._1 > 0) t._2 / t._1 else -1.0
-      val small = rateHealed("semdedup_stream_events_per_sec")(
-        semDedupBench(
-          sys.env.getOrElse("SPARK_GRAFT_SEMDEDUP_BATCHES", "6").toInt,
-          sys.env.getOrElse("SPARK_GRAFT_SEMDEDUP_EVENTS", "2000").toInt))(
-        semRate)
-      val big = rateHealed("semdedup_stream_big_events_per_sec")(
-        semDedupBench(
-          sys.env.getOrElse("SPARK_GRAFT_SEMDEDUP_BIG_BATCHES", "3").toInt,
-          sys.env.getOrElse("SPARK_GRAFT_SEMDEDUP_BIG_EVENTS",
-            "10000").toInt))(semRate)
-      (small, (big._1, big._2, big._5))
-    }
-    def semPhaseFmt(m: Map[String, Double]): String = m.toSeq
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
-      .mkString("{", ",", "}")
-    val semPhaseJson = semPhaseFmt(semPhases)
-    val semBigPhaseJson = semPhaseFmt(semBigPhases)
-
-    // Streaming paragraph dedup e2e: documents (each wrapped with a
-    // corpus-wide boilerplate footer + a residue-class nav block, so
-    // every batch has real cross-batch duplicate paragraphs) through
-    // ParaDedupStream's foreachBatch body. events/s = documents decided
-    // per second.
-    val (paraSec, paraDocs, paraKept, paraDropped) = section("para") {
-      rateHealed("para_stream_docs_per_sec") { try {
-      import spark.implicits._
-      import org.apache.spark.sql.functions.{col, concat, concat_ws, coalesce, lit}
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_bench_paradedup").toString
-      val docsAll = Tables.read(spark, sfDir, "documents")
-        .select(col("doc_id"),
-          concat_ws(" <p> ", coalesce(col("text"), lit("")),
-            lit("copyright footer all rights reserved"),
-            concat(lit("nav block "), (col("doc_id") % 7).cast("string")))
-            .as("text"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-      val nB = 5
-      val per = math.max(1, docsAll.length / nB)
-      val batches = docsAll.grouped(per).toSeq
-      val s = new graft.streaming.ParaDedupStream(spark, dir + "/keys",
-        "doc_id", "text", " <p> ")
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val mem = MemoryStream[(Long, String)]
-      val q = mem.toDF().toDF("doc_id", "text").writeStream
-        .option("checkpointLocation", dir + "/_ckpt")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          // overlapped tail (r19, VERDICT r18 #6): the output write
-          // runs concurrently with the key append
-          s.processBatch(b, id, out => out.write
-            .mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(dir + "/out"))
-          // the sink was the terminal action — free this trigger's
-          // deferred checkpoint blocks before the next one
-          graft.core.Metrics.drainUnpersist()
-        }
-        .start()
-      val sec = try time {
-        batches.foreach { b => mem.addData(b.toSeq); q.processAllAvailable() }
-      } finally {
-        q.stop()
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(dir))
-      }
-      val (_, kept, dropped) = s.stats
-      (sec, docsAll.length.toLong, kept, dropped)
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] paragraph dedup stream bench failed: ${e.getMessage}")
-        (-1.0, 0L, 0L, 0L)
-    } } (t => if (t._1 > 0) t._2 / t._1 else -1.0) }
-
-    // Streaming exact-substring dedup e2e: documents (wrapped with the
-    // shared boilerplate tail, so every batch carries real cross-batch
-    // duplicate 8-token windows) through SubstrDedupStream's
-    // foreachBatch body. docs/s = documents screened per second. Two
-    // runs (r18): the default small-store path (the r16 broadcast
-    // shape — sf0.1 stores sit under gateFromBytes), and a
-    // gateFromBytes=0 twin so the BLOOM-GATED path the 100 TB design
-    // rides is an officially tracked number every round, not only a
-    // StoreGrowth ad-hoc table.
-    def substrRun(gate: Long, tag: String): (Double, Long, Long, Long) =
-      try {
-        import spark.implicits._
-        import org.apache.spark.sql.functions.{coalesce, col, concat, lit}
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"graft_bench_substr_$tag").toString
-        val docsAll = Tables.read(spark, sfDir, "documents")
-          .select(col("doc_id"),
-            concat(coalesce(col("text"), lit("")),
-              lit(" subscribe to our newsletter for updates and special" +
-                " offers today")).as("text"))
-          .collect().map(r => (r.getLong(0), r.getString(1)))
-        val nB = 5
-        val per = math.max(1, docsAll.length / nB)
-        val batches = docsAll.grouped(per).toSeq
-        val s = new graft.streaming.SubstrDedupStream(spark, dir + "/keys",
-          "doc_id", "text", n = 8, gateFromBytes = gate)
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val mem = MemoryStream[(Long, String)]
-        val q = mem.toDF().toDF("doc_id", "text").writeStream
-          .option("checkpointLocation", dir + "/_ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-            // overlapped tail (r19, VERDICT r18 #6): the output write
-            // runs concurrently with the corpus append
-            s.processBatch(b, id, out => out.write
-              .mode(org.apache.spark.sql.SaveMode.Append)
-              .parquet(dir + "/out"))
-            graft.core.Metrics.drainUnpersist()
-          }
-          .start()
-        val sec = try time {
-          batches.foreach { b => mem.addData(b.toSeq); q.processAllAvailable() }
-        } finally {
-          q.stop()
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(new java.io.File(dir))
-        }
-        val (_, kept, dropped) = s.stats
-        (sec, docsAll.length.toLong, kept, dropped)
-      } catch {
-        case e: Throwable =>
-          System.err.println(
-            s"[bench] substring dedup stream bench ($tag) failed: ${e.getMessage}")
-          (-1.0, 0L, 0L, 0L)
-      }
-    def substrRate(t: (Double, Long, Long, Long)): Double =
-      if (t._1 > 0) t._2 / t._1 else -1.0
-    val (subSec, subDocs, subKept, subDropped) =
-      section("substr") { rateHealed("substr_stream_docs_per_sec")(
-        substrRun(64L << 20, "small"))(substrRate) }
-    val (subgSec, subgDocs, subgKept, subgDropped) =
-      section("substr_gated") {
-        rateHealed("substr_stream_gated_docs_per_sec")(
-          substrRun(0L, "gated"))(substrRate) }
-    // ADVICE r18 #3: the gated twin's kept/dropped equality vs the
-    // small-path run is the live per-seal equivalence check — enforce
-    // it in the artifact instead of relying on a human diffing the
-    // file-only fields. A mismatch is a correctness flag, not a perf
-    // one: it rides budget_violations so the seal checklist fails.
-    val substrGatedMatch: Option[Boolean] =
-      if (subSec > 0 && subgSec > 0)
-        Some(subKept == subgKept && subDropped == subgDropped)
-      else None
-    if (substrGatedMatch.contains(false))
-      System.err.println("[bench] GATED SUBSTR DECISION MISMATCH: " +
-        s"small-path kept/dropped=$subKept/$subDropped, " +
-        s"gated=$subgKept/$subgDropped")
-    val gatedViolation: Seq[String] =
-      if (substrGatedMatch.contains(false))
-        Seq(s"substr_gated_decisions:kept=$subgKept/$subKept," +
-          s"dropped=$subgDropped/$subDropped")
-      else Seq.empty
-
-    // Streaming winnow quote detection e2e (VERDICT r12 #4): documents
-    // through WinnowQuoteStream.processBatch, default cadence AND a
-    // big-batch twin (the family protocol: 3x fewer triggers, ~3.3x the
-    // batch — the r12 default-cadence row was trigger-overhead-bound at
-    // ~0.9 s/trigger flat, so the big run pins the asymptotic docs/s
-    // and the store-probe term).
-    def winnowRun(nTriggers: Int, tag: String): (Double, Long, Long) =
-      try {
-        import org.apache.spark.sql.functions.{col, pmod, lit}
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"graft_bench_winnow_$tag").toString
-        val docsW = Tables.read(spark, sfDir, "documents")
-          .select(col("doc_id"), col("text")).localCheckpoint()
-        val nDocs = docsW.count()
-        val st = new graft.streaming.WinnowQuoteStream(spark,
-          dir + "/fps", "doc_id", "text", k = 3, w = 4, minShared = 2L,
-          compactEvery = 4)
-        var pairs = 0L
-        val sec = try time {
-          (0 until nTriggers).foreach { b =>
-            // overlapped tail (r19, VERDICT r18 #6): the pair count
-            // (the section's sink) runs concurrently with the fp append
-            var got = 0L
-            st.processBatch(
-              docsW.filter(pmod(col("doc_id"), lit(nTriggers)) === b),
-              b.toLong, out => got = out.count())
-            pairs += got
-            graft.core.Metrics.drainUnpersist()
-          }
-        } finally {
-          docsW.unpersist()
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(new java.io.File(dir))
-        }
-        (sec, nDocs, pairs)
-      } catch {
-        case e: Throwable =>
-          System.err.println(
-            s"[bench] winnow stream bench ($tag) failed: ${e.getMessage}")
-          (-1.0, 0L, 0L)
-      }
-    def winRate(t: (Double, Long, Long)): Double =
-      if (t._1 > 0) t._2 / t._1 else -1.0
-    val (winSec, winDocs, winPairs) =
-      section("winnow")(rateHealed("winnow_stream_docs_per_sec")(
-        winnowRun(6, "std"))(winRate))
-    val (winBigSec, winBigDocs, winBigPairs) =
-      section("winnow_big")(rateHealed("winnow_stream_big_docs_per_sec")(
-        winnowRun(2, "big"))(winRate))
-
-    // Streaming trending freshness: events through the DailyRollup
-    // update-mode agg + replace-by-key upsert, with a decayed trending
-    // read AFTER EVERY trigger (the freshness contract — scores reflect
-    // the just-committed rollup). events/s counts the events upserted;
-    // the read side is reported separately per query.
-    val (trSec, trEvents, trReadSec, trReads) = section("trending") {
-      rateHealed("trending_rollup_events_per_sec") { try {
-      import spark.implicits._
-      import org.apache.spark.sql.functions.{sum, to_date, lit, desc, col}
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_bench_trending").toString
-      val path = dir + "/rollup"
-      val nB = 8; val per = 25000
-      val rnd = new scala.util.Random(7)
-      val batches = (0 until nB).map { b =>
-        (0 until per).map { _ =>
-          (s"g${rnd.nextInt(100)}",
-            java.sql.Date.valueOf(f"2026-07-${rnd.nextInt(28) + 1}%02d"),
-            rnd.nextInt(50).toLong)
-        }
-      }
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val mem = MemoryStream[(String, java.sql.Date, Long)]
-      val q = mem.toDF().toDF("grp", "day", "v")
-        .groupBy("grp", "day").agg(sum("v").as("day_value"))
-        .writeStream.outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-        .option("checkpointLocation", dir + "/_ckpt")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          graft.streaming.DailyRollup.upsert(spark, b, Seq("grp", "day"), path)
-        }
-        .start()
-      var readSec = 0.0
-      val sec = try time {
-        batches.foreach { b =>
-          mem.addData(b); q.processAllAvailable()
-          val t0 = System.nanoTime()
-          graft.streaming.DailyRollup.trending(spark, path, Seq("grp"),
-            "day", refDay = to_date(lit("2026-07-28")), halfLifeDays = 7)
-            .orderBy(desc("decayed_count"), col("grp")).limit(10).collect()
-          readSec += (System.nanoTime() - t0) / 1e9
-        }
-      } finally {
-        q.stop()
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(dir))
-      }
-      (sec - readSec, nB.toLong * per, readSec, nB)
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] trending bench failed: ${e.getMessage}")
-        (-1.0, 0L, -1.0, 0)
-    } } (t => if (t._1 > 0) t._2 / t._1 else -1.0) }
-
-    // Final canary AFTER the stream sections (stream/semdedup/para/
-    // trending — the harness's last sample). Its delta vs
+    // Final canary AFTER the stream section (the harness's last
+    // sample). Its delta vs
     // canary_post_store brackets the whole streaming window (same
     // query, code unchanged, JIT saturated): positive = the host got
     // slower while the streams ran. Per-section brackets + rerun flags
@@ -1409,29 +1026,6 @@ object Bench {
     val canaryPostStreamDeltaPct: String =
       deltaPct(canaryPostStore, canaryPostStream)
 
-    // ANN serving latency under concurrency: p50/p95 per request at
-    // 1/8/32 in-flight batched probes (IVF nprobe=4 + SQ8 codes scan),
-    // the same AnnServing.run core that generates RECALL.md's table —
-    // here with fewer requests per level, as artifact fields. Runs
-    // AFTER the canary_post_stream sample so the stream-window bracket
-    // keeps its r10/r11 meaning.
-    val servingRequests =
-      sys.env.getOrElse("SPARK_GRAFT_SERVING_REQUESTS", "12").toInt
-    val servingMetrics: Map[String, Double] =
-      if (servingRequests <= 0) Map.empty
-      else section("serving") {
-        try graft.tools.AnnServing.metrics(graft.tools.AnnServing.run(
-          spark, sfDir, nRequests = servingRequests))
-        catch {
-          case e: Throwable =>
-            System.err.println(
-              s"[bench] serving bench failed: ${e.getMessage}")
-            Map.empty[String, Double]
-        }
-      }
-
-    val buildJson = indexBuilds.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     def phMap(m: Map[String, Double]): String =
       m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
@@ -1491,12 +1085,10 @@ object Bench {
       "queries_failed" ->
         qFailed.map("\"" + _ + "\"").mkString("[", ",", "]"),
       "queries_slowest" -> slowest,
-      "budget_violations_n" ->
-        (budgetViolations ++ gatedViolation).size.toString,
+      "budget_violations_n" -> budgetViolations.size.toString,
       "budget_worst" ->
-        ("\"" + (budgetViolations ++ gatedViolation).headOption
-          .getOrElse("") + "\""),
-      "budget_violations" -> (budgetViolations ++ gatedViolation)
+        ("\"" + budgetViolations.headOption.getOrElse("") + "\""),
+      "budget_violations" -> budgetViolations
         .map("\"" + _ + "\"").mkString("[", ",", "]"),
       "budget_rerun_n" -> budgetReruns.size.toString,
       "budget_healed_n" -> budgetReruns.count(_.healed).toString,
@@ -1505,8 +1097,6 @@ object Bench {
       "budget_violations_pre_rerun" -> queryViolationsRaw
         .map { case (n, s) => "\"" + n + ":" + f"$s%.2f" + "\"" }
         .mkString("[", ",", "]"),
-      "substr_gated_decisions_match" ->
-        substrGatedMatch.map(_.toString).getOrElse("null"),
       "budget_query_sec" -> queryBudget.toString,
       "budget_total_sec" -> totalBudget.toString,
       "budget_total_source" -> ("\"" + budgetTotalSource + "\""),
@@ -1536,8 +1126,6 @@ object Bench {
         .getOrElse("null"),
       "epoch_budget_mult" -> epochMult.toString,
       "canary_query" -> ("\"" + canaryQuery + "\""),
-      "canary_pre_build_sec" -> canaryPreBuild.toString,
-      "canary_build_delta_pct" -> deltaPct(canaryPreBuild, canaryStart),
       "canary_start_sec" -> canaryStart.toString,
       "canary_end_sec" -> canaryEnd.toString,
       "canary_delta_pct" -> canaryDeltaPct,
@@ -1586,8 +1174,6 @@ object Bench {
       "sections_rate_rerun_n" -> rateRerunNames.size.toString,
       "sections_rate_rerun_detail" -> rateReruns
         .map("\"" + _ + "\"").mkString("[", ",", "]"),
-      "index_build_sec" -> buildJson,
-      "index_build_total_sec" -> indexBuilds.values.sum.toString,
       "cdc_merge_sec" -> cdcSec.toString,
       "cdc_events_per_sec" -> eps.toString,
       "cdc_events" -> nEvents.toString,
@@ -1626,45 +1212,7 @@ object Bench {
       "stream_mor_big_sec" -> streamMorBigSec.toString,
       "stream_events_per_sec_mor_big" ->
         eps2(streamMorBigSec, streamMorBigEvents).toString,
-      "semdedup_stream_sec" -> semSec.toString,
-      "semdedup_stream_events_per_sec" -> eps2(semSec, semEvents).toString,
-      "semdedup_stream_appended" -> semAppended.toString,
-      "semdedup_stream_dropped" -> semDropped.toString,
-      "semdedup_stream_phase_sec" -> semPhaseJson,
-      "semdedup_stream_big_sec" -> semBigSec.toString,
-      "semdedup_stream_big_events_per_sec" ->
-        eps2(semBigSec, semBigEvents).toString,
-      "semdedup_stream_big_phase_sec" -> semBigPhaseJson,
-      "para_stream_sec" -> paraSec.toString,
-      "para_stream_docs_per_sec" -> eps2(paraSec, paraDocs).toString,
-      "para_stream_kept" -> paraKept.toString,
-      "para_stream_dropped" -> paraDropped.toString,
-      "substr_stream_sec" -> subSec.toString,
-      "substr_stream_docs_per_sec" -> eps2(subSec, subDocs).toString,
-      "substr_stream_tokens_kept" -> subKept.toString,
-      "substr_stream_tokens_dropped" -> subDropped.toString,
-      // gated twin (file-only): decisions must match the small-path run
-      // (same fixture), so kept/dropped equality doubles as a live
-      // equivalence check in every sealed artifact
-      "substr_stream_gated_sec" -> subgSec.toString,
-      "substr_stream_gated_docs_per_sec" ->
-        eps2(subgSec, subgDocs).toString,
-      "substr_stream_gated_tokens_kept" -> subgKept.toString,
-      "substr_stream_gated_tokens_dropped" -> subgDropped.toString,
-      "winnow_stream_sec" -> winSec.toString,
-      "winnow_stream_docs_per_sec" -> eps2(winSec, winDocs).toString,
-      "winnow_stream_pairs" -> winPairs.toString,
-      "winnow_stream_big_sec" -> winBigSec.toString,
-      "winnow_stream_big_docs_per_sec" ->
-        eps2(winBigSec, winBigDocs).toString,
-      "winnow_stream_big_pairs" -> winBigPairs.toString,
-      "trending_rollup_sec" -> trSec.toString,
-      "trending_rollup_events_per_sec" -> eps2(trSec, trEvents).toString,
-      "trending_read_sec_per_query" ->
-        (if (trReads > 0) trReadSec / trReads else -1.0).toString,
       "cdc_phases_total_sec" -> phasesTotal.toString,
-      "ann_serving_ms" -> phMap(servingMetrics),
-      "ann_serving_requests" -> servingRequests.toString,
       "sf" -> ("\"" + sfDir + "\""))
     println(BenchReport.stdoutLine(fields))
     val fileJson = (BenchReport.fileJson(fields) + "\n").getBytes("UTF-8")

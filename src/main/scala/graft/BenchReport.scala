@@ -35,12 +35,11 @@ object BenchReport {
     // basis is named — epoch_ref_cpu (executor CPU, drift-immune) when
     // the epoch ref carries per-query CPU, else wall legs
     "budget_healed_n", "budget_total_source", "total_cpu_sec",
-    // r18: canary_pre_build_sec moved file-only to fund
-    // window_adjust_source; r19: canary_query + canary_start/end_sec
-    // absolutes moved file-only to fund the three budget keys above
-    // (the r13 rule: absolutes file-only, their *_delta_pct drift
-    // signals stay on the line)
-    "canary_build_delta_pct", "canary_delta_pct",
+    // r19: canary_query + canary_start/end_sec absolutes moved
+    // file-only to fund the three budget keys above (the r13 rule:
+    // absolutes file-only, their *_delta_pct drift signals stay on the
+    // line)
+    "canary_delta_pct",
     // r18 (VERDICT r17 #3): total_at_ref_window_est REPLACES r15's
     // total_window_adjusted — the semantics are now named in the field:
     // "what this total would read on the epoch-ref window". Per-chunk
@@ -64,16 +63,11 @@ object BenchReport {
     // the name arrays moved file-only (BENCH.json `sections_rerun` /
     // `sections_skewed` / per-section metas) and the line carries counts
     "sections_rerun_n", "sections_skewed_n",
-    "index_build_total_sec",
     "cdc_merge_sec", "cdc_events_per_sec", "cdc_events",
     "cdc_zipf_events_per_sec", "cdc_skew_uniform_events_per_sec",
     "stream_events_per_sec", "stream_events_per_sec_bucketed",
     "stream_events_per_sec_mor", "stream_events_per_sec_big",
     "stream_events_per_sec_bucketed_big", "stream_events_per_sec_mor_big",
-    "semdedup_stream_events_per_sec", "semdedup_stream_big_events_per_sec",
-    "para_stream_docs_per_sec", "substr_stream_docs_per_sec",
-    "winnow_stream_docs_per_sec", "winnow_stream_big_docs_per_sec",
-    "trending_rollup_events_per_sec", "trending_read_sec_per_query",
     "sf")
 
   private def render(fields: Seq[(String, String)]): String =

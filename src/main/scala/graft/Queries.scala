@@ -4,15 +4,14 @@ import graft.cdc.Temporal
 import graft.core.Cdc
 import graft.mask.{MaskConfig, Masker}
 import graft.merge.CdcMerge
-import graft.ops.{AsOf, CorpusStats, Dedup, Ivf, Multimodal, Packing, Sampling, SemDedup, Similarity, TextOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The engine's driver-facing query catalog: one entry per implemented
-  * operator from SURVEY.md §2 (+ the training-data extensions), each with a
-  * DuckDB oracle over the same parquet tables.
+  * operator from SURVEY.md §2, each with a DuckDB oracle over the same
+  * parquet tables.
   *
   * Cross-engine determinism rules used throughout:
   *  - sums over floating columns go through exact DECIMAL accumulation and
@@ -27,45 +26,6 @@ object Queries {
 
   private def rd(s: SparkSession, dir: String, t: String): DataFrame =
     Tables.read(s, dir, t)
-
-  // Persisted-index scratch builds (q_x_ann_*_pruned, q_x_minhash_incr)
-  // live in [[IndexStore]]: built once per (kind, sf dir) per JVM so the
-  // catalog entries time the PROBE; Bench reports build cost separately.
-
-  /** The documents table spread across the cluster: the test file is one
-    * parquet row group (one split), which would run the expression-heavy
-    * text analytics single-threaded ahead of any shuffle. Dedup.spread is
-    * conditional, so on a corpus whose scan already has enough splits
-    * this is a no-op, not an extra exchange. */
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    Dedup.spread(rd(s, dir, "documents"))
-
-  /** Shared fixture of the exact-substring twins: every document gets a
-    * corpus-wide 10-token boilerplate tail (single-space joined — the
-    * portable tokenizer), so duplicate 8-token windows provably exist
-    * for every doc; natural repeated 8-grams in the doc text surface on
-    * top. */
-  private def substrWrapped(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(col("doc_id"),
-      concat(coalesce(col("text"), lit("")),
-        lit(" subscribe to our newsletter for updates and special offers today"))
-        .as("wtext"))
-
-  /** Shared body of the batched-PQ-serving twins: the md5-stable 3-query
-    * batch (vec_ids 0–2) probed against the session's served IVF-PQ
-    * index; only the LUT transport differs between the catalog entries. */
-  private def pqServeBatch(s: SparkSession, dir: String,
-      lutLiteralMax: Int): DataFrame = {
-    val emb = rd(s, dir, "embeddings")
-    val qs = emb.filter(col("vec_id").isin(0L, 1L, 2L))
-      .select("vec_id", "embedding").collect()
-      .map(r => (r.getLong(0),
-        r.getSeq[Float](1).map(_.toDouble).toArray))
-      .sortBy(_._1).toSeq
-    val idx = IndexStore.annIvfPq(s, dir)
-    graft.ops.Pq.probeManyIndexed(s, idx.path, "vec_id", qs,
-      topK = 10, nprobe = 2, lutLiteralMax = lutLiteralMax)
-  }
 
   // ---- shared CDC stage derived from the events table -------------------
   // events → Debezium-shaped change stream: event_id is the Kafka offset,
@@ -117,7 +77,6 @@ object Queries {
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
 
-    // ================= flagship aggregations ============================
     "q1_pricing_summary" -> ((s, dir) => {
       // Exact accumulation via scaled integers (cents), not DECIMAL: a
       // decimal(18,2) sum has precision 28, which leaves Spark's compact
@@ -177,7 +136,6 @@ object Queries {
           .cast(DoubleType) / 10000.0).as("revenue"),
           count(lit(1)).as("n_rows"))),
 
-    // ================= CDC merge core (SURVEY §2.4) =====================
     "q_r1_dedupe" -> ((s, dir) =>
       CdcMerge.dedupe(cdcStage(s, dir), Seq("user_id"))),
 
@@ -229,13 +187,6 @@ object Queries {
         .limit(50)
         .select("o_orderkey", "o_totalprice")),
 
-    "q_x_salted_count" -> ((s, dir) =>
-      // skew-resistant two-level count: hot keys split across salts
-      // (result is identical to a plain groupBy count - that's the oracle).
-      graft.ops.Skew.saltedCount(rd(s, dir, "lineitem"),
-        Seq("l_returnflag"), col("l_orderkey"), n = 8)
-        .orderBy("l_returnflag")),
-
     "q_w_time_window" -> ((s, dir) =>
       // event-time tumbling window aggregation (batch form of the
       // streaming windowed count - same operator).
@@ -265,7 +216,6 @@ object Queries {
         .select("event_id", "user_id", "running_value")
     }),
 
-    // ================= CDC envelope transform (P1-P10) ==================
     "q_p_envelope_cdc" -> ((s, dir) => {
       // Debezium-shaped envelopes synthesized from events, then the real
       // transform stage: op classification, row selection, stringify,
@@ -288,7 +238,6 @@ object Queries {
       graft.cdc.DebeziumTransform(env, spec)
     }),
 
-    // ================= masking (SURVEY §2.3) ============================
     "q_m1_hash_mask" -> ((s, dir) => {
       val m = new Masker(MaskConfig(), maskSalt, Masker.Sha256)
       rd(s, dir, "customer")
@@ -303,7 +252,6 @@ object Queries {
         .withColumn("c_name_length", col("c_name_length").cast(LongType))
     }),
 
-    // ================= temporal conversions (P4-P7) =====================
     "q_p4_date" -> ((s, dir) =>
       rd(s, dir, "events").select(col("event_id"),
         Temporal.debeziumDate(col("event_id") % 30000 - 13023).as("date_str"))),
@@ -326,1154 +274,6 @@ object Queries {
         Temporal.debeziumTime((col("event_id") * 7919L) % 86400000000L)
           .as("time_str"))),
 
-    // ================= text analysis ====================================
-    "q_x_token_count" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        TextOps.tokenCount(col("text")).cast(LongType).as("n_tokens"),
-        TextOps.bpeishTokenCount(col("text")).cast(LongType).as("n_bpeish"))),
-
-    "q_x_quality" -> ((s, dir) => {
-      val cols = TextOps.qualityColumns(col("text")).map {
-        case (n, c) if n == "n_chars" || n == "n_tokens" => c.cast(LongType).as(n)
-        case (n, c) => c.as(n)
-      }
-      docs(s, dir).select((col("doc_id") +: cols): _*)
-    }),
-
-    "q_x_langid" -> ((s, dir) =>
-      // two-stage: materialize the per-language scores, then argmax —
-      // each regex runs once per row instead of once per reference.
-      docs(s, dir)
-        .select((col("doc_id") +: TextOps.isCjk(col("text")).as("__zh") +:
-          TextOps.LangPatterns.map { case (l, p) =>
-            TextOps.langScore(col("text"), p).as(s"__$l")
-          }): _*)
-        .select(col("doc_id"),
-          TextOps.langIdFromScores(col("__zh"),
-            TextOps.LangPatterns.map { case (l, _) => l -> col(s"__$l") })
-            .as("lang_pred"))),
-
-    "q_x_fingerprint" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        TextOps.fingerprint(col("text")).as("fp"))),
-
-    // ================= dedup ============================================
-    "q_x_dedup_exact" -> ((s, dir) =>
-      Dedup.exact(
-        docs(s, dir)
-          .withColumn("fp", TextOps.fingerprint(col("text"))),
-        Seq("fp"), "doc_id")
-        .select("fp", "doc_id", "dup_count")),
-
-    "q_x_dedup_keep" -> ((s, dir) =>
-      Dedup.exactKeep(
-        docs(s, dir)
-          .withColumn("fp", TextOps.fingerprint(col("text"))),
-        Seq("fp"), "doc_id")
-        .select("doc_id", "fp")),
-
-    "q_x_dedup_incr" -> ((s, dir) => {
-      // ingest-time dedup: docs arriving after id 400 survive only if
-      // their fingerprint is unseen in the accumulated corpus (id <= 400)
-      val fp = docs(s, dir)
-        .withColumn("fp", TextOps.fingerprint(col("text")))
-      Dedup.incremental(
-        fp.filter(col("doc_id") > 400).select("doc_id", "fp"),
-        fp.filter(col("doc_id") <= 400).select("fp"),
-        Seq("fp"), "doc_id")
-    }),
-
-    "q_x_vocab" -> ((s, dir) =>
-      // corpus vocabulary: top terms by document frequency
-      docs(s, dir)
-        .select(explode(array_distinct(
-          TextOps.tokens(TextOps.normalized(col("text"))))).as("term"))
-        .groupBy("term").agg(count(lit(1)).as("df"))
-        .orderBy(col("df").desc, col("term"))
-        .limit(20)),
-
-    "q_x_rolling_hash" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        TextOps.rollingHash(col("text")).as("rh"))),
-
-    "q_x_ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(rd(s, dir, "documents"), "doc_id", "text",
-        n = 3, threshold = 0.12)),
-
-    "q_x_heavy_keys" -> ((s, dir) =>
-      // skew profile: top-10 heaviest event keys with exact share — the
-      // measurement behind salting-factor / AQE-skew-threshold choices
-      graft.ops.CorpusStats.heavyKeys(
-        rd(s, dir, "events").select(col("user_id")), Seq("user_id"),
-        k = 10)),
-
-    "q_x_drift" -> ((s, dir) => {
-      // snapshot drift: doc-length histogram compared between the two
-      // halves of the corpus (doc_id parity = deterministic stand-in
-      // snapshots); symmetric chi-square per bucket, rational arithmetic
-      val d = rd(s, dir, "documents")
-        .select(col("doc_id"), expr("n_chars div 100").as("bucket"))
-      graft.ops.CorpusStats.histogramDrift(
-        d.filter(col("doc_id") % 2 === 0),
-        d.filter(col("doc_id") % 2 === 1), "bucket")
-    }),
-
-    "q_x_cluster_champion" -> ((s, dir) => {
-      // cluster-level champion selection: duplicate clusters (connected
-      // components over the jaccard pair graph) each keep their
-      // highest-quality member (n_chars desc, ties to smaller id) — the
-      // cluster-global form of keep_best's pairwise rule, and the final
-      // step of a dedup pipeline (pairs → clusters → one survivor each)
-      val d = rd(s, dir, "documents")
-      val clusters = Dedup.clusters(d, "doc_id",
-        Dedup.ngramJaccardPairs(d, "doc_id", "text", n = 3,
-          threshold = 0.12))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("cluster"))
-        .orderBy(col("n_chars").desc, col("id").asc)
-      clusters.join(d.select(col("doc_id").as("id"), col("n_chars")),
-          Seq("id"))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .select(col("cluster"), col("id").as("champion"), col("n_chars"))
-    }),
-
-    "q_x_containment" -> ((s, dir) =>
-      // doc-inside-doc near-dup: |A∩B|/min(|A|,|B|) over 3-gram shingle
-      // sets — catches quote-wrapped/truncated copies whose jaccard is
-      // diluted by the size imbalance; same single shingle-join skeleton
-      Dedup.ngramContainmentPairs(rd(s, dir, "documents"), "doc_id",
-        "text", n = 3, threshold = 0.3)),
-
-    "q_x_source_overlap" -> ((s, dir) =>
-      // corpus-composition diagnostic: per source-pair overlap
-      // coefficient of distinct 3-gram shingle sets ("are these two
-      // crawls the same data?") — runs on the bounded sources set
-      Dedup.sourceOverlap(rd(s, dir, "documents"), "source", "text",
-        n = 3)),
-
-    "q_x_kmv_overlap" -> ((s, dir) =>
-      // the 100 TB twin of q_x_source_overlap: per source-pair Jaccard
-      // ESTIMATE from bottom-k (KMV) sketches of the distinct 3-gram
-      // shingle hashes — corpus reduces to ≤ k longs per source before
-      // any pair math; sketch is md5-portable so the oracle replays the
-      // estimator bit-for-bit, not just row counts
-      Dedup.kmvSourceOverlap(rd(s, dir, "documents"), "source", "text",
-        n = 3, k = 64)),
-
-    "q_x_template_groups" -> ((s, dir) =>
-      // template-farm detection: md5 of the line-length skeleton groups
-      // structurally identical pages whose slot text differs
-      TextOps.templateGroups(rd(s, dir, "documents"), "doc_id", "text")
-        .select(col("doc_id"), col("template_id"), col("n_docs"))),
-
-    "q_x_length_outliers" -> ((s, dir) =>
-      // per-source winsorization screen: exact discrete p05/p95 bounds
-      // (member values — replayable on any engine), flag rows outside
-      TextOps.lengthOutliers(rd(s, dir, "documents"), Seq("source"),
-        "doc_id", "n_chars")),
-
-    "q_x_mad_outliers" -> ((s, dir) =>
-      // robust spread-scaled screen (Hampel): |v − median| > 3·MAD —
-      // median/MAD are nearest-rank MEMBER values, so everything stays
-      // exact int64; immune where crawl blobs inflate a mean/σ gate
-      CorpusStats.madOutliers(rd(s, dir, "documents"), Seq("source"),
-          "doc_id", "n_chars")
-        .select(col("source"), col("doc_id"),
-          col("n_chars").cast(LongType).as("n_chars"),
-          col("med"), col("mad"), col("is_outlier"))),
-
-    "q_x_k_anon" -> ((s, dir) => {
-      // k-anonymity export gate over the masking family's customer
-      // table: quasi-identifiers (nation, segment, balance band) must
-      // pin at least k=5 customers or the rows are suppressed
-      val c = rd(s, dir, "customer").select(col("c_custkey"),
-        col("c_nationkey").cast(LongType).as("nation"),
-        col("c_mktsegment").as("segment"),
-        graft.mask.Privacy.generalizeNum(floor(col("c_acctbal")), 5000L)
-          .as("bal_band"))
-      graft.mask.Privacy.kAnonymize(c,
-        Seq("nation", "segment", "bal_band"), k = 5L)
-    }),
-
-    "q_x_l_diverse" -> ((s, dir) => {
-      // l-diversity gate: (nation, balance band) groups must pin ≥ k=5
-      // customers AND ≥ l=3 distinct market segments — the k-anonymous-
-      // but-homogeneous groups q_x_k_anon would release get suppressed
-      val c = rd(s, dir, "customer").select(col("c_custkey"),
-        col("c_nationkey").cast(LongType).as("nation"),
-        col("c_mktsegment").as("segment"),
-        graft.mask.Privacy.generalizeNum(floor(col("c_acctbal")), 5000L)
-          .as("bal_band"))
-      graft.mask.Privacy.lDiversify(c, Seq("nation", "bal_band"),
-        "segment", k = 5L, l = 3L)
-    }),
-
-    "q_x_k_anon_report" -> ((s, dir) => {
-      // the release-rate report a privacy review reads before choosing
-      // k: per quasi-group size + released verdict at k=5 — the audit
-      // face of q_x_k_anon's row gate
-      val c = rd(s, dir, "customer").select(
-        col("c_nationkey").cast(LongType).as("nation"),
-        col("c_mktsegment").as("segment"),
-        graft.mask.Privacy.generalizeNum(floor(col("c_acctbal")), 5000L)
-          .as("bal_band"))
-      graft.mask.Privacy.kAnonymityReport(c,
-        Seq("nation", "segment", "bal_band"), k = 5L)
-    }),
-
-    "q_x_t_close" -> ((s, dir) => {
-      // t-closeness gate: a (nation, balance band) group's segment
-      // distribution must sit within total-variation distance 1/5 of
-      // the corpus-wide distribution — the l-diverse-but-SKEWED groups
-      // q_x_l_diverse would release get suppressed. Exact BIGINT TVD
-      // (tvd2_num = 2·TVD·n_g·N), so the oracle replays bit-for-bit
-      val c = rd(s, dir, "customer").select(col("c_custkey"),
-        col("c_nationkey").cast(LongType).as("nation"),
-        col("c_mktsegment").as("segment"),
-        graft.mask.Privacy.generalizeNum(floor(col("c_acctbal")), 5000L)
-          .as("bal_band"))
-      graft.mask.Privacy.tCloseness(c, Seq("nation", "bal_band"),
-        "segment", tNum = 1L, tDen = 5L, k = 5L)
-    }),
-
-    "q_x_dup_clusters" -> ((s, dir) =>
-      // pair graph → connected components → canonical representative per
-      // duplicate cluster (min-label fixpoint; the recursive-CTE oracle
-      // computes the same reachability minimum).
-      Dedup.clusters(rd(s, dir, "documents"), "doc_id",
-        Dedup.ngramJaccardPairs(rd(s, dir, "documents"), "doc_id", "text",
-          n = 3, threshold = 0.12))
-        .select(col("id").as("doc_id"), col("cluster"))),
-
-    "q_x_keywords" -> ((s, dir) =>
-      TextOps.topKeywords(docs(s, dir), "doc_id", "text", k = 3)
-        .select(col("id").as("doc_id"), col("term"), col("rank"),
-          col("score"))),
-
-    "q_x_collocations" -> ((s, dir) =>
-      // corpus collocations: top adjacent bigrams by rational PMI
-      // (c_ab·N / c_a·c_b, exact corpus integers — oracle replays the
-      // double bit-for-bit); bigrams via one zip_with per doc, no
-      // positional self-join
-      TextOps.collocations(docs(s, dir), "text", minCount = 5, k = 100)),
-
-    "q_x_fair_quota" -> ((s, dir) => {
-      // max-min fair (waterfilling) split of a global token budget
-      // across sources: small sources keep everything, large ones clamp
-      // to the common water level. Heavy step = the per-source corpus
-      // token count; the allocation itself runs on the 20-row aggregate.
-      val counts = docs(s, dir)
-        .select(col("source"),
-          explode(TextOps.tokens(TextOps.normalized(col("text"))))
-            .as("__t"))
-        .groupBy("source").agg(count(lit(1)).as("tokens"))
-      graft.ops.Sampling.fairShareQuota(counts, "source", "tokens",
-        budget = 10000L)
-    }),
-
-    "q_x_contamination" -> ((s, dir) =>
-      // eval-leakage gate: flag docs sharing 3-gram shingles with the
-      // "benchmark" (every 50th doc — a deterministic stand-in eval set);
-      // benchmark shingles broadcast, corpus side never shuffles to probe
-      Dedup.contamination(docs(s, dir), "doc_id", "text",
-          rd(s, dir, "documents").filter(col("doc_id") % 50 === 0), "text",
-          n = 3, minHits = 1)
-        .select(col("id").as("doc_id"), col("n_hits"),
-          col("contaminated").cast(LongType).as("contaminated"))),
-
-    "q_x_dsir_weights" -> ((s, dir) =>
-      // DSIR importance weights (Xie et al. 2023): hashed-bigram target/
-      // source ratios in pure BIGINT arithmetic (the rational twin of
-      // the paper's log-likelihood — same orderings, bit-exact replay);
-      // target = the contamination queries' benchmark stand-in. Bucket
-      // counts are map-side-combined aggregates; the O(1024) ratio
-      // table broadcasts.
-      graft.ops.Dsir.weights(docs(s, dir), "doc_id", "text",
-        rd(s, dir, "documents").filter(col("doc_id") % 50 === 0), "text")),
-
-    "q_x_dsir_select" -> ((s, dir) =>
-      // importance SELECTION on top of the weights: the 50 most
-      // target-like docs by length-free score — total (avg_ratio desc,
-      // id) order, plans as TakeOrderedAndProject
-      graft.ops.Dsir.select(docs(s, dir), "doc_id", "text",
-        rd(s, dir, "documents").filter(col("doc_id") % 50 === 0), "text",
-        k = 50)),
-
-    "q_x_dsir_incr" -> ((s, dir) => {
-      // ingest-time importance scoring: the bounded bucket-ratio table
-      // is persisted ONCE per session (IndexStore, the minhash_incr
-      // pattern); the new batch (doc_id > 400) scores against the
-      // STORED statistics — corpus and target never re-read, the ratio
-      // frame broadcasts. Value-checks as q_x_dsir_weights restricted
-      // to the batch ids (the store was built over the full corpus).
-      val store = IndexStore.dsirRatios(s, dir)
-      graft.ops.Dsir.weightsWithRatios(
-        docs(s, dir).filter(col("doc_id") > 400), "doc_id", "text",
-        IndexStore.readBuilt(s, "dsir_ratios", dir, store.path))
-    }),
-
-    "q_x_dsir_resample" -> ((s, dir) =>
-      // importance RESAMPLING (the paper's actual draw): Gumbel-top-k
-      // over the exact micro-nat log-likelihood — p ∝ the paper's
-      // likelihood-ratio weight, so target-like docs are likely, not
-      // certain; hash-derived u makes the draw engine-replayable.
-      graft.ops.Dsir.resample(docs(s, dir), "doc_id", "text",
-        rd(s, dir, "documents").filter(col("doc_id") % 50 === 0), "text",
-        k = 50)),
-
-    "q_x_c4_clean" -> ((s, dir) => {
-      // C4 line-level cleaning (Raffel et al. 2020): plant line
-      // structure first (sentence boundaries → newlines — the pii_scrub
-      // planted-defect pattern; the fixture text is single-line) so the
-      // per-line filters actually split and drop. clean_text rides as
-      // its md5 — the value check without megabyte rows.
-      val lined = rd(s, dir, "documents").select(col("doc_id"),
-        replace(col("text"), lit(". "), lit(".\n")).as("lt"))
-      TextOps.c4Clean(lined, "doc_id", "lt")
-        .select(col("doc_id"), md5(col("clean_text")).as("clean_md5"),
-          col("n_lines"), col("n_kept"), col("n_sentences"),
-          col("keep_page").cast(LongType).as("keep_page"))
-    }),
-
-    "q_x_chunk" -> ((s, dir) =>
-      // token-window chunking (40-token windows, 8-token overlap) — the
-      // downstream of q_x_pack's oversize flag; pure per-row explode
-      TextOps.chunk(docs(s, dir), "doc_id", "text", budget = 40, overlap = 8)
-        .select(col("id").as("doc_id"), col("chunk_id"),
-          col("chunk_tokens"), col("chunk"))),
-
-    "q_x_minhash_lsh" -> ((s, dir) =>
-      // portable (md5-family) variant → full DuckDB value oracle; the
-      // xxhash64 fast path is spec-tested (DedupSpec).
-      Dedup.minHashCandidatesPortable(rd(s, dir, "documents"), "doc_id", "text",
-        n = 3, numHashes = 64, bands = 16, estThreshold = 0.3)),
-
-    "q_x_minhash_r2" -> ((s, dir) =>
-      // the LOW-THRESHOLD banding shape DEDUP_RECALL.md measures as the
-      // only one that holds the 0.1–0.4 jaccard band (r=2: 64 hashes in
-      // 32 bands, est cut 0.15) — value-checked like its r=4 sibling.
-      Dedup.minHashCandidatesPortable(rd(s, dir, "documents"), "doc_id", "text",
-        n = 3, numHashes = 64, bands = 32, estThreshold = 0.15)),
-
-    "q_x_band_stats" -> ((s, dir) =>
-      // LSH ops diagnostic: per-band bucket count / largest bucket /
-      // implied candidate pairs — the 2-aggregate readout that catches
-      // a degenerate band (one bucket holding the corpus = a quadratic
-      // join about to happen) BEFORE the candidate join runs.
-      Dedup.minHashBandStats(rd(s, dir, "documents"), "doc_id", "text",
-        n = 3, numHashes = 64, bands = 16)),
-
-    "q_x_lsh_editverify" -> ((s, dir) =>
-      // generate-then-verify near-dup: banded MinHash candidates, then an
-      // EXACT clamped edit-distance check per pair — the codegen'd
-      // levenshtein(limit) early-exits pairs provably past the budget.
-      // Candidates bear the O(len²) cost, never the corpus cross product.
-      Dedup.editVerifiedPairs(rd(s, dir, "documents"), "doc_id", "text",
-        n = 3, numHashes = 64, bands = 16, estThreshold = 0.3,
-        minEditSim = 0.4, maxChars = 400)),
-
-    "q_x_minhash_incr" -> ((s, dir) => {
-      // ingest-time NEAR-dup: corpus (id <= 400) signatures persisted to
-      // the warehouse ONCE per session ([[IndexStore]]); the new batch
-      // (id > 400) dedups against the STORED signatures — the corpus text
-      // is never re-shingled, its signature side never shuffles (batch
-      // band keys broadcast). Value-checked equal to batch-mode
-      // candidates restricted to pairs touching a new doc.
-      val store = IndexStore.minhashSigs(s, dir)
-      Dedup.minHashIncrementalPortable(
-        docs(s, dir).filter(col("doc_id") > 400), "doc_id", "text",
-        IndexStore.readBuilt(s, "minhash_sigs", dir, store.path),
-        n = 3, numHashes = 64, bands = 16, estThreshold = 0.3)
-    }),
-
-    "q_x_simhash" -> ((s, dir) =>
-      Dedup.simHashCandidatesPortable(rd(s, dir, "documents"), "doc_id", "text",
-        chunks = 4, maxHamming = 10)),
-
-    // ================= multimodal =======================================
-    "q_x_media_meta" -> ((s, dir) =>
-      // documents.text encoded as the opaque binary payload; metadata via
-      // pure expressions (no decode in the row path).
-      docs(s, dir)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("media"))
-        .select(col("doc_id"),
-          Multimodal.stubMetadata(col("media")).as("m"))
-        .select(col("doc_id"), col("m.byte_len").as("byte_len"),
-          col("m.width").as("width"), col("m.height").as("height"),
-          col("m.duration_ms").as("duration_ms"),
-          col("m.n_frames").as("n_frames"))),
-
-    "q_x_media_frames" -> ((s, dir) =>
-      Multimodal.sampleFrames(
-        docs(s, dir)
-          .select(col("doc_id"), encode(col("text"), "UTF-8").as("media")),
-        "doc_id", "media", everyNth = 1)
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_sampled"))),
-
-    "q_x_media_features" -> ((s, dir) =>
-      // per-partition stub decode. Emits sortable SCALAR digests of the
-      // feature vector (first/last slot) rather than the raw array — the
-      // driver harness canonicalizes by sorting columns and arrays aren't
-      // sortable; the stub formula is portable so DuckDB verifies values.
-      Multimodal.extractFeatures(
-        docs(s, dir)
-          .select(col("doc_id"), encode(col("text"), "UTF-8").as("media")),
-        "media", dim = 16, codec = Multimodal.StubCodec)
-        .select(col("doc_id"),
-          element_at(col("features"), 1).cast(DoubleType).as("f_first"),
-          element_at(col("features"), 16).cast(DoubleType).as("f_last"))),
-
-    "q_x_media_resize" -> ((s, dir) =>
-      // per-partition decode→scale→re-encode (stub: dims header + portable
-      // content hash); hex-encoded so the harness sorts a plain string.
-      Multimodal.resize(
-        docs(s, dir)
-          .select(col("doc_id"), encode(col("text"), "UTF-8").as("media")),
-        "media", w = 32, h = 24, codec = Multimodal.StubCodec)
-        .select(col("doc_id"), hex(col("media")).as("resized_hex"))),
-
-    "q_x_media_imageio" -> ((s, dir) =>
-      // REAL codec path: synthesize gray PNGs from (doc_id, len(text)),
-      // encode AND decode with javax.imageio; the oracle predicts the
-      // decoded pixel sum in closed form because PNG is lossless.
-      Multimodal.imageIoRoundTrip(
-        docs(s, dir).select(col("doc_id"),
-          length(coalesce(col("text"), lit(""))).as("len")),
-        "doc_id", "len")),
-
-    "q_x_profile" -> ((s, dir) =>
-      // ingest data-quality screen: one aggregation pass profiles the
-      // string-stable lineitem columns (ints + flags; doubles/timestamps
-      // excluded — their string forms aren't cross-engine-identical).
-      CorpusStats.profileColumns(rd(s, dir, "lineitem"),
-        Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-          "l_returnflag", "l_linestatus"))),
-
-    "q_x_temp_mix" -> ((s, dir) =>
-      // GPT-3/Pile-style temperature mixing: source quotas ∝ count^0.5,
-      // exact integer largest-remainder split of 1000 units.
-      Sampling.temperatureMix(
-        docs(s, dir).groupBy(col("source")).agg(count(lit(1)).as("n")),
-        "source", "n", alpha = 0.5, total = 1000)),
-
-    "q_x_media_jpeg" -> ((s, dir) =>
-      // REAL lossy-codec path: PNG → JPEG transcode → JPEG header read;
-      // the oracle checks the format-preserved fields (dims, gray).
-      Multimodal.jpegTranscode(
-        docs(s, dir).select(col("doc_id"),
-          length(coalesce(col("text"), lit(""))).as("len")),
-        "doc_id", "len")),
-
-    "q_x_media_mp4" -> ((s, dir) =>
-      // REAL container parsing: a valid ISO-BMFF box tree synthesized
-      // from (doc_id, len), then parsed back header-only (moov walk) —
-      // the metadata-pruning path video filtering runs before any decode.
-      Multimodal.mp4RoundTrip(
-        docs(s, dir).select(col("doc_id"),
-          length(coalesce(col("text"), lit(""))).as("len")),
-        "doc_id", "len")),
-
-    "q_x_media_mjpeg" -> ((s, dir) =>
-      // REAL video path: per row, real JPEG frames packed into a real
-      // RIFF/AVI container, parsed back, every 2nd frame decoded with
-      // the real JPEG decoder; the oracle checks the format-preserved
-      // fields (frame count, dims, duration, sampled-decode success).
-      Multimodal.mjpegRoundTrip(
-        docs(s, dir).select(col("doc_id"),
-          length(coalesce(col("text"), lit(""))).as("len")),
-        "doc_id", "len")),
-
-    "q_x_media_wav" -> ((s, dir) =>
-      // REAL audio codec path: 16-bit PCM synthesized from (doc_id,
-      // len), encoded AND decoded as WAV via javax.sound.sampled; PCM
-      // losslessness makes the decoded sample sum closed-form.
-      Multimodal.wavRoundTrip(
-        docs(s, dir).select(col("doc_id"),
-          length(coalesce(col("text"), lit(""))).as("len")),
-        "doc_id", "len")),
-
-    "q_x_para_strip" -> ((s, dir) => {
-      // boilerplate strip: the corpus-wide footer (500 occurrences) and
-      // nav blocks (~71 per residue) exceed maxFreq and vanish from
-      // EVERY doc; unique own-text paragraphs survive (unless the
-      // document text itself repeats > maxFreq times corpus-wide).
-      val sep = " <p> "
-      val wrapped = docs(s, dir).select(col("doc_id"),
-        concat(coalesce(col("text"), lit("")), lit(sep),
-          lit("copyright footer all rights reserved"), lit(sep),
-          concat(lit("nav block "), (col("doc_id") % 7).cast("string")))
-          .as("wtext"))
-      Dedup.stripFrequentParagraphs(wrapped, "doc_id", "wtext", sep,
-        maxFreq = 2)
-    }),
-
-    "q_x_para_dedup" -> ((s, dir) => {
-      // corpus-wide paragraph dedup (C4 screen): three paragraphs per
-      // doc — the doc's own text (unique), a corpus-wide boilerplate
-      // footer (survives once, in doc 0), and a doc_id%7 navigation
-      // block (one survivor per residue class) — then global
-      // first-occurrence keep + reassembly.
-      val sep = " <p> "
-      val wrapped = docs(s, dir).select(col("doc_id"),
-        concat(coalesce(col("text"), lit("")), lit(sep),
-          lit("copyright footer all rights reserved"), lit(sep),
-          concat(lit("nav block "), (col("doc_id") % 7).cast("string")))
-          .as("wtext"))
-      Dedup.dedupParagraphs(wrapped, "doc_id", "wtext", sep)
-    }),
-
-    "q_x_substr_spans" -> ((s, dir) => {
-      // exact-substring duplicate spans (Lee et al. ExactSubstr): every
-      // doc carries a shared 10-token boilerplate tail, so duplicate
-      // 8-token windows exist corpus-wide and merge into one maximal
-      // span per doc; any NATURAL repeated 8-gram in the doc text
-      // surfaces too. Token-window hash aggregate + gaps-and-islands —
-      // no suffix array, no self-join.
-      Dedup.duplicateSpans(substrWrapped(s, dir), "doc_id", "wtext",
-        n = 8, minCount = 2)
-    }),
-
-    "q_x_substr_strip" -> ((s, dir) =>
-      // the executing half: cut every duplicate span, keep the unique
-      // remainder, reassemble — doc-level drop would throw away the
-      // good half of a half-duplicated document.
-      Dedup.stripDuplicateSpans(substrWrapped(s, dir), "doc_id", "wtext",
-        n = 8, minCount = 2)),
-
-    "q_x_substr_first" -> ((s, dir) =>
-      // Lee et al. dedup proper: the globally FIRST occurrence of each
-      // duplicated window survives (one doc keeps the boilerplate tail),
-      // every later copy's span is cut.
-      Dedup.stripDuplicateSpans(substrWrapped(s, dir), "doc_id", "wtext",
-        n = 8, minCount = 2, keepFirst = true)),
-
-    "q_x_decontam" -> ((s, dir) =>
-      // span-level eval decontamination: every 50th doc's text IS the
-      // benchmark, so those docs (and any doc sharing an 8-gram with
-      // them) lose exactly the colliding spans — surgical, not
-      // doc-level drop. Benchmark keys broadcast; corpus probe is a
-      // semi-join on the exploded windows.
-      Dedup.decontaminate(docs(s, dir), "doc_id", "text",
-        docs(s, dir).filter(col("doc_id") % 50 === 0).select(col("text")),
-        "text", n = 8)),
-
-    // ================= similarity search ================================
-    "q_x_ann_cosine" -> ((s, dir) => {
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-        .map(_.toDouble).toArray
-      Similarity.bruteForceTopK(
-          emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", q, 20)
-        .withColumn("rank",
-          row_number().over(
-            Window.orderBy(col("cosine_sim").desc, col("vec_id"))))
-        .select(col("vec_id"), col("rank").cast(LongType).as("rank"))
-    }),
-
-    "q_x_ann_ivf" -> ((s, dir) => {
-      // IVF scale path: deterministic k-means cells, probe nearest cells
-      // only. Training is bit-portable (md5 seeding + DECIMAL means), so
-      // the DuckDB oracle replays it end to end — a full value check.
-      import graft.ops.Ivf
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-        .map(_.toDouble).toArray
-      val model = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      Ivf.topK(emb.filter(col("vec_id") =!= 0), "vec_id", "embedding",
-        model, q, k = 20, nprobe = 2)
-        .select(col("vec_id"), col("cosine_sim"))
-    }),
-
-    "q_x_ann_lsh" -> ((s, dir) => {
-      // query-time LSH: probe only signature-near buckets, exact rerank
-      // inside them (portable planes → full value oracle). Knobs picked
-      // from the measured RECALL.md sweep: planes=24/probeBits=8 gives
-      // the best recall-per-candidate ratio on the fixture (0.295 @ 9%
-      // of the corpus probed, vs 0.125 @ 4% for the old 16/4 default).
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-        .map(_.toDouble).toArray
-      Similarity.lshTopKPortable(emb.filter(col("vec_id") =!= 0), "vec_id",
-        "embedding", q, k = 20, numPlanes = LshPlanes,
-        probeBits = LshProbeBits, dim = 64)
-        .select(col("vec_id"), col("cosine_sim"))
-    }),
-
-    // NOTE: the exact all-pairs baseline (Similarity.bruteForcePairs) is
-    // deliberately NOT a catalog entry — the shipped catalog contains zero
-    // cartesian plans. It is size-gated and exercised spec-side
-    // (SimilaritySpec verifies the LSH path against it on a fixture).
-    "q_x_embed_dup_lsh" -> ((s, dir) =>
-      Similarity.cosineDupPairsPortable(rd(s, dir, "embeddings"), "vec_id",
-        "embedding", threshold = 0.30, numPlanes = 16, bands = 8, dim = 64)
-        .select("id_a", "id_b")),
-
-    "q_x_semdedup" -> ((s, dir) => {
-      // SemDeDup: near-dup pairs within k-means cells only — the geometric
-      // candidate bound (vs the probabilistic LSH bound of embed_dup_lsh);
-      // md5-seeded training makes cells AND pairs oracle-replayable.
-      val emb = rd(s, dir, "embeddings")
-      val model = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      SemDedup.pairs(emb, "vec_id", "embedding", model, threshold = 0.30)
-        .select("id_a", "id_b", "cell")
-    }),
-
-    "q_x_keep_best" -> ((s, dir) => {
-      // quality-aware SemDeDup: every near-dup pair keeps its
-      // higher-quality side (n_chars desc, ties to smaller id) — the
-      // curation refinement of semdedup_keep's min-id rule
-      val emb = rd(s, dir, "embeddings")
-      val model = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      val scored = emb.join(
-        rd(s, dir, "documents")
-          .select(col("doc_id").as("vec_id"), col("n_chars")),
-        Seq("vec_id"))
-      graft.ops.SemDedup.keepBest(scored, "vec_id", "embedding",
-          "n_chars", model, threshold = 0.30)
-        .select(col("vec_id"), col("n_chars"))
-    }),
-
-    "q_x_semdedup_incr" -> ((s, dir) => {
-      // ingest-time SemDeDup against the SERVED index: the micro-batch
-      // (every 25th vector) assigns with the STORED model (no training)
-      // and the corpus side is a partition-pruned scan of only the
-      // batch's cells; corpus rows each batch row duplicates come back
-      // as (id, dup_of) — drop or route, then indexAppend the survivors.
-      val emb = rd(s, dir, "embeddings")
-      val idx = IndexStore.annIvf(s, dir)
-      SemDedup.incrementalAgainstIndex(s, idx.path,
-        emb.filter(col("vec_id") % 25 === 0), "vec_id", "embedding",
-        threshold = 0.30)
-    }),
-
-    "q_x_semdedup_keep" -> ((s, dir) => {
-      // the curation projection: corpus minus greedy min-id duplicates
-      val emb = rd(s, dir, "embeddings")
-      val model = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      SemDedup.keep(emb, "vec_id", "embedding", model, threshold = 0.30)
-        .select("vec_id")
-    }),
-
-    "q_x_cell_sample" -> ((s, dir) => {
-      // cell-balanced deterministic sample: ≤10 per k-means cell by
-      // md5-order — diversity-preserving curation (rare semantic regions
-      // keep representation); one window shuffle on the cell key.
-      val emb = rd(s, dir, "embeddings")
-      val model = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      SemDedup.cellSample(emb, "vec_id", "embedding", model, perCell = 10)
-    }),
-
-    // ================= temporal joins ===================================
-    "q_x_asof_join" -> ((s, dir) => {
-      // each event picks up the customer's latest order at event time
-      // (union+window as-of join: one key shuffle, zero row explosion)
-      val ev = rd(s, dir, "events").select(col("event_id"), col("user_id"),
-        col("ts").as("t_us"))
-      val ord = rd(s, dir, "orders").select(col("o_custkey").as("user_id"),
-        // o_orderdate is TIMESTAMP_NTZ; session TZ is pinned UTC, so the
-        // cast reads the naive value as a UTC instant (= DuckDB epoch_us)
-        unix_micros(col("o_orderdate").cast(TimestampType)).as("o_t_us"),
-        col("o_orderkey"), col("o_totalprice"))
-      AsOf.asofJoin(ev, ord, "user_id", "t_us", "o_t_us",
-          payload = Seq("o_orderkey", "o_totalprice"), tieBreak = "o_orderkey")
-        .select("event_id", "user_id", "o_orderkey", "o_totalprice")
-    }),
-
-    "q_x_range_join" -> ((s, dir) => {
-      // pure interval self-join (no equi key): neighbors within ±60 s,
-      // banded into constant-factor bucket equi-join
-      val a = rd(s, dir, "events")
-        .select(col("event_id").as("a_id"), col("ts").as("a_t"))
-      val b = rd(s, dir, "events")
-        .select(col("event_id").as("b_id"), col("ts").as("b_t"))
-      AsOf.rangeJoin(a, b, "a_t", "b_t", width = 60000000L)
-        .filter(col("a_id") =!= col("b_id"))
-        .groupBy(col("a_id").as("event_id"))
-        .agg(count(lit(1)).as("n_near"))
-    }),
-
-    // ================= curation / sampling ==============================
-    "q_x_repetition" -> ((s, dir) =>
-      TextOps.repetitionSignals(docs(s, dir), "doc_id", "text")
-        .select("doc_id", "n_tokens", "dup_token_frac", "top_token_frac",
-          "dup_bigram_frac")),
-
-    "q_x_stratified" -> ((s, dir) =>
-      // 20 docs per language, selected by deterministic hash order —
-      // reproducible on any cluster size / engine
-      // pre-select: GroupRunningAgg is a pruning boundary — the scan
-      // must not read `text` for a rank-only query
-      Sampling.stratified(rd(s, dir, "documents").select("lang", "doc_id"),
-          Seq("lang"), "doc_id", 20)
-        .select(col("lang"), col("doc_id"), col("rk").cast(LongType).as("rk"))),
-
-    "q_x_stratified_topk" -> ((s, dir) =>
-      // the small-k fast path: identical rows to q_x_stratified, but as
-      // a bounded map-side top-k aggregate — ≤ k (hash, id) pairs per
-      // (mapper, stratum) cross the wire instead of the corpus
-      Sampling.stratifiedTopK(
-        rd(s, dir, "documents").select("lang", "doc_id"),
-        Seq("lang"), "doc_id", 20)),
-
-    "q_x_neyman_sample" -> ((s, dir) =>
-      // variance-optimal audit sample: 120 reviews split across sources
-      // ∝ N_h·σ_h of doc length, drawn by deterministic hash rank
-      Sampling.neymanSample(rd(s, dir, "documents"), "source", "n_chars",
-          "doc_id", 120L)
-        .select(col("source"), col("doc_id"),
-          col("rk").cast(LongType).as("rk"), col("quota"))),
-
-    "q_x_winnow" -> ((s, dir) =>
-      // MOSS winnowing sketch (k=3 grams, w=4 windows): any shared run
-      // of >= 6 tokens between two docs shares a fingerprint
-      Dedup.winnowFingerprints(rd(s, dir, "documents"), "doc_id", "text",
-        k = 3, w = 4)),
-
-    "q_x_winsorize" -> ((s, dir) =>
-      // robust clamp of doc length to each source's [p5, p95]
-      // nearest-rank band — the outlier screen before budget math
-      CorpusStats.winsorize(
-          rd(s, dir, "documents").select("source", "doc_id", "n_chars"),
-          Seq("source"), "n_chars", 0.05, 0.95)
-        .select(col("source"), col("doc_id"),
-          col("n_chars").cast(LongType).as("n_chars"),
-          col("lo"), col("hi"), col("v_wins"))),
-
-    "q_x_winnow_incr" -> ((s, dir) => {
-      // ingest-time quote detection: corpus (id <= 400) fingerprints
-      // persisted once per session; the new batch (id > 400) probes the
-      // STORE — batch fps broadcast, the corpus side never shuffles
-      val store = IndexStore.winnowFps(s, dir)
-      Dedup.winnowIncremental(
-        docs(s, dir).filter(col("doc_id") > 400), "doc_id", "text",
-        IndexStore.readBuilt(s, "winnow_fps", dir, store.path),
-        k = 3, w = 4, minShared = 2L)
-    }),
-
-    "q_x_winnow_capped" -> ((s, dir) => {
-      // q_x_winnow_incr under boilerplate governance (r18): corpus fps
-      // carried by > 2 docs are dropped before the probe — the batch
-      // twin of the stream's maxFpDocs compact rule; minShared = 1 so
-      // the cap's effect on the pair set is visible, not masked
-      val store = IndexStore.winnowFps(s, dir)
-      Dedup.winnowIncremental(
-        docs(s, dir).filter(col("doc_id") > 400), "doc_id", "text",
-        Dedup.capFpFrequency(
-          IndexStore.readBuilt(s, "winnow_fps", dir, store.path),
-          "doc_id", 2L),
-        k = 3, w = 4, minShared = 1L)
-    }),
-
-    "q_x_qnorm" -> ((s, dir) =>
-      // within-source quantile calibration: one gate threshold means
-      // "top X% of every source" regardless of score distributions
-      CorpusStats.quantileNormalize(
-          rd(s, dir, "documents").select("source", "doc_id", "n_chars"),
-          Seq("source"), "n_chars")
-        .select(col("source"), col("doc_id"),
-          col("n_chars").cast(LongType).as("n_chars"), col("q_norm"))),
-
-    "q_x_interleave" -> ((s, dir) =>
-      // deterministic balanced write order for the training mix
-      Sampling.interleave(rd(s, dir, "documents").select("source", "doc_id"),
-          "source", "doc_id")
-        .select(col("source"), col("doc_id"), col("pos"))),
-
-    "q_x_mojibake" -> ((s, dir) => {
-      // encoding-damage screen on deterministically damaged text (the
-      // media-round-trip pattern: synthesize the defect, detect+repair
-      // it on the real operator path) — docs ≡0 (mod 3) get Latin-1
-      // mojibake, ≡1 get CP1252 punctuation damage plus a replacement
-      // char, ≡2 stay clean
-      val t = coalesce(col("text"), lit(""))
-      val damaged =
-        when(pmod(col("doc_id"), lit(3)) === 0,
-            replace(t, lit("e"), lit("Ã©")))
-          .when(pmod(col("doc_id"), lit(3)) === 1,
-            concat(replace(t, lit("a"), lit("â€™")), lit(" �")))
-          .otherwise(t)
-      val dd = rd(s, dir, "documents").select(col("doc_id"),
-        damaged.as("__t"))
-      val sig = TextOps.mojibakeColumns(col("__t"))
-      dd.select(col("doc_id") +:
-        sig.map { case (n, c) => c.as(n) } :+
-        length(TextOps.repairMojibake(col("__t"))).cast(LongType)
-          .as("repaired_chars"): _*)
-    }),
-
-    "q_x_weighted_sample" -> ((s, dir) =>
-      // Efraimidis–Spirakis weighted sample w/o replacement, weight =
-      // doc length; hash-derived u makes the draw engine-replayable and
-      // the plan a scan + TakeOrderedAndProject (no corpus shuffle)
-      Sampling.weightedTopK(
-        rd(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-        "doc_id", "n_chars", k = 200)),
-
-    "q_x_token_budget" -> ((s, dir) =>
-      // mixture construction by TOKEN mass per language (8k chars each):
-      // greedy fill in deterministic hash order — the budget knob
-      // mixture recipes are specified in (stratified = count, this =
-      // mass); one group shuffle, running sum on the same window
-      Sampling.tokenBudget(
-        rd(s, dir, "documents").select(col("doc_id"), col("lang"),
-          col("n_chars")),
-        Seq("lang"), "doc_id", "n_chars", budget = 8000L)
-        .select(col("lang"), col("doc_id"), col("n_chars"),
-          col("cum_tokens"))),
-
-    "q_x_bpe_merges" -> ((s, dir) =>
-      // tokenizer training in-engine: 64 BPE merges learned from the
-      // corpus via the BATCHED trainer (r16) — one corpus pass builds
-      // the distinct-word frequency table, then each aggregate accepts
-      // a provably-strict-order PREFIX of its top candidates, so 64
-      // merges cost a handful of vocab-table passes instead of 64. The
-      // oracle replays the STRICT unrolled sequence — the hash match IS
-      // the batched==strict equivalence proof at corpus scale
-      graft.ops.TextOps.bpeTrainBatched(docs(s, dir), "text",
-        merges = 64)),
-
-    "q_x_bpe_encode" -> ((s, dir) => {
-      // the encode half: the 8 learned merges fold into one codegen'd
-      // chain of replaces per word (no joins — the merge table is a
-      // driver literal, exactly how a tokenizer ships), then one doc-id
-      // aggregate for word/subword counts
-      // batched trainer (r19): byte-identical to the strict trainer —
-      // BpeBatchSpec pins equality on merges×batchN grids and
-      // q_x_bpe_merges hash-matches the strict unrolled oracle over this
-      // corpus — at roughly half the sequential driver jobs (r16 sweep:
-      // 0.80 s vs 2.08 s at 8 merges)
-      val mt = graft.ops.TextOps.bpeTrainBatched(docs(s, dir), "text",
-          merges = 8)
-        .orderBy("step").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      graft.ops.TextOps.bpeEncodeStats(docs(s, dir), "doc_id", "text", mt)
-    }),
-
-    "q_x_quota_trim" -> ((s, dir) => {
-      // measure → allocate → trim: per-source char mass waterfilled
-      // against a global 30k budget, then each source greedily trimmed
-      // to ITS quota in deterministic hash order — the full fair-budget
-      // pipeline (fairShareQuota's execution half)
-      val d = rd(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-      val counts = d.groupBy("source").agg(sum(col("n_chars")).as("c"))
-      val quotas = graft.ops.Sampling.fairShareQuota(counts, "source",
-        "c", budget = 30000L).select(col("source"), col("quota"))
-      graft.ops.Sampling.tokenBudgetByQuota(d, "source", "doc_id",
-          "n_chars", quotas)
-        .select(col("source"), col("doc_id"), col("n_chars"),
-          col("quota"), col("cum_tokens"))
-    }),
-
-    "q_x_dataset_card" -> ((s, dir) => {
-      // the per-source dataset card: docs, char mass, exact dup rate,
-      // language count, and the p50 length — one slim projection, four
-      // O(sources) aggregate frames broadcast-joined. Each distinct
-      // count is its OWN pre-aggregate (the profiler/funnel replan
-      // rule: multi-distinct in one agg plans an Expand that copies
-      // every row per distinct set).
-      import graft.ops.{CorpusStats, TextOps}
-      val base = rd(s, dir, "documents").select(col("source"),
-        col("lang"), col("n_chars"),
-        TextOps.fingerprint(col("text")).as("__fp"))
-        .localCheckpoint()
-      graft.core.Metrics.deferUnpersist(base)
-      val mass = base.groupBy("source").agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_chars").cast(LongType)).as("total_chars"))
-      val fps = base.select("source", "__fp").distinct()
-        .groupBy("source").agg(count(lit(1)).as("n_distinct"))
-      val langs = base.select("source", "lang").distinct()
-        .groupBy("source").agg(count(lit(1)).as("n_langs"))
-      val p50 = CorpusStats.groupedQuantiles(
-          base.select("source", "n_chars"), Seq("source"), "n_chars",
-          Seq(0.5))
-        .select(col("source"), col("value").as("p50_chars"))
-      mass.join(broadcast(fps), Seq("source"))
-        .join(broadcast(langs), Seq("source"))
-        .join(broadcast(p50), Seq("source"))
-        .select(col("source"), col("n_docs"), col("total_chars"),
-          col("n_distinct"),
-          round(lit(1.0) - col("n_distinct").cast(DoubleType) /
-            col("n_docs").cast(DoubleType), 6).as("dup_rate"),
-          col("n_langs"), col("p50_chars"))
-    }),
-
-    "q_x_grouped_quantiles" -> ((s, dir) =>
-      // per-source exact nearest-rank quantile report of doc length —
-      // rank selection over the two-pass rank; the exact twin of
-      // approx_percentile with no per-group single-reducer sort
-      graft.ops.CorpusStats.groupedQuantiles(
-        rd(s, dir, "documents").select("source", "n_chars"),
-        Seq("source"), "n_chars", Seq(0.1, 0.5, 0.9, 0.99))),
-
-    "q_x_exact_deciles" -> ((s, dir) => {
-      // EXACT corpus-wide deciles of doc length — the two-pass GLOBAL
-      // rank (Ranks.grouped with no group columns): range-partition on
-      // the value, local ranks, broadcast offsets. The classic
-      // distributed order statistic — approxQuantile trades accuracy,
-      // a global Window.orderBy ships the corpus to ONE task; this
-      // plan's only corpus movement is one range exchange. Rank target
-      // (n·d + 9) div 10 is pure integer math both engines replay.
-      val ranked = graft.ops.Ranks.grouped(
-        rd(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-        Nil, Seq(col("n_chars"), col("doc_id")),
-        rankCol = Some("rk"), totalCountCol = Some("__n"))
-      val isTarget = (1 to 9)
-        .map(i => col("rk") === expr(s"(__n * $i + 9) div 10"))
-        .reduce(_ || _)
-      ranked.filter(isTarget)
-        .withColumn("decile", explode(array((1 to 9).map(lit): _*)))
-        .filter(col("rk") === expr("(__n * decile + 9) div 10"))
-        .select(col("decile").cast(LongType).as("decile"),
-          col("n_chars").cast(LongType).as("value"))
-    }),
-
-    "q_x_pipeline" -> ((s, dir) => {
-      // END-TO-END curation pipeline as ONE oracle-checked query
-      // (VERDICT r12 #5): clean → exact dedup → decontaminate →
-      // quality-gate (within-source quantile) → fair-share quota trim →
-      // balanced interleave, each stage consuming the previous stage's
-      // SURVIVORS — the composition the per-stage oracles cannot check
-      // (a stage-order or column-contract regression changes the final
-      // rows/positions even when every stage is individually correct).
-      import graft.ops.{CorpusStats, Dedup, Sampling, TextOps}
-      // 1 CLEAN: deterministic damage (docs ≡0 mod 3), then repair —
-      // the media-round-trip pattern: synthesize the defect, run the
-      // real repair path
-      val t0 = coalesce(col("text"), lit(""))
-      val damaged = when(pmod(col("doc_id"), lit(3)) === 0,
-        replace(t0, lit("e"), lit("Ã©"))).otherwise(t0)
-      // the cleaned frame feeds FIVE downstream branches (fingerprint,
-      // dedup join, benchmark, corpus shingles, lengths) — checkpoint it
-      // once (the repo's reuse pattern: at 100 TB this is the persisted
-      // intermediate every multi-stage pipeline materializes between
-      // stages anyway)
-      val cleaned = rd(s, dir, "documents")
-        .select(col("doc_id"),
-          col("source"), TextOps.repairMojibake(damaged).as("t"))
-        .localCheckpoint()
-      graft.core.Metrics.deferUnpersist(cleaned)
-      // 2 DEDUP: keep the min-id doc per normalized fingerprint
-      val deduped = Dedup.exactKeep(
-        cleaned.withColumn("fp", TextOps.fingerprint(col("t"))),
-        Seq("fp"), "doc_id")
-      // 3 DECONTAMINATE: doc-level gate against the stand-in eval set
-      // (every 50th doc's CLEANED text) — any shared 3-gram drops the
-      // doc, including the eval docs themselves (they self-hit)
-      val bench = cleaned.filter(col("doc_id") % 50 === 0).select(col("t"))
-      val conta = Dedup.contamination(deduped, "doc_id", "t",
-        bench, "t", n = 3, minHits = 1)
-      // stage outputs past this point are SLIM (ids + lengths, no text)
-      // and each feeds 2–3 downstream branches — materialize at the
-      // seams (the alternative re-executes the shingle explode once per
-      // reference: measured 8.5 s chained vs 2.3 s as solo stages)
-      val kept = deduped.join(
-          conta.filter(!col("contaminated")).select(col("id").as("doc_id")),
-          Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("source"),
-          length(col("t")).cast(LongType).as("n_chars"))
-        .localCheckpoint()
-      graft.core.Metrics.deferUnpersist(kept)
-      // 4 QUALITY GATE: within-source quantile on the CLEANED length;
-      // one threshold = "top 80% of every source"
-      val gated = CorpusStats.quantileNormalize(kept, Seq("source"),
-          "n_chars")
-        .filter(col("q_norm") >= 0.2)
-        .localCheckpoint()
-      graft.core.Metrics.deferUnpersist(gated)
-      // 5 QUOTA: waterfill the survivors' char mass against one global
-      // budget, then greedy-trim each source to ITS quota
-      val counts = gated.groupBy("source").agg(sum("n_chars").as("c"))
-      val quotas = Sampling.fairShareQuota(counts, "source", "c", 30000L)
-        .select(col("source"), col("quota"))
-      // lazy (r20): interleave is this seam's ONLY consumer, so the
-      // final action materializes it — one fewer driver job with zero
-      // duplicated compute (interleaved ABAB: 4.02–4.41 eager vs
-      // 3.58–4.12 lazy, task CPU equal-or-lower). `gated` stays EAGER:
-      // its two consumers (quota counts + the trim join) race in the
-      // lazy form and re-compute the quantile subtree (task CPU +20%
-      // in the same A/B).
-      val trimmed = Sampling.tokenBudgetByQuota(gated, "source", "doc_id",
-          "n_chars", quotas)
-        .localCheckpoint(false)
-      graft.core.Metrics.deferUnpersist(trimmed)
-      // 6 INTERLEAVE: deterministic balanced write order of the final mix
-      Sampling.interleave(trimmed, "source", "doc_id")
-        .select(col("source"), col("doc_id"), col("n_chars"),
-          col("q_norm"), col("cum_tokens"), col("quota"), col("pos"))
-    }),
-
-    "q_x_scd2_asof" -> ((s, dir) => {
-      // point-in-time read of the SCD2 history: the per-user dimension
-      // exactly as of version 5000 — the reproducibility query SCD2
-      // exists for (pure filter over the history)
-      val stage = rd(s, dir, "events").select(
-        col("user_id"), col("value"), col("event_id").as("ver"),
-        when(col("event_type") === "error", Cdc.OpDelete)
-          .otherwise(Cdc.OpUpdate).as(Cdc.OperationColumn))
-      graft.merge.Scd2.asOf(
-          graft.merge.Scd2.build(stage, Seq("user_id"), "ver"), 5000L)
-        .select(col("user_id"), col("value"), col("valid_from"))
-    }),
-
-    "q_x_merge_scd2" -> ((s, dir) => {
-      // SCD2 history build over the event stream: event_id is the
-      // monotone per-user version, 'error' events act as DELETEs (close
-      // the interval, emit nothing) — the audit-table twin of the
-      // SCD1 loader path (q_r4_merge_scd1)
-      val stage = rd(s, dir, "events").select(
-        col("user_id"), col("value"), col("event_id").as("ver"),
-        when(col("event_type") === "error", Cdc.OpDelete)
-          .otherwise(Cdc.OpUpdate).as(Cdc.OperationColumn))
-      graft.merge.Scd2.build(stage, Seq("user_id"), "ver")
-        .select(col("user_id"), col("value"), col("valid_from"),
-          col("valid_to"), col("is_current"))
-    }),
-
-    "q_x_hll_distinct" -> ((s, dir) => {
-      // per-source distinct-content estimate via the portable mergeable
-      // HLL (functions/Sketches): md5-derived registers + FIXED-POINT
-      // harmonic sum, so every output value — including the estimate —
-      // is replayed bit-for-bit by the oracle. This is the persistable
-      // distinct-counter: at 100 TB the per-domain register arrays are
-      // a domains×1 KiB table that merges with tomorrow's batch in
-      // O(domains) instead of rescanning history.
-      import graft.functions.Sketches
-      val sk = Sketches.hllSketch(rd(s, dir, "documents"),
-        Seq("source"), col("text"), p = 8)
-      sk.select(col("source"),
-        Sketches.hllZeros(col("hll")).cast(LongType).as("n_zero"),
-        Sketches.hllIntSum(col("hll"), 8).as("intsum"),
-        round(Sketches.hllEstimate(col("hll"), 8), 4).as("est_distinct"))
-    }),
-
-    "q_x_hll_merge" -> ((s, dir) => {
-      // distinct users per event_type computed the INCREMENTAL way: one
-      // sketch per (event_type, day) — what a daily pipeline would
-      // persist — then elementwise-max merged and estimated. The oracle
-      // computes the same registers directly from raw events, so merge
-      // associativity is the property under oracle check. p=5 puts the
-      // ~150-user cardinality in the raw-estimate branch (the
-      // q_x_hll_distinct sources exercise linear counting).
-      import graft.functions.Sketches
-      val ev = rd(s, dir, "events")
-        .withColumn("day", to_date(timestamp_micros(col("ts"))))
-      val daily = Sketches.hllSketch(ev, Seq("event_type", "day"),
-        concat(lit("u:"), col("user_id").cast(StringType)), p = 5)
-      Sketches.hllMergeAgg(daily, Seq("event_type"), p = 5)
-        .select(col("event_type"),
-          Sketches.hllZeros(col("hll")).cast(LongType).as("n_zero"),
-          Sketches.hllIntSum(col("hll"), 5).as("intsum"),
-          round(Sketches.hllEstimate(col("hll"), 5), 4).as("est_distinct"))
-    }),
-
-    "q_x_qsketch" -> ((s, dir) => {
-      // mergeable quantile sketch: log-spaced integer buckets (1/16
-      // relative error), ONE hash-agg over the rows, quantile extraction
-      // windows over the few-hundred-bucket sketch — never the data.
-      // Counter-addition merge makes per-day sketches compose; every
-      // step is exact integer math the oracle replays.
-      import graft.functions.Sketches
-      Sketches.qQuantiles(
-        Sketches.qSketch(rd(s, dir, "events"), Seq("event_type"),
-          col("value")),
-        Seq("event_type"), Seq(0.5, 0.95, 0.99))
-    }),
-
-    "q_x_qsketch_merge" -> ((s, dir) => {
-      // the INCREMENTAL quantile path: one sketch per (event_type, day)
-      // — what a daily pipeline persists — counter-added into the
-      // monthly sketch, then quantile-extracted. The oracle computes
-      // quantiles from the raw rows directly, so counter-merge
-      // associativity is the property under check (the hll_merge twin
-      // for histograms).
-      import graft.functions.Sketches
-      val ev = rd(s, dir, "events")
-        .withColumn("day", to_date(timestamp_micros(col("ts"))))
-      val daily = Sketches.qSketch(ev, Seq("event_type", "day"),
-        col("value"))
-      Sketches.qQuantiles(Sketches.qMerge(daily, Seq("event_type")),
-        Seq("event_type"), Seq(0.5, 0.95, 0.99))
-    }),
-
-    "q_x_hybrid_rrf" -> ((s, dir) => {
-      // hybrid retrieval: lexical (BM25) and dense (cosine) top-100
-      // lists fused by reciprocal rank — no score calibration, both
-      // lists are k-sized so fusion never touches the corpus again.
-      // doc_id and vec_id share the 0..N id space in the fixtures.
-      val bm = graft.ops.Search.bm25TopK(docs(s, dir), "doc_id", "text",
-          Seq("hash", "join", "vector"), k = 100)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id"))))
-        .select(col("doc_id"), col("rank"))
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-        .map(_.toDouble).toArray
-      val cos = Similarity.bruteForceTopK(
-          emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", q, 100)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("cosine_sim").desc, col("vec_id"))))
-        .select(col("vec_id").as("doc_id"), col("rank"))
-      graft.ops.Search.rrfFuse(Seq(bm, cos), "doc_id", k = 30)
-    }),
-
-    "q_x_pagerank" -> ((s, dir) => {
-      // graph-quality signal: fixed-point PageRank (exact BIGINT
-      // arithmetic — engine- and order-independent, oracle replays the
-      // unrolled iterations bit-for-bit) over the customer↔supplier
-      // trade graph; per iteration one src join + one dst hash-agg
-      val o = rd(s, dir, "orders").select(col("o_orderkey"),
-        col("o_custkey"))
-      val li = rd(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_suppkey"))
-      // dictionary-encoded node ids: customer c → 2c, supplier s →
-      // 2s+1. The iteration's joins/aggregates and the edge checkpoint
-      // all hash 8-byte longs instead of "c:<id>" strings; the label
-      // strings materialize only on the final O(nodes) rank frame. The
-      // distinct runs on the numeric pair for the same reason.
-      val directed = o.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey").cast(LongType) * 2).as("src"),
-          (col("l_suppkey").cast(LongType) * 2 + 1).as("dst"))
-        .distinct()
-      graft.ops.Graph.pagerank(graft.ops.Graph.undirect(directed),
-          iters = 3, undirected = true)
-        .select(
-          when(col("node") % 2 === 0,
-            concat(lit("c:"), expr("node div 2").cast(StringType)))
-            .otherwise(concat(lit("s:"),
-              expr("(node - 1) div 2").cast(StringType))).as("node"),
-          col("rank"))
-        .orderBy(col("rank").desc, col("node")).limit(100)
-    }),
-
-    "q_x_bm25" -> ((s, dir) =>
-      // BM25 retrieval over the corpus: one doc-id shuffle (term filter
-      // runs map-side; tf per query term is a static pivot column),
-      // scalar stats broadcast back, TakeOrderedAndProject top-k. The
-      // oracle replays the identical expression tree.
-      graft.ops.Search.bm25TopK(docs(s, dir), "doc_id", "text",
-        Seq("hash", "join", "vector"), k = 50)),
-
-    "q_x_cms_heavy" -> ((s, dir) => {
-      // token heavy hitters via count-min sketch: the corpus folds into
-      // 4×1024 integer counters (one hash-agg over the token stream,
-      // map-side partials absorb the firehose), candidates score by
-      // broadcast-join min — the corpus never shuffles. Estimates are
-      // exact integers, replayed bit-for-bit by the oracle.
-      import graft.functions.Sketches
-      val toks = docs(s, dir).select(
-        explode(TextOps.tokens(TextOps.normalized(col("text")))).as("term"))
-      Sketches.cmsLookup(Sketches.cmsSketch(toks, col("term")),
-          toks.distinct(), "term")
-        .orderBy(col("cms_count").desc, col("term")).limit(30)
-    }),
-
     "q_x_zorder" -> ((s, dir) =>
       // z-curve kernel over (user_id, event-time µs) low 10 bits — the
       // write-side clustering key for multi-column file skipping
@@ -1481,478 +281,6 @@ object Queries {
       rd(s, dir, "events").select(col("event_id"),
         graft.warehouse.Layout.zValue(
           Seq(col("user_id"), col("ts")), bits = 10).as("z"))),
-
-    "q_x_pack" -> ((s, dir) =>
-      // sequence packing: shard-local next-fit by running token total —
-      // the curation→batch-assembly step; one shard-key shuffle, windows
-      // sort within shards only (no global sort at any scale)
-      Packing.nextFit(
-          docs(s, dir).select(col("doc_id"),
-            TextOps.tokenCount(col("text")).as("n_tokens")),
-          "doc_id", "n_tokens", budget = 80L, shards = 8)
-        .select(col("doc_id"), col("n_tokens").cast(LongType).as("n_tokens"),
-          col("shard").cast(LongType).as("shard"), col("pack_id"),
-          col("pack_pos"), col("oversize").cast(LongType).as("oversize"))),
-
-    "q_x_pii_scrub" -> ((s, dir) => {
-      // corpus has no real PII, so the query plants deterministic synthetic
-      // email/phone tokens (varying by doc_id) and then scrubs them
-      // coalesce the nullable inputs: Spark concat null-propagates while
-      // DuckDB concat skips nulls — without this a null source/text row
-      // would diverge from the oracle
-      val synth = concat(
-        when(pmod(col("doc_id"), lit(3)) === 0,
-          concat(coalesce(col("source"), lit("")), lit("@example.com ")))
-          .otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(2)) === 0,
-          concat(lit("+91 555-"),
-            lpad(pmod(col("doc_id"), lit(10000)).cast(StringType), 4, "0"),
-            lit(" "))).otherwise(lit("")),
-        substring(coalesce(col("text"), lit("")), 1, 60))
-      docs(s, dir)
-        .select(col("doc_id"), synth.as("synth"))
-        .select(
-          col("doc_id") +:
-            TextOps.piiScrub(col("synth")).as("scrubbed") +:
-            TextOps.piiCounts(col("synth")).map { case (n, c) => c.as(n) }: _*)
-    }),
-
-    "q_x_oov" -> ((s, dir) =>
-      // out-of-vocabulary rate against the corpus's top-50 vocabulary —
-      // LM-free quality prior; vocabulary is a broadcast-sized artifact
-      TextOps.vocabCoverage(docs(s, dir), "doc_id", "text", topK = 50)
-        .select(col("id").as("doc_id"), col("n_tokens"), col("n_in_vocab"),
-          col("oov_rate"))),
-
-    "q_x_sessions" -> ((s, dir) =>
-      // gap-based sessionization (12 h) over the event stream, per-session
-      // stats; single key-shuffle, both windows share one sort
-      graft.ops.Sessions.stats(
-        rd(s, dir, "events").select(col("user_id"), col("event_id"),
-          col("ts").as("t")),
-        "user_id", "t", "event_id", gapMicros = 43200000000L)),
-
-    "q_x_quantiles" -> ((s, dir) =>
-      // exact interpolated percentiles for the oracle; at 100 TB the same
-      // shape runs with approx_percentile (t-digest, partial-aggregated).
-      // Rounded to 6 places on BOTH engines: p90's interpolation is
-      // multi-step double arithmetic whose rounding ORDER differs between
-      // Spark's Percentile and DuckDB's quantile_cont — a last-ULP hazard
-      // the file-header rules exist to avoid (p50 happens to be exact)
-      rd(s, dir, "documents").groupBy("lang").agg(
-        round(expr("percentile(n_chars, 0.5)"), 6).as("p50"),
-        round(expr("percentile(n_chars, 0.9)"), 6).as("p90"),
-        count(lit(1)).as("n"))),
-
-    "q_x_gopher" -> ((s, dir) =>
-      // Gopher-style quality-rule battery + keep flag; thresholds tuned so
-      // the synthetic corpus splits (stop_hits>=1: the word-salad text
-      // carries 'the'/'a' but not the rest of Gopher's stopword list)
-      docs(s, dir).select(
-        col("doc_id") +: TextOps.gopherColumns(col("text"),
-          minWords = 40, minStopHits = 1).map { case (n, c) => c.as(n) }: _*)),
-
-    "q_x_domain_stats" -> ((s, dir) =>
-      // per-source corpus report: volume, internal dup rate, doc shape —
-      // the domain-gating view (one hash-agg shuffle, partials map-side)
-      graft.ops.CorpusStats.domainStats(docs(s, dir), "source", "text")),
-
-    "q_x_embed_project" -> ((s, dir) =>
-      // Johnson-Lindenstrauss ±1 projection 64→8 dims; DECIMAL-exact sums
-      // make the values engine-portable (full value oracle)
-      Similarity.randomProject(rd(s, dir, "embeddings"), "vec_id",
-          "embedding", outDim = 8)
-        .withColumnRenamed("id", "vec_id")),
-
-    "q_x_split" -> ((s, dir) =>
-      // deterministic 90/5/5 split: pure hash projection, stable under
-      // corpus growth — a row's split never depends on other rows
-      Sampling.splitBy(rd(s, dir, "documents"), "doc_id",
-          Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05))
-        .select(col("doc_id"), col("split"))),
-
-    "q_x_split_leakage" -> ((s, dir) =>
-      // split-integrity audit: shared content identities straddling
-      // splits = eval leakage that survives row-level splitting (the
-      // reason dedup runs BEFORE splitBy). Identity here is the
-      // first-5-token prefix fingerprint — shared boilerplate openings,
-      // the template-leak class exact-dup fingerprints miss.
-      Sampling.splitLeakage(
-        Sampling.splitBy(
-          docs(s, dir).withColumn("fp",
-            md5(concat_ws(" ", slice(
-              TextOps.tokens(TextOps.normalized(col("text"))), 1, 5)))),
-          "doc_id", Seq("train" -> 0.6, "test" -> 0.4)),
-        "split", "fp")),
-
-    "q_x_mix" -> ((s, dir) =>
-      // source-weighted mixing: up/down-sample whole domains by static
-      // weight — a pure scan-stage filter, no shuffle at any scale
-      Sampling.weightedKeep(rd(s, dir, "documents"), "source", "doc_id",
-          Map("src1" -> 1.0, "src2" -> 0.5, "src3" -> 0.25),
-          defaultWeight = 0.1)
-        .select(col("doc_id"), col("source"))),
-
-    "q_x_knn_graph" -> ((s, dir) => {
-      // top-3 cosine neighbors within each SemDeDup cell — the kNN graph
-      // behind component dedup / diversity scoring; md5-seeded cells make
-      // the whole graph oracle-replayable
-      val emb = rd(s, dir, "embeddings")
-      val model = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      Similarity.knnGraph(emb, "vec_id", "embedding", model, k = 3)
-        .withColumnRenamed("id", "vec_id")
-    }),
-
-    "q_x_ann_pq" -> ((s, dir) => {
-      // product quantization: 4 subspaces x 16 dims, 8 codes each — the
-      // 100 TB compression path (vectors -> 4 bytes); ADC scan is one
-      // codegen'd projection + TakeOrdered. Training/encoding/ADC all
-      // replay bit-for-bit in the DuckDB oracle (md5 seeds + DECIMAL
-      // means per subspace, left-to-right lookup-table addition).
-      import graft.ops.Pq
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-        .map(_.toDouble).toArray
-      val cb = Pq.train(emb, "vec_id", "embedding", m = 4, dsub = 16,
-        k = 8, iters = 2)
-      Pq.adcTopK(emb.filter(col("vec_id") =!= 0), "vec_id", "embedding",
-        cb, q, topK = 20)
-    }),
-
-    "q_x_ann_pq_refined" -> ((s, dir) => {
-      // two-stage search: compressed ADC shortlist (100), exact cosine
-      // re-rank of just those rows — measured recall@10 0.205 -> 0.650
-      // (RECALL.md) while exact work stays O(shortlist)
-      import graft.ops.Pq
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-        .map(_.toDouble).toArray
-      val cb = Pq.train(emb, "vec_id", "embedding", m = 4, dsub = 16,
-        k = 8, iters = 2)
-      Pq.adcRefineTopK(emb.filter(col("vec_id") =!= 0), "vec_id",
-        "embedding", cb, q, topK = 20, shortlist = 100)
-        .select(col("vec_id"), col("cosine_sim"))
-    }),
-
-    "q_x_ann_ivfpq" -> ((s, dir) => {
-      // IVF-PQ composition: coarse-cell routing (nprobe=2 of 8) + ADC
-      // re-rank on 4-byte codes — partition pruning times 32x compression
-      import graft.ops.Pq
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-        .map(_.toDouble).toArray
-      val coarse = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      val cb = Pq.train(emb, "vec_id", "embedding", m = 4, dsub = 16,
-        k = 8, iters = 2)
-      Pq.ivfPqTopK(emb.filter(col("vec_id") =!= 0), "vec_id", "embedding",
-        coarse, cb, q, topK = 20, nprobe = 2)
-    }),
-
-    "q_x_ann_ivf_pruned" -> ((s, dir) => {
-      // the SERVED-corpus shape: index once (cell-partitioned parquet +
-      // centroid sidecar), then every probe is partition pruning — the
-      // scan opens nprobe of k cell directories and never re-assigns or
-      // even reads the rest (PartitionFilters column in PLANS.md).
-      // Result set is identical to q_x_ann_ivf (same oracle).
-      import graft.ops.Ivf
-      val q = rd(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-        .map(_.toDouble).toArray
-      val idx = IndexStore.annIvf(s, dir) // built once per session
-      Ivf.probe(s, idx.path, "vec_id", "embedding", q, k = 20, nprobe = 2)
-        .select(col("vec_id"), col("cosine_sim"))
-    }),
-
-    "q_x_ann_filtered" -> ((s, dir) => {
-      // filtered vector search: top-k under a metadata predicate
-      // (label = 3, ~10% selective) over the SAME persisted index —
-      // the filter column rides the index partitions, so the plan is
-      // still prune → filter → TakeOrdered with no base-table join;
-      // nprobe widened 2 → 4 per the selectivity rule in the scaladoc
-      import graft.ops.Ivf
-      val q = rd(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-        .map(_.toDouble).toArray
-      val idx = IndexStore.annIvf(s, dir)
-      Ivf.probeFiltered(s, idx.path, "vec_id", "embedding", q, k = 20,
-          pred = col("label") === 3, nprobe = 4)
-        .select(col("vec_id"), col("cosine_sim"))
-    }),
-
-    "q_x_ann_ivfpq_pruned" -> ((s, dir) => {
-      // IVF-PQ over a persisted index: cells are partition directories,
-      // rows carry ONLY the m code ints (no vectors on disk — the 32x
-      // compression is real, not just logical). Probe = partition pruning
-      // + pure ADC projection over stored codes; same oracle as ivfpq.
-      import graft.ops.Pq
-      val q = rd(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-        .map(_.toDouble).toArray
-      val idx = IndexStore.annIvfPq(s, dir) // built once per session
-      Pq.probeIndexed(s, idx.path, "vec_id", q, topK = 20, nprobe = 2)
-    }),
-
-    "q_x_ann_ivfpq_refined" -> ((s, dir) => {
-      // the FULL served-index pipeline (Jégou et al. IVFADC with
-      // re-ranking): pruned stored-code scan → ADC shortlist (100) →
-      // exact cosine over just those ids fetched from the vector table.
-      // Exact work is O(shortlist); recall climbs to the pq+refine level
-      // (RECALL.md) instead of the raw coarse-code 0.235.
-      import graft.ops.Pq
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-        .map(_.toDouble).toArray
-      val idx = IndexStore.annIvfPq(s, dir)
-      Pq.probeIndexedRefined(s, idx.path, emb.filter(col("vec_id") =!= 0),
-        "vec_id", "embedding", q, topK = 20, nprobe = 2, shortlist = 100)
-        .select(col("vec_id"), col("cosine_sim"))
-    }),
-
-    "q_x_ann_ivfadc" -> ((s, dir) => {
-      // residual IVFADC proper (Jégou et al. §III-C): codebooks trained
-      // on vec − centroid[cell] residuals, searched with per-probed-cell
-      // LUTs — still a pure projection. On THIS fixture's uniform
-      // vectors RECALL.md measures parity with raw-vector codes
-      // (expected and recorded); on clustered real embeddings the
-      // residual form is the one that wins. Full DuckDB value oracle:
-      // the training replay runs over the replayed residuals.
-      import graft.ops.Pq
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-        .map(_.toDouble).toArray
-      val coarse = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      val cbRes = Pq.trainResidual(emb, "vec_id", "embedding", coarse,
-        m = 4, dsub = 16, k = 8, iters = 2)
-      Pq.ivfPqResidualTopK(emb.filter(col("vec_id") =!= 0), "vec_id",
-        "embedding", coarse, cbRes, q, topK = 20, nprobe = 2)
-    }),
-
-    "q_x_ann_sq8" -> ((s, dir) => {
-      // SQ8 scalar quantization: per-dim min/max train, uint8 encode,
-      // dequantized-cosine top-k — the 4×-compression serving point
-      // before PQ's 32×; every step is replayable double arithmetic.
-      import graft.ops.Pq
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-        .map(_.toDouble).toArray
-      val m = Pq.sq8Train(emb, "embedding")
-      val codes = Pq.sq8Encode(emb.filter(col("vec_id") =!= 0),
-        "vec_id", "embedding", m)
-      Pq.sq8TopK(codes, "vec_id", "codes", m, q, topK = 20)
-    }),
-
-    "q_x_ann_sq8_many" -> ((s, dir) => {
-      // batched SQ8 serving transport: one codes scan answers a 3-query
-      // batch (the query batch rides the plan as a generated literal);
-      // per-query results equal sq8TopK — here the TRANSPORT itself is
-      // value-oracle-checked, the q_x_ann_pq_many discipline.
-      import graft.ops.Pq
-      val emb = rd(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") <= 2)
-        .select("vec_id", "embedding").collect()
-        .sortBy(_.getLong(0))
-        .map(r => (r.getLong(0),
-          r.getSeq[Float](1).map(_.toDouble).toArray)).toSeq
-      val m = Pq.sq8Train(emb, "embedding")
-      val codes = Pq.sq8Encode(emb, "vec_id", "embedding", m)
-      Pq.sq8TopKMany(codes, "vec_id", "codes", m, qs, topK = 10)
-    }),
-
-    "q_x_ivf_drift" -> ((s, dir) => {
-      // retrain trigger: occupancy drift of a "new batch" (every 10th
-      // vector by id — a deterministic, scale-free 10% slice re-assigned
-      // under the frozen stored model) vs the persisted index's cells.
-      import graft.ops.Ivf
-      val emb = rd(s, dir, "embeddings")
-      val idx = IndexStore.annIvf(s, dir)
-      Ivf.cellDrift(s, idx.path, emb.filter(col("vec_id") % 10 === 3),
-        "embedding")
-    }),
-
-    "q_x_ann_probe_many" -> ((s, dir) => {
-      // batched serving: ONE pruned scan answers a whole query batch
-      // (Ivf.probeMany) — at corpus scale the per-query probe cost
-      // amortizes across the batch because the scan is the union of all
-      // probed cells and the routing table broadcasts. Per-query results
-      // equal single probes (IvfSpec); value-checked here for 3 queries.
-      import graft.ops.Ivf
-      val emb = rd(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id").isin(0L, 1L, 2L))
-        .select("vec_id", "embedding").collect()
-        .map(r => (r.getLong(0),
-          r.getSeq[Float](1).map(_.toDouble).toArray))
-        .sortBy(_._1).toSeq
-      val idx = IndexStore.annIvf(s, dir)
-      Ivf.probeMany(s, idx.path, "vec_id", "embedding", qs,
-        k = 10, nprobe = 2)
-    }),
-
-    // batched serving over the COMPRESSED index: one pruned scan of
-    // stored codes answers the whole query batch. Two catalog twins run
-    // the SAME batch through both LUT transports — map literal (the
-    // small-batch default) and broadcast-join data (the large-batch,
-    // constant-plan-size form) — and share one oracle: the value check
-    // proves the transport choice loses nothing, the same shared-oracle
-    // discipline as the pruned/unpruned twins.
-    "q_x_ann_pq_many" -> (pqServeBatch(_, _, lutLiteralMax = Int.MaxValue)),
-    "q_x_ann_pq_many_joinlut" -> (pqServeBatch(_, _, lutLiteralMax = 0)),
-
-    "q_x_dup_spans" -> ((s, dir) =>
-      // cross-document 5-gram repetition (exact-substring-dedup signal):
-      // fraction of a doc's shingles shared with other documents
-      Dedup.crossDocShingleFrac(docs(s, dir), "doc_id", "text", n = 5)
-        .withColumnRenamed("id", "doc_id")),
-
-    "q_x_span_scrub" -> ((s, dir) =>
-      // exact-substring span removal (Lee et al. 2022): every word
-      // position covered by a 5-gram shared across >=2 docs is dropped,
-      // the doc reassembled — the boilerplate scrub keep-one dedup
-      // can't do (the documents differ; the spans repeat)
-      Dedup.removeRepeatedSpans(docs(s, dir), "doc_id", "text",
-          n = 5, minDf = 2)
-        .withColumnRenamed("id", "doc_id")),
-
-    "q_x_bloom_gate" -> ((s, dir) => {
-      // bloom-gate ingest dedup: corpus fingerprints fold into a sketch,
-      // the batch probes it broadcast-side. Oracle checks the exact batch
-      // size + true-dup count and the bloom INVARIANT (no false
-      // negatives -> n_missed is identically 0); the false-positive set
-      // is sketch-internal and deliberately not part of the contract.
-      val fp = docs(s, dir)
-        .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
-      val corpus = fp.filter(col("doc_id") <= 400).select("fp")
-      // sketch sized to the corpus (bits ~ 20x items keeps fp ~0); the
-      // default 1 MiB literal would dominate this toy-scale plan
-      val gated = Dedup.bloomGate(
-        fp.filter(col("doc_id") > 400), corpus, Seq("fp"),
-        expectedItems = 1L << 12, numBits = 1L << 17)
-      gated
-        .join(corpus.distinct().withColumn("__in", lit(1)), Seq("fp"), "left")
-        .agg(count(lit(1)).as("n_batch"),
-          sum(when(col("__in") === 1, 1L).otherwise(0L)).as("n_true_dup"),
-          sum(when(col("__in") === 1 && !col("maybe_seen"), 1L)
-            .otherwise(0L)).as("n_missed"))
-    }),
-
-    "q_x_embed_outlier" -> ((s, dir) => {
-      // distance-to-centroid prototypicality: far = atypical for its
-      // semantic cell (the SemDeDup keep-typical axis); one projection
-      val emb = rd(s, dir, "embeddings")
-      val model = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-      Ivf.assignDist(emb, "embedding", model)
-        .select(col("vec_id"), col("__cluster").cast(LongType).as("cell"),
-          round(col("__dist2"), 6).as("dist2"))
-    }),
-
-    "q_x_curate" -> ((s, dir) => {
-      // THE capstone composition: the full curation pipeline in one plan —
-      // Gopher quality AND language-id AND exact-dedup survivorship AND
-      // benchmark decontamination, with per-rule flags for auditability.
-      // Quality+language are one pure projection; dedup adds one
-      // fingerprint hash-agg; decontamination's eval shingles broadcast.
-      val d = docs(s, dir)
-      val gKeep = TextOps.gopherColumns(col("text"), minWords = 40,
-        minStopHits = 1).find(_._1 == "keep").get._2
-      val flags = d.select(
-        (col("doc_id") +: gKeep.as("keep_quality") +:
-          TextOps.isCjk(col("text")).as("__zh") +:
-          TextOps.LangPatterns.map { case (l, p) =>
-            TextOps.langScore(col("text"), p).as(s"__$l") }): _*)
-        .select(col("doc_id"), col("keep_quality"),
-          (TextOps.langIdFromScores(col("__zh"),
-            TextOps.LangPatterns.map { case (l, _) => l -> col(s"__$l") })
-            === "en").cast(LongType).as("keep_lang"))
-      val kept = Dedup.exactKeep(
-          d.select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp")),
-          Seq("fp"), "doc_id")
-        .select(col("doc_id"), lit(1L).as("__kept"))
-      val clean = Dedup.contamination(d, "doc_id", "text",
-          rd(s, dir, "documents").filter(col("doc_id") % 50 === 0), "text",
-          n = 3, minHits = 1)
-        .select(col("id").as("doc_id"),
-          (lit(1L) - col("contaminated").cast(LongType)).as("keep_clean"))
-      flags
-        .join(kept, Seq("doc_id"), "left")
-        .join(clean, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("keep_quality"), col("keep_lang"),
-          coalesce(col("__kept"), lit(0L)).as("keep_dedup"),
-          coalesce(col("keep_clean"), lit(0L)).as("keep_clean"),
-          (col("keep_quality") === 1 && col("keep_lang") === 1 &&
-            coalesce(col("__kept"), lit(0L)) === 1 &&
-            coalesce(col("keep_clean"), lit(0L)) === 1)
-            .cast(LongType).as("curated"))
-    }),
-
-    "q_x_snapshot_diff" -> ((s, dir) => {
-      // corpus versioning: old snapshot = ids <= 400, new = ids > 100
-      // with every 7th doc "edited" (fingerprint over text + a marker) —
-      // added/removed/changed/unchanged counts per status
-      val d = rd(s, dir, "documents")
-      val olds = d.filter(col("doc_id") <= 400)
-        .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
-      val news = d.filter(col("doc_id") > 100)
-        .select(col("doc_id"), TextOps.fingerprint(
-          when(pmod(col("doc_id"), lit(7)) === 0,
-            concat(coalesce(col("text"), lit("")), lit(" v2")))
-            .otherwise(col("text"))).as("fp"))
-      graft.ops.CorpusStats.snapshotDiff(olds, news, "doc_id", "fp")
-        .groupBy("status").agg(count(lit(1)).as("n"))
-    }),
-
-    "q_x_length_hist" -> ((s, dir) =>
-      // corpus-card length histogram: power-of-two buckets over n_chars —
-      // one hash-agg on ~30 keys. Bucket = floor(log2(x)) computed as
-      // len(bin(x))-1: exact integer bit math, immune to the
-      // floor(log2(double)) last-ulp hazard at exact powers of two.
-      docs(s, dir)
-        .select(when(coalesce(col("n_chars"), lit(0L)) <= 0, lit(0L))
-          .otherwise(length(expr("bin(n_chars)")).cast(LongType) - 1)
-          .as("bucket"))
-        .groupBy("bucket").agg(count(lit(1)).as("n"))),
-
-    "q_x_rollup" -> ((s, dir) =>
-      // hierarchical corpus report: (source, lang) cells + per-source
-      // subtotals + grand total in ONE pass — Spark expands the grouping
-      // sets before a single hash-agg shuffle (no re-scan per level)
-      docs(s, dir).rollup(col("source"), col("lang")).agg(
-        count(lit(1)).as("n_docs"),
-        sum(TextOps.tokenCount(col("text")).cast(LongType))
-          .as("total_tokens"))),
-
-    "q_x_pivot" -> ((s, dir) => {
-      // wide per-source report: explicit pivot values keep the plan a
-      // single hash-agg (value discovery would add a driver collect);
-      // empty cells coalesce to 0 so the wide table is dense
-      val srcs = (0 until 5).map(i => s"src$i")
-      docs(s, dir).filter(col("source").isin(srcs: _*))
-        .groupBy("lang").pivot("source", srcs).agg(count(lit(1)))
-        .select(col("lang") +:
-          srcs.map(sc => coalesce(col(sc), lit(0L)).as(sc)): _*)
-    }),
-
-    "q_x_nfc" -> ((s, dir) => {
-      // unicode normalization (custom codegen'd Expression): corpus is
-      // ASCII, so plant mixed-normalization suffixes — decomposed on even
-      // ids, precomposed on odd — and canonicalize; the byte-parity gate
-      // ahead of fingerprint/dedup. bytes_folded shows the fold working.
-      val synth = concat(
-        substring(coalesce(col("text"), lit("")), 1, 40), lit(" "),
-        when(pmod(col("doc_id"), lit(2)) === 0,
-          lit(QNfc.Decomposed)).otherwise(lit(QNfc.Precomposed)))
-      docs(s, dir)
-        .select(col("doc_id"), synth.as("__s"))
-        .select(col("doc_id"), col("__s"),
-          graft.functions.TextExprs.nfc(col("__s")).as("norm_text"))
-        .select(col("doc_id"), col("norm_text"),
-          (octet_length(col("__s")) - octet_length(col("norm_text")))
-            .cast(LongType).as("bytes_folded"))
-    }),
 
     "q_x_copy_clamp" -> ((s, dir) => {
       // COPY TRUNCATECOLUMNS parity (redshift.go:875-887): varchar(n) is
@@ -1964,437 +292,13 @@ object Queries {
       // byte-for-byte in CopyOptionsSpec.
       import graft.warehouse.CopyOptions
       val wide = translate(coalesce(col("text"), lit("")), " ", "é")
-      docs(s, dir)
+      rd(s, dir, "documents")
         .select(col("doc_id"),
           CopyOptions.truncateColumns(CopyOptions.acceptInvChars(wide), 64)
             .as("clamped"))
         .select(col("doc_id"), col("clamped"),
           octet_length(col("clamped")).cast(LongType).as("clamped_bytes"),
           length(col("clamped")).cast(LongType).as("clamped_chars"))
-    }),
-
-    "q_x_cohort_retention" -> ((s, dir) =>
-      // cohort-retention triangle over the landed event stream: one
-      // user-keyed shuffle (window min = cohort day, no join back), then
-      // a days×days aggregate
-      graft.ops.Behavior.cohortRetention(
-          rd(s, dir, "events").select(col("user_id"),
-            to_date(timestamp_micros(col("ts"))).as("day")),
-          "user_id", "day")
-        .orderBy("cohort_day", "day_offset")),
-
-    "q_x_funnel" -> ((s, dir) =>
-      // ordered signup→view→click→purchase conversion funnel: chained
-      // conditional window-mins on ONE user partitioning; single row of
-      // per-stage distinct-user counts
-      graft.ops.Behavior.funnel(
-        rd(s, dir, "events").select(col("user_id"), col("event_type"),
-          col("ts")),
-        "user_id", "event_type", "ts",
-        Seq("signup", "view", "click", "purchase"))),
-
-    "q_x_anomaly" -> ((s, dir) =>
-      // per-event-type daily anomaly flags: z-score of each day's value
-      // sum against the type's cross-day mean/stddev; flag decided on the
-      // ROUNDED z so the boundary replays engine-identically
-      graft.ops.Behavior.dailyAnomalies(
-          rd(s, dir, "events").select(col("event_type"),
-            to_date(timestamp_micros(col("ts"))).as("day"), col("value")),
-          Seq("event_type"), "day", "value", threshold = 2.0)
-        .orderBy("event_type", "day")),
-
-    "q_x_trending" -> ((s, dir) =>
-      // trending score: per event_type count with events half-lived
-      // every 7 days before the fixed reference day — exact scaled-
-      // integer accumulation, one final dyadic division (see
-      // Behavior.decayedCounts exactness discipline)
-      graft.ops.Behavior.decayedCounts(
-        rd(s, dir, "events").select(col("event_type"),
-          to_date(timestamp_micros(col("ts"))).as("day")),
-        Seq("event_type"), "day", to_date(lit("2024-01-30")),
-        halfLifeDays = 7)),
-
-    "q_x_perplexity" -> ((s, dir) =>
-      // perplexity-style filtering with the bigram LM trained in-engine
-      // from the corpus it scores (CCNet recipe); per-bigram -ln(p)
-      // quantized to scaled longs so per-doc sums are order-exact
-      graft.ops.LangModel.bigramNll(docs(s, dir), "doc_id", "text")),
-
-    "q_x_basket_pairs" -> ((s, dir) => {
-      // frequently-bought-together: part pairs co-occurring in an
-      // order, counted across orders — the bounded self-join shape (key
-      // = orderkey, fan-out capped by lines-per-order, p1 < p2 emits
-      // each pair once; never a cartesian). Top-20 by support.
-      val li = rd(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-        .distinct()
-      li.join(li.withColumnRenamed("p", "p2"), "ok")
-        .filter(col("p") < col("p2"))
-        .groupBy(col("p"), col("p2"))
-        .agg(count(lit(1)).as("support"))
-        .orderBy(col("support").desc, col("p"), col("p2"))
-        .limit(20)
-    }),
-
-    "q_x_gini" -> ((s, dir) => {
-      // concentration of the event stream across users (who dominates
-      // the data?): exact Gini from rank-weighted counts — every term
-      // integer until the final division, so the coefficient replays
-      // bit-for-bit. The users table is tiny after the first aggregate.
-      val counts = rd(s, dir, "events")
-        .groupBy("user_id").agg(count(lit(1)).as("c"))
-      // global rank via the two-pass primitive: the users frame is an
-      // AGGREGATE but not bounded (1e9 users at 100 TB) — an empty-
-      // partitionBy window would single-task it
-      graft.ops.Ranks.grouped(counts, Nil,
-          Seq(col("c"), col("user_id")), rankCol = Some("rk"))
-        .agg(count(lit(1)).as("n"), sum(col("c")).as("total"),
-          sum(col("rk") * col("c")).as("rankmass"))
-        .select(col("n"), col("total"),
-          round((lit(2.0) * col("rankmass").cast(DoubleType)) /
-            (col("n").cast(DoubleType) * col("total").cast(DoubleType)) -
-            (col("n") + lit(1L)).cast(DoubleType) /
-              col("n").cast(DoubleType), 6).as("gini"))
-    }),
-
-    "q_x_vocab_growth" -> ((s, dir) =>
-      // Heaps-law corpus signal per source: distinct vocabulary vs
-      // token mass, plus the type-token ratio — a skewed ratio flags
-      // template/boilerplate-heavy domains before any model sees them
-      docs(s, dir)
-        .select(col("source"),
-          explode(TextOps.tokens(TextOps.normalized(col("text"))))
-            .as("w"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_tokens"),
-          countDistinct(col("w")).as("n_vocab"))
-        .select(col("source"), col("n_tokens"), col("n_vocab"),
-          round(col("n_vocab").cast(DoubleType) /
-            col("n_tokens").cast(DoubleType), 6).as("ttr"))),
-
-    "q_x_streaks" -> ((s, dir) => {
-      // longest consecutive-day activity streak per user: the classic
-      // gaps-and-islands shape — distinct active days, day minus dense
-      // rank is constant within a run, one aggregate over runs. One
-      // user shuffle; runs never materialize wider than the day table.
-      val days = rd(s, dir, "events")
-        .select(col("user_id"),
-          to_date(timestamp_micros(col("ts"))).as("day"))
-        .distinct()
-      val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
-      days
-        .withColumn("grp", datediff(col("day"), lit("1970-01-01")) -
-          row_number().over(w))
-        .groupBy(col("user_id"), col("grp"))
-        .agg(count(lit(1)).as("len"))
-        .groupBy(col("user_id"))
-        .agg(max(col("len")).as("max_streak"),
-          count(lit(1)).as("n_streaks"))
-        .orderBy("user_id")
-    }),
-
-    "q_x_lag_hist" -> ((s, dir) => {
-      // attribution-lag histogram: log2 buckets of purchase→click lag
-      // (µs) — the report the attribution feed drives; bucket math is
-      // exact integer bit length, count per bucket
-      val ev = rd(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts").as("t_us"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("c_t_us"),
-          col("event_id").as("click_id"))
-      AsOf.asofJoin(purchases, clicks, "user_id", "t_us", "c_t_us",
-          payload = Seq("click_id", "c_t_us"), tieBreak = "click_id")
-        .filter(col("click_id").isNotNull)
-        .select((col("t_us") - col("c_t_us")).as("lag"))
-        .select(when(col("lag") <= 0, lit(0))
-          .otherwise(length(conv(col("lag"), 10, 2))).as("log2_bucket"))
-        .groupBy("log2_bucket")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("log2_bucket")
-    }),
-
-    "q_x_url_dedup" -> ((s, dir) => {
-      // URL-level dedup AFTER canonicalization: the planted URLs vary
-      // by tracking params/fragments; per (doc_id % 125) page group the
-      // utm/#frag variants collapse to the bare page and the
-      // gclid/plain variants to page?id=7 — two canonical URLs per
-      // group, survivor = min doc_id (deterministic), the
-      // crawl-frontier dedup rule
-      val urls = docs(s, dir).select(col("doc_id"),
-        concat(lit("HTTPS://Example.COM/page/"),
-          (col("doc_id") % 125).cast(StringType),
-          when(col("doc_id") % 4 === 0, lit("?utm_source=x"))
-            .when(col("doc_id") % 4 === 1, lit("#frag"))
-            .when(col("doc_id") % 4 === 2, lit("?gclid=1&id=7"))
-            .otherwise(lit("?id=7"))).as("url"))
-        .select(col("doc_id"),
-          graft.ops.Web.canonicalUrl(col("url")).as("canon"))
-      urls.groupBy("canon")
-        .agg(min(col("doc_id")).as("keep_doc"),
-          count(lit(1)).as("n_dups"))
-    }),
-
-    "q_x_markov" -> ((s, dir) => {
-      // event-sequence transition model: per user, consecutive
-      // event-type pairs (lead over the user's time order), transition
-      // counts and probabilities — the behavioral n-gram the funnel is
-      // a special case of. One user shuffle; the transition matrix is
-      // |types|² rows.
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val pairs = rd(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .withColumn("next_type", lead(col("event_type"), 1).over(w))
-        .filter(col("next_type").isNotNull)
-      val counts = pairs.groupBy(col("event_type"), col("next_type"))
-        .agg(count(lit(1)).as("n"))
-      val totals = Window.partitionBy(col("event_type"))
-      counts
-        .withColumn("p", round(col("n").cast(DoubleType) /
-          sum(col("n")).over(totals).cast(DoubleType), 6))
-        .orderBy("event_type", "next_type")
-    }),
-
-    "q_x_json_props" -> ((s, dir) =>
-      // semi-structured path: per-row JSON property extraction pushed
-      // into the scan projection (get_json_object is codegen'd; no UDF,
-      // no schema inference pass), then a normal aggregate over the
-      // extracted value
-      rd(s, dir, "events")
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast(LongType).as("k"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          countDistinct(col("k")).as("n_distinct_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))),
-
-    "q_x_unpivot" -> ((s, dir) => {
-      // wide→long reshape of a reporting aggregate (the metric-per-row
-      // form BI/metric stores ingest): melt is a zero-shuffle projection
-      // over the already-aggregated frame
-      val wide = rd(s, dir, "lineitem").groupBy("l_returnflag")
-        .agg(sum(col("l_quantity")).as("qty"),
-          count(lit(1)).cast(DoubleType).as("rows"),
-          sum(round(col("l_discount") * 100).cast(LongType))
-            .cast(DoubleType).as("disc_cents"))
-      wide.unpivot(Array(col("l_returnflag")),
-        Array(col("qty"), col("rows"), col("disc_cents")),
-        "metric", "value")
-    }),
-
-    "q_x_pit_join" -> ((s, dir) => {
-      // point-in-time dimension join (feature-store temporal
-      // correctness): each purchase reads the user's dimension value AS
-      // OF its own version — the SCD2 history built from the
-      // dimension-changing events (signup/click; error = delete), then
-      // an as-of join on valid_from with the interval-end guard. One
-      // user shuffle end to end; training-serving skew from "joined
-      // tomorrow's dimension onto yesterday's event" is exactly the bug
-      // this op exists to prevent.
-      val ev = rd(s, dir, "events")
-      val stage = ev
-        .filter(col("event_type").isin("signup", "click", "error"))
-        .select(col("user_id"), col("value"), col("event_id").as("ver"),
-          when(col("event_type") === "error", Cdc.OpDelete)
-            .otherwise(Cdc.OpUpdate).as(Cdc.OperationColumn))
-      val hist = graft.merge.Scd2.build(stage, Seq("user_id"), "ver")
-      val probes = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"),
-          col("event_id").as("v"))
-      AsOf.asofJoin(probes, hist, "user_id", "v", "valid_from",
-          payload = Seq("value", "valid_to"), tieBreak = "valid_from")
-        .select(col("event_id"), col("user_id"),
-          when(col("valid_to").isNull || col("v") < col("valid_to"),
-            col("value")).as("dim_value"))
-    }),
-
-    "q_x_rfm" -> ((s, dir) => {
-      // RFM segmentation over purchase events: recency (µs since last
-      // purchase at corpus horizon), frequency, monetary → quintile
-      // scores via ntile with fully-deterministic ordering (value, then
-      // user) → "535"-style segment label. One user shuffle for the
-      // profile, three ntiles over the users-sized table.
-      val p = rd(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value"))
-      val hRow = p.agg(max(col("ts"))).head()
-      val horizon = if (hRow.isNullAt(0)) 0L else hRow.getLong(0)
-      val prof = p.groupBy("user_id").agg(
-        (lit(horizon) - max(col("ts"))).as("recency_us"),
-        count(lit(1)).as("frequency"),
-        round(sum(col("value")), 4).as("monetary"))
-      // quintiles from the two-pass GLOBAL rank (the users frame is an
-      // aggregate but unbounded — empty-partitionBy ntile single-tasks
-      // it): ntile(k) in pure integer math from (rank, n) — the first
-      // n mod k buckets carry floor(n/k)+1 rows, the rest floor(n/k);
-      // total (value, user) order makes the buckets exactly the window
-      // ntile's, so the oracle replays with native ntile.
-      def nt(rk: String): Column =
-        when(expr(s"$rk <= (__n % 5) * ((__n div 5) + 1)"),
-          expr(s"($rk - 1) div ((__n div 5) + 1) + 1"))
-          .otherwise(expr(
-            s"(__n % 5) + ($rk - 1 - (__n % 5) * ((__n div 5) + 1)) " +
-              "div (__n div 5) + 1"))
-      // descending recency = ascending (−recency); the key stays integral
-      val seg = Seq[(String, Column)](
-        "__rk_r" -> (-col("recency_us")),
-        "__rk_f" -> col("frequency"),
-        "__rk_m" -> col("monetary"))
-        .foldLeft(prof) { case (df, (rkName, key)) =>
-          // checkpoint the slim per-user frame between chained ranks:
-          // each rank's boundary sample AND main pass re-execute their
-          // input plan (the r14 rank has no pinned cache — VERDICT r13
-          // #3), so an unchained three-rank fold re-runs rank 1 four
-          // times; materializing the seam (the pipeline-stage pattern)
-          // keeps the chain linear. The frame is one row per user —
-          // bounded by user cardinality, not corpus size.
-          // lazy: the rank's boundary-sample job materializes the seam
-          // (an eager checkpoint would add a whole extra job per rank)
-          val seam = df.localCheckpoint(false)
-          graft.core.Metrics.deferUnpersist(seam)
-          graft.ops.Ranks.grouped(seam, Nil, Seq(key, col("user_id")),
-            rankCol = Some(rkName),
-            totalCountCol = if (rkName == "__rk_r") Some("__n") else None)
-        }
-      seg.select(col("user_id"), col("recency_us"), col("frequency"),
-        col("monetary"),
-        concat(nt("__rk_r").cast(StringType),
-          nt("__rk_f").cast(StringType),
-          nt("__rk_m").cast(StringType)).as("segment"))
-    }),
-
-    "q_x_attribution" -> ((s, dir) => {
-      // last-touch attribution: each purchase credits the user's most
-      // recent click at-or-before it — the as-of join composed over the
-      // event stream (one user shuffle, zero row explosion; a theta
-      // self-join formulation would explode on active users)
-      val ev = rd(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts").as("t_us"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("c_t_us"),
-          col("event_id").as("click_id"))
-      AsOf.asofJoin(purchases, clicks, "user_id", "t_us", "c_t_us",
-          payload = Seq("click_id", "c_t_us"), tieBreak = "click_id")
-        .select(col("event_id"), col("user_id"), col("click_id"),
-          (col("t_us") - col("c_t_us")).as("lag_us"))
-    }),
-
-    "q_x_gapfill" -> ((s, dir) => {
-      // time-series densification: every (event_type, day) cell over
-      // each type's [min_day, max_day] span, zero-filled where no
-      // events landed — the resample step before any day-over-day
-      // calculation (a gap read as "no row" silently corrupts
-      // moving averages and anomaly baselines). The day spine is
-      // sequence() on the per-type 1-row aggregate — generated, never
-      // shuffled; one broadcast join back to the daily counts.
-      // fixture events cover every day — drop day-of-month multiples
-      // of 5 first so the fill path actually fills (planted gaps, the
-      // pii_scrub pattern)
-      val ev = rd(s, dir, "events").select(col("event_type"),
-          to_date(timestamp_micros(col("ts"))).as("day"))
-        .filter(dayofmonth(col("day")) % 5 =!= 0)
-      val daily = ev.groupBy("event_type", "day")
-        .agg(count(lit(1)).as("n"))
-      val spine = daily.groupBy("event_type")
-        .agg(min("day").as("mn"), max("day").as("mx"))
-        .select(col("event_type"),
-          explode(sequence(col("mn"), col("mx"))).as("day"))
-      spine.join(daily, Seq("event_type", "day"), "left")
-        .select(col("event_type"), col("day"),
-          coalesce(col("n"), lit(0L)).as("n"),
-          col("n").isNull.as("filled"))
-    }),
-
-    "q_x_tokenize" -> ((s, dir) =>
-      // numericalization against a corpus-built 64-token vocab (count
-      // desc, token asc); OOV -> 0; ids string preserves token order
-      TextOps.tokenizeToIds(docs(s, dir), "doc_id", "text",
-        vocabSize = 64)),
-
-    "q_x_html_strip" -> ((s, dir) => {
-      // crawl-side markup removal BEFORE quality/dedup; fixture corpus
-      // is plain text, so wrap each doc in deterministic varying markup
-      // (script/style blocks, tags, entities, comments) and strip it
-      val wrapped = docs(s, dir).select(col("doc_id"),
-        concat(
-          lit("<html><head><script>var x=1;</script>"),
-          lit("<style>p{color:red}</style></head><body>"),
-          when(col("doc_id") % 2 === 0, lit("<!-- hidden -->")).otherwise(lit("")),
-          lit("<p class=\"main\">"), coalesce(col("text"), lit("")),
-          lit("</p><div>Tom &amp; Jerry &lt;3 &quot;cheese&quot;</div>"),
-          lit("</body></html>")).as("html"))
-      wrapped.select(col("doc_id"),
-        graft.ops.Web.htmlToText(col("html")).as("clean"),
-        length(graft.ops.Web.htmlToText(col("html"))).cast(LongType)
-          .as("n_chars"))
-    }),
-
-    "q_x_url_canon" -> ((s, dir) =>
-      // URL canonicalization BEFORE URL-level dedup: planted tracking
-      // params / fragments / mixed-case hosts, varying by doc_id
-      docs(s, dir).select(col("doc_id"),
-        concat(lit("HTTPS://Example.COM/Path/"),
-          col("doc_id").cast(StringType),
-          when(col("doc_id") % 4 === 0,
-            lit("?utm_source=x&id=7&utm_campaign=y#frag"))
-            .when(col("doc_id") % 4 === 1, lit("?gclid=abc"))
-            .when(col("doc_id") % 4 === 2, lit("?id=7&fbclid=z&x=1"))
-            .otherwise(lit("#top"))).as("url"))
-        .select(col("doc_id"), col("url"),
-          graft.ops.Web.canonicalUrl(col("url")).as("canon"))),
-
-    "q_x_quality_model" -> ((s, dir) => {
-      // classifier-based quality filtering with the classifier TRAINED
-      // IN-ENGINE: 3 full-batch logistic-GD steps (one exact-integer
-      // gradient aggregate per step — fast-sigmoid activation, scaled-
-      // long quantization), then score+threshold every doc. The teacher
-      // label (words >= 40) distills a hard rule into a smooth score;
-      // w0..w3 emit on every row so the oracle checks the whole weight
-      // TRAJECTORY, not just the final scores.
-      import graft.ops.QualityModel
-      val d = docs(s, dir)
-      val words = TextOps.tokenCount(col("text"))
-      val chars = length(coalesce(col("text"), lit("")))
-      val digits = length(regexp_replace(coalesce(col("text"), lit("")),
-        "[^0-9]", ""))
-      val feats = d.select(col("doc_id"),
-          lit(1.0).as("f0"),
-          (least(col("n_chars"), lit(2000L)).cast(DoubleType) / 2000.0)
-            .as("f1"),
-          (least(words, lit(200)).cast(DoubleType) / 200.0).as("f2"),
-          (digits.cast(DoubleType) /
-            greatest(chars, lit(1)).cast(DoubleType)).as("f3"),
-          when(words >= 40, 1.0).otherwise(0.0).as("y"))
-        // lazy (r20, the perplexity pattern): train() opens with an
-        // eager df.count() — THAT action materializes the seam, so an
-        // eager checkpoint here would pay a whole extra job for nothing
-        .localCheckpoint(false)
-      graft.core.Metrics.deferUnpersist(feats)
-      val fcols = (0 to 3).map(j => col(s"f$j"))
-      val wq = QualityModel.train(feats, fcols, col("y"),
-        iters = 3, lrNum = 4L)
-      val sc = round(QualityModel.score(fcols, wq), 6)
-      feats.select(col("doc_id") +: sc.as("score") +:
-        (sc >= 0.5).as("keep") +:
-        wq.zipWithIndex.map { case (w, j) => lit(w).as(s"w$j") }: _*)
-    }),
-
-    "q_x_script" -> ((s, dir) => {
-      // Unicode-script routing profile (multilingual curation: script
-      // decides the tokenizer/quality pipeline, langid discriminates
-      // within it). ASCII fixture corpus → plant deterministic Cyrillic
-      // and Han tails on thirds of the docs (the pii_scrub pattern).
-      // Row-local codegen'd regex counts; zero shuffle.
-      val synth = docs(s, dir).select(col("doc_id"),
-        concat(coalesce(col("text"), lit("")),
-          when(col("doc_id") % 3 === 0, lit(" привет мир"))
-            .when(col("doc_id") % 3 === 1, lit(" 你好世界"))
-            .otherwise(lit(""))).as("synth"))
-      synth.select(col("doc_id") +:
-        TextOps.scriptColumns(col("synth")).map { case (n, c) => c.as(n) }: _*)
     }),
 
     "q5_local_supplier" -> ((s, dir) => {
@@ -2435,819 +339,15 @@ object Queries {
           (lit(100L) - cents(col("l_discount"))))
           .cast(DoubleType) / 10000.0).as("revenue"))
         .orderBy(col("revenue").desc, col("n_name"))
-    }),
-
-    "q_x_boilerplate" -> ((s, dir) => {
-      // domain-frequent line removal (nav/footer boilerplate). The
-      // fixture corpus is single-line, so the query plants deterministic
-      // site furniture first (the q_x_pii_scrub pattern): a per-source
-      // subscribe header on EVERY doc (df=100% → stripped), a promo line
-      // on every 7th doc (~14% < the 50% threshold → kept), and a
-      // per-doc ref footer (unique → kept)
-      val synth = docs(s, dir).select(col("doc_id"), col("source"),
-        concat(
-          lit("Subscribe to "), coalesce(col("source"), lit("")),
-          lit(" newsletter\n"), coalesce(col("text"), lit("")), lit("\n"),
-          when(col("doc_id") % 7 === 0, lit("Limited time offer"))
-            .otherwise(concat(lit("ref "),
-              col("doc_id").cast(StringType)))).as("synth"))
-      graft.ops.Boilerplate.strip(synth, "doc_id", "source", "synth",
-        minFrac = 0.5, minDf = 2)
     })
   )
 
-  /** Mixed-normalization fixture strings for q_x_nfc: the same visible
-    * text "cafe-acute noel-diaeresis" in decomposed (combining marks)
-    * and precomposed byte forms. */
-  private object QNfc {
-    val Decomposed = "cafe\u0301 noe\u0308l"
-    val Precomposed = "caf\u00e9 no\u00ebl"
-  }
-
-  // ---- machine-generated oracles for the portable sketch queries --------
-  // These recompute the md5-derived signatures bit-for-bit in DuckDB, so
-  // the approximate (banded) operators get FULL value oracles, not
-  // rows-only checks. Constants are interpolated from the same
-  // graft.functions.Portable formulas the Spark plans use.
-
-  private def normSql(textExpr: String): String =
-    s"trim(regexp_replace(lower(coalesce($textExpr, '')), '[^\\p{L}\\p{N}]+', ' ', 'g'))"
-
-  /** Winnowing fingerprint CTE chain (k=3, w=4) over `documents`
-    * filtered by `pred`, CTE names prefixed with `px` so two chains
-    * (corpus + batch) compose in one query; ends with `${px}fp` =
-    * (doc_id, fp). Mirrors [[graft.ops.Dedup.winnowFingerprints]]
-    * bit-for-bit. */
-  private def winnowChainSql(px: String, pred: String): String =
-    s"""${px}docs AS (
-       |  SELECT doc_id,
-       |    string_split_regex(${normSql("text")}, '\\s+') AS w
-       |  FROM documents WHERE $pred),
-       |${px}u AS (
-       |  SELECT doc_id, unnest(list_transform(range(1, len(w) - 1),
-       |    i -> struct_pack(p := i,
-       |      g := w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-       |  FROM ${px}docs WHERE len(w) >= 3),
-       |${px}g AS (
-       |  SELECT doc_id, s.p AS p,
-       |    ${graft.functions.Portable.h60Sql("s.g")} AS h
-       |  FROM ${px}u),
-       |${px}m AS (
-       |  SELECT doc_id, p,
-       |    min(h) OVER (PARTITION BY doc_id ORDER BY p
-       |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-       |    count(*) OVER (PARTITION BY doc_id) AS n
-       |  FROM ${px}g),
-       |${px}fp AS (
-       |  SELECT DISTINCT doc_id, fp FROM ${px}m
-       |  WHERE p + 3 <= n OR p = 1)""".stripMargin
-
-  /** The shared portable-MinHash replay: docs → distinct shingles →
-    * md5-family hashes → numHashes min-aggregates → per-band bucket
-    * strings — the prefix both the candidate-pair oracle and the
-    * band-stats oracle build on. */
-  private def minhashSigBandsCte(numHashes: Int, bands: Int): String = {
-    import graft.functions.Portable
-    val P = Portable.P
-    val rows = numHashes / bands
-    val mins = (0 until numHashes).map(i =>
-      s"min((h * ${Portable.hashA(i)} + ${Portable.hashB(i)}) % $P) AS m$i")
-      .mkString(",\n  ")
-    val bandCase = (0 until bands).map { b =>
-      s"WHEN $b THEN " + (0 until rows).map(k => s"m${rows * b + k}")
-        .mkString(" || ',' || ")
-    }.mkString("\n      ")
-    s"""WITH docs AS (
-       |  SELECT doc_id,
-       |    string_split_regex(${normSql("text")}, '\\s+') AS w
-       |  FROM documents),
-       |sh AS (
-       |  SELECT doc_id, unnest(list_distinct(list_transform(
-       |    range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS shingle
-       |  FROM docs WHERE len(w) >= 3),
-       |h AS (SELECT doc_id, ${Portable.h31Sql("shingle")} AS h FROM sh),
-       |sig AS (SELECT doc_id,
-       |  $mins
-       |  FROM h GROUP BY doc_id),
-       |bands AS (
-       |  SELECT doc_id, r.range AS band,
-       |    CASE r.range
-       |      $bandCase
-       |    END AS bucket
-       |  FROM sig, range($bands) r)""".stripMargin
-  }
-
-  private def minhashOracleSqlFor(numHashes: Int, bands: Int,
-      est: Double): String = {
-    val eq = (0 until numHashes)
-      .map(i => s"CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END").mkString(" + ")
-    s"""${minhashSigBandsCte(numHashes, bands)},
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id)
-       |SELECT id_a, id_b, est_jaccard FROM (
-       |  SELECT id_a, id_b, CAST($eq AS DOUBLE) / $numHashes AS est_jaccard
-       |  FROM cand JOIN sig sa ON sa.doc_id = id_a JOIN sig sb ON sb.doc_id = id_b)
-       |WHERE est_jaccard >= $est""".stripMargin
-  }
-
-  /** q_x_band_stats: the per-band collision histogram over the same
-    * banding the candidate join uses — exact BIGINT group counts. */
-  private def minhashBandStatsOracleSql(numHashes: Int,
-      bands: Int): String =
-    s"""${minhashSigBandsCte(numHashes, bands)},
-       |bstat AS (
-       |  SELECT band, bucket, count(*) AS m
-       |  FROM bands GROUP BY band, bucket)
-       |SELECT band, count(*) AS n_buckets, max(m) AS max_bucket,
-       |  CAST(sum((m * (m - 1)) // 2) AS BIGINT) AS cand_pairs
-       |FROM bstat GROUP BY band""".stripMargin
-
-  private val minhashOracleSql: String = minhashOracleSqlFor(64, 16, 0.3)
-
-  /** q_x_lsh_editverify: the minhash candidate CTE, then the exact
-    * clamped-prefix edit similarity per pair. DuckDB computes the FULL
-    * levenshtein (no early exit), which is equivalent: the Spark limit
-    * ceil((1−τ)·maxChars) only rejects pairs whose similarity is
-    * provably below τ on clamped lengths ≤ maxChars. */
-  private val editVerifyOracleSql: String = {
-    val (minEditSim, maxChars) = (0.4, 400)
-    s"""WITH mh AS (
-       |$minhashOracleSql
-       |),
-       |t AS (
-       |  SELECT doc_id, substr(coalesce(text, ''), 1, $maxChars) AS t
-       |  FROM documents)
-       |SELECT id_a, id_b, est_jaccard, edit_sim FROM (
-       |  SELECT mh.id_a, mh.id_b, mh.est_jaccard,
-       |    CASE WHEN greatest(length(ta.t), length(tb.t)) = 0 THEN 1.0
-       |         ELSE 1.0 - CAST(levenshtein(ta.t, tb.t) AS DOUBLE)
-       |              / CAST(greatest(length(ta.t), length(tb.t)) AS DOUBLE)
-       |    END AS edit_sim
-       |  FROM mh
-       |  JOIN t ta ON ta.doc_id = mh.id_a
-       |  JOIN t tb ON tb.doc_id = mh.id_b)
-       |WHERE edit_sim >= $minEditSim""".stripMargin
-  }
-
-  private val simhashOracleSql: String = {
-    import graft.functions.Portable
-    val sums = (0 until 60).map(i =>
-      s"sum(CASE WHEN ((h >> $i) & 1) = 1 THEN 1 ELSE -1 END) AS b$i")
-      .mkString(",\n  ")
-    val pack = (0 until 60)
-      .map(i => s"CASE WHEN b$i > 0 THEN ${1L << i} ELSE 0 END")
-      .mkString(" +\n    ")
-    val maskCase = (0 until 4)
-      .map(c => s"WHEN $c THEN ${((1L << 15) - 1) << (c * 15)}").mkString(" ")
-    s"""WITH n AS (
-       |  SELECT doc_id, ${normSql("text")} AS norm FROM documents),
-       |tok AS (SELECT doc_id, unnest(string_split_regex(norm, '\\s+')) AS t
-       |        FROM n WHERE norm <> ''),
-       |h AS (SELECT doc_id, ${Portable.h60Sql("t")} AS h FROM tok),
-       |bits AS (SELECT doc_id,
-       |  $sums
-       |  FROM h GROUP BY doc_id),
-       |sig AS (SELECT doc_id, CAST($pack AS BIGINT) AS sig FROM bits),
-       |k AS (
-       |  SELECT doc_id, sig, r.range AS c,
-       |    sig & (CASE r.range $maskCase END) AS bits
-       |  FROM sig, range(4) r),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming
-       |  FROM k a JOIN k b ON a.c = b.c AND a.bits = b.bits AND a.doc_id < b.doc_id)
-       |SELECT id_a, id_b, hamming FROM cand WHERE hamming <= 10""".stripMargin
-  }
-
-  private val embedLshOracleSql: String = {
-    import graft.functions.Portable
-    val P = Portable.P
-    s"""WITH pl AS (
-       |  SELECT i.range AS i,
-       |    list((${Portable.h60Sql("'p_' || i.range || '_' || j.range")} % $P) / $P.0 * 2.0 - 1.0 ORDER BY j.range) AS plane
-       |  FROM range(16) i, range(64) j GROUP BY i.range),
-       |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-       |sb AS (
-       |  SELECT v.vec_id,
-       |    CASE WHEN list_inner_product(v.e, pl.plane) >= 0
-       |         THEN CAST(1 AS BIGINT) << CAST(pl.i AS INT) ELSE CAST(0 AS BIGINT) END AS bit
-       |  FROM v, pl),
-       |sig AS (SELECT vec_id, CAST(sum(bit) AS BIGINT) AS sig FROM sb GROUP BY vec_id),
-       |vs AS (SELECT v.vec_id, v.e, sqrt(list_inner_product(v.e, v.e)) AS nrm, sig.sig
-       |       FROM v JOIN sig USING (vec_id)),
-       |k AS (
-       |  SELECT vec_id, e, nrm, sig, r.range AS band,
-       |    sig & (CAST(3 AS BIGINT) << (CAST(r.range AS INT) * 2)) AS bits
-       |  FROM vs, range(8) r),
-       |cand AS (
-       |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b,
-       |    CASE WHEN a.nrm * b.nrm > 0
-       |         THEN list_inner_product(a.e, b.e) / (a.nrm * b.nrm) ELSE 0.0 END AS cosine_sim
-       |  FROM k a JOIN k b ON a.band = b.band AND a.bits = b.bits AND a.vec_id < b.vec_id)
-       |SELECT id_a, id_b FROM cand WHERE cosine_sim >= 0.30""".stripMargin
-  }
-
-  /** Full DuckDB replica of Ivf.train (k=8, iters=2) + topK (nprobe=2):
-    * md5-ordered seeding, two unrolled Lloyd passes with DECIMAL-exact
-    * means, probe the 2 nearest cells, exact cosine re-rank. Every
-    * floating step mirrors the Spark formula tree (see Ivf.scala), so the
-    * approximate ANN operator is value-checked end to end. */
-  // one nearest-centroid assignment pass against centroid CTE `cIn`
-  private def ivfAssignBlock(name: String, cIn: String, filter: String): String =
-    s"""$name AS (
-       |  SELECT vec_id, e, cell FROM (
-       |    SELECT v.vec_id, v.e, c.cell,
-       |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |        (list_inner_product(v.e, v.e) - 2.0 * list_inner_product(v.e, c.c)) + list_inner_product(c.c, c.c),
-       |        c.cell) AS rn
-       |    FROM emb v, $cIn c$filter)
-       |  WHERE rn = 1)""".stripMargin
-
-  // per-(cell, dim) exact-decimal mean; empty cells keep their centroid
-  private def ivfMeanBlock(aIn: String, mOut: String, cIn: String,
-      cOut: String): String =
-    s"""$mOut AS (
-       |  SELECT cell, j.range AS pos,
-       |    CAST(sum(CAST(e[CAST(j.range AS INT) + 1] AS DECIMAL(27,12))) AS DOUBLE) / count(*) AS m
-       |  FROM $aIn, range(64) j GROUP BY cell, j.range),
-       |$cOut AS (
-       |  SELECT cell, list(m ORDER BY pos) AS c FROM $mOut GROUP BY cell
-       |  UNION ALL
-       |  SELECT cell, c FROM $cIn WHERE cell NOT IN (SELECT cell FROM $mOut))""".stripMargin
-
-  /** CTE chain replaying Ivf.train(k=8, iters=2) end to end: `emb` (all
-    * vectors, doubles) → md5-order seeds `c0` → two Lloyd passes → final
-    * centroids `c2`. Shared by every oracle that consumes cell structure
-    * (q_x_ann_ivf, q_x_semdedup*, q_x_cell_sample). */
-  private val ivfTrainCtes: String =
-    s"""emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-       |c0 AS (
-       |  SELECT cell, c FROM (
-       |    SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cell, e AS c
-       |    FROM emb)
-       |  WHERE cell < 8),
-       |${ivfAssignBlock("a1", "c0", "")},
-       |${ivfMeanBlock("a1", "m1", "c0", "c1")},
-       |${ivfAssignBlock("a2", "c1", "")},
-       |${ivfMeanBlock("a2", "m2", "c1", "c2")}""".stripMargin
-
-  /** DuckDB replica of Pq.train(m=4, dsub=16, k=8, iters=2) + encode +
-    * adcTopK: per-subspace md5-seeded Lloyd passes with DECIMAL-exact
-    * means (the proven Ivf pattern over sliced vectors), final
-    * assignments as the codes, and the ADC estimate as a left-to-right
-    * sum of per-subspace lookup distances — a full value oracle for the
-    * compressed-search operator. */
-  private def pqOracleParts(
-      src: String = "emb"): (String, String => String) = {
-    val m = 4; val dsub = 16; val k = 8
-    def subCte(j: Int) =
-      s"s$j AS (SELECT vec_id, e[${j * dsub + 1}:${(j + 1) * dsub}] AS e FROM $src)"
-    def seedCte(j: Int) =
-      s"""c0_$j AS (
-         |  SELECT cell, c FROM (
-         |    SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cell, e AS c
-         |    FROM s$j)
-         |  WHERE cell < $k)""".stripMargin
-    def assignCte(name: String, cIn: String, src: String) =
-      s"""$name AS (
-         |  SELECT vec_id, e, cell FROM (
-         |    SELECT v.vec_id, v.e, c.cell,
-         |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |        (list_inner_product(v.e, v.e) - 2.0 * list_inner_product(v.e, c.c)) + list_inner_product(c.c, c.c),
-         |        c.cell) AS rn
-         |    FROM $src v, $cIn c)
-         |  WHERE rn = 1)""".stripMargin
-    def meanCte(aIn: String, mOut: String, cIn: String, cOut: String) =
-      s"""$mOut AS (
-         |  SELECT cell, j.range AS pos,
-         |    CAST(sum(CAST(e[CAST(j.range AS INT) + 1] AS DECIMAL(27,12))) AS DOUBLE) / count(*) AS m
-         |  FROM $aIn, range($dsub) j GROUP BY cell, j.range),
-         |$cOut AS (
-         |  SELECT cell, list(m ORDER BY pos) AS c FROM $mOut GROUP BY cell
-         |  UNION ALL
-         |  SELECT cell, c FROM $cIn WHERE cell NOT IN (SELECT cell FROM $mOut))""".stripMargin
-    def lutCte(j: Int) =
-      s"""q$j AS (SELECT e AS qe FROM s$j WHERE vec_id = 0),
-         |ld$j AS (
-         |  SELECT c.cell,
-         |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list_transform(range(1, ${dsub + 1}),
-         |        i -> (c.c[CAST(i AS INT)] - q$j.qe[CAST(i AS INT)])
-         |             * (c.c[CAST(i AS INT)] - q$j.qe[CAST(i AS INT)]))),
-         |      (a, b) -> a + b) AS d2
-         |  FROM c2_$j c, q$j)""".stripMargin
-    val perSub = (0 until m).map { j =>
-      Seq(subCte(j), seedCte(j),
-        assignCte(s"a1_$j", s"c0_$j", s"s$j"),
-        meanCte(s"a1_$j", s"m1_$j", s"c0_$j", s"c1_$j"),
-        assignCte(s"a2_$j", s"c1_$j", s"s$j"),
-        meanCte(s"a2_$j", s"m2_$j", s"c1_$j", s"c2_$j"),
-        assignCte(s"af_$j", s"c2_$j", s"s$j"),
-        lutCte(j)).mkString(",\n")
-    }.mkString(",\n")
-    val joins = (1 until m).map(j => s"JOIN af_$j x$j USING (vec_id)")
-      .mkString("\n  ")
-    val ljoins = (0 until m).map(j => s"JOIN ld$j l$j ON l$j.cell = x$j.cell")
-      .mkString("\n  ")
-    val estExpr = (0 until m).map(j => s"l$j.d2").mkString(" + ")
-    val subCtes = perSub
-    def estCte(extraWhere: String) =
-      s"""est AS (
-         |  SELECT x0.vec_id, $estExpr AS est
-         |  FROM af_0 x0
-         |  $joins
-         |  $ljoins
-         |  WHERE x0.vec_id <> 0$extraWhere)""".stripMargin
-    (subCtes, estCte _)
-  }
-
-  private val pqOracleSql: String = {
-    val (subCtes, estCte) = pqOracleParts()
-    s"""WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-       |$subCtes,
-       |${estCte("")}
-       |SELECT vec_id, round(est, 6) AS est_d2
-       |FROM est ORDER BY est, vec_id LIMIT 20""".stripMargin
-  }
-
-  /** Refined-PQ oracle: the ADC replay picks the shortlist, then exact
-    * cosine over just those rows — the same two-stage composition the
-    * Spark side runs. */
-  private val pqRefinedOracleSql: String = {
-    val (subCtes, estCte) = pqOracleParts()
-    s"""WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-       |$subCtes,
-       |${estCte("")},
-       |short AS (SELECT vec_id FROM est ORDER BY est, vec_id LIMIT 100),
-       |qv AS (SELECT e AS qe FROM emb WHERE vec_id = 0),
-       |scored AS (
-       |  SELECT s.vec_id,
-       |    CASE WHEN sqrt(list_inner_product(e.e, e.e)) * sqrt(list_inner_product(qv.qe, qv.qe)) > 0
-       |         THEN list_inner_product(e.e, qv.qe) / (sqrt(list_inner_product(e.e, e.e)) * sqrt(list_inner_product(qv.qe, qv.qe)))
-       |         ELSE 0.0 END AS cosine_sim
-       |  FROM short s JOIN emb e USING (vec_id), qv)
-       |SELECT vec_id, cosine_sim FROM scored
-       |ORDER BY cosine_sim DESC, vec_id LIMIT 20""".stripMargin
-  }
-
-  /** IVF-PQ oracle: coarse training + query-probe selection from the IVF
-    * replay, candidate routing by the final coarse assignment, then the
-    * PQ blocks' ADC estimate restricted to the probed cells. */
-  private val ivfPqOracleSql: String = {
-    val (subCtes, estCte) = pqOracleParts()
-    s"""WITH $ivfTrainCtes,
-       |q AS (SELECT e AS qe FROM emb WHERE vec_id = 0),
-       |pd AS (
-       |  SELECT c.cell,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list_transform(range(1, 65),
-       |        j -> (c.c[CAST(j AS INT)] - q.qe[CAST(j AS INT)])
-       |             * (c.c[CAST(j AS INT)] - q.qe[CAST(j AS INT)]))),
-       |      (a, b) -> a + b) AS d2
-       |  FROM c2 c, q),
-       |probes AS (SELECT cell FROM pd ORDER BY d2, cell LIMIT 2),
-       |${ivfAssignBlock("afv", "c2", " WHERE v.vec_id <> 0")},
-       |$subCtes,
-       |${estCte(
-        "\n    AND x0.vec_id IN (SELECT vec_id FROM afv WHERE cell IN (SELECT cell FROM probes))")}
-       |SELECT vec_id, round(est, 6) AS est_d2
-       |FROM est ORDER BY est, vec_id LIMIT 20""".stripMargin
-  }
-
-  /** IVF-PQ + exact-refine oracle: the IVF-PQ replay (coarse probes +
-    * ADC estimate restricted to probed cells) picks the 100-candidate
-    * shortlist; exact cosine over just those rows ranks the final 20 —
-    * the same two-stage composition `Pq.probeIndexedRefined` runs. */
-  private val ivfPqRefinedOracleSql: String = {
-    val (subCtes, estCte) = pqOracleParts()
-    s"""WITH $ivfTrainCtes,
-       |q AS (SELECT e AS qe FROM emb WHERE vec_id = 0),
-       |pd AS (
-       |  SELECT c.cell,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list_transform(range(1, 65),
-       |        j -> (c.c[CAST(j AS INT)] - q.qe[CAST(j AS INT)])
-       |             * (c.c[CAST(j AS INT)] - q.qe[CAST(j AS INT)]))),
-       |      (a, b) -> a + b) AS d2
-       |  FROM c2 c, q),
-       |probes AS (SELECT cell FROM pd ORDER BY d2, cell LIMIT 2),
-       |${ivfAssignBlock("afv", "c2", " WHERE v.vec_id <> 0")},
-       |$subCtes,
-       |${estCte(
-        "\n    AND x0.vec_id IN (SELECT vec_id FROM afv WHERE cell IN (SELECT cell FROM probes))")},
-       |short AS (SELECT vec_id FROM est ORDER BY est, vec_id LIMIT 100),
-       |scored AS (
-       |  SELECT s.vec_id,
-       |    CASE WHEN sqrt(list_inner_product(e.e, e.e)) * sqrt(list_inner_product(q.qe, q.qe)) > 0
-       |         THEN list_inner_product(e.e, q.qe) / (sqrt(list_inner_product(e.e, e.e)) * sqrt(list_inner_product(q.qe, q.qe)))
-       |         ELSE 0.0 END AS cosine_sim
-       |  FROM short s JOIN emb e USING (vec_id), q)
-       |SELECT vec_id, cosine_sim FROM scored
-       |ORDER BY cosine_sim DESC, vec_id LIMIT 20""".stripMargin
-  }
-
-  /** Residual-IVFADC oracle: replay coarse training (c2), derive every
-    * vector's residual against its assigned centroid, run the PQ
-    * training replay OVER THE RESIDUALS, then estimate with
-    * per-probed-cell lookup tables (the query's residual w.r.t. each
-    * probed cell) — exactly `Pq.trainResidual` + `ivfPqResidualTopK`. */
-  private val ivfAdcOracleSql: String = {
-    val m = 4; val dsub = 16
-    val (subCtes, _) = pqOracleParts("embr")
-    def qrCtes(j: Int) =
-      s"""qr$j AS (SELECT pcell, qe[${j * dsub + 1}:${(j + 1) * dsub}] AS qe FROM qr),
-         |ldr$j AS (
-         |  SELECT qr.pcell, c.cell AS code,
-         |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list_transform(range(1, ${dsub + 1}),
-         |        i -> (c.c[CAST(i AS INT)] - qr.qe[CAST(i AS INT)])
-         |             * (c.c[CAST(i AS INT)] - qr.qe[CAST(i AS INT)]))),
-         |      (a, b) -> a + b) AS d2
-         |  FROM c2_$j c, qr$j qr)""".stripMargin
-    val joins = (1 until m).map(j => s"JOIN af_$j x$j USING (vec_id)")
-      .mkString("\n  ")
-    val ljoins = (0 until m)
-      .map(j => s"JOIN ldr$j l$j ON l$j.pcell = av.cell AND l$j.code = x$j.cell")
-      .mkString("\n  ")
-    val estExpr = (0 until m).map(j => s"l$j.d2").mkString(" + ")
-    s"""WITH $ivfTrainCtes,
-       |q AS (SELECT e AS qe FROM emb WHERE vec_id = 0),
-       |pd AS (
-       |  SELECT c.cell,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list_transform(range(1, 65),
-       |        j -> (c.c[CAST(j AS INT)] - q.qe[CAST(j AS INT)])
-       |             * (c.c[CAST(j AS INT)] - q.qe[CAST(j AS INT)]))),
-       |      (a, b) -> a + b) AS d2
-       |  FROM c2 c, q),
-       |probes AS (SELECT cell FROM pd ORDER BY d2, cell LIMIT 2),
-       |${ivfAssignBlock("afv", "c2", "")},
-       |embr AS (
-       |  SELECT a.vec_id, list_transform(range(1, 65),
-       |    i -> a.e[CAST(i AS INT)] - c.c[CAST(i AS INT)]) AS e
-       |  FROM afv a JOIN c2 c USING (cell)),
-       |$subCtes,
-       |qr AS (
-       |  SELECT p.cell AS pcell, list_transform(range(1, 65),
-       |    i -> q.qe[CAST(i AS INT)] - cc.c[CAST(i AS INT)]) AS qe
-       |  FROM probes p JOIN c2 cc ON cc.cell = p.cell, q),
-       |${(0 until m).map(qrCtes).mkString(",\n")},
-       |est AS (
-       |  SELECT x0.vec_id, $estExpr AS est
-       |  FROM af_0 x0
-       |  $joins
-       |  JOIN afv av USING (vec_id)
-       |  $ljoins
-       |  WHERE x0.vec_id <> 0
-       |    AND av.cell IN (SELECT cell FROM probes))
-       |SELECT vec_id, round(est, 6) AS est_d2
-       |FROM est ORDER BY est, vec_id LIMIT 20""".stripMargin
-  }
-
-  /** Batched-probe oracle: the [[ivfOracleSql]] replay generalized to a
-    * query SET — per-query probe cells via a windowed rank over the
-    * query×centroid distances, exact cosine within each query's probed
-    * cells, top-k per query. The corpus is the INDEXED set (vec_id <> 0;
-    * queries 1 and 2 are themselves indexed and rank first — the
-    * standard serving shape). */
-  private val ivfProbeManyOracleSql: String = {
-    s"""WITH $ivfTrainCtes,
-       |qs AS (SELECT vec_id AS query_id, e AS qe FROM emb WHERE vec_id IN (0, 1, 2)),
-       |pd AS (
-       |  SELECT qs.query_id, c.cell,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list_transform(range(1, 65),
-       |        j -> (c.c[CAST(j AS INT)] - qs.qe[CAST(j AS INT)])
-       |             * (c.c[CAST(j AS INT)] - qs.qe[CAST(j AS INT)]))),
-       |      (a, b) -> a + b) AS d2
-       |  FROM c2 c, qs),
-       |probes AS (
-       |  SELECT query_id, cell FROM (
-       |    SELECT query_id, cell,
-       |      row_number() OVER (PARTITION BY query_id ORDER BY d2, cell) AS rn
-       |    FROM pd)
-       |  WHERE rn <= 2),
-       |${ivfAssignBlock("af", "c2", " WHERE v.vec_id <> 0")},
-       |scored AS (
-       |  SELECT p.query_id, af.vec_id,
-       |    CASE WHEN sqrt(list_inner_product(af.e, af.e)) * sqrt(list_inner_product(qs.qe, qs.qe)) > 0
-       |         THEN list_inner_product(af.e, qs.qe) / (sqrt(list_inner_product(af.e, af.e)) * sqrt(list_inner_product(qs.qe, qs.qe)))
-       |         ELSE 0.0 END AS cosine_sim
-       |  FROM af JOIN probes p ON af.cell = p.cell JOIN qs USING (query_id)),
-       |top AS (
-       |  SELECT query_id, vec_id, cosine_sim,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id) AS rn
-       |  FROM scored)
-       |SELECT query_id, vec_id, cosine_sim FROM top WHERE rn <= 10""".stripMargin
-  }
-
-  /** Batched IVF-PQ serving oracle: the PQ training/encode replay plus a
-    * query SET — per-query probe cells from the coarse replay, per-query
-    * per-subspace lookup distances, estimate joined on (query, code),
-    * top-k per query. Mirrors `Pq.probeManyIndexed` exactly (same LUT
-    * doubles, same left-to-right add order, same tie-break). */
-  private val pqManyOracleSql: String = {
-    val m = 4; val dsub = 16
-    val (subCtes, _) = pqOracleParts()
-    def qsCtes(j: Int) =
-      s"""qs$j AS (SELECT query_id, qe[${j * dsub + 1}:${(j + 1) * dsub}] AS qe FROM qs),
-         |ldm$j AS (
-         |  SELECT q.query_id, c.cell AS code,
-         |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list_transform(range(1, ${dsub + 1}),
-         |        i -> (c.c[CAST(i AS INT)] - q.qe[CAST(i AS INT)])
-         |             * (c.c[CAST(i AS INT)] - q.qe[CAST(i AS INT)]))),
-         |      (a, b) -> a + b) AS d2
-         |  FROM c2_$j c, qs$j q)""".stripMargin
-    val joins = (1 until m).map(j => s"JOIN af_$j x$j USING (vec_id)")
-      .mkString("\n  ")
-    val ljoins = (0 until m)
-      .map(j =>
-        s"JOIN ldm$j l$j ON l$j.query_id = p.query_id AND l$j.code = x$j.cell")
-      .mkString("\n  ")
-    val estExpr = (0 until m).map(j => s"l$j.d2").mkString(" + ")
-    s"""WITH $ivfTrainCtes,
-       |qs AS (SELECT vec_id AS query_id, e AS qe FROM emb WHERE vec_id IN (0, 1, 2)),
-       |pd AS (
-       |  SELECT qs.query_id, c.cell,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list_transform(range(1, 65),
-       |        j -> (c.c[CAST(j AS INT)] - qs.qe[CAST(j AS INT)])
-       |             * (c.c[CAST(j AS INT)] - qs.qe[CAST(j AS INT)]))),
-       |      (a, b) -> a + b) AS d2
-       |  FROM c2 c, qs),
-       |probes AS (
-       |  SELECT query_id, cell FROM (
-       |    SELECT query_id, cell,
-       |      row_number() OVER (PARTITION BY query_id ORDER BY d2, cell) AS rn
-       |    FROM pd)
-       |  WHERE rn <= 2),
-       |${ivfAssignBlock("afv", "c2", " WHERE v.vec_id <> 0")},
-       |$subCtes,
-       |${(0 until m).map(qsCtes).mkString(",\n")},
-       |est AS (
-       |  SELECT p.query_id, x0.vec_id, $estExpr AS est
-       |  FROM af_0 x0
-       |  $joins
-       |  JOIN afv av USING (vec_id)
-       |  JOIN probes p ON p.cell = av.cell
-       |  $ljoins
-       |  WHERE x0.vec_id <> 0),
-       |top AS (
-       |  SELECT query_id, vec_id, round(est, 6) AS est_d2,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY est, vec_id) AS rn
-       |  FROM est)
-       |SELECT query_id, vec_id, est_d2 FROM top WHERE rn <= 10""".stripMargin
-  }
-
-  private val ivfOracleSql: String = {
-    s"""WITH $ivfTrainCtes,
-       |q AS (SELECT e AS qe FROM emb WHERE vec_id = 0),
-       |pd AS (
-       |  -- sequential left-to-right fold, mirroring Model.nearest's
-       |  -- dimension-order loop (an unordered double SUM could differ in
-       |  -- the last ulp and flip a probe-cell near-tie)
-       |  SELECT c.cell,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list_transform(range(1, 65),
-       |        j -> (c.c[CAST(j AS INT)] - q.qe[CAST(j AS INT)])
-       |             * (c.c[CAST(j AS INT)] - q.qe[CAST(j AS INT)]))),
-       |      (a, b) -> a + b) AS d2
-       |  FROM c2 c, q),
-       |probes AS (SELECT cell FROM pd ORDER BY d2, cell LIMIT 2),
-       |${ivfAssignBlock("af", "c2", " WHERE v.vec_id <> 0")},
-       |scored AS (
-       |  SELECT af.vec_id,
-       |    CASE WHEN sqrt(list_inner_product(af.e, af.e)) * sqrt(list_inner_product(q.qe, q.qe)) > 0
-       |         THEN list_inner_product(af.e, q.qe) / (sqrt(list_inner_product(af.e, af.e)) * sqrt(list_inner_product(q.qe, q.qe)))
-       |         ELSE 0.0 END AS cosine_sim
-       |  FROM af, q WHERE af.cell IN (SELECT cell FROM probes))
-       |SELECT vec_id, cosine_sim FROM scored ORDER BY cosine_sim DESC, vec_id LIMIT 20""".stripMargin
-  }
-
-  /** Filtered-ANN oracle: the [[ivfOracleSql]] replay with the probe
-    * list widened to 4 and a label semi-filter on the candidates —
-    * mirrors probeFiltered's prune → filter → exact re-rank. */
-  private val annFilteredOracleSql: String = {
-    s"""WITH $ivfTrainCtes,
-       |q AS (SELECT e AS qe FROM emb WHERE vec_id = 0),
-       |pd AS (
-       |  SELECT c.cell,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list_transform(range(1, 65),
-       |        j -> (c.c[CAST(j AS INT)] - q.qe[CAST(j AS INT)])
-       |             * (c.c[CAST(j AS INT)] - q.qe[CAST(j AS INT)]))),
-       |      (a, b) -> a + b) AS d2
-       |  FROM c2 c, q),
-       |probes AS (SELECT cell FROM pd ORDER BY d2, cell LIMIT 4),
-       |${ivfAssignBlock("af", "c2", " WHERE v.vec_id <> 0")},
-       |scored AS (
-       |  SELECT af.vec_id,
-       |    CASE WHEN sqrt(list_inner_product(af.e, af.e)) * sqrt(list_inner_product(q.qe, q.qe)) > 0
-       |         THEN list_inner_product(af.e, q.qe) / (sqrt(list_inner_product(af.e, af.e)) * sqrt(list_inner_product(q.qe, q.qe)))
-       |         ELSE 0.0 END AS cosine_sim
-       |  FROM af, q WHERE af.cell IN (SELECT cell FROM probes)
-       |    AND af.vec_id IN (SELECT vec_id FROM embeddings WHERE label = 3))
-       |SELECT vec_id, cosine_sim FROM scored ORDER BY cosine_sim DESC, vec_id LIMIT 20""".stripMargin
-  }
-
-  // within-cell exact-cosine pair CTE over the final assignment `af` —
-  // the same nrm-product-then-divide arithmetic the Spark side codegens
-  private val semdedupPairsCte: String =
-    s"""${ivfAssignBlock("af", "c2", "")},
-       |sdpairs AS (
-       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b, CAST(a.cell AS BIGINT) AS cell
-       |  FROM af a JOIN af b ON a.cell = b.cell AND a.vec_id < b.vec_id
-       |  WHERE CASE WHEN sqrt(list_inner_product(a.e, a.e)) * sqrt(list_inner_product(b.e, b.e)) > 0
-       |        THEN list_inner_product(a.e, b.e) / (sqrt(list_inner_product(a.e, a.e)) * sqrt(list_inner_product(b.e, b.e)))
-       |        ELSE 0.0 END >= 0.30)""".stripMargin
-
-  private val semdedupOracleSql: String =
-    s"""WITH $ivfTrainCtes,
-       |$semdedupPairsCte
-       |SELECT id_a, id_b, cell FROM sdpairs""".stripMargin
-
-  private val semdedupKeepOracleSql: String =
-    s"""WITH $ivfTrainCtes,
-       |$semdedupPairsCte
-       |SELECT vec_id FROM emb
-       |WHERE vec_id NOT IN (SELECT id_b FROM sdpairs)""".stripMargin
-
-  /** Quality-aware keep: same replayed pairs, loser = lower n_chars
-    * (ties → the larger id, i.e. id_b since id_a < id_b). */
-  private val keepBestOracleSql: String =
-    s"""WITH $ivfTrainCtes,
-       |$semdedupPairsCte,
-       |qual AS (SELECT doc_id AS vid, n_chars FROM documents),
-       |dropset AS (
-       |  SELECT DISTINCT CASE WHEN sa.n_chars > sb.n_chars THEN p.id_b
-       |                       WHEN sb.n_chars > sa.n_chars THEN p.id_a
-       |                       ELSE p.id_b END AS d
-       |  FROM sdpairs p
-       |  JOIN qual sa ON sa.vid = p.id_a
-       |  JOIN qual sb ON sb.vid = p.id_b)
-       |SELECT e.vec_id, q.n_chars FROM emb e JOIN qual q ON q.vid = e.vec_id
-       |WHERE e.vec_id NOT IN (SELECT d FROM dropset)""".stripMargin
-
-  /** Incremental-SemDeDup oracle: batch rows (vec_id % 25 = 0) against
-    * the indexed corpus (vec_id <> 0), both assigned by the replayed
-    * model; exact cosine within the batch row's cell only — the same
-    * arithmetic the pruned-scan + broadcast join codegens. */
-  private val semdedupIncrOracleSql: String =
-    s"""WITH $ivfTrainCtes,
-       |${ivfAssignBlock("af", "c2", "")},
-       |b AS (SELECT vec_id, e, cell, sqrt(list_inner_product(e, e)) AS nrm
-       |      FROM af WHERE vec_id % 25 = 0),
-       |c AS (SELECT vec_id, e, cell, sqrt(list_inner_product(e, e)) AS nrm
-       |      FROM af WHERE vec_id <> 0),
-       |p AS (
-       |  SELECT b.vec_id AS id, c.vec_id AS dup_of,
-       |    CAST(b.cell AS BIGINT) AS cell,
-       |    CASE WHEN b.nrm * c.nrm > 0
-       |         THEN list_inner_product(b.e, c.e) / (b.nrm * c.nrm)
-       |         ELSE 0.0 END AS cosine_sim
-       |  FROM b JOIN c ON b.cell = c.cell AND c.vec_id <> b.vec_id)
-       |SELECT id, dup_of, cell, cosine_sim FROM p
-       |WHERE cosine_sim >= 0.30""".stripMargin
-
-  private val cellSampleOracleSql: String =
-    s"""WITH $ivfTrainCtes,
-       |${ivfAssignBlock("af", "c2", "")}
-       |SELECT vec_id, CAST(cell AS BIGINT) AS cell FROM (
-       |  SELECT vec_id, cell,
-       |    row_number() OVER (PARTITION BY cell
-       |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-       |  FROM af)
-       |WHERE rn <= 10""".stripMargin
-
-  /** Query-time LSH ANN: portable signatures for corpus AND query, probe
-    * = Hamming ≤ 2 on the 16-bit signature, exact cosine rerank. */
-  /** q_x_ann_lsh knobs — the measured mid-curve point of RECALL.md's
-    * sweep (recall-per-candidate leader on the fixture). */
-  private val LshPlanes = 24
-  private val LshProbeBits = 8
-
-  private val annLshOracleSql: String = {
-    import graft.functions.Portable
-    val P = Portable.P
-    s"""WITH pl AS (
-       |  SELECT i.range AS i,
-       |    list((${Portable.h60Sql("'p_' || i.range || '_' || j.range")} % $P) / $P.0 * 2.0 - 1.0 ORDER BY j.range) AS plane
-       |  FROM range($LshPlanes) i, range(64) j GROUP BY i.range),
-       |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-       |q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
-       |sb AS (
-       |  SELECT v.vec_id,
-       |    CASE WHEN list_inner_product(v.e, pl.plane) >= 0
-       |         THEN CAST(1 AS BIGINT) << CAST(pl.i AS INT) ELSE CAST(0 AS BIGINT) END AS bit
-       |  FROM v, pl),
-       |sig AS (SELECT vec_id, CAST(sum(bit) AS BIGINT) AS sig FROM sb GROUP BY vec_id),
-       |qsig AS (
-       |  SELECT CAST(sum(CASE WHEN list_inner_product(q.qe, pl.plane) >= 0
-       |                       THEN CAST(1 AS BIGINT) << CAST(pl.i AS INT)
-       |                       ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS qs
-       |  FROM q, pl),
-       |cand AS (
-       |  SELECT v.vec_id, v.e FROM v JOIN sig USING (vec_id), qsig
-       |  WHERE v.vec_id <> 0 AND bit_count(xor(sig.sig, qsig.qs)) <= $LshProbeBits),
-       |scored AS (
-       |  SELECT vec_id,
-       |    CASE WHEN sqrt(list_inner_product(e, e)) * sqrt(list_inner_product(qe, qe)) > 0
-       |         THEN list_inner_product(e, qe) / (sqrt(list_inner_product(e, e)) * sqrt(list_inner_product(qe, qe)))
-       |         ELSE 0.0 END AS cosine_sim
-       |  FROM cand, q)
-       |SELECT vec_id, cosine_sim FROM scored ORDER BY cosine_sim DESC, vec_id LIMIT 20""".stripMargin
-  }
-
-  /** DuckDB replay of [[graft.ops.TextOps.bpeTrain]]: the word-frequency
-    * table once, then `merges` unrolled (pair-count → argmax → two-pass
-    * replace) stages — the same leftmost-non-overlapping merge rule the
-    * engine applies. CTEs auto-materialize at assembly, so the deep
-    * w0→w8 chain replays linearly. */
-  /** The shared WITH-body: word-frequency table + `merges` unrolled
-    * (pair-count → argmax mK → two-pass replace) training stages. */
-  private def bpeCtes(merges: Int): String = {
-    val stages = (1 to merges).map { k =>
-      val prev = s"w${k - 1}"
-      s"""p$k AS (
-         |  SELECT a[CAST(i AS INT)] AS l, a[CAST(i AS INT) + 1] AS r,
-         |    sum(c)::BIGINT AS pc
-         |  FROM (SELECT string_split(sym, ' ') AS a, c FROM $prev),
-         |    unnest(generate_series(1, len(a) - 1)) AS t(i)
-         |  GROUP BY 1, 2),
-         |m$k AS (SELECT l, r, pc FROM p$k ORDER BY pc DESC, l, r LIMIT 1),
-         |w$k AS (
-         |  SELECT trim(replace(replace(' ' || sym || ' ',
-         |      ' ' || m$k.l || ' ' || m$k.r || ' ',
-         |      ' ' || m$k.l || m$k.r || ' '),
-         |      ' ' || m$k.l || ' ' || m$k.r || ' ',
-         |      ' ' || m$k.l || m$k.r || ' ')) AS sym, c
-         |  FROM $prev, m$k)""".stripMargin
-    }.mkString(",\n")
-    s"""nrm AS (
-       |  SELECT doc_id, trim(regexp_replace(lower(coalesce(text, '')),
-       |    '[^\\p{L}\\p{N}]+', ' ', 'g')) AS norm
-       |  FROM documents),
-       |words AS (
-       |  SELECT w, count(*)::BIGINT AS c FROM (
-       |    SELECT unnest(string_split_regex(norm, '\\s+')) AS w
-       |    FROM nrm WHERE norm <> '') GROUP BY 1),
-       |w0 AS (
-       |  SELECT array_to_string(list_transform(
-       |    generate_series(1, length(w)),
-       |    i -> substr(w, CAST(i AS INT), 1)), ' ') AS sym, c
-       |  FROM words),
-       |$stages""".stripMargin
-  }
-
-  private def bpeOracleSql(merges: Int): String = {
-    val sel = (1 to merges).map(k =>
-      s"SELECT CAST($k AS BIGINT) AS step, l AS left_sym, " +
-        s"r AS right_sym, l || r AS merged, pc AS pair_count FROM m$k")
-      .mkString("\nUNION ALL ")
-    s"""WITH ${bpeCtes(merges)}
-       |$sel""".stripMargin
-  }
-
-  /** DuckDB replay of [[graft.ops.TextOps.bpeEncodeStats]] over the
-    * merges [[bpeOracleSql]] learns: per-word symbol strings through the
-    * same k chained two-pass replaces, then per-doc word/subword
-    * counts. */
-  private def bpeEncodeOracleSql(merges: Int): String = {
-    val encStages = (1 to merges).map { k =>
-      val prev = s"e${k - 1}"
-      s"""e$k AS (
-         |  SELECT doc_id, replace(replace(sym,
-         |      ' ' || m$k.l || ' ' || m$k.r || ' ',
-         |      ' ' || m$k.l || m$k.r || ' '),
-         |      ' ' || m$k.l || ' ' || m$k.r || ' ',
-         |      ' ' || m$k.l || m$k.r || ' ') AS sym
-         |  FROM $prev, m$k)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH ${bpeCtes(merges)},
-       |e0 AS (
-       |  SELECT doc_id, ' ' || array_to_string(list_transform(
-       |    generate_series(1, length(w)),
-       |    i -> substr(w, CAST(i AS INT), 1)), ' ') || ' ' AS sym
-       |  FROM (SELECT doc_id, unnest(string_split_regex(norm, '\\s+')) AS w
-       |        FROM nrm WHERE norm <> '')),
-       |$encStages
-       |SELECT doc_id, count(*)::BIGINT AS n_words,
-       |  sum(len(string_split(trim(sym), ' ')))::BIGINT AS n_subwords
-       |FROM e$merges GROUP BY doc_id""".stripMargin
-  }
-
   /** DuckDB inlines a CTE at every reference unless told otherwise, so a
     * CTE referenced twice re-executes its whole upstream chain — cost
-    * doubles per level of a deep chain. The k-means-replay oracles (two
-    * Lloyd passes, ×4 PQ subspaces for the ADC forms) hit exactly that:
-    * q_x_ann_ivfadc measured 145 s / 16 GiB in DuckDB at sf0.01, enough
-    * to blow a comparator's time or memory budget and zero a whole
-    * correctness round. Forcing AS MATERIALIZED on every CTE takes the
-    * full 89-oracle suite from 158 s to 5.3 s with byte-identical
-    * results (validated oracle-by-oracle). Applied uniformly at assembly
-    * so any future deep-chain oracle is safe by default.
+    * doubles per level of a deep chain (a two-pass k-means replay oracle
+    * once took 145 s / 16 GiB in DuckDB at sf0.01 that way). Forcing AS
+    * MATERIALIZED on every CTE leaves results byte-identical; applied
+    * uniformly at assembly so any deep-chain oracle is safe by default.
     *
     * Implemented as a tiny CTE-list scanner, not a regex: the rewrite
     * follows the GRAMMAR (after `WITH [RECURSIVE]`, materialize each
@@ -3370,161 +470,6 @@ object Queries {
   val oracles: Map[String, String] = rawOracles.view.mapValues(materializeCtes).toMap
 
   private[graft] def rawOracles: Map[String, String] = Map(
-    "q_x_ann_ivf" -> ivfOracleSql,
-
-    // SQ8 replay: per-dim min/max → scale lists, floor(x+0.5) uint8
-    // codes, dequantized cosine — same sequential double arithmetic
-    // (list_inner_product ≡ the codegen'd dot, proven by q_x_ann_cosine)
-    "q_x_ann_sq8" ->
-      """WITH v AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |mm AS (
-        |  SELECT j.range AS pos,
-        |    min(e[CAST(j.range + 1 AS INT)]) AS mn,
-        |    max(e[CAST(j.range + 1 AS INT)]) AS mx
-        |  FROM v, range(64) j GROUP BY j.range),
-        |ms AS (
-        |  SELECT list(mn ORDER BY pos) AS mns,
-        |    list((mx - mn) / 255.0 ORDER BY pos) AS scs
-        |  FROM mm),
-        |q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
-        |vh AS (
-        |  SELECT v.vec_id,
-        |    list_transform(range(1, 65), j ->
-        |      ms.mns[CAST(j AS INT)] + ms.scs[CAST(j AS INT)] *
-        |        CASE WHEN ms.scs[CAST(j AS INT)] > 0
-        |          THEN least(255, greatest(0,
-        |            CAST(floor((v.e[CAST(j AS INT)] - ms.mns[CAST(j AS INT)])
-        |              / ms.scs[CAST(j AS INT)] + 0.5) AS INT)))
-        |          ELSE 0 END) AS vhat
-        |  FROM v, ms WHERE v.vec_id <> 0),
-        |s AS (
-        |  SELECT vec_id,
-        |    CASE WHEN sqrt(list_inner_product(vhat, vhat))
-        |            * sqrt(list_inner_product(qe, qe)) > 0
-        |      THEN list_inner_product(vhat, qe)
-        |           / (sqrt(list_inner_product(vhat, vhat))
-        |              * sqrt(list_inner_product(qe, qe)))
-        |      ELSE 0.0 END AS est_cosine
-        |  FROM vh, q)
-        |SELECT vec_id, est_cosine FROM s
-        |ORDER BY est_cosine DESC, vec_id LIMIT 20""".stripMargin,
-
-    // batched SQ8 transport: same train/encode/estimate replay, three
-    // queries served from ONE scan, window top-10 per query
-    "q_x_ann_sq8_many" ->
-      """WITH v AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |mm AS (
-        |  SELECT j.range AS pos,
-        |    min(e[CAST(j.range + 1 AS INT)]) AS mn,
-        |    max(e[CAST(j.range + 1 AS INT)]) AS mx
-        |  FROM v, range(64) j GROUP BY j.range),
-        |ms AS (
-        |  SELECT list(mn ORDER BY pos) AS mns,
-        |    list((mx - mn) / 255.0 ORDER BY pos) AS scs
-        |  FROM mm),
-        |q AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id <= 2),
-        |vh AS (
-        |  SELECT v.vec_id,
-        |    list_transform(range(1, 65), j ->
-        |      ms.mns[CAST(j AS INT)] + ms.scs[CAST(j AS INT)] *
-        |        CASE WHEN ms.scs[CAST(j AS INT)] > 0
-        |          THEN least(255, greatest(0,
-        |            CAST(floor((v.e[CAST(j AS INT)] - ms.mns[CAST(j AS INT)])
-        |              / ms.scs[CAST(j AS INT)] + 0.5) AS INT)))
-        |          ELSE 0 END) AS vhat
-        |  FROM v, ms),
-        |s AS (
-        |  SELECT q.query_id, vh.vec_id,
-        |    CASE WHEN sqrt(list_inner_product(vhat, vhat))
-        |            * sqrt(list_inner_product(qe, qe)) > 0
-        |      THEN list_inner_product(vhat, qe)
-        |           / (sqrt(list_inner_product(vhat, vhat))
-        |              * sqrt(list_inner_product(qe, qe)))
-        |      ELSE 0.0 END AS est_cosine
-        |  FROM vh, q),
-        |r AS (
-        |  SELECT query_id, vec_id, est_cosine,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY est_cosine DESC, vec_id) AS rn
-        |  FROM s)
-        |SELECT query_id, vec_id, est_cosine FROM r WHERE rn <= 10""".stripMargin,
-
-    // retrain-trigger drift: replayed training + assignment give both
-    // distributions; the per-cell statistic is histogramDrift's
-    // (p−q)²/(p+q) with round-6, already replay-proven by q_x_drift
-    "q_x_ivf_drift" ->
-      s"""WITH $ivfTrainCtes,
-         |${ivfAssignBlock("af", "c2", "")},
-         |i AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_index
-         |      FROM af WHERE vec_id <> 0 GROUP BY cell),
-         |b AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_batch
-         |      FROM af WHERE vec_id % 10 = 3 GROUP BY cell),
-         |t AS (SELECT (SELECT sum(n_index) FROM i) AS ti,
-         |             (SELECT sum(n_batch) FROM b) AS tb),
-         |j AS (
-         |  SELECT coalesce(i.cell, b.cell) AS cell,
-         |    coalesce(n_index, 0) AS n_index,
-         |    coalesce(n_batch, 0) AS n_batch
-         |  FROM i FULL OUTER JOIN b ON i.cell = b.cell)
-         |SELECT CAST(cell AS BIGINT) AS cell, n_index, n_batch,
-         |  round(n_index / CAST(ti AS DOUBLE), 6) AS p_index,
-         |  round(n_batch / CAST(tb AS DOUBLE), 6) AS p_batch,
-         |  round((n_index / CAST(ti AS DOUBLE) - n_batch / CAST(tb AS DOUBLE))
-         |        * (n_index / CAST(ti AS DOUBLE) - n_batch / CAST(tb AS DOUBLE))
-         |        / (n_index / CAST(ti AS DOUBLE) + n_batch / CAST(tb AS DOUBLE)),
-         |    6) AS drift
-         |FROM j, t""".stripMargin,
-    "q_x_ann_pq" -> pqOracleSql,
-    "q_x_ann_pq_refined" -> pqRefinedOracleSql,
-    "q_x_ann_ivfpq" -> ivfPqOracleSql,
-    // the pruned twins produce IDENTICAL results to their unpruned
-    // counterparts (same cells, same re-rank; only the I/O path differs),
-    // so they share the oracle — the value check then PROVES the
-    // partition-pruned probe loses nothing.
-    "q_x_ann_ivf_pruned" -> ivfOracleSql,
-    "q_x_ann_filtered" -> annFilteredOracleSql,
-    "q_x_ann_ivfpq_pruned" -> ivfPqOracleSql,
-    "q_x_ann_ivfpq_refined" -> ivfPqRefinedOracleSql,
-    "q_x_ann_ivfadc" -> ivfAdcOracleSql,
-    "q_x_ann_probe_many" -> ivfProbeManyOracleSql,
-    "q_x_ann_pq_many" -> pqManyOracleSql,
-    // join-LUT twin returns IDENTICAL rows (same queries, same LUT
-    // doubles, same add order; only the LUT transport differs) — the
-    // shared oracle PROVES that, as with the pruned/unpruned twins
-    "q_x_ann_pq_many_joinlut" -> pqManyOracleSql,
-    "q_x_semdedup" -> semdedupOracleSql,
-    "q_x_semdedup_incr" -> semdedupIncrOracleSql,
-    "q_x_semdedup_keep" -> semdedupKeepOracleSql,
-    "q_x_keep_best" -> keepBestOracleSql,
-    "q_x_cell_sample" -> cellSampleOracleSql,
-
-    // shard-local next-fit packing: the ROWS running sum equals Spark's
-    // RANGE frame because (h, doc_id) is a total order (doc_id unique)
-    "q_x_pack" -> {
-      val h = graft.functions.Portable.h60Sql("CAST(doc_id AS VARCHAR)")
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    CASE WHEN trim(coalesce(text, '')) = '' THEN 0
-         |         ELSE len(string_split_regex(trim(coalesce(text, '')), '\\s+')) END AS n,
-         |    $h AS h
-         |  FROM documents),
-         |c AS (
-         |  SELECT doc_id, n, h, CAST(h % 8 AS INT) AS shard,
-         |    sum(n) OVER (PARTITION BY h % 8 ORDER BY h, doc_id
-         |                 ROWS UNBOUNDED PRECEDING) AS cum
-         |  FROM d)
-         |SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-         |  CAST(shard AS BIGINT) AS shard,
-         |  CAST(floor(CAST(cum - n AS DOUBLE) / 80) AS BIGINT) AS pack_id,
-         |  CAST(row_number() OVER (
-         |    PARTITION BY shard, floor(CAST(cum - n AS DOUBLE) / 80)
-         |    ORDER BY h, doc_id) AS BIGINT) AS pack_pos,
-         |  CAST(n > 80 AS BIGINT) AS oversize
-         |FROM c""".stripMargin
-    },
-
     "q_x_zorder" ->
       """SELECT event_id,
         |  CAST(list_sum(list_transform(range(10), j ->
@@ -3533,210 +478,6 @@ object Queries {
         |  )) AS BIGINT) AS z
         |FROM events""".stripMargin,
 
-    "q_x_contamination" ->
-      """WITH d0 AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')), '\s+') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS shingle
-        |  FROM d0 WHERE len(w) >= 3),
-        |bsh AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 50 = 0),
-        |hits AS (
-        |  SELECT doc_id, count(*) AS n_hits
-        |  FROM sh JOIN bsh USING (shingle) GROUP BY 1)
-        |SELECT d.doc_id, coalesce(h.n_hits, 0) AS n_hits,
-        |  CAST(coalesce(h.n_hits, 0) >= 1 AS BIGINT) AS contaminated
-        |FROM documents d LEFT JOIN hits h USING (doc_id)""".stripMargin,
-
-    // DSIR (hashed-bigram importance): pure BIGINT ratio arithmetic —
-    // (t_b+1)*1e6 // (s_b+1) per 1024-bucket, summed per doc. Bucket =
-    // h60(bigram) % 1024 (h60 is non-negative, so % == pmod). Target =
-    // doc_id % 50 = 0 (the contamination stand-in eval set).
-    "q_x_dsir_weights" ->
-      """WITH d0 AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')), '\s+') AS w
-        |  FROM documents),
-        |bi AS (
-        |  SELECT doc_id,
-        |    CAST(concat('0x', substr(md5(w[i] || ' ' || w[i+1]), 1, 15)) AS BIGINT) % 1024 AS b
-        |  FROM (SELECT doc_id, w, unnest(range(1, len(w))) AS i
-        |        FROM d0 WHERE len(w) >= 2)),
-        |cb AS (SELECT doc_id, b, count(*)::BIGINT AS c FROM bi GROUP BY 1, 2),
-        |sb AS (SELECT b, CAST(sum(c) AS BIGINT) AS s FROM cb GROUP BY 1),
-        |tb AS (SELECT b, count(*)::BIGINT AS t FROM bi
-        |       WHERE doc_id % 50 = 0 GROUP BY 1),
-        |ratio AS (
-        |  SELECT b, (coalesce(t, 0) + 1) * 1000000 // (coalesce(s, 0) + 1) AS r
-        |  FROM sb FULL OUTER JOIN tb USING (b)),
-        |wt AS (
-        |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams,
-        |    CAST(sum(c * r) AS BIGINT) AS weight
-        |  FROM cb JOIN ratio USING (b) GROUP BY 1)
-        |SELECT d.doc_id, coalesce(n_bigrams, 0) AS n_bigrams,
-        |  coalesce(weight, 0) AS weight,
-        |  CAST(CASE WHEN coalesce(n_bigrams, 0) > 0
-        |       THEN weight // n_bigrams ELSE 0 END AS BIGINT) AS avg_ratio
-        |FROM documents d LEFT JOIN wt USING (doc_id)""".stripMargin,
-
-    "q_x_dsir_select" ->
-      """WITH d0 AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')), '\s+') AS w
-        |  FROM documents),
-        |bi AS (
-        |  SELECT doc_id,
-        |    CAST(concat('0x', substr(md5(w[i] || ' ' || w[i+1]), 1, 15)) AS BIGINT) % 1024 AS b
-        |  FROM (SELECT doc_id, w, unnest(range(1, len(w))) AS i
-        |        FROM d0 WHERE len(w) >= 2)),
-        |cb AS (SELECT doc_id, b, count(*)::BIGINT AS c FROM bi GROUP BY 1, 2),
-        |sb AS (SELECT b, CAST(sum(c) AS BIGINT) AS s FROM cb GROUP BY 1),
-        |tb AS (SELECT b, count(*)::BIGINT AS t FROM bi
-        |       WHERE doc_id % 50 = 0 GROUP BY 1),
-        |ratio AS (
-        |  SELECT b, (coalesce(t, 0) + 1) * 1000000 // (coalesce(s, 0) + 1) AS r
-        |  FROM sb FULL OUTER JOIN tb USING (b)),
-        |wt AS (
-        |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams,
-        |    CAST(sum(c * r) AS BIGINT) AS weight
-        |  FROM cb JOIN ratio USING (b) GROUP BY 1),
-        |full_w AS (
-        |  SELECT d.doc_id, coalesce(n_bigrams, 0) AS n_bigrams,
-        |    coalesce(weight, 0) AS weight,
-        |    CAST(CASE WHEN coalesce(n_bigrams, 0) > 0
-        |         THEN weight // n_bigrams ELSE 0 END AS BIGINT) AS avg_ratio
-        |  FROM documents d LEFT JOIN wt USING (doc_id))
-        |SELECT doc_id, n_bigrams, weight, avg_ratio FROM full_w
-        |ORDER BY avg_ratio DESC, doc_id ASC LIMIT 50""".stripMargin,
-
-    // the incremental twin: identical ratio math over the FULL corpus
-    // (what the store froze), final scoring restricted to the batch
-    "q_x_dsir_incr" ->
-      """WITH d0 AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')), '\s+') AS w
-        |  FROM documents),
-        |bi AS (
-        |  SELECT doc_id,
-        |    CAST(concat('0x', substr(md5(w[i] || ' ' || w[i+1]), 1, 15)) AS BIGINT) % 1024 AS b
-        |  FROM (SELECT doc_id, w, unnest(range(1, len(w))) AS i
-        |        FROM d0 WHERE len(w) >= 2)),
-        |cb AS (SELECT doc_id, b, count(*)::BIGINT AS c FROM bi GROUP BY 1, 2),
-        |sb AS (SELECT b, CAST(sum(c) AS BIGINT) AS s FROM cb GROUP BY 1),
-        |tb AS (SELECT b, count(*)::BIGINT AS t FROM bi
-        |       WHERE doc_id % 50 = 0 GROUP BY 1),
-        |ratio AS (
-        |  SELECT b, (coalesce(t, 0) + 1) * 1000000 // (coalesce(s, 0) + 1) AS r
-        |  FROM sb FULL OUTER JOIN tb USING (b)),
-        |wt AS (
-        |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams,
-        |    CAST(sum(c * r) AS BIGINT) AS weight
-        |  FROM cb JOIN ratio USING (b)
-        |  WHERE doc_id > 400 GROUP BY 1)
-        |SELECT d.doc_id, coalesce(n_bigrams, 0) AS n_bigrams,
-        |  coalesce(weight, 0) AS weight,
-        |  CAST(CASE WHEN coalesce(n_bigrams, 0) > 0
-        |       THEN weight // n_bigrams ELSE 0 END AS BIGINT) AS avg_ratio
-        |FROM (SELECT doc_id FROM documents WHERE doc_id > 400) d
-        |LEFT JOIN wt USING (doc_id)""".stripMargin,
-
-    // the resampling twin: the paper's log-likelihood in exact BIGINT
-    // micro-nats (floor(ln((t+1)/(s+1))·1e6) per bucket — one scalar ln
-    // each engine computes identically; the SUM is integer, so no
-    // reduction-order drift), then the Gumbel-top-k draw with
-    // hash-derived u and salt 'dsir'
-    "q_x_dsir_resample" ->
-      s"""WITH d0 AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(regexp_replace(lower(coalesce(text, '')), '[^\\p{L}\\p{N}]+', ' ', 'g')), '\\s+') AS w
-        |  FROM documents),
-        |bi AS (
-        |  SELECT doc_id,
-        |    CAST(concat('0x', substr(md5(w[i] || ' ' || w[i+1]), 1, 15)) AS BIGINT) % 1024 AS b
-        |  FROM (SELECT doc_id, w, unnest(range(1, len(w))) AS i
-        |        FROM d0 WHERE len(w) >= 2)),
-        |cb AS (SELECT doc_id, b, count(*)::BIGINT AS c FROM bi GROUP BY 1, 2),
-        |sb AS (SELECT b, CAST(sum(c) AS BIGINT) AS s FROM cb GROUP BY 1),
-        |tb AS (SELECT b, count(*)::BIGINT AS t FROM bi
-        |       WHERE doc_id % 50 = 0 GROUP BY 1),
-        |lrt AS (
-        |  SELECT b, CAST(floor(ln(
-        |      CAST(coalesce(t, 0) + 1 AS DOUBLE) /
-        |      CAST(coalesce(s, 0) + 1 AS DOUBLE)) * 1000000.0) AS BIGINT) AS lr
-        |  FROM sb FULL OUTER JOIN tb USING (b)),
-        |wt AS (
-        |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams,
-        |    CAST(sum(c * lr) AS BIGINT) AS logw_micro
-        |  FROM cb JOIN lrt USING (b) GROUP BY 1),
-        |full_w AS (
-        |  SELECT d.doc_id, coalesce(n_bigrams, 0) AS n_bigrams,
-        |    coalesce(logw_micro, 0) AS logw_micro,
-        |    CAST(CASE WHEN coalesce(n_bigrams, 0) > 0
-        |         THEN coalesce(logw_micro, 0) // n_bigrams
-        |         ELSE 0 END AS BIGINT) AS avg_logw_micro
-        |  FROM documents d LEFT JOIN wt USING (doc_id))
-        |SELECT doc_id, n_bigrams, logw_micro, avg_logw_micro FROM full_w
-        |ORDER BY CAST(avg_logw_micro AS DOUBLE) / 1000000.0
-        |  - ln(-ln((CAST(${graft.functions.Portable.h60Sql(
-             "'dsir:' || CAST(doc_id AS VARCHAR)")} AS DOUBLE) + 0.5)
-        |    / ${graft.ops.Sampling.H60Space})) DESC, doc_id
-        |LIMIT 50""".stripMargin,
-
-    "q_x_c4_clean" ->
-      """WITH lined AS (
-        |  SELECT doc_id,
-        |    replace(coalesce(text, ''), '. ', '.' || chr(10)) AS lt
-        |  FROM documents),
-        |lx AS (
-        |  SELECT doc_id, lt, string_split(lt, chr(10)) AS ls FROM lined),
-        |k AS (
-        |  SELECT doc_id, lt, len(ls) AS n_lines,
-        |    list_filter(ls, l ->
-        |      (ends_with(rtrim(l), '.') OR ends_with(rtrim(l), '!') OR
-        |       ends_with(rtrim(l), '?') OR ends_with(rtrim(l), '"')) AND
-        |      len(string_split_regex(trim(l), '\s+')) >= 3 AND
-        |      NOT contains(lower(l), 'javascript')) AS keptl
-        |  FROM lx),
-        |c AS (
-        |  SELECT doc_id, lt, n_lines, len(keptl) AS n_kept,
-        |    -- array_to_string([]) is NULL in DuckDB, '' in Spark
-        |    coalesce(array_to_string(keptl, chr(10)), '') AS clean_text
-        |  FROM k),
-        |s AS (
-        |  SELECT doc_id, lt, n_lines, n_kept, clean_text,
-        |    (length(clean_text) - length(replace(clean_text, '.', ''))) +
-        |    (length(clean_text) - length(replace(clean_text, '!', ''))) +
-        |    (length(clean_text) - length(replace(clean_text, '?', '')))
-        |      AS n_sentences
-        |  FROM c)
-        |SELECT doc_id, md5(clean_text) AS clean_md5,
-        |  CAST(n_lines AS BIGINT) AS n_lines,
-        |  CAST(n_kept AS BIGINT) AS n_kept,
-        |  CAST(n_sentences AS BIGINT) AS n_sentences,
-        |  CAST(n_sentences >= 5 AND
-        |    NOT contains(lower(lt), 'lorem ipsum') AND
-        |    NOT contains(lt, '{') AS BIGINT) AS keep_page
-        |FROM s""".stripMargin,
-
-    // chunk k covers tokens [k*32+1, k*32+40] (1-based, stride 32 =
-    // budget 40 − overlap 8); trailing chunk clamps; blank text → no rows
-    "q_x_chunk" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(coalesce(text, '')) = '' THEN []
-        |         ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS w
-        |  FROM documents),
-        |k AS (
-        |  SELECT doc_id, w, len(w) AS n,
-        |    greatest(1, CAST(ceil(CAST(len(w) - 8 AS DOUBLE) / 32) AS BIGINT)) AS nk
-        |  FROM d WHERE len(w) > 0),
-        |c AS (SELECT doc_id, w, n, unnest(range(nk)) AS cid FROM k)
-        |SELECT doc_id, cid AS chunk_id,
-        |  least(40, n - cid * 32) AS chunk_tokens,
-        |  array_to_string(w[CAST(cid*32 + 1 AS INT):CAST(cid*32 + 40 AS INT)], ' ') AS chunk
-        |FROM c""".stripMargin,
     "q1_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_qty,
@@ -3825,10 +566,6 @@ object Queries {
       """SELECT o_orderkey, o_totalprice FROM orders
         |ORDER BY o_totalprice DESC, o_orderkey LIMIT 50""".stripMargin,
 
-    "q_x_salted_count" ->
-      """SELECT l_returnflag, count(*) AS count FROM lineitem
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
     "q_w_time_window" ->
       """SELECT time_bucket(INTERVAL 1 HOUR, ts) AS window_start, count(*) AS n
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
@@ -3900,1952 +637,6 @@ object Queries {
         |  strftime(make_timestamp((event_id * 7919) % 86400000000), '%H:%M:%S') AS time_str
         |FROM events""".stripMargin,
 
-    "q_x_token_count" ->
-      """SELECT doc_id,
-        |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
-        |  CAST((SELECT CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-        |       ELSE list_sum(list_transform(string_split_regex(trim(text), '\s+'),
-        |                                    w -> CAST(ceil(len(w) / 4.0) AS BIGINT))) END
-        |   + len(regexp_replace(coalesce(text, ''), '[\w\s]+', '', 'g'))) AS BIGINT) AS n_bpeish
-        |FROM documents""".stripMargin,
-
-    "q_x_quality" ->
-      """WITH t AS (
-        |  SELECT doc_id, coalesce(text, '') AS txt,
-        |    CASE WHEN text IS NULL OR trim(text) = '' THEN []::VARCHAR[]
-        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
-        |  FROM documents)
-        |SELECT doc_id,
-        |  len(txt) AS n_chars,
-        |  len(toks) AS n_tokens,
-        |  CASE WHEN len(toks) > 0
-        |       THEN round(CAST(list_sum(list_transform(toks, w -> len(w))) AS DOUBLE) / len(toks), 4)
-        |       ELSE 0.0 END AS mean_token_len,
-        |  CASE WHEN len(txt) > 0
-        |       THEN round(CAST(len(regexp_replace(txt, '[^.,;:!?''"()\[\]-]+', '', 'g')) AS DOUBLE) / len(txt), 6)
-        |       ELSE 0.0 END AS punct_ratio,
-        |  CASE WHEN len(txt) > 0
-        |       THEN round(CAST(len(regexp_replace(txt, '[^0-9]+', '', 'g')) AS DOUBLE) / len(txt), 6)
-        |       ELSE 0.0 END AS digit_ratio,
-        |  CASE WHEN len(txt) > 0
-        |       THEN round(CAST(len(regexp_replace(txt, '[^A-Z]+', '', 'g')) AS DOUBLE) / len(txt), 6)
-        |       ELSE 0.0 END AS upper_ratio,
-        |  CASE WHEN len(toks) > 0
-        |       THEN round(CAST(len(list_filter(toks, w -> list_contains(
-        |              ['the','and','of','to','a','in','is','it','that','for','on','with','as','at','by','an','be','this'],
-        |              lower(w)))) AS DOUBLE) / len(toks), 6)
-        |       ELSE 0.0 END AS stopword_ratio
-        |FROM t""".stripMargin,
-
-    "q_x_langid" ->
-      """WITH s AS (
-        |  SELECT doc_id, text,
-        |    len(string_split_regex(coalesce(text,''), '(?i)\b(the|and|of|to|is|in|that|it|for|was)\b')) - 1 AS en,
-        |    len(string_split_regex(coalesce(text,''), '(?i)\b(el|la|los|las|de|que|y|en|un|una|es|por)\b')) - 1 AS es,
-        |    len(string_split_regex(coalesce(text,''), '(?i)\b(der|die|das|und|ist|nicht|mit|ein|eine|zu|von)\b')) - 1 AS de,
-        |    len(string_split_regex(coalesce(text,''), '(?i)\b(le|la|les|des|est|et|une|dans|pour|que|du)\b')) - 1 AS fr
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CASE WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
-        |       WHEN greatest(en, es, de, fr) <= 0 THEN 'und'
-        |       WHEN en = greatest(en, es, de, fr) THEN 'en'
-        |       WHEN es = greatest(es, de, fr) THEN 'es'
-        |       WHEN de = greatest(de, fr) THEN 'de'
-        |       ELSE 'fr' END AS lang_pred
-        |FROM s""".stripMargin,
-
-    "q_x_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g'))) AS fp
-        |FROM documents""".stripMargin,
-
-    "q_x_dedup_incr" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    md5(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g'))) AS fp
-        |  FROM documents),
-        |batch AS (SELECT doc_id, fp FROM f WHERE doc_id > 400),
-        |corpus AS (SELECT fp FROM f WHERE doc_id <= 400),
-        |keep1 AS (
-        |  SELECT doc_id, fp FROM batch
-        |  WHERE doc_id IN (SELECT min(doc_id) FROM batch GROUP BY fp))
-        |SELECT doc_id, fp FROM keep1
-        |WHERE fp NOT IN (SELECT fp FROM corpus)""".stripMargin,
-
-    "q_x_vocab" ->
-      """WITH n AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')) AS norm
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(list_distinct(string_split_regex(norm, '\s+'))) AS term
-        |  FROM n WHERE norm <> '')
-        |SELECT term, count(*) AS df FROM tok
-        |GROUP BY 1 ORDER BY df DESC, term LIMIT 20""".stripMargin,
-
-    "q_x_dedup_exact" ->
-      """SELECT md5(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g'))) AS fp,
-        |  min(doc_id) AS doc_id, count(*) AS dup_count
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "q_x_dedup_keep" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    md5(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g'))) AS fp
-        |  FROM documents)
-        |SELECT doc_id, fp FROM f
-        |WHERE doc_id IN (SELECT min(doc_id) FROM f GROUP BY fp)""".stripMargin,
-
-    "q_x_ngram_jaccard" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')), '\s+') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS shingle
-        |  FROM docs WHERE len(w) >= 3),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |common AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-        |  FROM sh a JOIN sh b USING (shingle)
-        |  WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT id_a, id_b,
-        |  CAST(common AS DOUBLE) / (sa.sz + sb.sz - common) AS jaccard
-        |FROM common
-        |JOIN sizes sa ON sa.doc_id = id_a
-        |JOIN sizes sb ON sb.doc_id = id_b
-        |WHERE CAST(common AS DOUBLE) / (sa.sz + sb.sz - common) >= 0.12""".stripMargin,
-
-    "q_x_heavy_keys" ->
-      """WITH c AS (
-        |  SELECT user_id, count(*)::BIGINT AS n FROM events GROUP BY 1),
-        |t AS (SELECT count(*)::BIGINT AS total FROM events)
-        |SELECT user_id, n,
-        |  round(CAST(n AS DOUBLE) / CAST(total AS DOUBLE), 6) AS share
-        |FROM c, t ORDER BY n DESC, user_id LIMIT 10""".stripMargin,
-
-    "q_x_drift" ->
-      """WITH d AS (
-        |  SELECT doc_id, n_chars // 100 AS bucket FROM documents),
-        |a AS (SELECT bucket, count(*)::BIGINT AS n_a FROM d
-        |      WHERE doc_id % 2 = 0 GROUP BY 1),
-        |b AS (SELECT bucket, count(*)::BIGINT AS n_b FROM d
-        |      WHERE doc_id % 2 = 1 GROUP BY 1),
-        |ta AS (SELECT greatest(1, count(*))::BIGINT AS t FROM d
-        |       WHERE doc_id % 2 = 0),
-        |tb AS (SELECT greatest(1, count(*))::BIGINT AS t FROM d
-        |       WHERE doc_id % 2 = 1),
-        |j AS (
-        |  SELECT coalesce(a.bucket, b.bucket) AS bucket,
-        |    coalesce(n_a, 0)::BIGINT AS n_a,
-        |    coalesce(n_b, 0)::BIGINT AS n_b
-        |  FROM a FULL OUTER JOIN b ON a.bucket = b.bucket),
-        |s AS (
-        |  SELECT bucket, n_a, n_b,
-        |    CAST(n_a AS DOUBLE) / CAST(ta.t AS DOUBLE) AS p,
-        |    CAST(n_b AS DOUBLE) / CAST(tb.t AS DOUBLE) AS q
-        |  FROM j, ta, tb)
-        |SELECT bucket, n_a, n_b, round(p, 6) AS p_a, round(q, 6) AS p_b,
-        |  round((p - q) * (p - q) / (p + q), 6) AS drift
-        |FROM s""".stripMargin,
-
-    "q_x_containment" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')), '\s+') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS shingle
-        |  FROM docs WHERE len(w) >= 3),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |common AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-        |  FROM sh a JOIN sh b USING (shingle)
-        |  WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT id_a, id_b,
-        |  CAST(common AS DOUBLE) / CAST(least(sa.sz, sb.sz) AS DOUBLE)
-        |    AS containment
-        |FROM common
-        |JOIN sizes sa ON sa.doc_id = id_a
-        |JOIN sizes sb ON sb.doc_id = id_b
-        |WHERE CAST(common AS DOUBLE) / CAST(least(sa.sz, sb.sz) AS DOUBLE)
-        |  >= 0.3""".stripMargin,
-
-    "q_x_source_overlap" ->
-      """WITH docs AS (
-        |  SELECT source,
-        |    string_split_regex(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')), '\s+') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT source AS src, unnest(list_distinct(list_transform(
-        |    range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS shingle
-        |  FROM docs WHERE len(w) >= 3),
-        |sizes AS (SELECT src, count(*) AS sz FROM sh GROUP BY 1),
-        |common AS (
-        |  SELECT a.src AS src_a, b.src AS src_b, count(*)::BIGINT AS common
-        |  FROM sh a JOIN sh b USING (shingle)
-        |  WHERE a.src < b.src GROUP BY 1, 2)
-        |SELECT src_a, src_b, common,
-        |  round(CAST(common AS DOUBLE) /
-        |    CAST(least(sa.sz, sb.sz) AS DOUBLE), 4) AS overlap
-        |FROM common
-        |JOIN sizes sa ON sa.src = src_a
-        |JOIN sizes sb ON sb.src = src_b""".stripMargin,
-
-    "q_x_kmv_overlap" ->
-      """WITH docs AS (
-        |  SELECT source,
-        |    string_split_regex(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')), '\s+') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT source AS src,
-        |    CAST(concat('0x', substr(md5(shingle), 1, 15)) AS BIGINT) AS h
-        |  FROM (
-        |    SELECT source, unnest(list_distinct(list_transform(
-        |      range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS shingle
-        |    FROM docs WHERE len(w) >= 3)),
-        |botk AS (
-        |  SELECT src, h FROM (
-        |    SELECT src, h, row_number() OVER (PARTITION BY src ORDER BY h) AS rn
-        |    FROM sh)
-        |  WHERE rn <= 64),
-        |srcs AS (SELECT DISTINCT src FROM botk),
-        |pairs AS (
-        |  SELECT a.src AS src_a, b.src AS src_b
-        |  FROM srcs a JOIN srcs b ON a.src < b.src),
-        |uh AS (
-        |  SELECT p.src_a, p.src_b, bk.h
-        |  FROM pairs p JOIN botk bk ON bk.src = p.src_a OR bk.src = p.src_b
-        |  GROUP BY 1, 2, 3),
-        |thr AS (
-        |  SELECT src_a, src_b,
-        |    least(64, max(cnt)) AS keff,
-        |    max(CASE WHEN rn = least(64, cnt) THEN h END) AS tau
-        |  FROM (
-        |    SELECT src_a, src_b, h,
-        |      row_number() OVER (PARTITION BY src_a, src_b ORDER BY h) AS rn,
-        |      count(*) OVER (PARTITION BY src_a, src_b) AS cnt
-        |    FROM uh)
-        |  GROUP BY 1, 2),
-        |ix AS (
-        |  SELECT p.src_a, p.src_b, ba.h
-        |  FROM pairs p
-        |  JOIN botk ba ON ba.src = p.src_a
-        |  JOIN botk bb ON bb.src = p.src_b AND bb.h = ba.h),
-        |x AS (
-        |  SELECT i.src_a, i.src_b, count(*)::BIGINT AS common
-        |  FROM ix i JOIN thr t ON t.src_a = i.src_a AND t.src_b = i.src_b
-        |  WHERE i.h <= t.tau
-        |  GROUP BY 1, 2)
-        |SELECT t.src_a, t.src_b,
-        |  CAST(t.keff AS BIGINT) AS kmv_k,
-        |  t.tau AS kmv_tau,
-        |  coalesce(x.common, 0)::BIGINT AS kmv_common,
-        |  round(CAST(coalesce(x.common, 0) AS DOUBLE) /
-        |    CAST(t.keff AS DOUBLE), 4) AS kmv_jaccard
-        |FROM thr t
-        |LEFT JOIN x ON x.src_a = t.src_a AND x.src_b = t.src_b""".stripMargin,
-
-    "q_x_template_groups" ->
-      """WITH fp AS (
-        |  SELECT doc_id,
-        |    md5(array_to_string(list_transform(
-        |      string_split(coalesce(text, ''), chr(10)),
-        |      l -> CAST(len(l) AS VARCHAR)), ',')) AS template_id
-        |  FROM documents),
-        |g AS (SELECT template_id, count(*)::BIGINT AS n_docs
-        |      FROM fp GROUP BY 1)
-        |SELECT doc_id, template_id, n_docs
-        |FROM fp JOIN g USING (template_id)
-        |WHERE n_docs >= 2""".stripMargin,
-
-    "q_x_length_outliers" ->
-      """WITH r AS (
-        |  SELECT source, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY n_chars ASC, doc_id ASC) AS rn,
-        |    count(*) OVER (PARTITION BY source) AS n
-        |  FROM documents),
-        |b AS (
-        |  SELECT source, doc_id, n_chars,
-        |    max(CASE WHEN rn = CAST(ceil(0.05 * n) AS INT)
-        |        THEN n_chars END) OVER (PARTITION BY source) AS p_lo,
-        |    max(CASE WHEN rn = CAST(ceil(0.95 * n) AS INT)
-        |        THEN n_chars END) OVER (PARTITION BY source) AS p_hi
-        |  FROM r)
-        |SELECT source, doc_id, n_chars, p_lo, p_hi,
-        |  (n_chars < p_lo OR n_chars > p_hi) AS is_outlier
-        |FROM b""".stripMargin,
-
-    // mad_outliers: median and MAD as nearest-rank MEMBER values (rank
-    // <= ceil(n/2) max — tie-insensitive like winsorize), everything
-    // downstream exact int64
-    "q_x_mad_outliers" ->
-      """WITH r1 AS (
-        |  SELECT source, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_chars) AS rn,
-        |    count(*) OVER (PARTITION BY source) AS n
-        |  FROM documents),
-        |med AS (
-        |  SELECT source,
-        |    CAST(max(CASE WHEN rn <= ceil(n * 0.5) THEN n_chars END)
-        |      AS BIGINT) AS med
-        |  FROM r1 GROUP BY source),
-        |wm AS (
-        |  SELECT d.source, d.doc_id, d.n_chars, m.med,
-        |    abs(d.n_chars - m.med) AS ad
-        |  FROM documents d JOIN med m USING (source)),
-        |r2 AS (
-        |  SELECT *, row_number() OVER (PARTITION BY source ORDER BY ad)
-        |      AS rn2,
-        |    count(*) OVER (PARTITION BY source) AS n2
-        |  FROM wm),
-        |mad AS (
-        |  SELECT source,
-        |    CAST(max(CASE WHEN rn2 <= ceil(n2 * 0.5) THEN ad END)
-        |      AS BIGINT) AS mad
-        |  FROM r2 GROUP BY source)
-        |SELECT w.source, w.doc_id, w.n_chars, w.med, t.mad,
-        |  CAST(w.ad > 3 * t.mad AS BIGINT) AS is_outlier
-        |FROM wm w JOIN mad t USING (source)""".stripMargin,
-
-    // k_anon: suppression over (nation, segment, floor-banded balance);
-    // pmod-style band floor so negative balances band correctly
-    "q_x_k_anon" ->
-      """WITH c AS (
-        |  SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nation,
-        |    c_mktsegment AS segment,
-        |    CAST(floor(c_acctbal) AS BIGINT)
-        |      - ((CAST(floor(c_acctbal) AS BIGINT) % 5000 + 5000) % 5000)
-        |      AS bal_band
-        |  FROM customer),
-        |g AS (
-        |  SELECT nation, segment, bal_band,
-        |    count(*)::BIGINT AS k_group
-        |  FROM c GROUP BY 1, 2, 3)
-        |SELECT c.nation, c.segment, c.bal_band, c.c_custkey, g.k_group
-        |FROM c JOIN g USING (nation, segment, bal_band)
-        |WHERE g.k_group >= 5""".stripMargin,
-
-    // l_diverse: quasi-groups (nation, bal_band) need >= 5 members AND
-    // >= 3 distinct segments; homogeneous k-anonymous groups suppressed
-    "q_x_l_diverse" ->
-      """WITH c AS (
-        |  SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nation,
-        |    c_mktsegment AS segment,
-        |    CAST(floor(c_acctbal) AS BIGINT)
-        |      - ((CAST(floor(c_acctbal) AS BIGINT) % 5000 + 5000) % 5000)
-        |      AS bal_band
-        |  FROM customer),
-        |g AS (
-        |  SELECT nation, bal_band,
-        |    count(*)::BIGINT AS k_group,
-        |    count(DISTINCT segment)::BIGINT AS l_distinct
-        |  FROM c GROUP BY 1, 2)
-        |SELECT c.nation, c.bal_band, c.c_custkey, c.segment,
-        |  g.k_group, g.l_distinct
-        |FROM c JOIN g USING (nation, bal_band)
-        |WHERE g.k_group >= 5 AND g.l_distinct >= 3""".stripMargin,
-
-    "q_x_k_anon_report" ->
-      """WITH c AS (
-        |  SELECT CAST(c_nationkey AS BIGINT) AS nation,
-        |    c_mktsegment AS segment,
-        |    CAST(floor(c_acctbal) AS BIGINT)
-        |      - ((CAST(floor(c_acctbal) AS BIGINT) % 5000 + 5000) % 5000)
-        |      AS bal_band
-        |  FROM customer)
-        |SELECT nation, segment, bal_band,
-        |  count(*)::BIGINT AS k_group,
-        |  CAST(count(*) >= 5 AS BIGINT) AS released
-        |FROM c GROUP BY 1, 2, 3""".stripMargin,
-
-    // t_close: exact-integer TVD gate — tvd2_num = 2*TVD*n_g*N via
-    // sum over PRESENT values of (|cgv*N - cv*n_g| - cv*n_g) + n_g*N
-    // (absent values fold into the n_g*N constant); release iff
-    // tvd2_num*tDen <= 2*tNum*n_g*N, all BIGINT
-    "q_x_t_close" ->
-      """WITH c AS (
-        |  SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nation,
-        |    c_mktsegment AS segment,
-        |    CAST(floor(c_acctbal) AS BIGINT)
-        |      - ((CAST(floor(c_acctbal) AS BIGINT) % 5000 + 5000) % 5000)
-        |      AS bal_band
-        |  FROM customer),
-        |nn AS (SELECT count(*)::BIGINT AS n FROM c),
-        |v AS (SELECT segment, count(*)::BIGINT AS cv FROM c GROUP BY 1),
-        |g AS (SELECT nation, bal_band, count(*)::BIGINT AS k_group
-        |      FROM c GROUP BY 1, 2),
-        |gv AS (SELECT nation, bal_band, segment,
-        |         count(*)::BIGINT AS cgv
-        |       FROM c GROUP BY 1, 2, 3),
-        |t AS (
-        |  SELECT gv.nation, gv.bal_band,
-        |    any_value(g.k_group) AS k_group,
-        |    (sum(abs(gv.cgv * nn.n - v.cv * g.k_group)
-        |         - v.cv * g.k_group)
-        |     + any_value(g.k_group) * any_value(nn.n))::BIGINT
-        |      AS tvd2_num
-        |  FROM gv JOIN v USING (segment)
-        |    JOIN g USING (nation, bal_band) CROSS JOIN nn
-        |  GROUP BY 1, 2)
-        |SELECT c.nation, c.bal_band, c.c_custkey, c.segment,
-        |  t.k_group, t.tvd2_num
-        |FROM c JOIN t USING (nation, bal_band) CROSS JOIN nn
-        |WHERE t.k_group >= 5
-        |  AND t.tvd2_num * 5 <= 2 * 1 * t.k_group * nn.n""".stripMargin,
-
-    "q_x_ann_cosine" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0),
-        |s AS (
-        |  SELECT vec_id,
-        |    CASE WHEN sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-        |              * sqrt(list_inner_product(qe, qe)) > 0
-        |         THEN list_inner_product(CAST(e.embedding AS DOUBLE[]), qe)
-        |              / (sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-        |                 * sqrt(list_inner_product(qe, qe)))
-        |         ELSE 0.0 END AS sim
-        |  FROM embeddings e, q WHERE vec_id <> 0)
-        |SELECT vec_id, CAST(row_number() OVER (ORDER BY sim DESC, vec_id) AS BIGINT) AS rank
-        |FROM s ORDER BY sim DESC, vec_id LIMIT 20""".stripMargin,
-
-    "q_x_media_meta" ->
-      """SELECT doc_id,
-        |  octet_length(encode(text)) AS byte_len,
-        |  CAST(octet_length(encode(text)) % 640 + 16 AS INT) AS width,
-        |  CAST((octet_length(encode(text)) // 7) % 480 + 16 AS INT) AS height,
-        |  CAST(octet_length(encode(text)) AS BIGINT) * 20 AS duration_ms,
-        |  CAST(octet_length(encode(text)) // 1024 + 1 AS INT) AS n_frames
-        |FROM documents""".stripMargin,
-
-    "q_x_media_frames" ->
-      """SELECT doc_id,
-        |  CAST(octet_length(encode(text)) // 1024 + 1 AS BIGINT) AS n_sampled
-        |FROM documents""".stripMargin,
-
-    // column profile: per column n/null/distinct/min/max, min-max cast
-    // to VARCHAR (int/flag columns only — string-stable across engines)
-    "q_x_profile" -> Seq("l_orderkey", "l_partkey", "l_suppkey",
-        "l_linenumber", "l_returnflag", "l_linestatus")
-      .map(c =>
-        s"""SELECT '$c' AS "column", CAST(count(*) AS BIGINT) AS n_rows,
-           |  CAST(count(*) - count($c) AS BIGINT) AS n_null,
-           |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
-           |  CAST(min($c) AS VARCHAR) AS min_s,
-           |  CAST(max($c) AS VARCHAR) AS max_s
-           |FROM lineitem""".stripMargin)
-      .mkString("\nUNION ALL\n"),
-
-    // temperature mixing: integer milli-unit weights ⌊√n·1000⌋, then
-    // pure 64-bit integer allocation (div + largest remainder, ties to
-    // the smaller source) — no order-dependent float accumulation.
-    "q_x_temp_mix" ->
-      """WITH c AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n
-        |  FROM documents GROUP BY source),
-        |s AS (
-        |  SELECT source, n,
-        |    CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1000) AS BIGINT) AS sv
-        |  FROM c),
-        |t AS (SELECT *, sum(sv) OVER () AS W FROM s),
-        |a AS (
-        |  SELECT source, n, sv, W,
-        |    CASE WHEN W > 0 THEN (1000 * sv) // W ELSE 0 END AS alloc,
-        |    CASE WHEN W > 0 THEN 1000 * sv - ((1000 * sv) // W) * W
-        |         ELSE 0 END AS rem
-        |  FROM t),
-        |r AS (
-        |  SELECT *, row_number() OVER (ORDER BY rem DESC, source) AS rk,
-        |    sum(alloc) OVER () AS atot
-        |  FROM a)
-        |SELECT source, n,
-        |  CAST(CASE WHEN W > 0
-        |    THEN alloc + CASE WHEN rk <= 1000 - atot THEN 1 ELSE 0 END
-        |    ELSE 0 END AS BIGINT) AS quota
-        |FROM r""".stripMargin,
-
-    // real JPEG transcode: dims and gray single-component survive the
-    // lossy codec; the boolean pins the real SOI-marked JPEG bytes
-    "q_x_media_jpeg" ->
-      """SELECT doc_id,
-        |  CAST(len(coalesce(text, '')) % 48 + 8 AS INT) AS width,
-        |  CAST(doc_id % 32 + 8 AS INT) AS height,
-        |  1 AS channels, TRUE AS is_jpeg
-        |FROM documents""".stripMargin,
-
-    // real ISO-BMFF round trip: the box walk is byte-exact, so every
-    // parsed moov field is a closed-form function of (doc_id, len)
-    "q_x_media_mp4" ->
-      """SELECT doc_id,
-        |  CAST(len(coalesce(text, '')) * 40 + 1000 AS BIGINT) AS duration_ms,
-        |  CAST(doc_id % 640 + 16 AS INT) AS width,
-        |  CAST(doc_id % 480 + 16 AS INT) AS height,
-        |  1 AS n_tracks
-        |FROM documents""".stripMargin,
-
-    // real MJPEG/AVI round trip: the container walk is byte-exact and
-    // every sampled frame must decode at the encoded dims, so every
-    // output field is a closed-form function of (doc_id, len) — JPEG
-    // loses pixel values, never dimensions or frame count
-    "q_x_media_mjpeg" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(len(coalesce(text, '')) % 6 + 2 AS INT) AS n_frames,
-        |    CAST(doc_id % 24 + 8 AS INT) AS width,
-        |    CAST(len(coalesce(text, '')) % 16 + 8 AS INT) AS height
-        |  FROM documents)
-        |SELECT doc_id, n_frames, width, height,
-        |  CAST(n_frames * 40 AS BIGINT) AS duration_ms,
-        |  CAST((n_frames + 1) // 2 AS INT) AS n_sampled,
-        |  CAST((n_frames + 1) // 2 AS INT) AS n_decoded_ok
-        |FROM d""".stripMargin,
-
-    // real javax.sound WAV round trip: PCM is lossless, so the decoded
-    // sample sum of s_i = id%1000 + 15·i over n = len%1000+50 samples
-    // has the closed form n·base + 15·n(n−1)/2.
-    "q_x_media_wav" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(len(coalesce(text, '')) % 1000 + 50 AS BIGINT) AS n_samples
-        |  FROM documents)
-        |SELECT doc_id, 16000 AS sample_rate, 1 AS channels, n_samples,
-        |  CAST(n_samples * (doc_id % 1000)
-        |       + 15 * n_samples * (n_samples - 1) // 2 AS BIGINT) AS sum_samples
-        |FROM d""".stripMargin,
-
-    // boilerplate strip: drop every occurrence of any paragraph whose
-    // corpus-wide count exceeds 2; reassemble the rest in order.
-    "q_x_para_strip" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    coalesce(text, '') || ' <p> ' ||
-        |    'copyright footer all rights reserved' || ' <p> ' ||
-        |    'nav block ' || CAST(doc_id % 7 AS VARCHAR) AS wtext
-        |  FROM documents),
-        |p0 AS (
-        |  SELECT doc_id, list_transform(string_split(wtext, ' <p> '),
-        |    (s, i) -> struct_pack(pos := CAST(i - 1 AS BIGINT), para := s)) AS ps
-        |  FROM w),
-        |p AS (
-        |  SELECT doc_id, u.pos AS pos, u.para AS para
-        |  FROM (SELECT doc_id, unnest(ps) AS u FROM p0)),
-        |d AS (
-        |  SELECT doc_id, pos, para,
-        |    count(*) OVER (PARTITION BY para) AS freq
-        |  FROM p)
-        |SELECT doc_id,
-        |  coalesce(string_agg(para, ' <p> ' ORDER BY pos)
-        |    FILTER (WHERE freq <= 2), '') AS clean_text,
-        |  CAST(count(*) FILTER (WHERE freq <= 2) AS BIGINT) AS n_kept,
-        |  CAST(count(*) FILTER (WHERE freq > 2) AS BIGINT) AS n_dropped
-        |FROM d GROUP BY doc_id""".stripMargin,
-
-    // corpus-wide paragraph dedup: global first-occurrence keep by
-    // (doc_id, pos), reassembly in original order — the same decision
-    // the Spark window + ordered array_join makes.
-    "q_x_para_dedup" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    coalesce(text, '') || ' <p> ' ||
-        |    'copyright footer all rights reserved' || ' <p> ' ||
-        |    'nav block ' || CAST(doc_id % 7 AS VARCHAR) AS wtext
-        |  FROM documents),
-        |p0 AS (
-        |  SELECT doc_id, list_transform(string_split(wtext, ' <p> '),
-        |    (s, i) -> struct_pack(pos := CAST(i - 1 AS BIGINT), para := s)) AS ps
-        |  FROM w),
-        |p AS (
-        |  SELECT doc_id, u.pos AS pos, u.para AS para
-        |  FROM (SELECT doc_id, unnest(ps) AS u FROM p0)),
-        |d AS (
-        |  SELECT doc_id, pos, para,
-        |    row_number() OVER (PARTITION BY para ORDER BY doc_id, pos) AS rn
-        |  FROM p)
-        |SELECT doc_id,
-        |  coalesce(string_agg(para, ' <p> ' ORDER BY pos)
-        |    FILTER (WHERE rn = 1), '') AS clean_text,
-        |  CAST(count(*) FILTER (WHERE rn = 1) AS BIGINT) AS n_kept,
-        |  CAST(count(*) FILTER (WHERE rn <> 1) AS BIGINT) AS n_dropped
-        |FROM d GROUP BY doc_id""".stripMargin,
-
-    // exact-substring spans (ExactSubstr): duplicate 8-token windows by
-    // global md5 count, merged gaps-and-islands per doc — pure integer
-    // window arithmetic DuckDB replays exactly
-    "q_x_substr_spans" ->
-      """WITH w AS MATERIALIZED (
-        |  SELECT doc_id, coalesce(text, '') ||
-        |    ' subscribe to our newsletter for updates and special offers today'
-        |    AS wtext
-        |  FROM documents),
-        |t AS (SELECT doc_id, string_split(wtext, ' ') AS toks FROM w),
-        |w0 AS (
-        |  SELECT doc_id, unnest(range(0, len(toks) - 7)) AS s, toks
-        |  FROM t WHERE len(toks) >= 8),
-        |k AS MATERIALIZED (
-        |  SELECT doc_id, s,
-        |    md5(array_to_string(list_slice(toks, s + 1, s + 8), ' ')) AS key
-        |  FROM w0),
-        |d AS (
-        |  SELECT doc_id, s FROM (
-        |    SELECT doc_id, s, count(*) OVER (PARTITION BY key) AS cnt FROM k)
-        |  WHERE cnt >= 2),
-        |i AS (
-        |  SELECT doc_id, s,
-        |    max(s + 8) OVER (PARTITION BY doc_id ORDER BY s
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS run_end
-        |  FROM d),
-        |j AS (
-        |  SELECT doc_id, s,
-        |    sum(CASE WHEN run_end IS NULL OR s > run_end THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY s) AS island
-        |  FROM i)
-        |SELECT doc_id,
-        |  CAST(min(s) AS BIGINT) AS span_start,
-        |  CAST(max(s) + 8 AS BIGINT) AS span_end,
-        |  CAST(max(s) + 8 - min(s) AS BIGINT) AS span_tokens
-        |FROM j GROUP BY doc_id, island""".stripMargin,
-
-    // the strip twin: tokens covered by any merged span drop, the rest
-    // reassemble in order
-    "q_x_substr_strip" ->
-      """WITH w AS MATERIALIZED (
-        |  SELECT doc_id, coalesce(text, '') ||
-        |    ' subscribe to our newsletter for updates and special offers today'
-        |    AS wtext
-        |  FROM documents),
-        |t AS (SELECT doc_id, string_split(wtext, ' ') AS toks FROM w),
-        |w0 AS (
-        |  SELECT doc_id, unnest(range(0, len(toks) - 7)) AS s, toks
-        |  FROM t WHERE len(toks) >= 8),
-        |k AS MATERIALIZED (
-        |  SELECT doc_id, s,
-        |    md5(array_to_string(list_slice(toks, s + 1, s + 8), ' ')) AS key
-        |  FROM w0),
-        |d AS (
-        |  SELECT doc_id, s FROM (
-        |    SELECT doc_id, s, count(*) OVER (PARTITION BY key) AS cnt FROM k)
-        |  WHERE cnt >= 2),
-        |i AS (
-        |  SELECT doc_id, s,
-        |    max(s + 8) OVER (PARTITION BY doc_id ORDER BY s
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS run_end
-        |  FROM d),
-        |j AS (
-        |  SELECT doc_id, s,
-        |    sum(CASE WHEN run_end IS NULL OR s > run_end THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY s) AS island
-        |  FROM i),
-        |spans AS MATERIALIZED (
-        |  SELECT doc_id, min(s) AS span_start, max(s) + 8 AS span_end
-        |  FROM j GROUP BY doc_id, island),
-        |p0 AS (
-        |  SELECT doc_id, list_transform(string_split(wtext, ' '),
-        |    (tk, i) -> struct_pack(pos := CAST(i - 1 AS BIGINT), tok := tk))
-        |    AS ps
-        |  FROM w),
-        |p AS (
-        |  SELECT doc_id, u.pos AS pos, u.tok AS tok
-        |  FROM (SELECT doc_id, unnest(ps) AS u FROM p0)),
-        |m AS (
-        |  SELECT p.doc_id, p.pos, any_value(p.tok) AS tok,
-        |    count(sp.span_start) AS hits
-        |  FROM p LEFT JOIN spans sp
-        |    ON p.doc_id = sp.doc_id
-        |      AND p.pos >= sp.span_start AND p.pos < sp.span_end
-        |  GROUP BY p.doc_id, p.pos)
-        |SELECT doc_id,
-        |  coalesce(string_agg(tok, ' ' ORDER BY pos)
-        |    FILTER (WHERE hits = 0), '') AS clean_text,
-        |  CAST(count(*) FILTER (WHERE hits = 0) AS BIGINT) AS n_kept,
-        |  CAST(count(*) FILTER (WHERE hits > 0) AS BIGINT) AS n_dropped
-        |FROM m GROUP BY doc_id""".stripMargin,
-
-    // keep-first variant: row_number over (doc, start) spares the
-    // globally first occurrence, later copies mark
-    "q_x_substr_first" ->
-      """WITH w AS MATERIALIZED (
-        |  SELECT doc_id, coalesce(text, '') ||
-        |    ' subscribe to our newsletter for updates and special offers today'
-        |    AS wtext
-        |  FROM documents),
-        |t AS (SELECT doc_id, string_split(wtext, ' ') AS toks FROM w),
-        |w0 AS (
-        |  SELECT doc_id, unnest(range(0, len(toks) - 7)) AS s, toks
-        |  FROM t WHERE len(toks) >= 8),
-        |k AS MATERIALIZED (
-        |  SELECT doc_id, s,
-        |    md5(array_to_string(list_slice(toks, s + 1, s + 8), ' ')) AS key
-        |  FROM w0),
-        |d AS (
-        |  SELECT doc_id, s FROM (
-        |    SELECT doc_id, s, count(*) OVER (PARTITION BY key) AS cnt,
-        |      row_number() OVER (PARTITION BY key ORDER BY doc_id, s) AS rn
-        |    FROM k)
-        |  WHERE cnt >= 2 AND rn >= 2),
-        |i AS (
-        |  SELECT doc_id, s,
-        |    max(s + 8) OVER (PARTITION BY doc_id ORDER BY s
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS run_end
-        |  FROM d),
-        |j AS (
-        |  SELECT doc_id, s,
-        |    sum(CASE WHEN run_end IS NULL OR s > run_end THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY s) AS island
-        |  FROM i),
-        |spans AS MATERIALIZED (
-        |  SELECT doc_id, min(s) AS span_start, max(s) + 8 AS span_end
-        |  FROM j GROUP BY doc_id, island),
-        |p0 AS (
-        |  SELECT doc_id, list_transform(string_split(wtext, ' '),
-        |    (tk, i) -> struct_pack(pos := CAST(i - 1 AS BIGINT), tok := tk))
-        |    AS ps
-        |  FROM w),
-        |p AS (
-        |  SELECT doc_id, u.pos AS pos, u.tok AS tok
-        |  FROM (SELECT doc_id, unnest(ps) AS u FROM p0)),
-        |m AS (
-        |  SELECT p.doc_id, p.pos, any_value(p.tok) AS tok,
-        |    count(sp.span_start) AS hits
-        |  FROM p LEFT JOIN spans sp
-        |    ON p.doc_id = sp.doc_id
-        |      AND p.pos >= sp.span_start AND p.pos < sp.span_end
-        |  GROUP BY p.doc_id, p.pos)
-        |SELECT doc_id,
-        |  coalesce(string_agg(tok, ' ' ORDER BY pos)
-        |    FILTER (WHERE hits = 0), '') AS clean_text,
-        |  CAST(count(*) FILTER (WHERE hits = 0) AS BIGINT) AS n_kept,
-        |  CAST(count(*) FILTER (WHERE hits > 0) AS BIGINT) AS n_dropped
-        |FROM m GROUP BY doc_id""".stripMargin,
-
-    // span-level decontamination: corpus windows colliding with the
-    // benchmark key set (every 50th doc's text) mark, merge, and cut
-    "q_x_decontam" ->
-      """WITH b AS MATERIALIZED (
-        |  SELECT string_split(coalesce(text, ''), ' ') AS toks
-        |  FROM documents WHERE doc_id % 50 = 0),
-        |bk AS MATERIALIZED (
-        |  SELECT DISTINCT
-        |    md5(array_to_string(list_slice(toks, s + 1, s + 8), ' ')) AS key
-        |  FROM (SELECT toks, unnest(range(0, len(toks) - 7)) AS s
-        |        FROM b WHERE len(toks) >= 8)),
-        |t AS (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS toks
-        |      FROM documents),
-        |w0 AS (
-        |  SELECT doc_id, unnest(range(0, len(toks) - 7)) AS s, toks
-        |  FROM t WHERE len(toks) >= 8),
-        |k AS MATERIALIZED (
-        |  SELECT doc_id, s,
-        |    md5(array_to_string(list_slice(toks, s + 1, s + 8), ' ')) AS key
-        |  FROM w0),
-        |d AS (
-        |  SELECT doc_id, s FROM k WHERE key IN (SELECT key FROM bk)),
-        |i AS (
-        |  SELECT doc_id, s,
-        |    max(s + 8) OVER (PARTITION BY doc_id ORDER BY s
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS run_end
-        |  FROM d),
-        |j AS (
-        |  SELECT doc_id, s,
-        |    sum(CASE WHEN run_end IS NULL OR s > run_end THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY s) AS island
-        |  FROM i),
-        |spans AS MATERIALIZED (
-        |  SELECT doc_id, min(s) AS span_start, max(s) + 8 AS span_end
-        |  FROM j GROUP BY doc_id, island),
-        |p0 AS (
-        |  SELECT doc_id, list_transform(string_split(coalesce(text, ''), ' '),
-        |    (tk, i) -> struct_pack(pos := CAST(i - 1 AS BIGINT), tok := tk))
-        |    AS ps
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, u.pos AS pos, u.tok AS tok
-        |  FROM (SELECT doc_id, unnest(ps) AS u FROM p0)),
-        |m AS (
-        |  SELECT p.doc_id, p.pos, any_value(p.tok) AS tok,
-        |    count(sp.span_start) AS hits
-        |  FROM p LEFT JOIN spans sp
-        |    ON p.doc_id = sp.doc_id
-        |      AND p.pos >= sp.span_start AND p.pos < sp.span_end
-        |  GROUP BY p.doc_id, p.pos)
-        |SELECT doc_id,
-        |  coalesce(string_agg(tok, ' ' ORDER BY pos)
-        |    FILTER (WHERE hits = 0), '') AS clean_text,
-        |  CAST(count(*) FILTER (WHERE hits = 0) AS BIGINT) AS n_kept,
-        |  CAST(count(*) FILTER (WHERE hits > 0) AS BIGINT) AS n_dropped
-        |FROM m GROUP BY doc_id""".stripMargin,
-
-    // real javax.imageio round trip: PNG is lossless, so the decoded
-    // pixel sum of the synthesized image (pixel = id%128 + x + y) has the
-    // closed form w·h·base + h·Σx + w·Σy. A decode defect breaks equality.
-    "q_x_media_imageio" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(len(coalesce(text, '')) % 32 + 8 AS INT) AS width,
-        |    CAST((len(coalesce(text, '')) // 7) % 24 + 8 AS INT) AS height
-        |  FROM documents)
-        |SELECT doc_id, width, height, 1 AS channels,
-        |  CAST(width * height * (doc_id % 128)
-        |       + height * width * (width - 1) // 2
-        |       + width * height * (height - 1) // 2 AS BIGINT) AS sum_gray
-        |FROM d""".stripMargin,
-
-    "q_x_minhash_lsh" -> minhashOracleSql,
-    "q_x_minhash_r2" -> minhashOracleSqlFor(64, 32, 0.15),
-    "q_x_band_stats" -> minhashBandStatsOracleSql(64, 16),
-    // incremental = batch-mode restricted to pairs touching a new doc
-    // (id_a < id_b and old ids are <= 400, so id_b > 400 ⇔ "has a new
-    // side") — per-document signatures make stored and recomputed
-    // signatures identical, which is what this value check proves
-    "q_x_minhash_incr" -> (minhashOracleSql + " AND id_b > 400"),
-    "q_x_lsh_editverify" -> editVerifyOracleSql,
-    "q_x_ann_lsh" -> annLshOracleSql,
-
-    // connected components of the near-dup pair graph: min reachable id
-    // via a recursive CTE — the same fixpoint the Spark label propagation
-    // converges to.
-    "q_x_dup_clusters" ->
-      """WITH RECURSIVE docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')), '\s+') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS shingle
-        |  FROM docs WHERE len(w) >= 3),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |common AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-        |  FROM sh a JOIN sh b USING (shingle)
-        |  WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT id_a, id_b FROM common
-        |  JOIN sizes sa ON sa.doc_id = id_a
-        |  JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE CAST(common AS DOUBLE) / (sa.sz + sb.sz - common) >= 0.12),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |          UNION ALL SELECT id_b, id_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id)
-        |SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY 1""".stripMargin,
-
-    "q_x_cluster_champion" ->
-      """WITH RECURSIVE docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')), '\s+') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS shingle
-        |  FROM docs WHERE len(w) >= 3),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |common AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-        |  FROM sh a JOIN sh b USING (shingle)
-        |  WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT id_a, id_b FROM common
-        |  JOIN sizes sa ON sa.doc_id = id_a
-        |  JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE CAST(common AS DOUBLE) / (sa.sz + sb.sz - common) >= 0.12),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |          UNION ALL SELECT id_b, id_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id),
-        |cl AS (SELECT id, min(r) AS cluster FROM reach GROUP BY 1),
-        |ranked AS (
-        |  SELECT cl.cluster, cl.id, d.n_chars,
-        |    row_number() OVER (PARTITION BY cl.cluster
-        |      ORDER BY d.n_chars DESC, cl.id ASC) AS rn
-        |  FROM cl JOIN documents d ON d.doc_id = cl.id)
-        |SELECT cluster, id AS champion, n_chars
-        |FROM ranked WHERE rn = 1""".stripMargin,
-
-    "q_x_keywords" ->
-      """WITH n AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')) AS norm
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(string_split_regex(norm, '\s+')) AS term
-        |        FROM n WHERE norm <> ''),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |total AS (SELECT count(*) AS nn FROM documents),
-        |scored AS (
-        |  SELECT doc_id, term, df,
-        |    CAST(tf AS DOUBLE) * (nn + 1) / (df + 1) AS score
-        |  FROM tf JOIN dfreq USING (term), total)
-        |SELECT doc_id, term, CAST(rank AS BIGINT) AS rank, score FROM (
-        |  SELECT doc_id, term, score,
-        |    row_number() OVER (PARTITION BY doc_id
-        |                       ORDER BY score DESC, df ASC, term ASC) AS rank
-        |  FROM scored)
-        |WHERE rank <= 3""".stripMargin,
-    "q_x_collocations" ->
-      """WITH nrm AS (
-        |  SELECT trim(regexp_replace(lower(coalesce(text, '')),
-        |    '[^\p{L}\p{N}]+', ' ', 'g')) AS norm
-        |  FROM documents),
-        |tl AS (SELECT string_split_regex(norm, '\s+') AS l
-        |       FROM nrm WHERE norm <> ''),
-        |uni AS (SELECT unnest(l) AS term FROM tl),
-        |uc AS (SELECT term, count(*)::BIGINT AS c FROM uni GROUP BY 1),
-        |total AS (SELECT count(*)::BIGINT AS nn FROM uni),
-        |bi AS (
-        |  SELECT l[CAST(i AS INT)] AS term_a,
-        |    l[CAST(i AS INT) + 1] AS term_b
-        |  FROM tl, unnest(generate_series(1, len(l) - 1)) AS t(i)),
-        |bc AS (
-        |  SELECT term_a, term_b, count(*)::BIGINT AS pair_count
-        |  FROM bi GROUP BY 1, 2 HAVING count(*) >= 5),
-        |scored AS (
-        |  SELECT term_a, term_b, pair_count,
-        |    CAST(pair_count AS DOUBLE) * CAST(nn AS DOUBLE) /
-        |      CAST(ca.c * cb.c AS DOUBLE) AS s
-        |  FROM bc
-        |  JOIN uc ca ON ca.term = bc.term_a
-        |  JOIN uc cb ON cb.term = bc.term_b, total)
-        |SELECT term_a, term_b, pair_count, round(s, 4) AS score
-        |FROM scored ORDER BY s DESC, term_a, term_b LIMIT 100""".stripMargin,
-
-    "q_x_fair_quota" ->
-      """WITH nrm AS (
-        |  SELECT source, trim(regexp_replace(lower(coalesce(text, '')),
-        |    '[^\p{L}\p{N}]+', ' ', 'g')) AS norm
-        |  FROM documents),
-        |tok AS (SELECT source, unnest(string_split_regex(norm, '\s+'))
-        |        FROM nrm WHERE norm <> ''),
-        |cnt AS (SELECT source, count(*)::BIGINT AS c FROM tok GROUP BY 1),
-        |fl AS (
-        |  SELECT source, c,
-        |    row_number() OVER (ORDER BY c ASC, source ASC) AS i,
-        |    sum(c) OVER (ORDER BY c ASC, source ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prefix,
-        |    count(*) OVER () AS n
-        |  FROM cnt),
-        |f2 AS (SELECT *,
-        |    (c * (n - i + 1) + (prefix - c)) <= 10000 AS funded FROM fl),
-        |sc AS (SELECT count(*) FILTER (WHERE funded)::BIGINT AS j,
-        |         coalesce(sum(c) FILTER (WHERE funded), 0)::BIGINT
-        |           AS fundedsum,
-        |         count(*)::BIGINT AS n
-        |       FROM f2)
-        |SELECT source, c AS tokens,
-        |  CASE WHEN funded THEN c
-        |       ELSE (SELECT CASE WHEN n = j THEN 0
-        |                    ELSE (10000 - fundedsum) // (n - j) END
-        |             FROM sc) END AS quota
-        |FROM f2""".stripMargin,
-
-    "q_x_simhash" -> simhashOracleSql,
-    "q_x_embed_dup_lsh" -> embedLshOracleSql,
-
-    // Stub features are a Karp-Rabin byte fold (mod 2^31-1); the payload is
-    // the UTF-8 encoding of `text`, and the corpus is ASCII, so folding
-    // DuckDB's per-char codepoints reproduces the byte fold exactly.
-    "q_x_media_features" ->
-      """WITH seeds AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(coalesce(text, '')) = 0 THEN CAST(0 AS BIGINT)
-        |         ELSE list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |                list_transform(string_split(text, ''), c -> CAST(unicode(c) AS BIGINT))),
-        |              (acc, x) -> (acc * 1000003 + x) % 2147483647) END AS seed
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(CAST(((seed * 1000003 + 0) % 2147483647) / 2147483647.0 AS FLOAT) AS DOUBLE) AS f_first,
-        |  CAST(CAST(((seed * 1000003 + 15) % 2147483647) / 2147483647.0 AS FLOAT) AS DOUBLE) AS f_last
-        |FROM seeds""".stripMargin,
-
-    // resize stub output = 4-byte (32,24) dims header + 8-byte big-endian
-    // content seed (Karp-Rabin over the first 64 payload bytes, seeded
-    // with the length, mod 2^31-1 — ASCII corpus, so chars == bytes)
-    "q_x_media_resize" ->
-      """WITH seeds AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(coalesce(text, '')) = 0 THEN CAST(0 AS BIGINT)
-        |         ELSE list_reduce(list_prepend(CAST(len(text) % 2147483647 AS BIGINT),
-        |                list_transform(string_split(substr(text, 1, 64), ''), c -> CAST(unicode(c) AS BIGINT))),
-        |              (acc, x) -> (acc * 1000003 + x) % 2147483647) END AS seed
-        |  FROM documents)
-        |SELECT doc_id, '00200018' || lpad(hex(seed), 16, '0') AS resized_hex
-        |FROM seeds""".stripMargin,
-
-    "q_x_rolling_hash" ->
-      """WITH n AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')) AS norm
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(CASE WHEN norm = '' THEN 0
-        |       ELSE list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |              list_transform(string_split(norm, ''), c -> CAST(unicode(c) AS BIGINT))),
-        |            (acc, x) -> (acc * 1000003 + x) % 2147483647) END AS BIGINT) AS rh
-        |FROM n""".stripMargin,
-
-    // as-of: latest order per (customer, event time); ties -> max orderkey.
-    // The window formulation is the oracle's independent expression of the
-    // same semantics (DuckDB's native ASOF JOIN leaves ties unspecified).
-    "q_x_asof_join" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_ns(ts) // 1000 AS t_us
-        |           FROM events),
-        |o AS (SELECT o_custkey AS user_id, epoch_us(o_orderdate) AS o_t_us,
-        |             o_orderkey, o_totalprice FROM orders),
-        |j AS (SELECT e.event_id, o.o_orderkey, o.o_totalprice,
-        |        row_number() OVER (PARTITION BY e.event_id
-        |          ORDER BY o.o_t_us DESC, o.o_orderkey DESC) AS rn
-        |      FROM e JOIN o ON e.user_id = o.user_id AND o.o_t_us <= e.t_us)
-        |SELECT e.event_id, e.user_id, j.o_orderkey, j.o_totalprice
-        |FROM e LEFT JOIN (SELECT * FROM j WHERE rn = 1) j USING (event_id)""".stripMargin,
-
-    "q_x_range_join" ->
-      """WITH e AS (SELECT event_id, epoch_ns(ts) // 1000 AS t FROM events)
-        |SELECT a.event_id AS event_id, count(*) AS n_near
-        |FROM e a JOIN e b
-        |  ON abs(a.t - b.t) <= 60000000 AND a.event_id <> b.event_id
-        |GROUP BY 1""".stripMargin,
-
-    "q_x_repetition" -> {
-      val tok = s"CASE WHEN norm = '' THEN [] " +
-        s"ELSE string_split_regex(norm, '\\s+') END"
-      s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
-         |tok AS (SELECT doc_id, $tok AS l FROM n)
-         |SELECT doc_id,
-         |  CAST(len(l) AS BIGINT) AS n_tokens,
-         |  CASE WHEN len(l) > 0 THEN
-         |    round(CAST(len(l) - len(list_distinct(l)) AS DOUBLE) / len(l), 6)
-         |  ELSE 0.0 END AS dup_token_frac,
-         |  CASE WHEN len(l) > 0 THEN
-         |    round(CAST(list_max(list_transform(list_distinct(l),
-         |      t -> len(list_filter(l, x -> x = t)))) AS DOUBLE) / len(l), 6)
-         |  ELSE 0.0 END AS top_token_frac,
-         |  CASE WHEN len(l) > 1 THEN
-         |    round(CAST((len(l) - 1) - len(list_distinct(list_transform(
-         |      range(1, len(l)), i -> l[i] || ' ' || l[i+1]))) AS DOUBLE)
-         |      / (len(l) - 1), 6)
-         |  ELSE 0.0 END AS dup_bigram_frac
-         |FROM tok""".stripMargin
-    },
-
-    // identical ranking law to q_x_stratified — the ENGINE plan differs
-    // (bounded aggregate vs two-pass rank), the result must not
-    "q_x_stratified_topk" ->
-      s"""SELECT lang, doc_id, rk FROM (
-         |  SELECT lang, doc_id,
-         |    row_number() OVER (PARTITION BY lang
-         |      ORDER BY ${graft.functions.Portable.h60Sql("CAST(doc_id AS VARCHAR)")},
-         |               doc_id) AS rk
-         |  FROM documents)
-         |WHERE rk <= 20""".stripMargin,
-
-    "q_x_stratified" ->
-      s"""SELECT lang, doc_id, rk FROM (
-         |  SELECT lang, doc_id,
-         |    row_number() OVER (PARTITION BY lang
-         |      ORDER BY ${graft.functions.Portable.h60Sql("CAST(doc_id AS VARCHAR)")},
-         |               doc_id) AS rk
-         |  FROM documents)
-         |WHERE rk <= 20""".stripMargin,
-
-    // Neyman allocation: weight = sqrt(n·Σx² − (Σx)²) = N_h·σ_h with an
-    // EXACT int64 radicand (one IEEE sqrt both engines round alike),
-    // then the temperatureMix integer largest-remainder split, capped
-    // at stratum size; the draw is the stratified hash-rank idiom
-    "q_x_neyman_sample" ->
-      s"""WITH st AS (
-         |  SELECT source, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(n_chars) AS BIGINT) AS s,
-         |    CAST(sum(n_chars * n_chars) AS BIGINT) AS q
-         |  FROM documents GROUP BY source),
-         |w AS (
-         |  SELECT source, n,
-         |    CAST(floor(sqrt(CAST(n * q - s * s AS DOUBLE)) * 1000)
-         |      AS BIGINT) AS sw
-         |  FROM st),
-         |t AS (SELECT *, sum(sw) OVER () AS W FROM w),
-         |a AS (
-         |  SELECT source, n, sw, W,
-         |    CASE WHEN W > 0 THEN (120 * sw) // W ELSE 0 END AS alloc,
-         |    CASE WHEN W > 0 THEN 120 * sw - ((120 * sw) // W) * W
-         |         ELSE 0 END AS rem
-         |  FROM t),
-         |r AS (
-         |  SELECT *, row_number() OVER (ORDER BY rem DESC, source) AS rk,
-         |    sum(alloc) OVER () AS atot
-         |  FROM a),
-         |qta AS (
-         |  SELECT source,
-         |    least(CAST(CASE WHEN W > 0
-         |      THEN alloc + CASE WHEN rk <= 120 - atot THEN 1 ELSE 0 END
-         |      ELSE 0 END AS BIGINT), n) AS quota
-         |  FROM r),
-         |d AS (
-         |  SELECT source, doc_id,
-         |    row_number() OVER (PARTITION BY source
-         |      ORDER BY ${graft.functions.Portable.h60Sql(
-               "'audit:' || CAST(doc_id AS VARCHAR)")},
-         |               doc_id) AS rk
-         |  FROM documents)
-         |SELECT d.source, d.doc_id, d.rk, qta.quota
-         |FROM d JOIN qta USING (source) WHERE d.rk <= qta.quota""".stripMargin,
-
-    // winsorize: nearest-rank bounds (value at rank ceil(p*n)) — rank
-    // selection, not interpolation, so both engines pick the same bound
-    "q_x_winsorize" ->
-      """WITH b AS (
-        |  SELECT source, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_chars)
-        |      AS rn,
-        |    count(*) OVER (PARTITION BY source) AS n
-        |  FROM documents),
-        |w AS (
-        |  SELECT *,
-        |    max(CASE WHEN rn <= ceil(n * 0.05) THEN n_chars END)
-        |      OVER (PARTITION BY source) AS lo0,
-        |    max(CASE WHEN rn <= ceil(n * 0.95) THEN n_chars END)
-        |      OVER (PARTITION BY source) AS hi0,
-        |    min(n_chars) OVER (PARTITION BY source) AS mn,
-        |    max(n_chars) OVER (PARTITION BY source) AS mx
-        |  FROM b)
-        |SELECT source, doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-        |  CAST(coalesce(lo0, mn) AS BIGINT) AS lo,
-        |  CAST(coalesce(hi0, mx) AS BIGINT) AS hi,
-        |  CAST(least(greatest(n_chars, coalesce(lo0, mn)),
-        |    coalesce(hi0, mx)) AS BIGINT) AS v_wins
-        |FROM w""".stripMargin,
-
-    // rank-based quantile normalization: min-rank ties (rank(), no
-    // tiebreak column) so equal values share q on every engine
-    "q_x_qnorm" ->
-      """SELECT source, doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-        |  CASE WHEN n > 1
-        |    THEN round(CAST(rk - 1 AS DOUBLE) / CAST(n - 1 AS DOUBLE), 6)
-        |    ELSE 0.5 END AS q_norm
-        |FROM (
-        |  SELECT source, doc_id, n_chars,
-        |    rank() OVER (PARTITION BY source ORDER BY n_chars) AS rk,
-        |    count(*) OVER (PARTITION BY source) AS n
-        |  FROM documents)""".stripMargin,
-
-    // balanced interleave: source index from the distinct-sources
-    // frame, per-source hash rank, pos = (rk-1)*nS + si
-    "q_x_interleave" ->
-      s"""WITH s AS (
-         |  SELECT source,
-         |    row_number() OVER (ORDER BY source) - 1 AS si,
-         |    count(*) OVER () AS ns
-         |  FROM (SELECT DISTINCT source FROM documents)),
-         |r AS (
-         |  SELECT source, doc_id,
-         |    row_number() OVER (PARTITION BY source
-         |      ORDER BY ${graft.functions.Portable.h60Sql(
-               "'interleave:' || CAST(doc_id AS VARCHAR)")},
-         |               doc_id) AS rk
-         |  FROM documents)
-         |SELECT r.source, r.doc_id,
-         |  CAST((r.rk - 1) * s.ns + s.si AS BIGINT) AS pos
-         |FROM r JOIN s USING (source)""".stripMargin,
-
-    // winnowing: positional trigram h60 hashes, min over each window
-    // of 4 consecutive gram hashes (full trailing windows; short docs
-    // keep position 1), distinct — bit-for-bit the engine's sketch
-    "q_x_winnow" ->
-      s"""WITH ${winnowChainSql("w_", "TRUE")}
-         |SELECT doc_id, fp FROM w_fp""".stripMargin,
-
-    // incremental winnow: corpus and batch fp chains from the SAME
-    // template, joined on fp, pair-counted — the stored-probe semantics
-    "q_x_winnow_incr" ->
-      s"""WITH ${winnowChainSql("c", "doc_id <= 400")},
-         |${winnowChainSql("b", "doc_id > 400")}
-         |SELECT b.doc_id AS id_new, c.doc_id AS id_corpus,
-         |  CAST(count(*) AS BIGINT) AS shared_fps
-         |FROM cfp c JOIN bfp b USING (fp)
-         |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
-
-    // cfp rows are DISTINCT (doc_id, fp), so count(*) per fp = distinct
-    // carriers — the same countDistinct the Spark cap computes
-    "q_x_winnow_capped" ->
-      s"""WITH ${winnowChainSql("c", "doc_id <= 400")},
-         |${winnowChainSql("b", "doc_id > 400")},
-         |keep AS (
-         |  SELECT fp FROM cfp GROUP BY fp HAVING count(*) <= 2)
-         |SELECT b.doc_id AS id_new, c.doc_id AS id_corpus,
-         |  CAST(count(*) AS BIGINT) AS shared_fps
-         |FROM cfp c JOIN keep USING (fp) JOIN bfp b USING (fp)
-         |GROUP BY 1, 2 HAVING count(*) >= 1""".stripMargin,
-
-    // mojibake screen: detector + repair generated from the SAME
-    // MojibakeMap the engine uses (substring-count arithmetic, no
-    // regex, so both dialects compute identical integers)
-    "q_x_mojibake" -> {
-      def occ(seq: String) =
-        s"((length(d) - length(replace(d, '$seq', ''))) // ${seq.length})"
-      val nMoji = graft.ops.TextOps.MojibakeMap
-        .map { case (bad, _) => occ(bad) }.mkString("\n|    + ")
-      val repair = graft.ops.TextOps.MojibakeMap.sortBy(-_._1.length)
-        .foldLeft("d") { case (acc, (bad, good)) =>
-          s"replace($acc, '$bad', '${good.replace("'", "''")}')"
-        }
-      s"""WITH base AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-         |dmg AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 3 = 0 THEN replace(t, 'e', 'Ã©')
-         |         WHEN doc_id % 3 = 1 THEN replace(t, 'a', 'â€™') || ' �'
-         |         ELSE t END AS d
-         |  FROM base)
-         |SELECT doc_id,
-         |  CAST($nMoji AS BIGINT) AS n_mojibake,
-         |  CAST(${occ("�")} AS BIGINT) AS n_replacement,
-         |  ($nMoji > 0 OR ${occ("�")} > 0) AS is_damaged,
-         |  CAST(length($repair) AS BIGINT) AS repaired_chars
-         |FROM dmg""".stripMargin
-    },
-
-    "q_x_weighted_sample" ->
-      s"""SELECT doc_id, n_chars FROM documents
-         |WHERE CAST(n_chars AS DOUBLE) > 0
-         |ORDER BY ln((CAST(${graft.functions.Portable.h60Sql(
-             "'wsample:' || CAST(doc_id AS VARCHAR)")} AS DOUBLE) + 1.0)
-         |    / ${graft.ops.Sampling.H60Space})
-         |  / CAST(n_chars AS DOUBLE) DESC, doc_id
-         |LIMIT 200""".stripMargin,
-
-    "q_x_token_budget" ->
-      s"""SELECT lang, doc_id, n_chars, cum_tokens FROM (
-         |  SELECT lang, doc_id, n_chars,
-         |    CAST(sum(n_chars) OVER (PARTITION BY lang
-         |      ORDER BY ${graft.functions.Portable.h60Sql(
-             "'budget:' || CAST(doc_id AS VARCHAR)")}, doc_id)
-         |      AS BIGINT) AS cum_tokens
-         |  FROM documents)
-         |WHERE cum_tokens - n_chars < 8000""".stripMargin,
-
-    "q_x_bpe_merges" -> bpeOracleSql(64),
-    "q_x_bpe_encode" -> bpeEncodeOracleSql(8),
-
-    "q_x_quota_trim" ->
-      s"""WITH cnt AS (
-         |  SELECT source, sum(n_chars)::BIGINT AS c
-         |  FROM documents GROUP BY 1),
-         |fl AS (
-         |  SELECT source, c,
-         |    row_number() OVER (ORDER BY c ASC, source ASC) AS i,
-         |    sum(c) OVER (ORDER BY c ASC, source ASC
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prefix,
-         |    count(*) OVER () AS n
-         |  FROM cnt),
-         |f2 AS (SELECT *,
-         |    (c * (n - i + 1) + (prefix - c)) <= 30000 AS funded FROM fl),
-         |sc AS (SELECT count(*) FILTER (WHERE funded)::BIGINT AS j,
-         |         coalesce(sum(c) FILTER (WHERE funded), 0)::BIGINT
-         |           AS fundedsum,
-         |         count(*)::BIGINT AS n
-         |       FROM f2),
-         |q AS (
-         |  SELECT source,
-         |    CASE WHEN funded THEN c
-         |         ELSE (SELECT CASE WHEN n = j THEN 0
-         |                      ELSE (30000 - fundedsum) // (n - j) END
-         |               FROM sc) END AS quota
-         |  FROM f2),
-         |t AS (
-         |  SELECT source, doc_id, n_chars,
-         |    CAST(sum(n_chars) OVER (PARTITION BY source
-         |      ORDER BY ${graft.functions.Portable.h60Sql(
-             "'budget:' || CAST(doc_id AS VARCHAR)")}, doc_id)
-         |      AS BIGINT) AS cum_tokens
-         |  FROM documents)
-         |SELECT t.source, doc_id, n_chars, quota, cum_tokens
-         |FROM t JOIN q ON q.source = t.source
-         |WHERE cum_tokens - n_chars < quota""".stripMargin,
-
-    // per-source card: every stat from the same slim projection
-    "q_x_dataset_card" ->
-      """WITH base AS MATERIALIZED (
-        |  SELECT source, lang, n_chars,
-        |    md5(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g'))) AS fp
-        |  FROM documents),
-        |mass AS (SELECT source, count(*)::BIGINT AS n_docs,
-        |           sum(n_chars)::BIGINT AS total_chars
-        |         FROM base GROUP BY 1),
-        |fps AS (SELECT source, count(*)::BIGINT AS n_distinct
-        |        FROM (SELECT DISTINCT source, fp FROM base) GROUP BY 1),
-        |langs AS (SELECT source, count(*)::BIGINT AS n_langs
-        |          FROM (SELECT DISTINCT source, lang FROM base) GROUP BY 1),
-        |r AS (SELECT source, n_chars,
-        |        row_number() OVER (PARTITION BY source ORDER BY n_chars)
-        |          AS rn,
-        |        count(*) OVER (PARTITION BY source) AS n
-        |      FROM base),
-        |p50 AS (SELECT source, CAST(n_chars AS BIGINT) AS p50_chars
-        |        FROM r WHERE rn = ceil(n * 0.5))
-        |SELECT source, n_docs, total_chars, n_distinct,
-        |  round(1.0 - CAST(n_distinct AS DOUBLE) / n_docs, 6) AS dup_rate,
-        |  n_langs, p50_chars
-        |FROM mass JOIN fps USING (source) JOIN langs USING (source)
-        |  JOIN p50 USING (source)""".stripMargin,
-
-    // per-group nearest-rank quantiles: value at rank ceil(p*n)
-    "q_x_grouped_quantiles" ->
-      """WITH r AS (
-        |  SELECT source, n_chars,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_chars)
-        |      AS rn,
-        |    count(*) OVER (PARTITION BY source) AS n
-        |  FROM documents)
-        |SELECT source, p, CAST(n_chars AS BIGINT) AS value
-        |FROM r, (SELECT unnest([0.1, 0.5, 0.9, 0.99]::DOUBLE[]) AS p)
-        |WHERE rn = ceil(n * p)""".stripMargin,
-
-    // exact global order statistic: row_number over the full corpus
-    "q_x_exact_deciles" ->
-      """WITH r AS (
-        |  SELECT n_chars,
-        |    row_number() OVER (ORDER BY n_chars, doc_id) AS rk,
-        |    count(*) OVER () AS n
-        |  FROM documents)
-        |SELECT d AS decile, CAST(n_chars AS BIGINT) AS value
-        |FROM r, (SELECT unnest(range(1, 10)) AS d)
-        |WHERE rk = (n * d + 9) // 10""".stripMargin,
-
-    // full-chain pipeline replay: every stage in ONE statement so a
-    // stage-order / column-contract regression fails the hash compare
-    "q_x_pipeline" -> {
-      val repair = graft.ops.TextOps.MojibakeMap.sortBy(-_._1.length)
-        .foldLeft("d") { case (acc, (bad, good)) =>
-          s"replace($acc, '$bad', '${good.replace("'", "''")}')"
-        }
-      def norm(x: String) =
-        s"trim(regexp_replace(lower($x), '[^\\p{L}\\p{N}]+', ' ', 'g'))"
-      s"""WITH base AS (
-         |  SELECT doc_id, source, coalesce(text, '') AS t0 FROM documents),
-         |dmg AS (
-         |  SELECT doc_id, source,
-         |    CASE WHEN doc_id % 3 = 0 THEN replace(t0, 'e', 'Ã©')
-         |         ELSE t0 END AS d
-         |  FROM base),
-         |clean AS MATERIALIZED (
-         |  SELECT doc_id, source, $repair AS t FROM dmg),
-         |fp AS (
-         |  SELECT doc_id, source, t, md5(${norm("t")}) AS fp FROM clean),
-         |dd AS MATERIALIZED (
-         |  SELECT doc_id, source, t FROM fp
-         |  WHERE doc_id IN (SELECT min(doc_id) FROM fp GROUP BY fp)),
-         |w AS (
-         |  SELECT doc_id, string_split_regex(${norm("t")}, '\\s+') AS w
-         |  FROM dd),
-         |sh AS (
-         |  SELECT doc_id, unnest(list_distinct(list_transform(
-         |    range(1, len(w) - 1),
-         |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS shingle
-         |  FROM w WHERE len(w) >= 3),
-         |bw AS (
-         |  SELECT string_split_regex(${norm("t")}, '\\s+') AS w
-         |  FROM clean WHERE doc_id % 50 = 0),
-         |bsh AS MATERIALIZED (
-         |  SELECT DISTINCT unnest(list_distinct(list_transform(
-         |    range(1, len(w) - 1),
-         |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS shingle
-         |  FROM bw WHERE len(w) >= 3),
-         |hits AS (SELECT DISTINCT doc_id FROM sh JOIN bsh USING (shingle)),
-         |kept AS MATERIALIZED (
-         |  SELECT doc_id, source, length(t)::BIGINT AS n_chars FROM dd
-         |  WHERE doc_id NOT IN (SELECT doc_id FROM hits)),
-         |scored AS (
-         |  SELECT doc_id, source, n_chars,
-         |    rank() OVER (PARTITION BY source ORDER BY n_chars) AS rk,
-         |    count(*) OVER (PARTITION BY source) AS n
-         |  FROM kept),
-         |gated AS MATERIALIZED (
-         |  SELECT * FROM (
-         |    SELECT doc_id, source, n_chars,
-         |      CASE WHEN n > 1
-         |        THEN round(CAST(rk - 1 AS DOUBLE) / CAST(n - 1 AS DOUBLE), 6)
-         |        ELSE 0.5 END AS q_norm
-         |    FROM scored)
-         |  WHERE q_norm >= 0.2),
-         |cnt AS (SELECT source, sum(n_chars)::BIGINT AS c
-         |        FROM gated GROUP BY 1),
-         |fl AS (
-         |  SELECT source, c,
-         |    row_number() OVER (ORDER BY c ASC, source ASC) AS i,
-         |    sum(c) OVER (ORDER BY c ASC, source ASC
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prefix,
-         |    count(*) OVER () AS n
-         |  FROM cnt),
-         |f2 AS (SELECT *,
-         |    (c * (n - i + 1) + (prefix - c)) <= 30000 AS funded FROM fl),
-         |sc AS (SELECT count(*) FILTER (WHERE funded)::BIGINT AS j,
-         |         coalesce(sum(c) FILTER (WHERE funded), 0)::BIGINT
-         |           AS fundedsum,
-         |         count(*)::BIGINT AS n
-         |       FROM f2),
-         |q AS (
-         |  SELECT source,
-         |    CASE WHEN funded THEN c
-         |         ELSE (SELECT CASE WHEN n = j THEN 0
-         |                      ELSE (30000 - fundedsum) // (n - j) END
-         |               FROM sc) END AS quota
-         |  FROM f2),
-         |tb AS (
-         |  SELECT g.source, doc_id, n_chars, q_norm,
-         |    CAST(sum(n_chars) OVER (PARTITION BY g.source
-         |      ORDER BY ${graft.functions.Portable.h60Sql(
-             "'budget:' || CAST(doc_id AS VARCHAR)")}, doc_id)
-         |      AS BIGINT) AS cum_tokens
-         |  FROM gated g),
-         |trimmed AS MATERIALIZED (
-         |  SELECT tb.*, q.quota FROM tb JOIN q ON q.source = tb.source
-         |  WHERE cum_tokens - n_chars < quota),
-         |si AS (
-         |  SELECT source,
-         |    row_number() OVER (ORDER BY source) - 1 AS si,
-         |    count(*) OVER () AS ns
-         |  FROM (SELECT DISTINCT source FROM trimmed)),
-         |r AS (
-         |  SELECT source, doc_id, n_chars, q_norm, cum_tokens, quota,
-         |    row_number() OVER (PARTITION BY source
-         |      ORDER BY ${graft.functions.Portable.h60Sql(
-             "'interleave:' || CAST(doc_id AS VARCHAR)")}, doc_id) AS rk
-         |  FROM trimmed)
-         |SELECT r.source, doc_id, n_chars, q_norm, cum_tokens, quota,
-         |  CAST((rk - 1) * ns + si AS BIGINT) AS pos
-         |FROM r JOIN si ON si.source = r.source""".stripMargin
-    },
-
-    "q_x_scd2_asof" ->
-      s"""WITH stage AS (
-         |  SELECT user_id, value, event_id AS valid_from,
-         |    (event_type = 'error') AS is_del
-         |  FROM events),
-         |w AS (
-         |  SELECT user_id, value, is_del, valid_from,
-         |    lead(valid_from) OVER (PARTITION BY user_id
-         |      ORDER BY valid_from) AS valid_to
-         |  FROM stage)
-         |SELECT user_id, value, valid_from
-         |FROM w WHERE NOT is_del
-         |  AND valid_from <= 5000 AND (valid_to IS NULL OR valid_to > 5000)""".stripMargin,
-
-    "q_x_merge_scd2" ->
-      s"""WITH stage AS (
-         |  SELECT user_id, value, event_id AS valid_from,
-         |    (event_type = 'error') AS is_del
-         |  FROM events),
-         |w AS (
-         |  SELECT user_id, value, is_del, valid_from,
-         |    lead(valid_from) OVER (PARTITION BY user_id
-         |      ORDER BY valid_from) AS valid_to
-         |  FROM stage)
-         |SELECT user_id, value, valid_from, valid_to,
-         |  (valid_to IS NULL) AS is_current
-         |FROM w WHERE NOT is_del""".stripMargin,
-
-    "q_x_hll_distinct" ->
-      graft.functions.Sketches.hllOracleSql("documents", Seq("source"),
-        "text", p = 8),
-
-    "q_x_hll_merge" ->
-      graft.functions.Sketches.hllOracleSql("events", Seq("event_type"),
-        "'u:' || CAST(user_id AS VARCHAR)", p = 5),
-
-    "q_x_qsketch" ->
-      graft.functions.Sketches.qOracleSql("events", Seq("event_type"),
-        "value", Seq(0.5, 0.95, 0.99)),
-
-    // identical oracle to q_x_qsketch: the engine side merges per-day
-    // sketches instead — counter addition must reproduce the one-shot
-    "q_x_qsketch_merge" ->
-      graft.functions.Sketches.qOracleSql("events", Seq("event_type"),
-        "value", Seq(0.5, 0.95, 0.99)),
-
-    "q_x_hybrid_rrf" -> {
-      val terms = Seq("hash", "join", "vector")
-      s"""WITH ${graft.ops.Search.bm25Ctes("documents", "doc_id", "text",
-             terms)},
-         |bmtop AS (
-         |  SELECT doc_id,
-         |    ${graft.ops.Search.bm25ScoreExpr("doc_id", terms)} AS score
-         |  FROM scored ORDER BY score DESC, doc_id LIMIT 100),
-         |bmrank AS (
-         |  SELECT doc_id, CAST(row_number() OVER (
-         |    ORDER BY score DESC, doc_id) AS BIGINT) AS r1 FROM bmtop),
-         |qv AS (
-         |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings
-         |  WHERE vec_id = 0),
-         |sims AS (
-         |  SELECT vec_id,
-         |    CASE WHEN sqrt(list_inner_product(
-         |        CAST(e.embedding AS DOUBLE[]),
-         |        CAST(e.embedding AS DOUBLE[])))
-         |      * sqrt(list_inner_product(qe, qe)) > 0
-         |    THEN list_inner_product(CAST(e.embedding AS DOUBLE[]), qe)
-         |      / (sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]),
-         |          CAST(e.embedding AS DOUBLE[])))
-         |        * sqrt(list_inner_product(qe, qe)))
-         |    ELSE 0.0 END AS sim
-         |  FROM embeddings e, qv WHERE vec_id <> 0),
-         |costop AS (
-         |  SELECT vec_id, sim FROM sims ORDER BY sim DESC, vec_id
-         |  LIMIT 100),
-         |cosrank AS (
-         |  SELECT vec_id AS doc_id, CAST(row_number() OVER (
-         |    ORDER BY sim DESC, vec_id) AS BIGINT) AS r2 FROM costop),
-         |fused AS (
-         |  SELECT coalesce(b.doc_id, c.doc_id) AS doc_id,
-         |    round((CASE WHEN b.r1 IS NOT NULL
-         |        THEN 1.0 / (60 + b.r1) ELSE 0.0 END)
-         |      + (CASE WHEN c.r2 IS NOT NULL
-         |        THEN 1.0 / (60 + c.r2) ELSE 0.0 END), 6) AS rrf
-         |  FROM bmrank b FULL JOIN cosrank c ON b.doc_id = c.doc_id)
-         |SELECT doc_id, rrf FROM fused
-         |ORDER BY rrf DESC, doc_id LIMIT 30""".stripMargin
-    },
-
-    "q_x_pagerank" -> {
-      val pairs = "SELECT DISTINCT o_custkey, l_suppkey FROM orders " +
-        "JOIN lineitem ON o_orderkey = l_orderkey"
-      val edges =
-        s"""SELECT 'c:' || CAST(o_custkey AS VARCHAR) AS src,
-           |  's:' || CAST(l_suppkey AS VARCHAR) AS dst FROM ($pairs) p
-           |UNION ALL
-           |SELECT 's:' || CAST(l_suppkey AS VARCHAR) AS src,
-           |  'c:' || CAST(o_custkey AS VARCHAR) AS dst
-           |FROM ($pairs) q""".stripMargin
-      graft.ops.Graph.pagerankOracleSql(edges, iters = 3, topK = 100)
-    },
-
-    "q_x_bm25" ->
-      graft.ops.Search.bm25OracleSql("documents", "doc_id", "text",
-        Seq("hash", "join", "vector"), k = 50),
-
-    "q_x_cms_heavy" -> {
-      val stream =
-        """SELECT unnest(string_split_regex(
-          |    trim(regexp_replace(lower(coalesce(text, '')),
-          |      '[^\p{L}\p{N}]+', ' ', 'g')), '\s+')) AS term
-          |  FROM documents
-          |  WHERE trim(regexp_replace(lower(coalesce(text, '')),
-          |    '[^\p{L}\p{N}]+', ' ', 'g')) <> ''""".stripMargin
-      graft.functions.Sketches.cmsOracleSql(stream) +
-        "\nORDER BY cms_count DESC, term LIMIT 30"
-    },
-
-    "q_x_pii_scrub" -> {
-      val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val phoneRe = "\\+[0-9]{1,3} [0-9]{3}-[0-9]{4}"
-      s"""WITH s AS (
-         |  SELECT doc_id,
-         |    concat(
-         |      CASE WHEN doc_id % 3 = 0
-         |           THEN concat(coalesce(source, ''), '@example.com ')
-         |           ELSE '' END,
-         |      CASE WHEN doc_id % 2 = 0
-         |           THEN concat('+91 555-',
-         |                       lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'), ' ')
-         |           ELSE '' END,
-         |      substr(coalesce(text, ''), 1, 60)) AS synth
-         |  FROM documents)
-         |SELECT doc_id,
-         |  regexp_replace(regexp_replace(synth, '$emailRe', '<EMAIL>', 'g'),
-         |                 '$phoneRe', '<PHONE>', 'g') AS scrubbed,
-         |  CAST(len(regexp_extract_all(synth, '$emailRe')) AS BIGINT) AS n_emails,
-         |  CAST(len(regexp_extract_all(synth, '$phoneRe')) AS BIGINT) AS n_phones
-         |FROM s""".stripMargin
-    },
-
-    "q_x_oov" ->
-      s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
-         |tok AS (SELECT doc_id, unnest(string_split_regex(norm, '\\s+')) AS term
-         |        FROM n WHERE norm <> ''),
-         |vocab AS (SELECT term FROM (
-         |  SELECT term, count(DISTINCT doc_id) AS df FROM tok
-         |  GROUP BY 1 ORDER BY df DESC, term LIMIT 50)),
-         |cnt AS (SELECT doc_id, count(*) AS n_tokens,
-         |          sum(CASE WHEN term IN (SELECT term FROM vocab)
-         |              THEN 1 ELSE 0 END) AS n_in
-         |        FROM tok GROUP BY 1)
-         |SELECT d.doc_id,
-         |  CAST(coalesce(c.n_tokens, 0) AS BIGINT) AS n_tokens,
-         |  CAST(coalesce(c.n_in, 0) AS BIGINT) AS n_in_vocab,
-         |  CASE WHEN coalesce(c.n_tokens, 0) > 0
-         |       THEN round(CAST(c.n_tokens - c.n_in AS DOUBLE) / c.n_tokens, 6)
-         |       ELSE 0.0 END AS oov_rate
-         |FROM documents d LEFT JOIN cnt c USING (doc_id)""".stripMargin,
-
-    "q_x_sessions" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS t
-        |           FROM events),
-        |m AS (SELECT user_id, event_id, t,
-        |        CASE WHEN lag(t) OVER w IS NULL
-        |               OR t - lag(t) OVER w > 43200000000
-        |             THEN 1 ELSE 0 END AS ns
-        |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id)),
-        |s AS (SELECT user_id, t,
-        |        sum(ns) OVER (PARTITION BY user_id ORDER BY t, event_id
-        |                      ROWS UNBOUNDED PRECEDING) AS sess_id
-        |      FROM m)
-        |SELECT user_id, CAST(sess_id AS BIGINT) AS sess_id,
-        |       count(*) AS n_events, min(t) AS t_start, max(t) AS t_end
-        |FROM s GROUP BY 1, 2""".stripMargin,
-
-    "q_x_quantiles" ->
-      """SELECT lang, round(quantile_cont(n_chars, 0.5), 6) AS p50,
-        |       round(quantile_cont(n_chars, 0.9), 6) AS p90,
-        |       count(*) AS n
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    // keep is evaluated over the ROUNDED metrics (as the Spark side does),
-    // so threshold comparisons can't straddle a last-ULP difference
-    "q_x_gopher" ->
-      """WITH t AS (
-        |  SELECT doc_id, coalesce(text, '') AS txt,
-        |    CASE WHEN text IS NULL OR trim(text) = '' THEN []::VARCHAR[]
-        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
-        |  FROM documents),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(len(toks) AS BIGINT) AS n_words,
-        |    CASE WHEN len(toks) > 0
-        |         THEN round(CAST(list_sum(list_transform(toks, w -> len(w))) AS DOUBLE) / len(toks), 4)
-        |         ELSE 0.0 END AS mean_word_len,
-        |    CASE WHEN len(toks) > 0
-        |         THEN round(CAST(len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]'))) AS DOUBLE) / len(toks), 6)
-        |         ELSE 0.0 END AS alpha_word_frac,
-        |    CAST(len(list_intersect(list_distinct(list_transform(toks, w -> lower(w))),
-        |         ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stop_hits,
-        |    CASE WHEN len(toks) > 0
-        |         THEN round(CAST(len(regexp_replace(txt, '[^#]+', '', 'g'))
-        |                  + len(string_split_regex(txt, '\.\.\.|…')) - 1 AS DOUBLE) / len(toks), 6)
-        |         ELSE 0.0 END AS symbol_ratio
-        |  FROM t)
-        |SELECT doc_id, n_words, mean_word_len, alpha_word_frac, stop_hits,
-        |  symbol_ratio,
-        |  CAST(n_words BETWEEN 40 AND 100000
-        |       AND mean_word_len BETWEEN 3.0 AND 10.0
-        |       AND alpha_word_frac >= 0.8 AND stop_hits >= 1
-        |       AND symbol_ratio <= 0.1 AS BIGINT) AS keep
-        |FROM m""".stripMargin,
-
-    "q_x_domain_stats" ->
-      """WITH d AS (
-        |  SELECT source AS domain,
-        |    md5(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g'))) AS fp,
-        |    CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS nt
-        |  FROM documents)
-        |SELECT domain, count(*) AS n_docs,
-        |  CAST(count(DISTINCT fp) AS BIGINT) AS n_unique,
-        |  round(CAST(1 AS DOUBLE) - CAST(count(DISTINCT fp) AS DOUBLE) / count(*), 6) AS dup_rate,
-        |  CAST(sum(nt) AS BIGINT) AS total_tokens,
-        |  round(CAST(sum(nt) AS DOUBLE) / count(*), 4) AS mean_doc_tokens
-        |FROM d GROUP BY 1""".stripMargin,
-
-    // float→DOUBLE→DECIMAL(27,12) mirrors the Ivf oracle's proven cast
-    // chain; the exact-decimal sum makes accumulation order irrelevant
-    "q_x_embed_project" -> {
-      val cols = (0 until 8).map(j =>
-        s"""  CAST(sum(CASE WHEN ((i*73856093 + $j*19349663) % 97) % 2 = 0
-           |       THEN v ELSE -v END) AS DOUBLE) AS p$j""".stripMargin)
-        .mkString(",\n")
-      s"""WITH x AS (
-         |  SELECT vec_id, unnest(range(len(embedding))) AS i, embedding
-         |  FROM embeddings),
-         |v AS (
-         |  SELECT vec_id, CAST(i AS BIGINT) AS i,
-         |    CAST(CAST(embedding[CAST(i AS INT) + 1] AS DOUBLE) AS DECIMAL(27,12)) AS v
-         |  FROM x)
-         |SELECT vec_id,
-         |$cols
-         |FROM v GROUP BY vec_id""".stripMargin
-    },
-
-    // thresholds interpolated from Sampling.fracThreshold so both engines
-    // compare the hash against the exact same integers
-    "q_x_split" -> {
-      import graft.functions.Portable
-      val h = Portable.h60Sql("'split:' || CAST(doc_id AS VARCHAR)")
-      // the SAME threshold computation the Spark side uses — not an
-      // independently-derived literal that could differ in the last ulp
-      val Seq(t1, t2) = graft.ops.Sampling.splitThresholds(
-        Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05))
-      s"""SELECT doc_id,
-         |  CASE WHEN h < $t1 THEN 'train'
-         |       WHEN h < $t2 THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM (SELECT doc_id, $h % ${Portable.P} AS h FROM documents)""".stripMargin
-    },
-
-    "q_x_span_scrub" -> {
-      val n = 5
-      s"""WITH nrm AS (SELECT doc_id, ${normSql("text")} AS t FROM documents),
-         |w AS (SELECT doc_id, CASE WHEN t = '' THEN CAST([] AS VARCHAR[])
-         |        ELSE string_split_regex(t, '\\s+') END AS w FROM nrm),
-         |pos AS (
-         |  SELECT doc_id, unnest(list_transform(range(len(w)),
-         |    i -> {'p': i, 'wd': w[i+1]}), recursive := true)
-         |  FROM w),
-         |starts AS (
-         |  SELECT doc_id, unnest(list_transform(range(len(w) - $n + 1),
-         |    i -> {'st': i, 'sh': array_to_string(w[i+1:i+$n], ' ')}), recursive := true)
-         |  FROM w WHERE len(w) >= $n),
-         |freq AS (
-         |  SELECT sh FROM (SELECT DISTINCT doc_id, sh FROM starts)
-         |  GROUP BY sh HAVING count(*) >= 2),
-         |cov AS (
-         |  SELECT DISTINCT s.doc_id, s.st + j.range AS p
-         |  FROM starts s JOIN freq USING (sh), range($n) j),
-         |kept AS (
-         |  SELECT p.doc_id,
-         |    array_to_string(list(p.wd ORDER BY p.p), ' ') AS text_clean,
-         |    count(*) AS kept
-         |  FROM pos p ANTI JOIN cov c ON p.doc_id = c.doc_id AND p.p = c.p
-         |  GROUP BY p.doc_id)
-         |SELECT w.doc_id, coalesce(k.text_clean, '') AS text_clean,
-         |  len(w.w) AS n_words, len(w.w) - coalesce(k.kept, 0) AS n_dropped
-         |FROM w LEFT JOIN kept k USING (doc_id)""".stripMargin
-    },
-
-    "q_x_split_leakage" -> {
-      import graft.functions.Portable
-      val h = Portable.h60Sql("'split:' || CAST(doc_id AS VARCHAR)")
-      val Seq(t1) = graft.ops.Sampling.splitThresholds(
-        Seq("train" -> 0.6, "test" -> 0.4))
-      s"""WITH n AS (
-         |  SELECT doc_id, ${normSql("text")} AS t FROM documents),
-         |s AS (
-         |  SELECT DISTINCT
-         |    CASE WHEN $h % ${Portable.P} < $t1 THEN 'train'
-         |         ELSE 'test' END AS split,
-         |    md5(array_to_string((string_split_regex(t, '\\s+'))[1:5], ' ')) AS fp
-         |  FROM n)
-         |SELECT a.split AS split_a, b.split AS split_b,
-         |  count(*) AS n_shared
-         |FROM s a JOIN s b ON a.fp = b.fp AND a.split < b.split
-         |GROUP BY 1, 2""".stripMargin
-    },
-
-    "q_x_mix" -> {
-      import graft.functions.Portable
-      def t(w: Double) = graft.ops.Sampling.fracThreshold(w)
-      val h = Portable.h60Sql("'mix:' || CAST(doc_id AS VARCHAR)")
-      s"""SELECT doc_id, source FROM (
-         |  SELECT doc_id, source, $h % ${Portable.P} AS h FROM documents)
-         |WHERE h < CASE source WHEN 'src1' THEN ${t(1.0)}
-         |                      WHEN 'src2' THEN ${t(0.5)}
-         |                      WHEN 'src3' THEN ${t(0.25)}
-         |                      ELSE ${t(0.1)} END""".stripMargin
-    },
-
-    // same double cosine on both engines (left-to-right folds), so the
-    // (cos DESC, nbr) window order is total and engine-portable
-    "q_x_knn_graph" ->
-      s"""WITH $ivfTrainCtes,
-         |${ivfAssignBlock("af", "c2", "")},
-         |p AS (
-         |  SELECT a.vec_id AS vec_id, b.vec_id AS nbr,
-         |    CASE WHEN sqrt(list_inner_product(a.e, a.e)) * sqrt(list_inner_product(b.e, b.e)) > 0
-         |         THEN list_inner_product(a.e, b.e) /
-         |              (sqrt(list_inner_product(a.e, a.e)) * sqrt(list_inner_product(b.e, b.e)))
-         |         ELSE 0.0 END AS cos
-         |  FROM af a JOIN af b ON a.cell = b.cell AND a.vec_id <> b.vec_id)
-         |SELECT vec_id, nbr, CAST(rank AS BIGINT) AS rank,
-         |  round(cos, 6) AS cos_sim FROM (
-         |  SELECT vec_id, nbr, cos,
-         |    row_number() OVER (PARTITION BY vec_id
-         |                       ORDER BY cos DESC, nbr) AS rank
-         |  FROM p)
-         |WHERE rank <= 3""".stripMargin,
-
-    "q_x_dup_spans" ->
-      """WITH d0 AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')), '\s+') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    range(1, len(w) - 3),
-        |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4]))) AS shingle
-        |  FROM d0 WHERE len(w) >= 5),
-        |dfreq AS (SELECT shingle, count(*) AS df FROM sh GROUP BY 1),
-        |per AS (
-        |  SELECT sh.doc_id, count(*) AS n_shingles,
-        |    sum(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS n_dup
-        |  FROM sh JOIN dfreq USING (shingle) GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(n_shingles, 0) AS BIGINT) AS n_shingles,
-        |  CAST(coalesce(n_dup, 0) AS BIGINT) AS n_dup,
-        |  CASE WHEN coalesce(n_shingles, 0) > 0
-        |       THEN round(CAST(n_dup AS DOUBLE) / n_shingles, 6)
-        |       ELSE 0.0 END AS dup_frac
-        |FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id""".stripMargin,
-
-    // the bloom false-positive set is sketch-internal; the CONTRACT is
-    // exact batch/true-dup counts and zero false negatives
-    "q_x_bloom_gate" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    md5(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g'))) AS fp
-        |  FROM documents),
-        |b AS (SELECT fp FROM f WHERE doc_id > 400),
-        |c AS (SELECT DISTINCT fp FROM f WHERE doc_id <= 400)
-        |SELECT count(*) AS n_batch,
-        |  CAST(sum(CASE WHEN c.fp IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_true_dup,
-        |  CAST(0 AS BIGINT) AS n_missed
-        |FROM b LEFT JOIN c ON b.fp = c.fp""".stripMargin,
-
-    // assignment + distance replayed with the exact Spark formula tree
-    // ((|x|^2 - 2 x.c) + |c|^2, ties to the lowest cell)
-    "q_x_embed_outlier" ->
-      s"""WITH $ivfTrainCtes,
-         |ad AS (
-         |  SELECT vec_id, cell, d2 FROM (
-         |    SELECT v.vec_id, c.cell,
-         |      (list_inner_product(v.e, v.e) - 2.0 * list_inner_product(v.e, c.c)) + list_inner_product(c.c, c.c) AS d2,
-         |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |        (list_inner_product(v.e, v.e) - 2.0 * list_inner_product(v.e, c.c)) + list_inner_product(c.c, c.c),
-         |        c.cell) AS rn
-         |    FROM emb v, c2 c)
-         |  WHERE rn = 1)
-         |SELECT vec_id, CAST(cell AS BIGINT) AS cell, round(d2, 6) AS dist2
-         |FROM ad""".stripMargin,
-
-    // the four rule CTEs are the proven fragments of q_x_gopher /
-    // q_x_langid / q_x_dedup_keep / q_x_contamination, joined on doc_id
-    "q_x_curate" ->
-      """WITH t AS (
-        |  SELECT doc_id, coalesce(text, '') AS txt,
-        |    CASE WHEN text IS NULL OR trim(text) = '' THEN []::VARCHAR[]
-        |         ELSE string_split_regex(trim(text), '\s+') END AS toks
-        |  FROM documents),
-        |q AS (
-        |  SELECT doc_id,
-        |    CAST(len(toks) AS BIGINT) AS n_words,
-        |    CASE WHEN len(toks) > 0
-        |         THEN round(CAST(list_sum(list_transform(toks, w -> len(w))) AS DOUBLE) / len(toks), 4)
-        |         ELSE 0.0 END AS mwl,
-        |    CASE WHEN len(toks) > 0
-        |         THEN round(CAST(len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]'))) AS DOUBLE) / len(toks), 6)
-        |         ELSE 0.0 END AS awf,
-        |    CAST(len(list_intersect(list_distinct(list_transform(toks, w -> lower(w))),
-        |         ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS shh,
-        |    CASE WHEN len(toks) > 0
-        |         THEN round(CAST(len(regexp_replace(txt, '[^#]+', '', 'g'))
-        |                  + len(string_split_regex(txt, '\.\.\.|…')) - 1 AS DOUBLE) / len(toks), 6)
-        |         ELSE 0.0 END AS sr
-        |  FROM t),
-        |qual AS (
-        |  SELECT doc_id,
-        |    CAST(n_words BETWEEN 40 AND 100000 AND mwl BETWEEN 3.0 AND 10.0
-        |         AND awf >= 0.8 AND shh >= 1 AND sr <= 0.1 AS BIGINT) AS keep_quality
-        |  FROM q),
-        |ls AS (
-        |  SELECT doc_id, text,
-        |    len(string_split_regex(coalesce(text,''), '(?i)\b(the|and|of|to|is|in|that|it|for|was)\b')) - 1 AS en,
-        |    len(string_split_regex(coalesce(text,''), '(?i)\b(el|la|los|las|de|que|y|en|un|una|es|por)\b')) - 1 AS es,
-        |    len(string_split_regex(coalesce(text,''), '(?i)\b(der|die|das|und|ist|nicht|mit|ein|eine|zu|von)\b')) - 1 AS de,
-        |    len(string_split_regex(coalesce(text,''), '(?i)\b(le|la|les|des|est|et|une|dans|pour|que|du)\b')) - 1 AS fr
-        |  FROM documents),
-        |lang AS (
-        |  SELECT doc_id,
-        |    CAST(CASE WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN FALSE
-        |              WHEN greatest(en, es, de, fr) <= 0 THEN FALSE
-        |              WHEN en = greatest(en, es, de, fr) THEN TRUE
-        |              ELSE FALSE END AS BIGINT) AS keep_lang
-        |  FROM ls),
-        |f AS (
-        |  SELECT doc_id,
-        |    md5(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g'))) AS fp
-        |  FROM documents),
-        |keepd AS (SELECT min(doc_id) AS doc_id FROM f GROUP BY fp),
-        |d0 AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')), '\s+') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS shingle
-        |  FROM d0 WHERE len(w) >= 3),
-        |bsh AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 50 = 0),
-        |hits AS (
-        |  SELECT doc_id, count(*) AS n_hits
-        |  FROM sh JOIN bsh USING (shingle) GROUP BY 1)
-        |SELECT d.doc_id, qual.keep_quality, lang.keep_lang,
-        |  CAST(k.doc_id IS NOT NULL AS BIGINT) AS keep_dedup,
-        |  CAST(coalesce(h.n_hits, 0) < 1 AS BIGINT) AS keep_clean,
-        |  CAST(qual.keep_quality = 1 AND lang.keep_lang = 1
-        |       AND k.doc_id IS NOT NULL
-        |       AND coalesce(h.n_hits, 0) < 1 AS BIGINT) AS curated
-        |FROM documents d
-        |JOIN qual USING (doc_id) JOIN lang USING (doc_id)
-        |LEFT JOIN keepd k ON k.doc_id = d.doc_id
-        |LEFT JOIN hits h ON h.doc_id = d.doc_id""".stripMargin,
-
-    "q_x_snapshot_diff" ->
-      """WITH o AS (
-        |  SELECT doc_id,
-        |    md5(trim(regexp_replace(lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g'))) AS fp
-        |  FROM documents WHERE doc_id <= 400),
-        |n AS (
-        |  SELECT doc_id,
-        |    md5(trim(regexp_replace(lower(
-        |      CASE WHEN doc_id % 7 = 0 THEN concat(coalesce(text, ''), ' v2')
-        |           ELSE coalesce(text, '') END), '[^\p{L}\p{N}]+', ' ', 'g'))) AS fp
-        |  FROM documents WHERE doc_id > 100)
-        |SELECT CASE WHEN o.fp IS NULL THEN 'added'
-        |            WHEN n.fp IS NULL THEN 'removed'
-        |            WHEN o.fp <> n.fp THEN 'changed'
-        |            ELSE 'unchanged' END AS status,
-        |  count(*) AS n
-        |FROM o FULL OUTER JOIN n USING (doc_id)
-        |GROUP BY 1""".stripMargin,
-
-    "q_x_length_hist" ->
-      """SELECT CASE WHEN coalesce(n_chars, 0) <= 0 THEN CAST(0 AS BIGINT)
-        |            ELSE CAST(length(bin(n_chars)) - 1 AS BIGINT) END AS bucket,
-        |  count(*) AS n
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "q_x_pivot" -> {
-      val cols = (0 until 5).map(i =>
-        s"  CAST(sum(CASE WHEN source = 'src$i' THEN 1 ELSE 0 END) AS BIGINT) AS src$i")
-        .mkString(",\n")
-      s"""SELECT lang,
-         |$cols
-         |FROM documents WHERE source IN ('src0','src1','src2','src3','src4')
-         |GROUP BY 1""".stripMargin
-    },
-
-    "q_x_rollup" ->
-      """WITH d AS (
-        |  SELECT source, lang,
-        |    CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS nt
-        |  FROM documents)
-        |SELECT source, lang, count(*) AS n_docs,
-        |  CAST(sum(nt) AS BIGINT) AS total_tokens
-        |FROM d GROUP BY ROLLUP (source, lang)""".stripMargin,
-
-    // DuckDB strlen = bytes (its octet_length is blob-only); nfc_normalize
-    // is the engine's NFC — same canonical form the JDK Normalizer emits
-    "q_x_nfc" ->
-      s"""WITH s AS (
-         |  SELECT doc_id,
-         |    substring(coalesce(text, ''), 1, 40) || ' ' ||
-         |      CASE WHEN doc_id % 2 = 0 THEN '${QNfc.Decomposed}'
-         |           ELSE '${QNfc.Precomposed}' END AS syn
-         |  FROM documents)
-         |SELECT doc_id, nfc_normalize(syn) AS norm_text,
-         |  CAST(strlen(syn) - strlen(nfc_normalize(syn)) AS BIGINT) AS bytes_folded
-         |FROM s""".stripMargin,
-
     // byte-width clamp on whole-char boundaries: keep = the largest char
     // prefix whose byte length (strlen) fits the declared 64-byte width
     "q_x_copy_clamp" ->
@@ -5862,415 +653,6 @@ object Queries {
         |  CAST(length(substring(s, 1, CAST(keep AS INT))) AS BIGINT) AS clamped_chars
         |FROM cut""".stripMargin,
 
-    "q_x_cohort_retention" ->
-      """WITH e AS (
-        |  SELECT user_id, CAST(ts AS DATE) AS day FROM events),
-        |c AS (
-        |  SELECT user_id, day,
-        |    min(day) OVER (PARTITION BY user_id) AS cohort_day
-        |  FROM e)
-        |SELECT cohort_day, CAST(day - cohort_day AS BIGINT) AS day_offset,
-        |  count(DISTINCT user_id) AS n_users
-        |FROM c GROUP BY 1, 2""".stripMargin,
-
-    // stage i's time = earliest stage-i event at-or-after stage i-1's
-    // time, per user; the per-user table chains by join-on-user (the
-    // engine's window chain computes the identical per-partition values)
-    "q_x_funnel" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type, epoch_ns(ts) // 1000 AS t
-        |  FROM events),
-        |u0 AS (
-        |  SELECT user_id,
-        |    min(CASE WHEN event_type = 'signup' THEN t END) AS t0
-        |  FROM e GROUP BY user_id),
-        |u1 AS (
-        |  SELECT e.user_id,
-        |    min(CASE WHEN e.event_type = 'view' AND e.t >= u0.t0
-        |      THEN e.t END) AS t1
-        |  FROM e JOIN u0 USING (user_id) GROUP BY e.user_id),
-        |u2 AS (
-        |  SELECT e.user_id,
-        |    min(CASE WHEN e.event_type = 'click' AND e.t >= u1.t1
-        |      THEN e.t END) AS t2
-        |  FROM e JOIN u1 USING (user_id) GROUP BY e.user_id),
-        |u3 AS (
-        |  SELECT e.user_id,
-        |    min(CASE WHEN e.event_type = 'purchase' AND e.t >= u2.t2
-        |      THEN e.t END) AS t3
-        |  FROM e JOIN u2 USING (user_id) GROUP BY e.user_id)
-        |SELECT count(t0) AS n_stage1, count(t1) AS n_stage2,
-        |  count(t2) AS n_stage3, count(t3) AS n_stage4
-        |FROM u0 LEFT JOIN u1 USING (user_id)
-        |  LEFT JOIN u2 USING (user_id) LEFT JOIN u3 USING (user_id)""".stripMargin,
-
-    "q_x_anomaly" ->
-      """WITH d AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    sum(value) AS day_value
-        |  FROM events GROUP BY 1, 2),
-        |z AS (
-        |  SELECT event_type, day, day_value,
-        |    CASE WHEN stddev_samp(day_value)
-        |             OVER (PARTITION BY event_type) IS NULL
-        |           OR stddev_samp(day_value)
-        |             OVER (PARTITION BY event_type) = 0
-        |      THEN 0.0
-        |      ELSE (day_value -
-        |            avg(day_value) OVER (PARTITION BY event_type)) /
-        |           stddev_samp(day_value) OVER (PARTITION BY event_type)
-        |    END AS z
-        |  FROM d)
-        |SELECT event_type, day, round(day_value, 4) AS day_value,
-        |  round(z, 4) AS z, abs(round(z, 4)) >= 2.0 AS is_anomaly
-        |FROM z""".stripMargin,
-
-    "q_x_trending" ->
-      """WITH d AS (
-        |  SELECT event_type,
-        |    datediff('day', CAST(ts AS DATE), DATE '2024-01-30') AS age
-        |  FROM events),
-        |w AS (
-        |  SELECT event_type,
-        |    (CAST(1 AS BIGINT) << CAST(40 - least(age // 7, 40) AS INT))
-        |      AS scaled
-        |  FROM d WHERE age >= 0)
-        |SELECT event_type, count(*)::BIGINT AS n_events,
-        |  CAST(sum(scaled) AS DOUBLE) / 1099511627776.0 AS decayed_count
-        |FROM w GROUP BY event_type""".stripMargin,
-
-    "q_x_perplexity" ->
-      graft.ops.LangModel.bigramNllOracleSql("documents", "doc_id", "text"),
-
-    "q_x_basket_pairs" ->
-      """WITH li AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
-        |  FROM lineitem)
-        |SELECT a.p AS p, b.p AS p2, count(*) AS support
-        |FROM li a JOIN li b ON a.ok = b.ok AND a.p < b.p
-        |GROUP BY a.p, b.p
-        |ORDER BY support DESC, a.p, b.p LIMIT 20""".stripMargin,
-
-    "q_x_gini" ->
-      """WITH c AS (
-        |  SELECT user_id, count(*) AS c FROM events GROUP BY 1),
-        |r AS (
-        |  SELECT c, CAST(row_number() OVER (ORDER BY c, user_id)
-        |    AS BIGINT) AS rk FROM c),
-        |a AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(c) AS BIGINT) AS total,
-        |    CAST(sum(rk * c) AS BIGINT) AS rankmass FROM r)
-        |SELECT n, total,
-        |  round((2.0 * CAST(rankmass AS DOUBLE)) /
-        |    (CAST(n AS DOUBLE) * CAST(total AS DOUBLE)) -
-        |    CAST(n + 1 AS DOUBLE) / CAST(n AS DOUBLE), 6) AS gini
-        |FROM a""".stripMargin,
-
-    "q_x_vocab_growth" ->
-      """WITH t AS (
-        |  SELECT source,
-        |    CASE WHEN trim(regexp_replace(lower(coalesce(text, '')),
-        |           '[^\p{L}\p{N}]+', ' ', 'g')) = '' THEN []
-        |         ELSE string_split_regex(trim(regexp_replace(
-        |           lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')),
-        |           '\s+') END AS ls
-        |  FROM documents),
-        |w AS (SELECT source, unnest(ls) AS w FROM t)
-        |SELECT source, count(*) AS n_tokens,
-        |  count(DISTINCT w) AS n_vocab,
-        |  round(CAST(count(DISTINCT w) AS DOUBLE) /
-        |    CAST(count(*) AS DOUBLE), 6) AS ttr
-        |FROM w GROUP BY 1""".stripMargin,
-
-    "q_x_streaks" ->
-      """WITH d AS (
-        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-        |g AS (
-        |  SELECT user_id, day,
-        |    CAST(day - DATE '1970-01-01' AS BIGINT) -
-        |      row_number() OVER (PARTITION BY user_id ORDER BY day)
-        |      AS grp
-        |  FROM d),
-        |runs AS (
-        |  SELECT user_id, grp, count(*) AS len FROM g GROUP BY 1, 2)
-        |SELECT user_id, max(len) AS max_streak, count(*) AS n_streaks
-        |FROM runs GROUP BY 1""".stripMargin,
-
-    "q_x_lag_hist" ->
-      """WITH ev AS (SELECT event_id, user_id, event_type,
-        |              epoch_ns(ts) // 1000 AS t FROM events),
-        |p AS (SELECT event_id, user_id, t FROM ev
-        |      WHERE event_type = 'purchase'),
-        |c AS (SELECT event_id AS click_id, user_id, t AS ct FROM ev
-        |      WHERE event_type = 'click'),
-        |j AS (SELECT p.event_id, c.ct,
-        |        row_number() OVER (PARTITION BY p.event_id
-        |          ORDER BY c.ct DESC, c.click_id DESC) AS rn,
-        |        p.t
-        |      FROM p JOIN c ON p.user_id = c.user_id AND c.ct <= p.t),
-        |lags AS (SELECT t - ct AS lag FROM j WHERE rn = 1)
-        |SELECT CASE WHEN lag <= 0 THEN 0
-        |         ELSE CAST(length(bin(lag)) AS INTEGER) END
-        |  AS log2_bucket, count(*) AS n
-        |FROM lags GROUP BY 1""".stripMargin,
-
-    "q_x_url_dedup" -> {
-      val url = "'HTTPS://Example.COM/page/' || " +
-        "CAST(doc_id % 125 AS VARCHAR) || " +
-        "CASE WHEN doc_id % 4 = 0 THEN '?utm_source=x' " +
-        "WHEN doc_id % 4 = 1 THEN '#frag' " +
-        "WHEN doc_id % 4 = 2 THEN '?gclid=1&id=7' " +
-        "ELSE '?id=7' END"
-      s"""WITH u AS (SELECT doc_id, $url AS url FROM documents),
-         |c AS (SELECT doc_id,
-         |  ${graft.ops.Web.canonicalUrlSql("url")} AS canon FROM u)
-         |SELECT canon, min(doc_id) AS keep_doc, count(*) AS n_dups
-         |FROM c GROUP BY 1""".stripMargin
-    },
-
-    "q_x_markov" ->
-      """WITH p AS (
-        |  SELECT event_type,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS next_type
-        |  FROM events)
-        |SELECT event_type, next_type, count(*) AS n,
-        |  round(CAST(count(*) AS DOUBLE) /
-        |    CAST(sum(count(*)) OVER (PARTITION BY event_type) AS DOUBLE),
-        |    6) AS p
-        |FROM p WHERE next_type IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q_x_json_props" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))
-        |    AS BIGINT) AS sum_k,
-        |  count(DISTINCT CAST(json_extract_string(props, '$.k') AS BIGINT))
-        |    AS n_distinct_k,
-        |  min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
-        |  max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q_x_unpivot" ->
-      """WITH wide AS (
-        |  SELECT l_returnflag, sum(l_quantity) AS qty,
-        |    CAST(count(*) AS DOUBLE) AS rows,
-        |    CAST(sum(CAST(round(l_discount * 100) AS BIGINT)) AS DOUBLE)
-        |      AS disc_cents
-        |  FROM lineitem GROUP BY 1)
-        |UNPIVOT wide ON qty, rows, disc_cents
-        |  INTO NAME metric VALUE value""".stripMargin,
-
-    "q_x_pit_join" ->
-      """WITH stage AS (
-        |  SELECT user_id, value, event_id AS valid_from,
-        |    (event_type = 'error') AS is_del
-        |  FROM events WHERE event_type IN ('signup', 'click', 'error')),
-        |w AS (
-        |  SELECT user_id, value, is_del, valid_from,
-        |    lead(valid_from) OVER (PARTITION BY user_id
-        |      ORDER BY valid_from) AS valid_to
-        |  FROM stage),
-        |hist AS (SELECT user_id, value, valid_from, valid_to
-        |  FROM w WHERE NOT is_del),
-        |p AS (SELECT event_id, user_id, event_id AS v FROM events
-        |      WHERE event_type = 'purchase'),
-        |j AS (SELECT p.event_id, hist.value, hist.valid_to,
-        |        row_number() OVER (PARTITION BY p.event_id
-        |          ORDER BY hist.valid_from DESC) AS rn
-        |      FROM p JOIN hist ON p.user_id = hist.user_id
-        |        AND hist.valid_from <= p.v)
-        |SELECT p.event_id, p.user_id,
-        |  CASE WHEN j.valid_to IS NULL OR p.v < j.valid_to
-        |    THEN j.value END AS dim_value
-        |FROM p LEFT JOIN (SELECT * FROM j WHERE rn = 1) j
-        |  USING (event_id)""".stripMargin,
-
-    "q_x_rfm" ->
-      """WITH p AS (
-        |  SELECT user_id, epoch_ns(ts) // 1000 AS t, value FROM events
-        |  WHERE event_type = 'purchase'),
-        |h AS (SELECT max(t) AS horizon FROM p),
-        |prof AS (
-        |  SELECT user_id,
-        |    (SELECT horizon FROM h) - max(t) AS recency_us,
-        |    count(*) AS frequency,
-        |    round(sum(value), 4) AS monetary
-        |  FROM p GROUP BY user_id),
-        |seg AS (
-        |  SELECT *,
-        |    ntile(5) OVER (ORDER BY recency_us DESC, user_id) AS r,
-        |    ntile(5) OVER (ORDER BY frequency, user_id) AS f,
-        |    ntile(5) OVER (ORDER BY monetary, user_id) AS m
-        |  FROM prof)
-        |SELECT user_id, recency_us, frequency, monetary,
-        |  CAST(r AS VARCHAR) || CAST(f AS VARCHAR) || CAST(m AS VARCHAR)
-        |    AS segment
-        |FROM seg""".stripMargin,
-
-    "q_x_attribution" ->
-      """WITH ev AS (SELECT event_id, user_id, event_type,
-        |              epoch_ns(ts) // 1000 AS t FROM events),
-        |p AS (SELECT event_id, user_id, t FROM ev
-        |      WHERE event_type = 'purchase'),
-        |c AS (SELECT event_id AS click_id, user_id, t AS ct FROM ev
-        |      WHERE event_type = 'click'),
-        |j AS (SELECT p.event_id, c.click_id, c.ct,
-        |        row_number() OVER (PARTITION BY p.event_id
-        |          ORDER BY c.ct DESC, c.click_id DESC) AS rn
-        |      FROM p JOIN c ON p.user_id = c.user_id AND c.ct <= p.t)
-        |SELECT p.event_id, p.user_id, j.click_id, p.t - j.ct AS lag_us
-        |FROM p LEFT JOIN (SELECT * FROM j WHERE rn = 1) j
-        |  USING (event_id)""".stripMargin,
-
-    "q_x_gapfill" ->
-      """WITH e AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day FROM events
-        |  WHERE day(CAST(ts AS DATE)) % 5 <> 0),
-        |daily AS (
-        |  SELECT event_type, day, count(*) AS n FROM e GROUP BY 1, 2),
-        |spine AS (
-        |  SELECT event_type,
-        |    CAST(unnest(generate_series(CAST(mn AS TIMESTAMP),
-        |      CAST(mx AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS day
-        |  FROM (SELECT event_type, min(day) AS mn, max(day) AS mx
-        |        FROM daily GROUP BY 1))
-        |SELECT spine.event_type, spine.day, coalesce(n, 0) AS n,
-        |  n IS NULL AS filled
-        |FROM spine LEFT JOIN daily
-        |  ON spine.event_type = daily.event_type
-        |  AND spine.day = daily.day""".stripMargin,
-
-    "q_x_tokenize" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(regexp_replace(lower(coalesce(text, '')),
-        |           '[^\p{L}\p{N}]+', ' ', 'g')) = '' THEN []
-        |         ELSE string_split_regex(trim(regexp_replace(
-        |           lower(coalesce(text, '')), '[^\p{L}\p{N}]+', ' ', 'g')),
-        |           '\s+') END AS ls
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(ls) AS w,
-        |    unnest(generate_series(1, len(ls))) AS pos
-        |  FROM t),
-        |c AS (SELECT w, count(*) AS c FROM tok GROUP BY 1
-        |  ORDER BY c DESC, w LIMIT 64),
-        |v AS (SELECT w,
-        |    CAST(row_number() OVER (ORDER BY c DESC, w) AS BIGINT) AS tid
-        |  FROM c),
-        |j AS (SELECT tok.doc_id, tok.pos, coalesce(v.tid, 0) AS tid
-        |  FROM tok LEFT JOIN v USING (w)),
-        |agg AS (
-        |  SELECT doc_id,
-        |    string_agg(CAST(tid AS VARCHAR), ' ' ORDER BY pos) AS ids,
-        |    CAST(count(*) AS BIGINT) AS n_tokens,
-        |    CAST(count(CASE WHEN tid = 0 THEN 1 END) AS BIGINT) AS n_oov
-        |  FROM j GROUP BY 1)
-        |SELECT d.doc_id, coalesce(ids, '') AS ids,
-        |  coalesce(n_tokens, 0) AS n_tokens, coalesce(n_oov, 0) AS n_oov
-        |FROM documents d LEFT JOIN agg USING (doc_id)""".stripMargin,
-
-    "q_x_html_strip" -> {
-      val html = "'<html><head><script>var x=1;</script>' || " +
-        "'<style>p{color:red}</style></head><body>' || " +
-        "CASE WHEN doc_id % 2 = 0 THEN '<!-- hidden -->' ELSE '' END || " +
-        "'<p class=\"main\">' || coalesce(text, '') || " +
-        "'</p><div>Tom &amp; Jerry &lt;3 &quot;cheese&quot;</div>' || " +
-        "'</body></html>'"
-      s"""WITH w AS (SELECT doc_id, $html AS html FROM documents)
-         |SELECT doc_id,
-         |  ${graft.ops.Web.htmlToTextSql("html")} AS clean,
-         |  CAST(length(${graft.ops.Web.htmlToTextSql("html")}) AS BIGINT)
-         |    AS n_chars
-         |FROM w""".stripMargin
-    },
-
-    "q_x_url_canon" -> {
-      val url = "'HTTPS://Example.COM/Path/' || CAST(doc_id AS VARCHAR) || " +
-        "CASE WHEN doc_id % 4 = 0 " +
-        "  THEN '?utm_source=x&id=7&utm_campaign=y#frag' " +
-        "WHEN doc_id % 4 = 1 THEN '?gclid=abc' " +
-        "WHEN doc_id % 4 = 2 THEN '?id=7&fbclid=z&x=1' " +
-        "ELSE '#top' END"
-      s"""WITH w AS (SELECT doc_id, $url AS url FROM documents)
-         |SELECT doc_id, url,
-         |  ${graft.ops.Web.canonicalUrlSql("url")} AS canon
-         |FROM w""".stripMargin
-    },
-
-    // unrolled 3-step GD replay: per-iteration CTEs hold the exact
-    // scaled-long weights; scoring cross-joins the 1-row final weights
-    "q_x_quality_model" -> {
-      import graft.ops.QualityModel
-      val words = "CASE WHEN text IS NULL OR trim(text) = '' THEN 0 " +
-        "ELSE len(string_split_regex(trim(text), '\\s+')) END"
-      val featSql = Seq(
-        "1.0",
-        "CAST(least(n_chars, 2000) AS DOUBLE) / 2000.0",
-        s"CAST(least($words, 200) AS DOUBLE) / 200.0",
-        "CAST(length(regexp_replace(coalesce(text, ''), '[^0-9]', '', " +
-          "'g')) AS DOUBLE) / CAST(greatest(length(coalesce(text, '')), 1)" +
-          " AS DOUBLE)")
-      val labelSql = s"CASE WHEN ($words) >= 40 THEN 1.0 ELSE 0.0 END"
-      s"""WITH ${QualityModel.trainCtes("documents", featSql, labelSql,
-             iters = 3, lrNum = 4L, passthrough = Seq("doc_id"))}
-         |SELECT doc_id,
-         |  round(${QualityModel.scoreSql(3, 4)}, 6) AS score,
-         |  round(${QualityModel.scoreSql(3, 4)}, 6) >= 0.5 AS keep,
-         |  w3.w0 AS w0, w3.w1 AS w1, w3.w2 AS w2, w3.w3 AS w3
-         |FROM feats CROSS JOIN w3""".stripMargin
-    },
-
-    // RE2 bare script classes == Java's Is-prefixed ones (same Unicode
-    // Script property); dominant script = FIRST script in list order
-    // reaching the max letter count, 'other' when no profiled script hits
-    "q_x_script" ->
-      """WITH s AS (
-        |  SELECT doc_id, coalesce(text, '') ||
-        |    CASE WHEN doc_id % 3 = 0 THEN ' привет мир'
-        |         WHEN doc_id % 3 = 1 THEN ' 你好世界'
-        |         ELSE '' END AS t
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id,
-        |    CAST(length(regexp_replace(t, '[^\p{L}]', '', 'g')) AS BIGINT)
-        |      AS n_letters,
-        |    CAST(length(regexp_replace(t, '[^\p{Latin}]', '', 'g'))
-        |      AS BIGINT) AS c_latin,
-        |    CAST(length(regexp_replace(t, '[^\p{Cyrillic}]', '', 'g'))
-        |      AS BIGINT) AS c_cyrillic,
-        |    CAST(length(regexp_replace(t, '[^\p{Han}]', '', 'g'))
-        |      AS BIGINT) AS c_han,
-        |    CAST(length(regexp_replace(t, '[^\p{Arabic}]', '', 'g'))
-        |      AS BIGINT) AS c_arabic
-        |  FROM s)
-        |SELECT doc_id, n_letters,
-        |  round(CASE WHEN n_letters > 0
-        |    THEN CAST(c_latin AS DOUBLE) / n_letters ELSE 0.0 END, 4)
-        |    AS frac_latin,
-        |  round(CASE WHEN n_letters > 0
-        |    THEN CAST(c_cyrillic AS DOUBLE) / n_letters ELSE 0.0 END, 4)
-        |    AS frac_cyrillic,
-        |  round(CASE WHEN n_letters > 0
-        |    THEN CAST(c_han AS DOUBLE) / n_letters ELSE 0.0 END, 4)
-        |    AS frac_han,
-        |  round(CASE WHEN n_letters > 0
-        |    THEN CAST(c_arabic AS DOUBLE) / n_letters ELSE 0.0 END, 4)
-        |    AS frac_arabic,
-        |  CASE
-        |    WHEN greatest(c_latin, c_cyrillic, c_han, c_arabic) = 0
-        |      THEN 'other'
-        |    WHEN c_latin = greatest(c_latin, c_cyrillic, c_han, c_arabic)
-        |      THEN 'latin'
-        |    WHEN c_cyrillic = greatest(c_latin, c_cyrillic, c_han, c_arabic)
-        |      THEN 'cyrillic'
-        |    WHEN c_han = greatest(c_latin, c_cyrillic, c_han, c_arabic)
-        |      THEN 'han'
-        |    ELSE 'arabic' END AS script
-        |FROM c""".stripMargin,
-
     "q5_local_supplier" ->
       """SELECT n_name,
         |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
@@ -6286,44 +668,6 @@ object Queries {
         |WHERE r_name = 'ASIA'
         |  AND o_orderdate >= TIMESTAMP '1996-01-01'
         |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY 1 ORDER BY revenue DESC, n_name""".stripMargin,
-
-    // same synthetic furniture as the engine side; boilerplate = lines
-    // in >= 2 docs AND >= 50% of the source's docs
-    "q_x_boilerplate" ->
-      """WITH src AS (
-        |  SELECT doc_id, source,
-        |    'Subscribe to ' || coalesce(source, '') || ' newsletter' ||
-        |    chr(10) || coalesce(text, '') || chr(10) ||
-        |    CASE WHEN doc_id % 7 = 0 THEN 'Limited time offer'
-        |         ELSE 'ref ' || CAST(doc_id AS VARCHAR) END AS synth
-        |  FROM documents),
-        |t AS (SELECT doc_id, source, string_split(synth, chr(10)) AS ls
-        |  FROM src),
-        |l AS (SELECT doc_id, source, unnest(ls) AS line,
-        |    unnest(generate_series(1, len(ls))) AS pos
-        |  FROM t),
-        |perkey AS (SELECT source, count(DISTINCT doc_id) AS n_docs
-        |  FROM src GROUP BY source),
-        |df AS (
-        |  SELECT source, line, count(*) AS df FROM (
-        |    SELECT DISTINCT source, line, doc_id FROM l
-        |    WHERE trim(line) <> '') GROUP BY 1, 2),
-        |boiler AS (
-        |  SELECT df.source, df.line FROM df JOIN perkey USING (source)
-        |  WHERE df.df >= 2 AND df.df >= perkey.n_docs * 0.5),
-        |kept AS (
-        |  SELECT l.doc_id,
-        |    string_agg(l.line, chr(10) ORDER BY l.pos) AS clean_text,
-        |    count(*) AS n_kept
-        |  FROM l LEFT JOIN boiler
-        |    ON l.source = boiler.source AND l.line = boiler.line
-        |  WHERE boiler.line IS NULL GROUP BY l.doc_id),
-        |total AS (SELECT doc_id, count(*) AS n_lines FROM l GROUP BY 1)
-        |SELECT total.doc_id, coalesce(kept.clean_text, '') AS clean_text,
-        |  coalesce(kept.n_kept, 0) AS n_kept,
-        |  CAST(total.n_lines - coalesce(kept.n_kept, 0) AS BIGINT)
-        |    AS n_dropped
-        |FROM total LEFT JOIN kept USING (doc_id)""".stripMargin
+        |GROUP BY 1 ORDER BY revenue DESC, n_name""".stripMargin
   )
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
   *
   * The real surface lives in [[graft.Queries]] (one entry per implemented
   * SURVEY §2 operator, each with a DuckDB oracle) and the library packages
-  * graft.cdc / graft.mask / graft.merge / graft.ops.
+  * graft.cdc / graft.mask / graft.merge.
   */
 object SparkEntry {
   /** Flagship: the full SCD-1 CDC merge (dedupe → anti-join → op-filter →

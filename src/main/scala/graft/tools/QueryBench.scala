@@ -20,8 +20,7 @@ object QueryBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // session config MUST mirror graft.Bench exactly — an A/B harness
     // with a different engine config (e.g. AQE off) times a different
-    // plan and its numbers can't be compared against BENCH.json (first
-    // measured: q_x_minhash_lsh 14.7 s warm without AQE vs 2.7 s with)
+    // plan and its numbers can't be compared against BENCH.json
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-querybench")
@@ -31,16 +30,6 @@ object QueryBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // same prelude as Bench: persisted-index builds amortize out of the
-    // timed runs (the indexed queries time the probe, not the build)
-    try graft.IndexStore.minhashSigs(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.IndexStore.dsirRatios(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.IndexStore.annIvf(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.IndexStore.annIvfPq(spark, sfDir)
-    catch { case _: Throwable => () }
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       val secs = (1 to nRuns).map { _ =>

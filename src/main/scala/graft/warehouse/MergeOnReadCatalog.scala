@@ -262,8 +262,7 @@ object MergeOnReadCatalog {
     * [[CdcMerge.deleteCommon]]'s anti-join); a delta carrying a migrated
     * (added) column widens the view and pre-migration rows read NULL (D4).
     *
-    * Shared by [[MergeOnReadCatalog.load]] (deltas read from delta dirs)
-    * and value-oracle-checked standalone as `q_x_mor_resolve`. */
+    * Used by [[MergeOnReadCatalog.load]] (deltas read from delta dirs). */
   def resolve(base: DataFrame, deltas: Seq[(Long, DataFrame)],
       pks: Seq[String]): DataFrame = {
     val all = deltas.map { case (seq, df) => df.withColumn(SeqCol, lit(seq)) }

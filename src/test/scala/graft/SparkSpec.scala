@@ -31,7 +31,7 @@ trait SparkSpec extends AnyFunSuite {
   /** Spark jobs started while `f` runs, with its result. */
   def jobsDuring[T](f: => T): (Int, T) = {
     import org.apache.spark.sql.graft.Shims
-    val lst = new graft.tools.TailProfile.JobWindows
+    val lst = new graft.streaming.JobWindows
     Shims.waitListenerBus(spark, 10000L)
     spark.sparkContext.addSparkListener(lst)
     try {

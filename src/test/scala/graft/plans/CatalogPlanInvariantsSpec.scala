@@ -2,10 +2,9 @@ package graft.plans
 
 import graft.SparkSpec
 
-/** Enforced plan invariants over the ENTIRE query catalog (PLANS.md is
-  * the human review artifact; this is the gate): no query may plan a
-  * CartesianProduct or BroadcastNestedLoopJoin at sf0.001. Catches the
-  * class of regression where an innocent-looking change (a crossJoin
+/** Enforced plan invariants over the ENTIRE query catalog: no query may
+  * plan a CartesianProduct or BroadcastNestedLoopJoin at sf0.001. Catches
+  * the class of regression where an innocent-looking change (a crossJoin
   * for scalars, a non-equi condition Catalyst can't band) reintroduces
   * an all-pairs plan that local row counts would hide until 100×.
   */
@@ -13,9 +12,11 @@ class CatalogPlanInvariantsSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  test("no catalog query plans a cartesian or nested-loop join") {
-    val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .flatMap { case (name, fn) =>
+  /** Every catalog query's executed plan, planned once for all the
+    * invariants below. */
+  private lazy val plans: Seq[(String, String)] = {
+    val out = graft.SparkEntry.queries.toSeq.sortBy(_._1)
+      .map { case (name, fn) =>
         val plan =
           try fn(spark, dir).queryExecution.executedPlan.toString
           catch {
@@ -23,11 +24,17 @@ class CatalogPlanInvariantsSpec extends SparkSpec {
               fail(s"$name failed to plan: ${e.getClass.getName}: " +
                 e.getMessage)
           }
-        if (plan.contains("CartesianProduct") ||
-          plan.contains("BroadcastNestedLoopJoin")) Some(name)
-        else None
+        name -> plan
       }
     graft.core.Metrics.drainUnpersist()
+    out
+  }
+
+  test("no catalog query plans a cartesian or nested-loop join") {
+    val offenders = plans.collect {
+      case (name, plan) if plan.contains("CartesianProduct") ||
+        plan.contains("BroadcastNestedLoopJoin") => name
+    }
     assert(offenders.isEmpty,
       s"cartesian/BNLJ plans in catalog: ${offenders.mkString(", ")}")
   }
@@ -39,28 +46,11 @@ class CatalogPlanInvariantsSpec extends SparkSpec {
     // caught by eyeballing the slowest-5 (the replan was 12.7×). Expand
     // also backs rollup/cube/grouping sets; the catalog intentionally
     // uses none of those, so ANY Expand in a catalog plan is a
-    // scale-killer until a reviewed entry lands in the allowlist.
-    // Reviewed intentional Expands — bounded by construction, NOT the
-    // multi-distinct trap:
-    //  - q_x_rollup: rollup() grouping sets expand each input row
-    //    |sets|=3 times map-side, immediately collapsed by partial
-    //    aggregation — the standard one-pass hierarchical report plan;
-    //  - q_x_unpivot: unpivot SEMANTICS are one output row per
-    //    unpivoted column — Expand IS the operator, amplification =
-    //    the requested output size.
-    val allowed = Set("q_x_rollup", "q_x_unpivot")
-    val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .flatMap { case (name, fn) =>
-        val plan =
-          try fn(spark, dir).queryExecution.executedPlan.toString
-          catch {
-            case e: Throwable =>
-              fail(s"$name failed to plan: ${e.getClass.getName}: " +
-                e.getMessage)
-          }
-        if (plan.contains("Expand") && !allowed(name)) Some(name) else None
-      }
-    graft.core.Metrics.drainUnpersist()
+    // scale-killer until a reviewed entry lands in this allowlist.
+    val allowed = Set.empty[String]
+    val offenders = plans.collect {
+      case (name, plan) if plan.contains("Expand") && !allowed(name) => name
+    }
     assert(offenders.isEmpty,
       s"Expand in catalog plans (multi-distinct/grouping-set trap — " +
         s"replan or allowlist with review): ${offenders.mkString(", ")}")

@@ -13,7 +13,7 @@ import pyarrow.dataset as ds
 import glob
 import os
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+TABLES = "region nation customer supplier part orders lineitem events documents".split()
 
 
 def canon(rows, colnames):
