@@ -2,10 +2,33 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and prints
-  * one JSON line {"metric":...,"value":...,"queries":{...}}. Results are
-  * fully materialized via a noop write (count() alone can prune work). */
+/** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR, gates
+  * the warm times against the per-query and total budgets, prints one JSON
+  * line {"metric":...,"value":...} and writes every field to BENCH.json.
+  * Results are fully materialized via a noop write (count() alone can
+  * prune work).
+  *
+  * Environment: SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS select the data
+  * and the local cores; SPARK_GRAFT_EPOCH_FILE,
+  * SPARK_GRAFT_QUERY_BUDGET_SEC, SPARK_GRAFT_TOTAL_BUDGET_SEC and
+  * SPARK_GRAFT_EPOCH_BUDGET_MULT are the budget gate's inputs.
+  *
+  * The CDC sink's own throughput, freshness and per-layer costs are
+  * measured by `perfbench/`, not here. */
 object Bench {
+
+  /** Per-query MIN over this many executions: the first execution pays
+    * Catalyst analysis + whole-stage-codegen javac + JIT warm-up (measured
+    * 5-70x the steady-state cost for expression-heavy queries), and
+    * min-of-2 cannot tell a contended host window from a plan regression;
+    * with 3 the min is robust to one bad window per query. */
+  val Runs = 3
+
+  /** One query's timings in seconds; -1 when no run succeeded. `cold` is
+    * the first successful run, `warm` the min over successful runs, `cpu`
+    * the min executor-CPU time over them. */
+  final case class Timing(cold: Double, warm: Double, cpu: Double)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -16,17 +39,13 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // canary knob: set SPARK_GRAFT_CODEGEN_FALLBACK=false to turn silent
-      // codegen de-vectorization into a hard error (perf triage)
-      .config("spark.sql.codegen.fallback",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_FALLBACK", "true"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // Executor-CPU accounting per query run (VERDICT r18 #2): wall
-    // drifts 15–20% intra-day on this host; CPU time doesn't. Each
-    // timed run gets its own job group so late listener events can
-    // never land in the next query's account.
+    // Executor-CPU accounting per query run: wall drifts 15–20% intra-day
+    // on a shared host; CPU time doesn't. Each timed run gets its own job
+    // group so late listener events can never land in the next query's
+    // account.
     val benchCpu = new BenchCpu
     spark.sparkContext.addSparkListener(benchCpu)
     var cpuRunSeq = 0L
@@ -39,245 +58,80 @@ object Bench {
       finally spark.sparkContext.clearJobGroup()
     }
 
-    def time(fn: => Unit): Double = {
-      val t0 = System.nanoTime()
-      fn
-      (System.nanoTime() - t0) / 1e9
-    }
-
     // JVM/codegen warm-up on the smallest SF so bench times measure the
     // engine, not first-run class loading.
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
 
-    // Host-noise canary: the same fixed cheap query timed at
-    // section boundaries. Code cannot regress between two timings of the
-    // same query, so a large POSITIVE delta means the host got slower
-    // under that window — phantom regressions self-diagnose. A NEGATIVE
-    // delta is benign JIT warm-up (measured ~-50% at sf0.001).
-    val canaryQuery = "q_p4_date"
-    def canarySec(samples: Int = 2): Double =
-      try {
-        // warm-up runs first (not timed): the first execution pays the
-        // query's one-time codegen, which is warm-up, not host state
-        (1 to 3).foreach(_ => time(SparkEntry.queries(canaryQuery)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()))
-        (1 to samples).map(_ => time(SparkEntry.queries(canaryQuery)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save())).min
-      } catch { case _: Throwable => -1.0 }
-    def deltaPct(a: Double, b: Double): String =
-      if (a > 0 && b > 0) (100.0 * (b - a) / a).toString else "null"
-    // Second canary of a DIFFERENT resource class (VERDICT r15 #3): the
-    // q_p4_date probe is CPU/scan-shaped and under-reads shuffle
-    // contention — r15's stated failure mode was "raw band narrow while
-    // the canary swings", i.e. a window the primary probe cannot see.
-    // This probe is a fixed two-exchange aggregate (groupBy suppkey →
-    // re-groupBy a derived bucket), so its wall is dominated by two
-    // shuffle write+fetch rounds. OBSERVATIONAL ONLY: section reruns and
-    // the adjusted totals stay keyed to the primary canary, budgets stay
-    // on RAW — the second factor rides the artifact per chunk so a
-    // degraded window self-classifies by resource type.
-    def canary2Sec(): Double =
-      try {
-        import org.apache.spark.sql.functions._
-        def run(): Unit = Tables.read(spark, sfDir, "lineitem")
-          .groupBy(col("l_suppkey"))
-          .agg(sum(col("l_quantity")).as("__q"), count(lit(1)).as("__n"))
-          .groupBy(pmod(col("l_suppkey"), lit(64)).as("__b"))
-          .agg(sum(col("__q")).as("__sq"), sum(col("__n")).as("__sn"))
-          .write.format("noop").mode("overwrite").save()
-        run() // warm-up: pays the one-time codegen, not host state
-        (1 to 2).map(_ => time(run())).min
-      } catch { case _: Throwable => -1.0 }
-    // --- section harness: every post-catalog section is bracketed by
-    // canary samples and wall-clock timestamps; a section whose
-    // bracketing canary delta exceeds ±rerunPct gets ONE automatic
-    // rerun (r11's official stream window was ~5x host-polluted and
-    // only the canary hinted at it — the bench now self-heals, and a
-    // section whose SECOND bracket is still skewed carries a `skewed`
-    // flag so the round artifact ships its own discount notice).
-    // Bodies are rerun-safe: each creates and removes its own temp
-    // dirs, and failures already resolve to sentinel values in-body.
-    // canaryBefore2 = the RERUN's own leading canary (-1 when no rerun):
-    // per-query mins usually come from the clean rerun, so the rerun's
-    // bracket — not the skewed first pass's — is the window that actually
-    // produced the reported number (ADVICE r14). Both brackets ship.
-    final case class SectionMeta(name: String, startMs: Long, endMs: Long,
-      canaryBefore: Double, canaryAfter: Double, rerun: Boolean,
-      skewed: Boolean, canaryBefore2: Double = -1.0,
-      shuffleBefore: Double = -1.0, shuffleAfter: Double = -1.0)
-    val sectionMetas = scala.collection.mutable.ArrayBuffer[SectionMeta]()
-    val rerunPct =
-      sys.env.getOrElse("SPARK_GRAFT_SECTION_RERUN_PCT", "15").toDouble
-    // both are seeded from the catalog's opening brackets below; the
-    // shuffle canary shares the boundary cadence but never triggers
-    // reruns; its "before" is the previous boundary's sample
-    var lastCanary = -1.0
-    var lastCanary2 = -1.0
-    def section[A](name: String)(body: => A): A = {
-      def skewedAt(before: Double, after: Double): Boolean =
-        before > 0 && after > 0 &&
-          math.abs(100.0 * (after - before) / before) > rerunPct
-      val t0 = System.currentTimeMillis()
-      var res = body
-      var end = System.currentTimeMillis()
-      var c = canarySec()
-      var c2 = canary2Sec()
-      if (rerunPct > 0 && skewedAt(lastCanary, c)) {
-        val before2 = c
-        res = body
-        end = System.currentTimeMillis()
-        c = canarySec()
-        c2 = canary2Sec()
-        sectionMetas += SectionMeta(name, t0, end, lastCanary, c,
-          rerun = true, skewed = skewedAt(before2, c),
-          canaryBefore2 = before2,
-          shuffleBefore = lastCanary2, shuffleAfter = c2)
-      } else
-        sectionMetas += SectionMeta(name, t0, end, lastCanary, c,
-          rerun = false, skewed = false,
-          shuffleBefore = lastCanary2, shuffleAfter = c2)
-      lastCanary = c
-      lastCanary2 = c2
-      res
-    }
-
-    // Per-query MIN over nRuns executions: the first execution pays Catalyst
-    // analysis + whole-stage-codegen javac + JIT warm-up (measured 5-70x the
-    // steady-state cost for the expression-heavy text queries); min-of-N
-    // reports the engine's steady-state throughput, which is what a resident
-    // cluster job sees after its first micro-batch.
-    // Default 3 runs: min-of-2 cannot tell a contended host window from a
-    // plan regression (round 6's phantom q_x_gopher 10x was exactly that);
-    // with 3 the min is robust to one bad window per query.
-    val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-
-    // canary sample bracketing the catalog loop (pairs with canary_end).
-    // min-of-3 for the brackets that set canary_window_factor: one extra
-    // sample after the 3 warmups makes a single contended read
-    // non-binding
-    val canaryStart = canarySec(samples = 3)
-    val canary2Start = canary2Sec()
-
-    // The catalog runs in canary-bracketed CHUNKS through the same
-    // section harness the post-catalog sections use (VERDICT r13 #1:
-    // the r13 normalization brackets SECTIONS, so a single-query host
-    // excursion inside the ~90 s catalog — the official artifact's
-    // minhash pair at 5.5× its three-seal local value — could not
-    // self-adjudicate). A skewed chunk gets the harness's ONE automatic
-    // rerun and every per-query result takes the MIN across ALL
-    // executions, so a host spike heals itself where possible; where it
-    // can't, the chunk's skewed flag and bracket factor ride the
-    // artifact per-violation (budget_violations_detail), so a flag
-    // carries its own adjudication evidence. Budgets still evaluate on
-    // RAW values.
-    val chunkSize =
-      sys.env.getOrElse("SPARK_GRAFT_CATALOG_CHUNK", "15").toInt
-    val allQueries = SparkEntry.queries.toSeq.sortBy(_._1)
-    val catChunks =
-      if (chunkSize > 0) allQueries.grouped(chunkSize).toSeq
-      else Seq(allQueries)
-    val runsAcc = scala.collection.mutable.LinkedHashMap[
-      String, (Double, Double, Double)]()
-    val chunkOf = scala.collection.mutable.HashMap[String, String]()
-    lastCanary = canaryStart
-    lastCanary2 = canary2Start
-    catChunks.zipWithIndex.foreach { case (chunk, ci) =>
-      val cname = f"catalog_$ci%02d"
-      chunk.foreach { case (n, _) => chunkOf(n) = cname }
-      section(cname) {
-        chunk.foreach { case (name, fn) =>
-          // per-run failure isolation: a transient failure on run k must
-          // not discard the other runs' measurements (min over successes)
-          val secs: Seq[(Double, String)] = (1 to nRuns).map { i =>
-            try timedGroupedRun(name)(fn(spark, sfDir).write
-              .format("noop").mode("overwrite").save())
-            catch {
-              case e: Throwable =>
-                System.err.println(
-                  s"[bench] $name run $i failed: ${e.getMessage}")
-                (-1.0, "")
-            } finally
-              // queries that localCheckpoint intermediates (the merge's
-              // phase breakdown) defer the unpersist; freeing per run keeps
-              // nRuns+1 executions from pinning that many checkpoint
-              // copies for the session
-              graft.core.Metrics.drainUnpersist()
-          }
-          // drain the async listener bus before reading CPU accounts
-          org.apache.spark.sql.graft.Shims.waitListenerBus(spark, 10000L)
-          val good = secs.map(_._1).filter(_ >= 0)
-          val cpuGood = secs.filter(_._1 >= 0)
-            .map(s => benchCpu.cpuSec(s._2)).filter(_ >= 0)
-          val prev = runsAcc.get(name)
-          // cold = first SUCCESSFUL run of the FIRST pass (a -1 sentinel
-          // would corrupt the cold-vs-min warm-up gap when run 1 fails
-          // transiently; a chunk rerun must not overwrite it)
-          val cold = prev.map(_._1).filter(_ >= 0)
-            .orElse(good.headOption).getOrElse(-1.0)
-          val mn = (prev.map(_._2).filter(_ >= 0).toSeq ++ good)
-            .minOption.getOrElse(-1.0)
-          // CPU min over successful runs: executor cycles are stable
-          // across windows — min matches the wall convention while
-          // shedding a stray competing-load inflation
-          val cpuMn = (prev.map(_._3).filter(_ >= 0).toSeq ++ cpuGood)
-            .minOption.getOrElse(-1.0)
-          runsAcc(name) = (cold, mn, cpuMn)
+    val timings: Seq[(String, Timing)] =
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        // per-run failure isolation: a transient failure on run k must
+        // not discard the other runs' measurements (min over successes)
+        val secs: Seq[(Double, String)] = (1 to Runs).map { i =>
+          try timedGroupedRun(name)(fn(spark, sfDir).write
+            .format("noop").mode("overwrite").save())
+          catch {
+            case e: Throwable =>
+              System.err.println(
+                s"[bench] $name run $i failed: ${e.getMessage}")
+              (-1.0, "")
+          } finally
+            // queries that localCheckpoint intermediates (the merge's
+            // phase breakdown) defer the unpersist; freeing per run keeps
+            // the runs from pinning that many checkpoint copies for the
+            // session
+            graft.core.Metrics.drainUnpersist()
         }
+        // drain the async listener bus before reading CPU accounts
+        org.apache.spark.sql.graft.Shims.waitListenerBus(spark, 10000L)
+        val good = secs.filter(_._1 >= 0)
+        name -> Timing(
+          cold = good.headOption.map(_._1).getOrElse(-1.0),
+          warm = good.map(_._1).minOption.getOrElse(-1.0),
+          cpu = good.map(g => benchCpu.cpuSec(g._2)).filter(_ >= 0)
+            .minOption.getOrElse(-1.0))
       }
-    }
-    val runsByQuery = runsAcc.toSeq
-    val results = runsByQuery.map { case (n, cm) => n -> cm._2 }
-    val cpuByQuery = runsByQuery.map { case (n, cm) => n -> cm._3 }
-    val totalCpu = cpuByQuery.map(_._2).filter(_ >= 0).sum
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // first-run times too: cold = Catalyst analysis + codegen javac + JIT;
-    // the gap between cold and min is warm-up, not plan cost
-    val qsCold = runsByQuery.map { case (k, cm) => "\"" + k + "\":" + cm._1 }
-      .mkString("{", ",", "}")
+    val results = timings.map { case (n, t) => n -> t.warm }
+    val cpuByQuery = timings.map { case (n, t) => n -> t.cpu }
     val total = results.map(_._2).filter(_ >= 0).sum
-    // headline fields that survive the driver's stdout truncation: the
+    val totalCpu = cpuByQuery.map(_._2).filter(_ >= 0).sum
+    def jsonMap(kv: Seq[(String, Double)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def jsonList(xs: Seq[String]): String =
+      xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // headline fields that survive stdout tail truncation: the
     // per-query map is file-only (BENCH.json), so the stdout line carries
     // the count, the failures, and the slowest tail instead
-    val qFailed = results.filter(_._2 < 0).map(_._1).toSeq.sorted
-    val slowest = results.toSeq.filter(_._2 >= 0).sortBy(-_._2).take(5)
+    val qFailed = results.filter(_._2 < 0).map(_._1).sorted
+    val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(5)
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
       .mkString("{", ",", "}")
-    // Warm wall budget — the AUTOMATED slowest-5 eyeball: at the
-    // official SF every query's warm min must fit the per-query budget
-    // and the catalog the total budget (r11's column profiler shipped
-    // at 7.6 s and was only caught by a human reading the slowest-5
-    // table). Violation count + worst offender ride the stdout
-    // headline; the seal checklist treats nonzero as a fail.
+
+    // Warm wall budget: at the official SF every query's warm min must fit
+    // the per-query budget and the catalog the total budget; without the
+    // gate a slow query shows only in the slowest-5 map. Budgets decide
+    // on this run's raw numbers.
     val queryBudget =
       sys.env.getOrElse("SPARK_GRAFT_QUERY_BUDGET_SEC", "2.5").toDouble
     val totalBudget =
       sys.env.getOrElse("SPARK_GRAFT_TOTAL_BUDGET_SEC", "90").toDouble
-    // Per-epoch total re-baseline (VERDICT r16 #2 / ISSUES #2): the
-    // host's catalog throughput drifts ~15-20% between rounds at a
-    // constant CPU-canary reading, so a fixed raw-total constant goes
-    // dead the first epoch shift. tools/epoch_ref.sh reruns a PINNED
-    // past binary on THIS host and writes EPOCH.json; when present,
-    // the total budget evaluates the query set BOTH catalogs share
-    // against ref_common_total × mult — fires on code regressions,
-    // silent on epoch drift AND on catalog growth (new operators are
-    // work, not regression). The env constant stays as the fallback.
+    // Per-epoch total re-baseline: the host's catalog throughput drifts
+    // ~15-20% between epochs, so a fixed raw-total constant goes dead the
+    // first epoch shift. tools/epoch_ref.sh reruns a PINNED past binary on
+    // this host and writes EPOCH.json; when present, the total budget
+    // evaluates the query set BOTH catalogs share against the ref's common
+    // total × mult — fires on code regressions, silent on epoch drift and
+    // on catalog growth. The env constant stays as the fallback.
     val epochPath = sys.env.getOrElse("SPARK_GRAFT_EPOCH_FILE",
       "EPOCH.json")
-    case class EpochRef(commit: String, total: Double,
-      queries: Map[String, Double], canaryRef: Double,
-      canary2Ref: Double, queriesCpu: Map[String, Double],
-      sectionRates: Map[String, Double])
+    case class EpochRef(commit: String, queries: Map[String, Double],
+      queriesCpu: Map[String, Double])
     val epochRef: Option[EpochRef] = try {
       val f = new java.io.File(epochPath)
       if (!f.exists) None
       else {
         val src = scala.io.Source.fromFile(f, "UTF-8")
         val txt = try src.mkString finally src.close()
-        def num(field: String): Option[Double] =
-          (""""""" + field + """"\s*:\s*(-?[0-9][0-9.eE+-]*)""").r
-            .findFirstMatchIn(txt).map(_.group(1).toDouble)
         val commit = """"epoch_ref_commit"\s*:\s*"([^"]+)"""".r
           .findFirstMatchIn(txt).map(_.group(1)).getOrElse("?")
         def objMap(field: String): Map[String, Double] =
@@ -291,56 +145,15 @@ object Bench {
                 .findAllMatchIn(txt.substring(open, close))
                 .map(m => m.group(1) -> m.group(2).toDouble).toMap
           }
-        // canary re-pins ride the same run: mean of the epoch run's
-        // brackets (both must be live samples)
-        def mid(a: Option[Double], b: Option[Double]): Double =
-          (a, b) match {
-            case (Some(x), Some(y)) if x > 0 && y > 0 => (x + y) / 2.0
-            case _ => -1.0
-          }
-        num("ref_total_sec").map(t => EpochRef(commit, t, objMap("queries"),
-          mid(num("ref_canary_start_sec"), num("ref_canary_end_sec")),
-          mid(num("ref_canary2_start_sec"), num("ref_canary2_end_sec")),
-          objMap("queries_cpu"), objMap("section_rates")))
+        // a file without the reference run's total is not an epoch run
+        """"ref_total_sec"\s*:\s*-?[0-9]""".r.findFirstIn(txt).map(_ =>
+          EpochRef(commit, objMap("queries"), objMap("queries_cpu")))
       }
     } catch { case _: Throwable => None }
-    // Section-rate heal rule (VERDICT r19 #2): queries already self-heal
-    // budget flags with a clean-bracket rerun; the stream/CDC/store
-    // throughputs shipped raw and were window-hostage (−30–60% swings in
-    // the r19 official artifact, adjudicated only via a lucky follow-up
-    // run). Each rate-bearing sub-bench now compares its first result
-    // against the epoch ref's `section_rates` (tools/epoch_ref.sh) and
-    // earns ONE same-session rerun when it lands >rateHealPct% below;
-    // the better rate ships and both runs ride the artifact. Inert
-    // until EPOCH.json carries section_rates.
-    val rateHealPct = sys.env
-      .getOrElse("SPARK_GRAFT_SECTION_RATE_HEAL_PCT", "25").toDouble
-    val rateReruns = scala.collection.mutable.ArrayBuffer[String]()
-    val rateRerunNames = scala.collection.mutable.ArrayBuffer[String]()
-    def rateHealed[A](metricKey: String)(run: => A)(rateOf: A => Double)
-        : A = {
-      val first = run
-      val ref = epochRef.flatMap(_.sectionRates.get(metricKey))
-        .filter(_ > 0)
-      if (BenchReport.rateNeedsHeal(rateOf(first), ref, rateHealPct)) {
-        val second = run
-        val useSecond = rateOf(second) > rateOf(first)
-        rateRerunNames += metricKey
-        rateReruns += f"$metricKey:first=${rateOf(first)}%.1f," +
-          f"second=${rateOf(second)}%.1f,ref=${ref.getOrElse(-1.0)}%.1f," +
-          s"used=${if (useSecond) "second" else "first"}"
-        if (useSecond) second else first
-      } else first
-    }
     val epochMult = sys.env
       .getOrElse("SPARK_GRAFT_EPOCH_BUDGET_MULT", "1.05").toDouble
-    // (head common-set total, ref common-set total) over live results.
-    // ADVICE r17 #4: a stale or partial EPOCH.json can shrink the
-    // common set to a handful of shared queries while the source field
-    // still reads epoch_ref — most of the catalog silently unguarded.
-    // The epoch-relative check now requires the common set to cover at
-    // least half the live head queries (floor 8); below that the env
-    // constant takes over and budget_total_source says why.
+    // (common-set size, head common-set total, ref common-set total) over
+    // live results
     def commonTotals(ref: Map[String, Double],
         head: Seq[(String, Double)]): (Int, Double, Double) = {
       val common = head.filter { case (n, s) =>
@@ -348,14 +161,16 @@ object Bench {
       (common.size, common.map(_._2).sum,
         common.map { case (n, _) => ref(n) }.sum)
     }
+    // Coverage floor: a stale or partial EPOCH.json can shrink the common
+    // set to a handful of shared queries, leaving most of the catalog
+    // unguarded while the source still reads epoch_ref. The epoch leg
+    // needs a common set of at least half the SMALLER of the ref set and
+    // the live head set (floor 8), so neither catalog growth (head > ref)
+    // nor a deliberately cut catalog (head < ref, every head query
+    // shared) erodes it into the env constant; below it the env constant
+    // takes over and budget_total_source says why.
     val epochCommonRaw: Option[(Int, Double, Double)] =
       epochRef.map(er => commonTotals(er.queries, results))
-    // The floor is half the SMALLER of the ref set and the live head
-    // set: catalog growth alone must never erode the epoch-relative
-    // guard into the env constant (head > ref), and neither must a
-    // deliberately cut catalog (head < ref, every head query shared);
-    // only a stale/partial EPOCH.json or mass query renames shrink the
-    // common set below it.
     val headLiveN = results.count(_._2 >= 0)
     val minCommonN = math.max(8,
       epochRef.map(er => math.min(er.queries.count(_._2 >= 0), headLiveN) / 2)
@@ -363,10 +178,9 @@ object Bench {
     val epochCommonTooSmall = epochCommonRaw.exists(_._1 < minCommonN)
     val epochCommon: Option[(Double, Double)] = epochCommonRaw
       .filter(_._1 >= minCommonN).map(c => (c._2, c._3))
-    // CPU leg (VERDICT r18 #2): when the epoch ref carries per-query
-    // executor-CPU totals, the TOTAL budget compares CPU-vs-CPU — the
-    // drift-immune basis — and wall drops to telemetry + the
-    // reference-envelope check. Same common-set floor discipline.
+    // CPU leg: when the epoch ref carries per-query executor-CPU totals,
+    // the total budget compares CPU-vs-CPU, the drift-immune basis. Same
+    // common-set floor.
     val epochCommonCpuRaw: Option[(Int, Double, Double)] =
       epochRef.filter(_.queriesCpu.nonEmpty)
         .map(er => commonTotals(er.queriesCpu, cpuByQuery))
@@ -376,856 +190,62 @@ object Bench {
     val epochCommonCpu: Option[(Double, Double)] = epochCommonCpuRaw
       .filter(_._1 >= minCommonNCpu).map(c => (c._2, c._3))
     val sfBudgeted = sfDir.contains("sf0.1") // budgets are sf0.1-calibrated
-    // Budget-basis chain: epoch CPU (drift-immune) → epoch wall →
-    // env constant; the source field names which leg evaluated
-    // (BenchReport.totalBudgetEval — spec'd, including the
-    // time-sliced-window case where wall flags and CPU doesn't).
+    // Budget-basis chain: epoch CPU → epoch wall → env constant; the
+    // source field names which leg evaluated.
     val (totalViolation, budgetTotalSource): (Seq[String], String) =
       if (!sfBudgeted) (Seq.empty, "off_sf")
       else BenchReport.totalBudgetEval(epochCommonCpu, epochCommon,
         epochCommonTooSmall, total, totalBudget, epochMult)
-    // Adjudication companion for a CPU-leg total flag (r20): local[32]
-    // executor CPU turned out to be CONTENTION-coupled (~2x swings at
-    // constant code between same-night runs — BENCHNOTES r20
-    // CPU-vs-cores table), so a lone total_cpu flag needs the wall
-    // leg's independent verdict next to it. false = the wall common-set
-    // total stayed under ref x mult while CPU flagged, i.e. the flag is
-    // a hot-cache window, not a code regression. Telemetry only —
-    // budgets still evaluate exactly as before.
-    val totalWallWouldFlag: Option[Boolean] =
-      epochCommon.map { case (head, ref) => head > ref * epochMult }
-    val queryViolationsRaw: Seq[(String, Double)] =
+    val queryViolations: Seq[String] =
       if (!sfBudgeted) Seq.empty
-      else results.toSeq.filter { case (n, s) => s > queryBudget }
-        .sortBy(-_._2)
-    val canaryEnd = canarySec(samples = 3)
-    val canary2End = canary2Sec()
-    // JSON null when either measurement failed — a -1.0 sentinel would
-    // read as a plausible small negative delta and hide the failure
-    val canaryDeltaPct: String = deltaPct(canaryStart, canaryEnd)
-    lastCanary = canaryEnd
-    lastCanary2 = canary2End
-
-    // Clean-bracket adjudication of per-query budget flags (VERDICT
-    // r18 #1): sections self-heal with an automatic rerun; individual
-    // queries did not — the r18 official artifact shipped q_x_pagerank
-    // at 11.98 s warm (5.4× its same-day seal) with no same-session
-    // evidence either way. Each flagged query (cap
-    // SPARK_GRAFT_BUDGET_RERUN_N) re-runs min-of-2 inside its own
-    // canary bracket HERE — same session, full catalog already behind
-    // it, so memory pressure and checkpoint state match the flagged
-    // execution. At-or-under budget on the rerun demotes the flag (the
-    // catalog-loop number was the window); still-over stays a
-    // violation carrying raw + rerun + CPU + its bracket. Rerun mins
-    // do NOT fold into the per-query results map: violators would get
-    // executions the rest of the catalog didn't.
-    val rerunCap =
-      sys.env.getOrElse("SPARK_GRAFT_BUDGET_RERUN_N", "8").toInt
-    final case class BudgetRerun(name: String, raw: Double,
-      rerun: Double, cpu: Double, canaryBefore: Double,
-      canaryAfter: Double, healed: Boolean)
-    val budgetReruns: Seq[BudgetRerun] =
-      queryViolationsRaw.take(rerunCap).map { case (name, raw) =>
-        val cb = canarySec()
-        val fn = SparkEntry.queries(name)
-        val rsecs: Seq[(Double, String)] = (1 to 2).map { _ =>
-          try timedGroupedRun(s"$name::rerun")(fn(spark, sfDir).write
-            .format("noop").mode("overwrite").save())
-          catch {
-            case e: Throwable =>
-              System.err.println(
-                s"[bench] $name budget rerun failed: ${e.getMessage}")
-              (-1.0, "")
-          } finally graft.core.Metrics.drainUnpersist()
-        }
-        org.apache.spark.sql.graft.Shims.waitListenerBus(spark, 10000L)
-        val goodR = rsecs.filter(_._1 >= 0)
-        val rmin = goodR.map(_._1).minOption.getOrElse(-1.0)
-        val rcpu = goodR.map(g => benchCpu.cpuSec(g._2)).filter(_ >= 0)
-          .minOption.getOrElse(-1.0)
-        val ca = canarySec()
-        BudgetRerun(name, raw, rmin, rcpu, cb, ca,
-          healed = rmin >= 0 && rmin <= queryBudget)
-      }
-    // keep the section harness's rolling canary honest about the time
-    // the reruns consumed
-    budgetReruns.lastOption.filter(_.canaryAfter > 0)
-      .foreach(r => lastCanary = r.canaryAfter)
-    val healedNames = budgetReruns.filter(_.healed).map(_.name).toSet
-    val queryViolations: Seq[String] = queryViolationsRaw.collect {
-      case (n, s) if !healedNames.contains(n) =>
-        val clean = budgetReruns.find(_.name == n).map(_.rerun)
-          .filter(_ >= 0)
-        f"$n:${clean.getOrElse(s)}%.2f"
-    }
+      else results.filter { case (_, s) => s > queryBudget }
+        .sortBy(-_._2).map { case (n, s) => f"$n:$s%.2f" }
     val budgetViolations: Seq[String] = totalViolation ++ queryViolations
-    val budgetRerunDetail: Seq[String] = budgetReruns.map { r =>
-      f"${r.name}:raw=${r.raw}%.2f,rerun=${r.rerun}%.2f," +
-        f"cpu=${r.cpu}%.2f,canary_before=${r.canaryBefore}%.4f," +
-        f"canary_after=${r.canaryAfter}%.4f,healed=${r.healed}"
-    }
 
-    // Window-normalized reporting (VERDICT r12 #3): this host's windows
-    // drift ±15%/hour, so a slow-window seal used to need a detached-
-    // worktree A/B to prove "same code, slow host". The canary's
-    // catalog-bracket mean divided by a pinned mid-band reference
-    // (calibrated from the r11/r12 seals' canary records; env-
-    // overridable when the box changes) gives the window factor; the
-    // adjusted wall = raw ÷ factor self-reports the same-code estimate.
-    // Budget thresholds stay on RAW — a real regression on a fast
-    // window must still trip — the adjusted values ride ALONGSIDE.
-    // env wins; else the epoch run's same-host bracket (tools/
-    // epoch_ref.sh) re-pins the ref; else the r11/r12-calibrated default
-    val canaryRef = sys.env.get("SPARK_GRAFT_CANARY_REF_SEC")
-      .map(_.toDouble)
-      .orElse(epochRef.map(_.canaryRef).filter(_ > 0))
-      .getOrElse(0.065)
-    val canaryWindowFactor: Double =
-      if (canaryStart > 0 && canaryEnd > 0 && canaryRef > 0)
-        ((canaryStart + canaryEnd) / 2.0) / canaryRef
-      else -1.0
-    // Per-violation window factor: a catalog query adjusts by ITS
-    // chunk's canary bracket (the local window it actually ran in),
-    // anything else (the total) by the whole-catalog factor. VERDICT
-    // r13 #6: each flag carries raw + adjusted + its chunk's skew
-    // verdict, so the artifact self-classifies window-caused flags; the
-    // seal checklist keys off adjusted for those while still failing
-    // raw flags on mid-band windows. For RERUN chunks the factor comes
-    // from the rerun's OWN bracket (canaryBefore2/after) — the window
-    // that produced the reported min — not the skewed first pass's.
-    def windowFactorFor(name: String): Double =
-      chunkOf.get(name)
-        .flatMap(cn => sectionMetas.find(_.name == cn))
-        .map { m =>
-          val before =
-            if (m.rerun && m.canaryBefore2 > 0) m.canaryBefore2
-            else m.canaryBefore
-          ((before + m.canaryAfter) / 2.0) / canaryRef
-        }
-        .filter(_ > 0)
-        .getOrElse(canaryWindowFactor)
-    // shuffle-canary analog, observational (never adjusts anything):
-    // ships per violation so "chunk CPU-canary ~1.0 but shuffle-canary
-    // high" — the seal-4 failure mode — is visible in the artifact
-    // ref = the r16 epoch's clean-window median (46 samples, seal 1,
-    // CPU-canary factor 0.975): canary2 factor 1.0 means "r16 baseline",
-    // NOT r14's epoch — the r16 A/B showed the r14 BINARY runs ~19%
-    // slower on this epoch at the same CPU-canary reading, so no canary
-    // can bridge epochs; factors compare windows WITHIN one.
-    val canary2Ref = sys.env.get("SPARK_GRAFT_CANARY2_REF_SEC")
-      .map(_.toDouble)
-      .orElse(epochRef.map(_.canary2Ref).filter(_ > 0))
-      .getOrElse(0.16)
-    val canary2WindowFactor: Double =
-      if (canary2Start > 0 && canary2End > 0 && canary2Ref > 0)
-        ((canary2Start + canary2End) / 2.0) / canary2Ref
-      else -1.0
-    def windowFactor2For(name: String): Double =
-      chunkOf.get(name)
-        .flatMap(cn => sectionMetas.find(_.name == cn))
-        // both samples must be live: with one at the -1.0 failure
-        // sentinel the average can still land positive and ship a
-        // bogus factor (ADVICE r16) — mirror the deltaPct guard
-        .filter(m => m.shuffleBefore > 0 && m.shuffleAfter > 0)
-        .map(m => ((m.shuffleBefore + m.shuffleAfter) / 2.0) / canary2Ref)
-        .filter(_ > 0)
-        .getOrElse(canary2WindowFactor)
-    // Probe-agreement rule (VERDICT r16 #1/#3): the two canaries have
-    // now each produced a garbage reading the OTHER called sane (r15
-    // seal 4: CPU ~1.0 in a slow window; r16 official: CPU 4.075 while
-    // shuffle read 1.116). When the factors diverge beyond the band,
-    // adjust by the probe CLOSER TO 1.0 — the milder correction; a
-    // single probe's excursion then cannot drive the adjustment. Within
-    // the band the primary (CPU) factor stays authoritative, so sealed
-    // history keeps its meaning.
-    val probeDivergenceBand =
-      sys.env.getOrElse("SPARK_GRAFT_CANARY_DIVERGENCE_BAND", "1.25")
-        .toDouble
-    def chosenFactorFor(name: String): Double = {
-      val f1 = windowFactorFor(name)
-      val f2 = windowFactor2For(name)
-      if (f1 > 0 && f2 > 0 &&
-          math.max(f1, f2) / math.min(f1, f2) > probeDivergenceBand)
-        if (math.abs(math.log(f1)) <= math.abs(math.log(f2))) f1 else f2
-      else f1
-    }
-    def probesDivergeFor(name: String): Boolean = {
-      val f1 = windowFactorFor(name)
-      val f2 = windowFactor2For(name)
-      f1 > 0 && f2 > 0 &&
-        math.max(f1, f2) / math.min(f1, f2) > probeDivergenceBand
-    }
-    // At-ref-window TOTAL estimate (VERDICT r17 #3, replacing r15's
-    // total_window_adjusted whose direction inverted on drifting
-    // windows): per-query chunk-adjusted sum when it agrees with the
-    // whole-run factor's direction (the r14 finding — chunk factors are
-    // locally accurate), raw ÷ the global factor when the chunks
-    // contradict it (the r17 artifact: chunk brackets drifted fast
-    // while the run-level factor read 1.21-slow, and the "adjusted"
-    // total moved UP 27%). The global factor applies the same
-    // probe-agreement rule the per-chunk path uses.
-    val globalChosenFactor: Double = {
-      val f1 = canaryWindowFactor
-      val f2 = canary2WindowFactor
-      if (f1 > 0 && f2 > 0 &&
-          math.max(f1, f2) / math.min(f1, f2) > probeDivergenceBand)
-        if (math.abs(math.log(f1)) <= math.abs(math.log(f2))) f1 else f2
-      else f1
-    }
-    val perChunkAdjustedTotal: Double =
-      if (canaryWindowFactor <= 0) -1.0
-      else results.filter(_._2 >= 0)
-        .map { case (n, s) => s / chosenFactorFor(n) }.sum
-    val (totalAtRefWindowEst, windowAdjustSource) =
-      BenchReport.atRefWindowEst(total, perChunkAdjustedTotal,
-        globalChosenFactor)
-    // Extreme-window self-notice: past this point the LINEAR canary
-    // model itself is suspect (measured r14: global factors 1.5+ over-
-    // corrected totals by ~20%); the artifact says so instead of
-    // shipping a confident wrong number.
-    val windowFactorExtreme: Boolean = canaryWindowFactor > 1.3
-    val budgetViolationsAdjusted: Seq[String] =
-      if (canaryWindowFactor <= 0) Seq.empty
-      else budgetViolations.map { v =>
-        val i = v.lastIndexOf(':')
-        val name = v.substring(0, i)
-        val adj = v.substring(i + 1).toDouble / chosenFactorFor(name)
-        f"$name:$adj%.2f"
-      }
-    val budgetViolationsDetail: Seq[String] =
-      if (canaryWindowFactor <= 0) Seq.empty
-      else budgetViolations.map { v =>
-        val i = v.lastIndexOf(':')
-        val name = v.substring(0, i)
-        val raw = v.substring(i + 1).toDouble
-        val f = windowFactorFor(name)
-        val chunk = chunkOf.getOrElse(name, "-")
-        val skewed = sectionMetas.find(_.name == chunk)
-          .exists(_.skewed)
-        val f2 = windowFactor2For(name)
-        val f2s = if (f2 > 0) f"$f2%.3f" else "null"
-        val used = chosenFactorFor(name)
-        val diverged = probesDivergeFor(name)
-        f"$name:raw=$raw%.2f,adj=${raw / used}%.2f,factor=$f%.3f," +
-          s"factor_shuffle=$f2s," +
-          f"factor_used=$used%.3f,probes_diverged=$diverged," +
-          s"chunk=$chunk,chunk_skewed=$skewed"
-      }
-
-    // CDC merge throughput (BASELINE.md engine benchmark plan): events/s
-    // through envelope transform → hash mask → SCD-1 merge.
-    val cdcMasker = new graft.mask.Masker(
-      graft.mask.MaskConfig(nonPiiKeys = Map("events_cdc" -> Seq("user_id"))),
-      "benchsalt")
-    def cdcTarget = {
-      import org.apache.spark.sql.functions._
-      Tables.read(spark, sfDir, "customer").select(
-        col("c_custkey").cast("string").as("user_id"),
-        format_string("%.2f", col("c_acctbal")).as("value"))
-    }
-    val ((cdcSec, nEvents), (phases, phasesTotal)) = section("cdc") {
-    val cdcMergeRes = rateHealed("cdc_events_per_sec") {
-      val stage0 = SparkEntry.queries("q_p_envelope_cdc")(spark, sfDir)
-      val masker = cdcMasker
-      val target = cdcTarget
-      val n = Tables.read(spark, sfDir, "events").count()
-      // same per-run failure isolation as the query loop: one transient
-      // failure must not abort the bench before the JSON line is written
-      val secs = (1 to nRuns).flatMap { i =>
-        try Some(time {
-          graft.merge.CdcMerge
-            .merge(target, masker(stage0, "events_cdc"), Seq("user_id"))
-            .write.format("noop").mode("overwrite").save()
-        }) catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] cdc merge run $i failed: ${e.getMessage}")
-            None
-        }
-      }
-      (secs.minOption.getOrElse(-1.0), n)
-    } (r => if (r._1 > 0) r._2 / r._1 else -1.0)
-
-    // Per-phase merge timings — the reference's loader histogram phases
-    // (BASELINE.md: dedupe, deletecommon, deleteop, copytarget).
-    // Phase breakdown via the engine's OWN instrumented path
-    // (Metrics.enablePhaseBreakdown — what processBatch exposes for the
-    // REDSHIFTSINK.md:155-171 histogram parity): copystage = masked-stage
-    // materialization, dedupe/deletecommon/deleteop = the recorder's
-    // checkpointed phases, copytarget = the final union + write. Each
-    // bucket is a serialized wall-clock fragment of ONE instrumented run,
-    // so the five buckets sum to cdc_phases_total_sec (minus driver glue)
-    // BY CONSTRUCTION. cdc_merge_sec above stays the throughput headline:
-    // the fused single-job plan, which is faster than the instrumented
-    // run precisely by the phase-materialization cost the breakdown
-    // opts into (see Metrics doc).
-    val cdcPhasesRes = try {
-      import graft.core.Metrics
-      import graft.merge.CdcMerge
-      val stagePlan = cdcMasker(
-        SparkEntry.queries("q_p_envelope_cdc")(spark, sfDir), "events_cdc")
-      val target = cdcTarget
-      Metrics.reset()
-      Metrics.enablePhaseBreakdown(true)
-      val tInstr = try time {
-        Metrics.withTable("bench") {
-          val stage = stagePlan.cache()
-          try {
-            Metrics.time("bench", "loader_copystage_seconds")(stage.count())
-            val merged = CdcMerge.merge(target, stage, Seq("user_id"))
-            Metrics.time("bench", "loader_copytarget_seconds")(
-              merged.write.format("noop").mode("overwrite").save())
-          } finally stage.unpersist()
-        }
-      } finally {
-        Metrics.enablePhaseBreakdown(false)
-        Metrics.drainUnpersist()
-      }
-      val buckets = Seq("copystage", "dedupe", "deletecommon", "deleteop",
-        "copytarget")
-      (buckets.map(b => b ->
-        Metrics.get("bench", s"loader_${b}_seconds").map(_.sum)
-          .getOrElse(0.0)),
-        tInstr)
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] phase timing failed: ${e.getMessage}")
-        (Seq.empty[(String, Double)], -1.0)
-    }
-    (cdcMergeRes, cdcPhasesRes)
-    } // section("cdc")
-    val eps = if (cdcSec > 0) nEvents / cdcSec else 0.0
-    val phaseJson = phases.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-
-    // canary after the cdc merge + phase sections: r9's official window
-    // showed cdc_zipf/skew 3x slower than the same code's local run, and
-    // the catalog-loop brackets (canary_end → canary_post_stream) span
-    // everything after the loop, so they couldn't say WHICH section the
-    // contention hit. One sample per section boundary localizes it —
-    // taken by the section harness, which also owns the rerun decision.
-    val canaryPostCdc = lastCanary
-
-    // CDC merge under key skew: the SAME decode → merge path, but the
-    // batch's ids drawn zipf(1.2) from a fixed 20k universe (top id ~8%
-    // of all events — the hot-account shape real CDC exhibits) vs a
-    // uniform control (zipf s=0 over the same universe, same 80/15/5
-    // op mix, same event count). Both stages are cached and
-    // materialized OUTSIDE the timed region so the ratio isolates the
-    // merge (PK dedupe window + delete-common join) under skew — the
-    // shape AQE's skew-join handling and the single-shuffle dedupe are
-    // supposed to absorb.
-    val skewEvents =
-      sys.env.getOrElse("SPARK_GRAFT_SKEW_EVENTS", "100000").toInt
-    val (skewZipfEps, skewUniformEps) = section("skew") { try {
-      import graft.streaming.{CdcLoadGen, CdcStream}
-      import spark.implicits._
-      val universe = 20000
-      val skewCfg = CdcStream.TopicConfig(
-        topic = "bench.skew", targetSchema = "bench",
-        targetTable = "skew", maskEnabled = false)
-      def stage(s: Double) = CdcStream.decodeGroup(
-        CdcLoadGen.zipfBatch(0, skewEvents, universe, s = s)
-          .toDF("offset", "value"),
-        CdcLoadGen.schemaV1, skewCfg)._1.cache()
-      // target: one live row per universe id, through the same decode
-      // path (creates of every id), so updates/deletes hit real rows
-      val target = graft.merge.CdcMerge.insertable(CdcStream.decodeGroup(
-        (0 until universe).map(id =>
-          (id.toLong, CdcLoadGen.frame(1, "c", id))).toDF("offset", "value"),
-        CdcLoadGen.schemaV1, skewCfg)._1).cache()
-      target.count()
-      def mergeEps(s: Double): Double = {
-        val st = stage(s)
-        st.count() // materialize outside the timed region
-        try {
-          val secs = (1 to nRuns).flatMap { i =>
-            try Some(time {
-              graft.merge.CdcMerge.merge(target, st, Seq("id"))
-                .write.format("noop").mode("overwrite").save()
-            }) catch {
-              case e: Throwable =>
-                System.err.println(
-                  s"[bench] skew merge (s=$s) run $i failed: ${e.getMessage}")
-                None
-            }
-          }
-          secs.minOption.map(skewEvents / _).getOrElse(0.0)
-        } finally st.unpersist()
-      }
-      val r = (
-        rateHealed("cdc_zipf_events_per_sec")(mergeEps(1.2))(identity),
-        rateHealed("cdc_skew_uniform_events_per_sec")(
-          mergeEps(0.0))(identity))
-      target.unpersist()
-      r
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] skew bench failed: ${e.getMessage}")
-        (0.0, 0.0)
-    } }
-    // canary after the skew section (delta vs canary_post_cdc isolates
-    // the zipf/uniform merge window specifically)
-    val canaryPostSkew = lastCanary
-
-    // Store rewrite proportionality — the claim behind BucketedCatalog,
-    // measured in the regime it exists for. A PK-hash-bucketed store
-    // bounds a merge's rewrite to the AFFECTED buckets: that only pays
-    // off when the batch's keys concentrate in few buckets (key-local
-    // batches — think recent-rows-hot CDC) or nBuckets >> distinct batch
-    // keys. A batch whose hashed keys spread across ALL buckets forces
-    // the same rewrite volume as a plain store PLUS the bucket
-    // machinery — so both shapes are measured: a 10k-row update batch
-    // into a storeRows-row target, keys (a) uniform over the keyspace
-    // (touches every bucket) and (b) localized to 4 of 64 buckets.
-    // Plain rewrites the whole target in every case; bucketed should
-    // track affected/total buckets in case (b). Timed: store.merge()
-    // end-to-end (target read + merge + write + swap), min of nRuns.
-    // The third store shape is merge-on-read: the hot path writes ONLY
-    // the deduped batch as a delta (no target read/rewrite at all), so
-    // its merge cost is O(batch) under BOTH key distributions — the
-    // resident-stream answer when batches touch every bucket. Its bill
-    // arrives at read time (delta resolve) and is bounded by compaction;
-    // compactEvery is set above nRuns so the timed merges stay pure
-    // O(batch) appends (the fold cost is CompactionSpec's and
-    // MorReadAmp's story).
-    def plainStore(p: String): graft.warehouse.TableStore =
-      new graft.warehouse.ParquetCatalog(spark, p)
-    def bucketedStore(p: String): graft.warehouse.TableStore =
-      new graft.warehouse.BucketedCatalog(spark, p)
-    def morStore(p: String): graft.warehouse.TableStore =
-      new graft.warehouse.MergeOnReadCatalog(spark, p)
-    val storeRows =
-      sys.env.getOrElse("SPARK_GRAFT_STORE_ROWS", "400000").toInt
-    val storeBatch = 10000
-    val storeMerge: Map[String, Double] = section("store") { try {
-      val nB = 64
-      val target = spark.range(storeRows.toLong).selectExpr(
-        "cast(id as string) as id", "concat('n', id) as name",
-        "cast(id * 7 as string) as v")
-      def stageOf(localized: Boolean) = {
-        val ids =
-          if (localized) spark.range(storeRows.toLong)
-            .selectExpr("cast(id as string) as id")
-            .filter(graft.warehouse.BucketedCatalog
-              .bucketExpr(Seq("id"), nB) < 4)
-            .limit(storeBatch)
-          else spark.range(storeBatch.toLong).selectExpr(
-            s"cast(id * ${storeRows / storeBatch} as string) as id")
-        ids.selectExpr("id", "concat('upd', id) as name",
-            "cast(id * 11 as string) as v",
-            s"cast(id as long) as ${graft.core.Cdc.OffsetColumn}",
-            s"'${graft.core.Cdc.OpUpdate}' as ${graft.core.Cdc.OperationColumn}")
-          .cache()
-      }
-      def timeMerge(mk: String => graft.warehouse.TableStore,
-          localized: Boolean): Double = {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_bench_store").toString
-        val store = mk(dir + "/wh")
-        val st = stageOf(localized)
-        st.count() // materialize outside the timed region
-        try {
-          // seed through the store's own first-merge create path (the
-          // TableStore trait has no save); not timed
-          store.merge("bench", "big", target.selectExpr("id", "name", "v",
-            s"cast(id as long) as ${graft.core.Cdc.OffsetColumn}",
-            s"'${graft.core.Cdc.OpCreate}' as ${graft.core.Cdc.OperationColumn}"),
-            Seq("id"))
-          // updates only: the target keeps its size, so repeated merges
-          // time identical work (min-of-N stays honest)
-          (1 to nRuns).map(_ =>
-            time(store.merge("bench", "big", st, Seq("id")))).min
-        } finally {
-          st.unpersist()
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(new java.io.File(dir))
-        }
-      }
-      def morNoFold(p: String): graft.warehouse.TableStore =
-        new graft.warehouse.MergeOnReadCatalog(spark, p,
-          compactEvery = nRuns + 1)
-      Map(
-        "plain_uniform" -> timeMerge(plainStore, localized = false),
-        "plain_localized" -> timeMerge(plainStore, localized = true),
-        "bucketed_uniform" -> timeMerge(bucketedStore, localized = false),
-        "bucketed_localized" -> timeMerge(bucketedStore, localized = true),
-        "mor_uniform" -> timeMerge(morNoFold, localized = false),
-        "mor_localized" -> timeMerge(morNoFold, localized = true))
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] store merge bench failed: ${e.getMessage}")
-        Map.empty[String, Double]
-    } }
-    // canary after the store-merge section (so the final post-stream
-    // bracket covers ONLY the streaming window)
-    val canaryPostStore = lastCanary
-
-    // Streaming end-to-end throughput: the SAME processBatch the batch
-    // metric above exercises, but driven through MemoryStream micro-batch
-    // boundaries (checkpointed foreachBatch, one trigger per batch) with a
-    // mid-run schema change — so the recorded number includes trigger
-    // overhead, the C/U/D merge per batch, and one add-column migration
-    // flush, i.e. what a resident stream actually sustains. Event bytes
-    // are pre-generated outside the timed window (generation is load-gen
-    // cost, not engine cost).
-    //
-    // Measured on THREE stores: ParquetCatalog (full-rewrite merge per
-    // trigger), BucketedCatalog (affected bucket dirs rewritten — pays
-    // off only for key-local batches), and MergeOnReadCatalog (O(batch)
-    // delta append per trigger + threshold compaction — the resident-
-    // stream 100 TB shape for uniform keys), and at two batch shapes
-    // (default 10x10k and big-batch 4x50k), so per-trigger fixed cost
-    // and the store's rewrite proportionality read separately.
-    val streamBatches =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "10").toInt
-    val streamPerBatch =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_EVENTS", "10000").toInt
-    // `breakdown = true` opts the run into Metrics.enablePhaseBreakdown:
-    // CdcMerge materializes each phase (localCheckpoint) so the
-    // dedupe/deletecommon/deleteop walls become real — at the cost the
-    // materialization adds. Headline throughput and phase attribution
-    // are therefore SEPARATE runs: the OFF run's events/s is what the
-    // engine sustains, the ON run's breakdown says where a trigger goes.
-    def streamBench(mkStore: String => graft.warehouse.TableStore,
-        nBatches: Int, perBatch: Int,
-        breakdown: Boolean = false): (Double, Long, Map[String, Double]) =
-      try {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import graft.streaming.{CdcLoadGen, CdcStream}
-        import spark.implicits._
-        val batches = (0 until nBatches).map { b =>
-          // schema v2 (adds a column) from the halfway point: batch
-          // nBatches/2 pays the D4 migration before its merge
-          CdcLoadGen.batch(b, perBatch,
-            schemaId = if (b >= nBatches / 2) 2 else 1)
-        }
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_bench_stream").toString
-        val cat = mkStore(dir + "/wh")
-        val fetcher = new graft.sources.StaticSchemaFetcher(
-          Map(1 -> CdcLoadGen.schemaV1, 2 -> CdcLoadGen.schemaV2))
-        val streamCfg = CdcStream.TopicConfig(
-          topic = "bench.stream.users", targetSchema = "bench",
-          targetTable = "users", maskEnabled = false)
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-        // Per-trigger cost breakdown rides the engine's OWN metrics
-        // (processBatch already times loader_seconds and the
-        // copystage/copytarget fragments): delta the sums across the
-        // run, and what stream_sec holds beyond loader_seconds is the
-        // streaming harness itself (checkpoint WAL+commit, MemoryStream
-        // planning, trigger dispatch).
-        val tag = "bench.users"
-        def m(name: String): Double =
-          graft.core.Metrics.get(tag, name).map(_.sum).getOrElse(0.0)
-        val phaseNames =
-          if (breakdown) Seq("loader_dedupe_seconds",
-            "loader_deletecommon_seconds", "loader_deleteop_seconds")
-          else Seq.empty
-        val before = (Seq("loader_seconds", "loader_copystage_seconds",
-          "loader_copytarget_seconds") ++ phaseNames).map(n => n -> m(n)).toMap
-        val mem = MemoryStream[(Long, Array[Byte])]
-        val q = mem.toDF().toDF("offset", "value").writeStream
-          .option("checkpointLocation", dir + "/_ckpt")
-          .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-            CdcStream.processBatch(df, fetcher, cat, streamCfg); ()
-          }
-          .start()
-        graft.core.Metrics.enablePhaseBreakdown(breakdown)
-        val sec = try time {
-          batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-        } finally {
-          graft.core.Metrics.enablePhaseBreakdown(false)
-          q.stop()
-          // ~100 MB of warehouse + checkpoint per run — don't let bench
-          // iterations accumulate them in the temp dir
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(new java.io.File(dir))
-        }
-        val loader = m("loader_seconds") - before("loader_seconds")
-        val copystage =
-          m("loader_copystage_seconds") - before("loader_copystage_seconds")
-        val copytarget =
-          m("loader_copytarget_seconds") - before("loader_copytarget_seconds")
-        (sec, nBatches.toLong * perBatch, Map(
-          "loader" -> loader,
-          "copystage" -> copystage,
-          "copytarget" -> copytarget,
-          // decode planning + audit aggregate + append gate
-          "loader_other" -> (loader - copystage - copytarget),
-          // checkpoint WAL/commit + MemoryStream + trigger dispatch
-          "harness" -> (sec - loader)) ++
-          phaseNames.map(n =>
-            n.stripPrefix("loader_").stripSuffix("_seconds") ->
-              (m(n) - before(n))))
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] stream bench failed: ${e.getMessage}")
-          (-1.0, 0L, Map.empty[String, Double])
-      }
-    val bigBatches =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_BIG_BATCHES", "4").toInt
-    val bigPerBatch =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_BIG_EVENTS", "50000").toInt
-    val ((streamSec, streamEvents, streamPhases),
-      (streamBktSec, streamBktEvents, streamBktPhases),
-      (streamMorSec, streamMorEvents, streamMorPhases),
-      (streamOnSec, streamOnPhases),
-      (streamBktOnSec, streamBktOnPhases),
-      (streamMorOnSec, streamMorOnPhases),
-      (streamBigSec, streamBigEvents),
-      (streamBktBigSec, streamBktBigEvents),
-      (streamMorBigSec, streamMorBigEvents)) = section("stream") {
-      // heal on the headline events/s; the breakdown-ON attribution
-      // twins are not headline rates and run once
-      def sRate(t: (Double, Long, Map[String, Double])): Double =
-        if (t._1 > 0) t._2 / t._1 else -1.0
-      val plain = rateHealed("stream_events_per_sec")(
-        streamBench(plainStore, streamBatches, streamPerBatch))(sRate)
-      val bkt = rateHealed("stream_events_per_sec_bucketed")(
-        streamBench(bucketedStore, streamBatches, streamPerBatch))(sRate)
-      val mor = rateHealed("stream_events_per_sec_mor")(
-        streamBench(morStore, streamBatches, streamPerBatch))(sRate)
-      // phase-attribution runs (breakdown ON): separate from the headline
-      // so trigger-cost attribution and sustained throughput never share
-      // one number; the ON-vs-OFF wall gap IS the attribution overhead
-      val plainOn =
-        streamBench(plainStore, streamBatches, streamPerBatch,
-          breakdown = true)
-      val bktOn =
-        streamBench(bucketedStore, streamBatches, streamPerBatch,
-          breakdown = true)
-      val morOn =
-        streamBench(morStore, streamBatches, streamPerBatch,
-          breakdown = true)
-      val plainBig = rateHealed("stream_events_per_sec_big")(
-        streamBench(plainStore, bigBatches, bigPerBatch))(sRate)
-      val bktBig = rateHealed("stream_events_per_sec_bucketed_big")(
-        streamBench(bucketedStore, bigBatches, bigPerBatch))(sRate)
-      val morBig = rateHealed("stream_events_per_sec_mor_big")(
-        streamBench(morStore, bigBatches, bigPerBatch))(sRate)
-      (plain, bkt, mor,
-        (plainOn._1, plainOn._3), (bktOn._1, bktOn._3),
-        (morOn._1, morOn._3),
-        (plainBig._1, plainBig._2), (bktBig._1, bktBig._2),
-        (morBig._1, morBig._2))
-    }
-    val streamEps = if (streamSec > 0) streamEvents / streamSec else 0.0
-    def eps2(sec: Double, n: Long): Double = if (sec > 0) n / sec else 0.0
-
-    // Final canary AFTER the stream section (the harness's last
-    // sample). Its delta vs
-    // canary_post_store brackets the whole streaming window (same
-    // query, code unchanged, JIT saturated): positive = the host got
-    // slower while the streams ran. Per-section brackets + rerun flags
-    // live in the `sections` map (file-only).
-    val canaryPostStream = lastCanary
-    val canaryPostStreamDeltaPct: String =
-      deltaPct(canaryPostStore, canaryPostStream)
-
-    def phMap(m: Map[String, Double]): String =
-      m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-    // Per-section executor-CPU attribution (VERDICT r19 #2): stream/
-    // CDC/store jobs run on streaming-execution threads outside the
-    // bench's job groups, so their CPU is summed by task-finish wall
-    // window over the section's [start, end] bracket (BenchCpu
-    // .cpuSecWindow). A hot host window stretches a section's wall and
-    // rates while its CPU holds — the artifact now carries the
-    // drift-immune axis per section, so a rate swing self-adjudicates
-    // without needing a lucky follow-up run.
-    org.apache.spark.sql.graft.Shims.waitListenerBus(spark, 10000L)
-    def sectionCpu(m: SectionMeta): Double =
-      benchCpu.cpuSecWindow(m.startMs, m.endMs)
-    // Per-section window metadata (file-only): wall-clock bracket +
-    // canary bracket + the harness's rerun/skewed verdicts.
-    val sectionsJson = sectionMetas.map { m =>
-      "\"" + m.name + "\":{\"start_ms\":" + m.startMs +
-        ",\"end_ms\":" + m.endMs +
-        ",\"canary_before_sec\":" + m.canaryBefore +
-        ",\"canary_after_sec\":" + m.canaryAfter +
-        (if (m.rerun) ",\"canary_before2_sec\":" + m.canaryBefore2
-         else "") +
-        ",\"canary2_before_sec\":" + m.shuffleBefore +
-        ",\"canary2_after_sec\":" + m.shuffleAfter +
-        ",\"cpu_sec\":" + f"${sectionCpu(m)}%.4f" +
-        ",\"rerun\":" + m.rerun + ",\"skewed\":" + m.skewed + "}"
-    }.mkString("{", ",", "}")
-    val sectionCpuJson = sectionMetas
-      .filterNot(_.name.startsWith("catalog_")).map(m =>
-        "\"" + m.name + "\":" + f"${sectionCpu(m)}%.4f")
-      .mkString("{", ",", "}")
-    def sectionNames(p: SectionMeta => Boolean): String =
-      sectionMetas.filter(p).map("\"" + _.name + "\"")
-        .mkString("[", ",", "]")
-
-    // One field list, two renderings (BenchReport): BENCH.json gets
-    // every field at full precision; stdout gets ONLY the headline
-    // subset (BenchReport.headlineKeys) with doubles rounded — the
-    // driver's capture keeps a 2000-char stdout tail, and the r9–r11
-    // round artifacts all truncated mid-string because breakdown maps
-    // rode the printed line. BenchReportSpec pins the worst-case
-    // headline width under the budget.
-    // NOTE canary_stream_delta_pct's baseline is canary_post_store
-    // (brackets only the stream window) — renamed in r10 from the
-    // r9-era canary_post_stream_delta_pct whose baseline was
-    // canary_end; cross-round comparisons must not mix the two.
+    // One field list, two renderings (BenchReport): BENCH.json gets every
+    // field at full precision; stdout gets ONLY the headline subset
+    // (BenchReport.headlineKeys) with doubles rounded, so the line fits
+    // a 2000-char stdout tail capture.
+    def fmt2(c: Option[Double]): String = c.map(v => f"$v%.2f").getOrElse("null")
     val fields = Seq[(String, String)](
       "metric" -> "\"total\"",
       "value" -> total.toString,
       "unit" -> "\"sec\"",
-      "queries" -> qs,
-      "queries_cold" -> qsCold,
-      "bench_runs" -> nRuns.toString,
+      "queries" -> jsonMap(results),
+      // cold = Catalyst analysis + codegen javac + JIT; the gap between
+      // cold and the warm min is warm-up, not plan cost
+      "queries_cold" -> jsonMap(timings.map { case (n, t) => n -> t.cold }),
+      "bench_runs" -> Runs.toString,
       "queries_n" -> results.size.toString,
       "queries_failed_n" -> qFailed.size.toString,
-      "queries_failed" ->
-        qFailed.map("\"" + _ + "\"").mkString("[", ",", "]"),
+      "queries_failed" -> jsonList(qFailed),
       "queries_slowest" -> slowest,
       "budget_violations_n" -> budgetViolations.size.toString,
       "budget_worst" ->
         ("\"" + budgetViolations.headOption.getOrElse("") + "\""),
-      "budget_violations" -> budgetViolations
-        .map("\"" + _ + "\"").mkString("[", ",", "]"),
-      "budget_rerun_n" -> budgetReruns.size.toString,
-      "budget_healed_n" -> budgetReruns.count(_.healed).toString,
-      "budget_rerun_detail" -> budgetRerunDetail
-        .map("\"" + _ + "\"").mkString("[", ",", "]"),
-      "budget_violations_pre_rerun" -> queryViolationsRaw
-        .map { case (n, s) => "\"" + n + ":" + f"$s%.2f" + "\"" }
-        .mkString("[", ",", "]"),
+      "budget_violations" -> jsonList(budgetViolations),
       "budget_query_sec" -> queryBudget.toString,
       "budget_total_sec" -> totalBudget.toString,
       "budget_total_source" -> ("\"" + budgetTotalSource + "\""),
-      "budget_total_wall_would_flag" -> totalWallWouldFlag
-        .map(_.toString).getOrElse("null"),
       "total_cpu_sec" -> totalCpu.toString,
-      "queries_cpu" -> cpuByQuery
-        .map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}"),
-      "epoch_ref_common_cpu_sec" -> epochCommonCpu
-        .map(c => f"${c._2}%.2f").getOrElse("null"),
-      "epoch_head_common_cpu_sec" -> epochCommonCpu
-        .map(c => f"${c._1}%.2f").getOrElse("null"),
+      "queries_cpu" -> jsonMap(cpuByQuery),
+      "epoch_ref_common_cpu_sec" -> fmt2(epochCommonCpu.map(_._2)),
+      "epoch_head_common_cpu_sec" -> fmt2(epochCommonCpu.map(_._1)),
       "epoch_common_cpu_queries_n" -> epochCommonCpuRaw
         .map(_._1.toString).getOrElse("null"),
       "epoch_common_cpu_min_n" -> minCommonNCpu.toString,
       "epoch_common_min_n" -> minCommonN.toString,
       "epoch_ref_commit" -> epochRef.map("\"" + _.commit + "\"")
         .getOrElse("null"),
-      "epoch_ref_common_total_sec" -> epochCommon
-        .map(c => f"${c._2}%.2f").getOrElse("null"),
-      "epoch_head_common_total_sec" -> epochCommon
-        .map(c => f"${c._1}%.2f").getOrElse("null"),
-      "epoch_common_queries_n" -> epochRef.map(er =>
-        results.count { case (n, s) =>
-          s >= 0 && er.queries.get(n).exists(_ >= 0) }.toString)
-        .getOrElse("null"),
+      "epoch_ref_common_total_sec" -> fmt2(epochCommon.map(_._2)),
+      "epoch_head_common_total_sec" -> fmt2(epochCommon.map(_._1)),
+      "epoch_common_queries_n" -> epochCommonRaw
+        .map(_._1.toString).getOrElse("null"),
       "epoch_budget_mult" -> epochMult.toString,
-      "canary_query" -> ("\"" + canaryQuery + "\""),
-      "canary_start_sec" -> canaryStart.toString,
-      "canary_end_sec" -> canaryEnd.toString,
-      "canary_delta_pct" -> canaryDeltaPct,
-      "canary_ref_sec" -> canaryRef.toString,
-      "canary_window_factor" ->
-        (if (canaryWindowFactor > 0) canaryWindowFactor.toString
-         else "null"),
-      "total_at_ref_window_est" ->
-        (if (totalAtRefWindowEst > 0) totalAtRefWindowEst.toString
-         else "null"),
-      "window_adjust_source" -> ("\"" + windowAdjustSource + "\""),
-      "canary2_query" -> "\"shuffle2x_lineitem_suppkey\"",
-      "canary2_start_sec" -> canary2Start.toString,
-      "canary2_end_sec" -> canary2End.toString,
-      "canary2_delta_pct" -> deltaPct(canary2Start, canary2End),
-      "canary2_ref_sec" -> canary2Ref.toString,
-      "canary2_window_factor" ->
-        (if (canary2WindowFactor > 0) canary2WindowFactor.toString
-         else "null"),
-      "window_factor_extreme" -> windowFactorExtreme.toString,
-      "canary_divergence_band" -> probeDivergenceBand.toString,
-      "canary_divergent_queries_n" ->
-        results.count(r => probesDivergeFor(r._1)).toString,
-      "budget_violations_window_adjusted" -> budgetViolationsAdjusted
-        .map("\"" + _ + "\"").mkString("[", ",", "]"),
-      "budget_violations_detail" -> budgetViolationsDetail
-        .map("\"" + _ + "\"").mkString("[", ",", "]"),
-      "catalog_chunk_size" -> chunkSize.toString,
-      "canary_post_cdc_sec" -> canaryPostCdc.toString,
-      "canary_cdc_delta_pct" -> deltaPct(canaryEnd, canaryPostCdc),
-      "canary_post_skew_sec" -> canaryPostSkew.toString,
-      "canary_skew_delta_pct" -> deltaPct(canaryPostCdc, canaryPostSkew),
-      "canary_post_store_sec" -> canaryPostStore.toString,
-      "canary_store_delta_pct" -> deltaPct(canaryPostSkew, canaryPostStore),
-      "canary_post_stream_sec" -> canaryPostStream.toString,
-      "canary_stream_delta_pct" -> canaryPostStreamDeltaPct,
-      "sections" -> sectionsJson,
-      "sections_rerun" -> sectionNames(_.rerun),
-      "sections_skewed" -> sectionNames(_.skewed),
-      "sections_rerun_n" -> sectionMetas.count(_.rerun).toString,
-      "sections_skewed_n" -> sectionMetas.count(_.skewed).toString,
-      "section_cpu_sec" -> sectionCpuJson,
-      "section_rate_heal_pct" -> rateHealPct.toString,
-      "sections_rate_rerun" -> rateRerunNames
-        .map("\"" + _ + "\"").mkString("[", ",", "]"),
-      "sections_rate_rerun_n" -> rateRerunNames.size.toString,
-      "sections_rate_rerun_detail" -> rateReruns
-        .map("\"" + _ + "\"").mkString("[", ",", "]"),
-      "cdc_merge_sec" -> cdcSec.toString,
-      "cdc_events_per_sec" -> eps.toString,
-      "cdc_events" -> nEvents.toString,
-      "cdc_phases" -> phaseJson,
-      "store_merge_sec" -> phMap(storeMerge),
-      "store_merge_target_rows" -> storeRows.toString,
-      "store_merge_batch_rows" -> storeBatch.toString,
-      "cdc_zipf_events_per_sec" -> skewZipfEps.toString,
-      "cdc_skew_uniform_events_per_sec" -> skewUniformEps.toString,
-      "cdc_skew_events" -> skewEvents.toString,
-      "stream_sec" -> streamSec.toString,
-      "stream_events_per_sec" -> streamEps.toString,
-      "stream_events" -> streamEvents.toString,
-      "stream_batches" -> streamBatches.toString,
-      "stream_trigger_breakdown" -> phMap(streamPhases),
-      "stream_bucketed_sec" -> streamBktSec.toString,
-      "stream_events_per_sec_bucketed" ->
-        eps2(streamBktSec, streamBktEvents).toString,
-      "stream_bucketed_trigger_breakdown" -> phMap(streamBktPhases),
-      "stream_mor_sec" -> streamMorSec.toString,
-      "stream_events_per_sec_mor" ->
-        eps2(streamMorSec, streamMorEvents).toString,
-      "stream_mor_trigger_breakdown" -> phMap(streamMorPhases),
-      "stream_breakdown_on_sec" -> streamOnSec.toString,
-      "stream_breakdown_on_phases" -> phMap(streamOnPhases),
-      "stream_bucketed_breakdown_on_sec" -> streamBktOnSec.toString,
-      "stream_bucketed_breakdown_on_phases" -> phMap(streamBktOnPhases),
-      "stream_mor_breakdown_on_sec" -> streamMorOnSec.toString,
-      "stream_mor_breakdown_on_phases" -> phMap(streamMorOnPhases),
-      "stream_big_sec" -> streamBigSec.toString,
-      "stream_events_per_sec_big" ->
-        eps2(streamBigSec, streamBigEvents).toString,
-      "stream_bucketed_big_sec" -> streamBktBigSec.toString,
-      "stream_events_per_sec_bucketed_big" ->
-        eps2(streamBktBigSec, streamBktBigEvents).toString,
-      "stream_mor_big_sec" -> streamMorBigSec.toString,
-      "stream_events_per_sec_mor_big" ->
-        eps2(streamMorBigSec, streamMorBigEvents).toString,
-      "cdc_phases_total_sec" -> phasesTotal.toString,
       "sf" -> ("\"" + sfDir + "\""))
     println(BenchReport.stdoutLine(fields))
-    val fileJson = (BenchReport.fileJson(fields) + "\n").getBytes("UTF-8")
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH.json"),
-      fileJson)
-    // VERDICT r19 #1: the follow-up scaling run (cpus=8) used to clobber
-    // BENCH.json, so the driver's per-query PERF comparison came back
-    // empty (per_query: {}, geomean null) and round-over-round judgment
-    // had to be reconstructed by hand. Every run now ALSO writes its
-    // full-precision artifact — per-query wall AND CPU maps included —
-    // to a cpus-suffixed path no other core count overwrites.
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"BENCH_c$cpus.json"), fileJson)
+      (BenchReport.fileJson(fields) + "\n").getBytes("UTF-8"))
     spark.stop()
   }
 }

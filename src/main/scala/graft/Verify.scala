@@ -12,8 +12,7 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // canary knob (Bench has the same one): set
-      // SPARK_GRAFT_CODEGEN_FALLBACK=false to turn silent
+      // set SPARK_GRAFT_CODEGEN_FALLBACK=false to turn silent
       // interpreted-mode fallbacks into hard failures for a whole-
       // catalog codegen sweep
       .config("spark.sql.codegen.fallback",

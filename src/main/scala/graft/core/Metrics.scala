@@ -12,7 +12,8 @@ import java.util.concurrent.ConcurrentHashMap
   *    throughput, fed by [[graft.streaming.CdcStream.processBatch]];
   *  - `loader_seconds` and the per-phase
   *    `loader_{copystage,dedupe,deletecommon,deleteop,copytarget}_seconds`
-  *    — merge latencies (REDSHIFTSINK.md's 10–900 s histogram family);
+  *    — merge latencies (REDSHIFTSINK.md's 10–900 s histogram family,
+  *    with sub-10 s bounds added: [[SecondsBuckets]]);
   *  - `loader_messages_loaded` / `loader_bytes_loaded`;
   *  - `loader_running` gauge / `loader_throttled_total` counter
   *    (fed by [[graft.streaming.MetricsListener]] / ControlPlane callers).
@@ -34,14 +35,18 @@ import java.util.concurrent.ConcurrentHashMap
   */
 object Metrics {
 
-  /** The reference's loader-latency histogram bounds in seconds
-    * (REDSHIFTSINK.md:155–171: "histograms in buckets: 10, 30, 60, 120,
-    * 180, 240, 300, 480, 600, 900"). Every `*_seconds` observation
-    * stream keeps cumulative counts per bound so the `/metrics` endpoint
-    * exports real `_bucket{le=...}` series a reference dashboard's
-    * quantile panels can consume unchanged. */
+  /** Loader-latency histogram bounds in seconds. The ten from 10 up are
+    * the reference's (REDSHIFTSINK.md:155–171: "histograms in buckets:
+    * 10, 30, 60, 120, 180, 240, 300, 480, 600, 900"); the six below 10
+    * (0.1, 0.25, 0.5, 1, 2.5, 5) are this sink's, because its triggers
+    * and merge phases take 0.1–10 s and would otherwise all land in the
+    * first reference bucket. Every `*_seconds` observation stream keeps
+    * cumulative counts per bound so the `/metrics` endpoint exports real
+    * `_bucket{le=...}` series; a reference dashboard's quantile panels
+    * still find every reference bound. */
   final val SecondsBuckets: Vector[Double] =
-    Vector(10, 30, 60, 120, 180, 240, 300, 480, 600, 900)
+    Vector(0.1, 0.25, 0.5, 1, 2.5, 5,
+      10, 30, 60, 120, 180, 240, 300, 480, 600, 900)
 
   /** Prometheus client DefBuckets — the reference registers its batcher
     * byte/message histograms with no explicit bounds
@@ -51,7 +56,7 @@ object Metrics {
   final val DefaultBuckets: Vector[Double] =
     Vector(0.005, 0.01, 0.025, 0.05, 0.1, 0.25, 0.5, 1, 2.5, 5, 10)
 
-  /** Histogram bounds for a metric name: the reference's 10–900 s family
+  /** Histogram bounds for a metric name: [[SecondsBuckets]] (0.1–900 s)
     * for `*_seconds`, Prometheus defaults for the batcher/loader
     * throughput observations (`*_processed` / `*_loaded`), none
     * otherwise (those stay summaries). */
@@ -170,21 +175,22 @@ object Metrics {
   /** Free all checkpoints deferred on this thread (call after the batch's
     * terminal action).
     *
-    * PUBLIC CONTRACT (ADVICE r13): several library entry points
-    * checkpoint slim intermediates for reuse — chained ranks
-    * (`q_x_rfm`'s seams), `CorpusStats.quantileNormalize`'s value-count
-    * frame, `Search.bm25TopK`'s term stats, `Dedup.minHash*`'s batch
-    * signatures, the dedup streams' per-trigger survivors — and defer
-    * the unpersist to this THREAD-LOCAL queue so the caller's terminal
-    * action still sees the cache. A long-lived application that calls
-    * those ops must invoke `drainUnpersist()` on the SAME thread after
-    * each batch's terminal action, or the checkpoint blocks accumulate
-    * for the session lifetime (`graft.Bench`/`graft.Verify` drain per
-    * query; the streaming wrappers document it per sink). The queue is
-    * deliberately not auto-drained by a listener: a query-completion
-    * hook cannot know whether the caller still holds the frame for a
-    * second action. Since r14 the two-pass rank itself pins NOTHING —
-    * this queue only ever holds caller-visible checkpoint frames. */
+    * PUBLIC CONTRACT: several library entry points checkpoint slim
+    * intermediates and defer the unpersist to this THREAD-LOCAL queue so
+    * the caller's terminal action still sees the cache. On the sink's
+    * path these are `CdcMerge.merge`'s phase-breakdown checkpoints and
+    * `CdcStream.processBatch`'s header and stage checkpoints; off it,
+    * `CorpusStats.quantileNormalize`'s value-count frame,
+    * `Search.bm25TopK`'s term stats, `Dedup.minHash*`'s batch signatures
+    * and the dedup streams' per-trigger survivors, among others. A
+    * long-lived application that calls those ops must invoke
+    * `drainUnpersist()` on the SAME thread after each batch's terminal
+    * action, or the checkpoint blocks accumulate for the session
+    * lifetime (`processBatch` drains per trigger, `graft.Bench` and
+    * `graft.Verify` per query run; the streaming wrappers document it
+    * per sink). The queue is deliberately not auto-drained by a
+    * listener: a query-completion hook cannot know whether the caller
+    * still holds the frame for a second action. */
   def drainUnpersist(): Unit = {
     val buf = pendingUnpersist.get()
     buf.foreach(_.unpersist())

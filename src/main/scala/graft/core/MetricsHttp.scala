@@ -63,9 +63,9 @@ object MetricsHttp {
 
   /** Prometheus text format of a registry snapshot (exposed for specs —
     * the HTTP layer adds nothing but transport). Bucketed streams
-    * ([[Metrics.bucketBoundsFor]]: the reference's 10–900 s bounds for
-    * `*_seconds`, Prometheus DefBuckets for the batcher/loader
-    * byte/message observations) render as TYPE histogram with full
+    * ([[Metrics.bucketBoundsFor]]: 0.1–900 s bounds, the reference's
+    * 10–900 s among them, for `*_seconds`, Prometheus DefBuckets for the
+    * batcher/loader byte/message observations) render as TYPE histogram with full
     * `_bucket{le=...}` series (`+Inf` included), so reference
     * dashboards' `histogram_quantile` panels port unchanged; other
     * streams stay `summary` (`_sum`/`_count`).

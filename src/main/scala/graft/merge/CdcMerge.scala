@@ -84,9 +84,9 @@ object CdcMerge {
     * localCheckpoint'ed so its wall time is observable under the
     * reference's histogram names (dedupe / deletecommon / deleteop;
     * copystage and copytarget are timed by the caller around batch
-    * materialization and the target write) — the observability/throughput
-    * trade is the operator's, per table, at runtime. Values are identical
-    * either way. */
+    * materialization and the target write). The flag is one process-wide
+    * switch, so the observability/throughput trade covers every table the
+    * process merges while it is on. Values are identical either way. */
   def merge(
       target: DataFrame, stage: DataFrame, pks: Seq[String],
       broadcastStage: Boolean = true): DataFrame =

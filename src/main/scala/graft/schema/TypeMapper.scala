@@ -19,7 +19,6 @@ object TypeMapper {
   val StringMaxLength = 65535
   val StringDefaultLength = 256
   val MaskedDataType = "character varying(50)"
-  val MobileColType = "character varying(10)"
   val MaskedDataTypeLength = 50
   val Numeric = "numeric"
   val NumericMaxLength = 38
@@ -30,7 +29,6 @@ object TypeMapper {
   val Integer = "integer"
   val Time = "character varying(32)"
   val Timestamp = "timestamp without time zone"
-  val Boolean_ = "boolean"
   /** Multi-byte (utf8) expansion applied to source varchar lengths. */
   val CharacterRatio = 4.0
 
@@ -153,15 +151,6 @@ object TypeMapper {
   def warehouseType(c: ColSpec): String =
     warehouseType(c.debeziumType, c.sourceType.columnType,
       c.sourceType.columnLength, c.sourceType.columnScale, c.masked)
-
-  /** Spark-native type for a column. Masked columns are strings; temporal
-    * columns stay strings post-transform (the CDC transform emits formatted
-    * strings, matching the reference's row representation —
-    * pkg/transformer/debezium/message.go:30-56). */
-  def sparkType(c: ColSpec): DataType =
-    if (c.masked) StringType
-    else sparkTypeFor(c.debeziumType, c.sourceType.columnType,
-      c.sourceType.columnLength, c.sourceType.columnScale)
 
   def sparkTypeFor(
       debeziumType: String, sourceColType: String,

@@ -15,9 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `0x00 ‖ int32-BE schemaId ‖ avro-binary` (tipoca-stream
   * pkg/serializer/serializer.go:50-83). The frame fields are extracted with
   * built-in codegen'd expressions; the Avro payload is decoded by a custom
-  * Catalyst expression ([[AvroBinaryToJson]]) that renders the record as
-  * JSON, which `from_json` then parses against the table's StructType —
-  * Spark's vectorized JSON parser does the typed work.
+  * Catalyst expression ([[AvroBinaryToStruct]]) straight into the table's
+  * StructType. [[AvroBinaryToJson]] renders a payload as JSON text for the
+  * `graft_avro_to_json` SQL function only.
   */
 object ConfluentAvro {
 
@@ -50,17 +50,6 @@ object ConfluentAvro {
       AvroBinaryToStruct(
         org.apache.spark.sql.graft.Shims.expression(payload(value)),
         writerSchemaJson, sparkSchema))
-
-  /** JSON-rendering variant (kept for SQL surface + debugging). */
-  def decodeViaJson(value: Column, writerSchemaJson: String,
-      sparkSchema: StructType): Column =
-    from_json(avroToJson(payload(value), writerSchemaJson), sparkSchema)
-
-  def avroToJson(payloadCol: Column, writerSchemaJson: String): Column =
-    org.apache.spark.sql.graft.Shims.column(
-      AvroBinaryToJson(
-        org.apache.spark.sql.graft.Shims.expression(payloadCol),
-        writerSchemaJson))
 }
 
 /** Avro-binary → JSON-string decode as a Catalyst expression. Not

@@ -1,7 +1,7 @@
 package graft.warehouse
 
 import graft.core.TableSpec
-import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** M9 as physical layout (SURVEY §2.3): the reference tags DISTKEY /
@@ -24,12 +24,6 @@ object Layout {
     if (sortCols.nonEmpty) parted.sortWithinPartitions(sortCols: _*)
     else parted
   }
-
-  /** Writer with hive-style directory partitioning on the dist column —
-    * the lake layout that gives partition pruning on the merge key. */
-  def partitionedWriter(df: DataFrame, spec: TableSpec,
-      numPartitions: Int): DataFrameWriter[Row] =
-    arrange(df, spec, numPartitions).write
 
   /** Z-curve value: the low `bits` bits of each column, interleaved (bit
     * j of column i lands at position j·n+i). Inputs are masked, so only

@@ -157,10 +157,4 @@ final class ParquetCatalog(spark: SparkSession, root: String)
 
   def drop(schema: String, table: String): Unit =
     fs.delete(new Path(tablePath(schema, table)), true)
-
-  def listTables(schema: String): Seq[String] = {
-    val p = new Path(s"$root/$schema")
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSeq
-  }
 }

@@ -98,6 +98,22 @@ class MetricsHttpSpec extends AnyFunSuite {
     Metrics.reset()
   }
 
+  test("seconds histograms resolve sub-10 s triggers beside the reference bounds") {
+    Metrics.reset()
+    Metrics.observe("events_cdc", "loader_seconds", 0.3)
+    Metrics.observe("events_cdc", "loader_seconds", 1.5)
+    val out = MetricsHttp.render(Metrics.snapshot())
+    def bucket(le: String): String =
+      s"""rsk_loader_seconds_bucket{table="events_cdc",le="$le"} """
+    assert(out.contains(bucket("0.25") + "0"))
+    assert(out.contains(bucket("0.5") + "1"))
+    assert(out.contains(bucket("1") + "1"))
+    assert(out.contains(bucket("2.5") + "2"))
+    Seq(10, 30, 60, 120, 180, 240, 300, 480, 600, 900).foreach(le =>
+      assert(out.contains(bucket(le.toString) + "2"), s"reference le=$le"))
+    Metrics.reset()
+  }
+
   test("label values are escaped and multiple tables sort stably") {
     Metrics.reset()
     Metrics.observe("a\"b\\c", "loader_seconds", 1.0)

@@ -28,9 +28,9 @@ trap 'git -C /root/repo worktree remove -f "$WT" 2>/dev/null || true' EXIT
 (cd "$WT" && SPARK_GRAFT_SF_DIR="$SF" REPO_DIR="$WT" MAIN_CLASS=graft.Bench \
   bash /root/repo/tools/run_bench.sh) | grep '"metric"' | tail -1 \
   > /root/repo/EPOCH_REF_RAW.json
-# the stdout line is the truncation-safe headline; the per-query map
-# and canary2 fields are file-only — take the worktree's BENCH.json
-# before the cleanup trap removes it
+# the stdout line is the truncation-safe headline; the per-query wall
+# and CPU maps are file-only — take the worktree's BENCH.json before the
+# cleanup trap removes it
 cp "$WT/BENCH.json" /root/repo/EPOCH_REF_RAW.json 2>/dev/null || true
 python3 - "$PIN" "$SF" <<'EOF'
 import json, sys, datetime
@@ -40,24 +40,12 @@ epoch = {
     'epoch_ref_date': datetime.date.today().isoformat(),
     'sf_dir': sys.argv[2],
     'ref_total_sec': raw.get('value'),
-    'ref_canary_start_sec': raw.get('canary_start_sec'),
-    'ref_canary_end_sec': raw.get('canary_end_sec'),
-    'ref_canary2_start_sec': raw.get('canary2_start_sec'),
-    'ref_canary2_end_sec': raw.get('canary2_end_sec'),
     'queries': raw.get('queries', {}),
     # per-query executor CPU (present from r19 binaries on): when the
     # pinned ref emits it, graft.Bench budgets CPU-vs-CPU — the
     # drift-immune basis — and wall drops to telemetry
     'queries_cpu': raw.get('queries_cpu', {}),
     'ref_total_cpu_sec': raw.get('total_cpu_sec'),
-    # section throughputs (VERDICT r19 #2): graft.Bench compares each
-    # rate-bearing section's first result against these and earns one
-    # same-session rerun when it lands >SPARK_GRAFT_SECTION_RATE_HEAL_PCT
-    # below — a hot window can no longer masquerade as a 2x stream
-    # regression in the official artifact
-    'section_rates': {k: v for k, v in raw.items()
-                      if k.endswith('_per_sec')
-                      and isinstance(v, (int, float)) and v > 0},
 }
 json.dump(epoch, open('/root/repo/EPOCH.json', 'w'), indent=1)
 print('EPOCH.json written: ref_total_sec=%s over %d queries'
