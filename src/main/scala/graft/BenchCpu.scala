@@ -6,15 +6,11 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskEnd}
 
-/** Per-job-group executor CPU accounting (VERDICT r18 #2): the bench
-  * host's wall-clock throughput drifts 15–20% INTRA-day at a constant
-  * CPU-canary reading (measured twice — the pinned r17 binary read
-  * 107.6 s its own morning and 121.5 s the same evening), so every
-  * official artifact lands in a flagged wall window. Executor CPU time
-  * does not drift with host contention — a contended window stretches
-  * wall while tasks accumulate the same cycles — so the epoch budget's
-  * primary comparison moves to CPU-vs-CPU; wall stays as telemetry and
-  * the reference-envelope check.
+/** Per-job-group executor CPU accounting behind [[Bench]]'s total-budget
+  * gate: wall-clock throughput on a shared host drifts 15–20% within a
+  * day at constant load, while executor CPU time does not — a contended
+  * window stretches wall, but the tasks accumulate the same cycles. So
+  * the budget compares CPU first; wall stays as telemetry.
   *
   * Keying on `spark.jobGroup.id` (set per query run by the bench loop)
   * rather than global-delta snapshots makes attribution immune to the
@@ -25,14 +21,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
 final class BenchCpu extends SparkListener {
   private val stageGroup = new ConcurrentHashMap[Int, String]()
   private val cpuNs = new ConcurrentHashMap[String, AtomicLong]()
-  // Wall-window attribution (VERDICT r19 #2): the stream/CDC/store
-  // sections' jobs run on streaming-execution threads that don't carry
-  // the bench's job group, so their CPU is attributed by task FINISH
-  // time instead — bucketed per wall-clock second, summed over a
-  // section's [start, end] bracket. ±1 s of boundary blur against
-  // multi-second sections; the canaries sampled between sections run
-  // outside the body bracket and stay out of its account.
-  private val cpuNsBySec = new ConcurrentHashMap[Long, AtomicLong]()
 
   override def onJobStart(js: SparkListenerJobStart): Unit = {
     val g = Option(js.properties)
@@ -47,50 +35,10 @@ final class BenchCpu extends SparkListener {
   override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
     if (te.taskMetrics != null) {
       val ns = te.taskMetrics.executorCpuTime
-      if (ns > 0L) {
-        val g = stageGroup.get(te.stageId)
-        if (g != null) {
-          var a = cpuNs.get(g)
-          if (a == null) {
-            a = cpuNs.computeIfAbsent(g, _ => new AtomicLong())
-          }
-          a.addAndGet(ns)
-        }
-        val endMs =
-          if (te.taskInfo != null && te.taskInfo.finishTime > 0)
-            te.taskInfo.finishTime
-          else System.currentTimeMillis()
-        recordWindow(endMs, ns)
-      }
+      val g = stageGroup.get(te.stageId)
+      if (ns > 0L && g != null)
+        cpuNs.computeIfAbsent(g, _ => new AtomicLong()).addAndGet(ns)
     }
-  }
-
-  /** Bucket `ns` of executor CPU at the wall second containing `endMs`
-    * (package-visible so the spec can drive the window account without
-    * constructing listener events). */
-  private[graft] def recordWindow(endMs: Long, ns: Long): Unit = {
-    var a = cpuNsBySec.get(endMs / 1000L)
-    if (a == null)
-      a = cpuNsBySec.computeIfAbsent(endMs / 1000L, _ => new AtomicLong())
-    a.addAndGet(ns)
-    ()
-  }
-
-  /** Executor CPU seconds from tasks that FINISHED inside
-    * [startMs, endMs] (1 s bucket granularity, both ends inclusive);
-    * 0 when no task finished there. Read after the listener bus drains
-    * — late task-ends land in their own finish-time bucket either way,
-    * never a later section's. */
-  def cpuSecWindow(startMs: Long, endMs: Long): Double = {
-    var s = startMs / 1000L
-    val e = endMs / 1000L
-    var acc = 0L
-    while (s <= e) {
-      val a = cpuNsBySec.get(s)
-      if (a != null) acc += a.get()
-      s += 1L
-    }
-    acc / 1e9
   }
 
   /** Executor CPU seconds attributed to `group`; -1 when no task of

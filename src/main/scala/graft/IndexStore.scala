@@ -4,14 +4,13 @@ import graft.ops.{Dedup, Ivf, Pq}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Session-scoped builds of the PERSISTED artifacts behind the
-  * `q_x_ann_*_pruned` / `q_x_minhash_incr` catalog queries: the serving
-  * story is index-once-probe-many, so a query's timed body should be the
-  * probe, not the (amortized-over-every-query) index build. Each build
-  * runs once per (kind, sf dir) per JVM; `graft.Bench` triggers the
-  * builds up front and reports their cost separately as
-  * `index_build_sec`, and `graft.Verify` (fresh JVM per run) still
-  * exercises the full build-then-probe path end to end.
+/** Session-scoped builds of PERSISTED artifacts (IVF and IVF-PQ indexes,
+  * MinHash signatures, DSIR ratios, winnowing fingerprints): the serving
+  * story is index-once-probe-many, so a probe should not pay the
+  * (amortized-over-every-probe) build. Each build runs once per (kind,
+  * sf dir) per JVM and reports its cost in [[buildSecs]]. No catalog
+  * query or `graft.Bench` section uses these any more; the object stays
+  * with its spec until the non-sink libraries are deleted.
   */
 object IndexStore {
 

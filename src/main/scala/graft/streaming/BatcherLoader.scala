@@ -1,24 +1,22 @@
 package graft.streaming
 
-import graft.cdc.DebeziumTransform
-import graft.core.{Cdc, Job}
-import graft.merge.CdcMerge
-import graft.sources.{ConfluentAvro, SchemaFetcher}
+import graft.core.{Job, Metrics}
+import graft.sources.SchemaFetcher
 import graft.warehouse.TableStore
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.functions.col
 
 /** The reference's two-process architecture (SURVEY §3.1/§3.2), for
   * deployments that want the batcher and loader decoupled by an object
-  * store (the single-job design is [[CdcStream.processBatch]]):
+  * store. Both run the halves of the single-job
+  * [[CdcStream.processBatch]], with NDJSON.gz objects between them:
   *
-  *  - [[Batcher.processBatch]] — decode → transform → mask → NDJSON.gz
-  *    objects + a [[Job]] signal per schema-id group (the reference's
-  *    batcher → S3 + signal topic);
-  *  - [[Loader.load]] — NDJSON objects → SCD-1 merge / skipMerge append
-  *    (the reference's loader: COPY → staged merge).
+  *  - [[Batcher.processBatch]] — [[CdcStream.stage]] → NDJSON.gz objects
+  *    + a [[Job]] signal per schema-id group (the reference's batcher →
+  *    S3 + signal topic);
+  *  - [[Loader.load]] — NDJSON objects → [[CdcStream.load]] (the
+  *    reference's loader: COPY → staged merge).
   *
   * Job records travel however the deployment likes (Kafka signal topic,
   * queue, driver memory); they are plain case classes.
@@ -33,46 +31,13 @@ object Batcher {
       fetcher: SchemaFetcher,
       cfg: CdcStream.TopicConfig,
       outRoot: String,
-      group: String = "graft"): Seq[Job] = {
-    // Same corrupt-frame policy as CdcStream.processBatch: a frame without
-    // the Confluent magic byte yields a garbage schema id and would kill
-    // the stream at fetcher.schemaById — drop it per message instead.
-    val frames = DebeziumTransform.dropTombstones(batch)
-      .filter(ConfluentAvro.isFramed(col("value")))
-      .withColumn("__sid", ConfluentAvro.schemaId(col("value")))
-    val sids = frames.select("__sid").distinct().collect().map(_.getInt(0))
-
-    sids.sorted.map { sid =>
-      val group_ = frames.filter(col("__sid") === sid)
-      val (masked, _) = CdcStream.decodeGroup(group_, fetcher.schemaById(sid), cfg)
-      val cached = masked.cache()
-      try {
-        val counts = CdcMerge.eventCounts(cached).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val offsets = cached.agg(
-          min(col(Cdc.OffsetColumn).cast(LongType)),
-          max(col(Cdc.OffsetColumn).cast(LongType))).head()
-        val dir = NdjsonGzSink.batchDir(outRoot, group, cfg.topic) +
-          s"/$sid/batch_$batchId"
-        NdjsonGzSink.write(cached, dir)
-        val bytes = dirBytes(cached.sparkSession, dir)
-        Job(
-          upstreamTopic = cfg.topic,
-          startOffset = if (offsets.isNullAt(0)) 0L else offsets.getLong(0),
-          endOffset = if (offsets.isNullAt(1)) 0L else offsets.getLong(1),
-          s3Path = dir,
-          schemaId = sid,
-          skipMerge = CdcMerge.skipMergeEligible(
-            counts.getOrElse(Cdc.OpCreate, 0L),
-            counts.getOrElse(Cdc.OpUpdate, 0L),
-            counts.getOrElse(Cdc.OpDelete, 0L)),
-          batchBytes = bytes,
-          createEvents = counts.getOrElse(Cdc.OpCreate, 0L),
-          updateEvents = counts.getOrElse(Cdc.OpUpdate, 0L),
-          deleteEvents = counts.getOrElse(Cdc.OpDelete, 0L))
-      } finally cached.unpersist()
-    }.toSeq
-  }
+      group: String = "graft"): Seq[Job] =
+    try CdcStream.stage(batch, fetcher, cfg) { s =>
+      val dir = NdjsonGzSink.batchDir(outRoot, group, cfg.topic) +
+        s"/${s.job.schemaId}/batch_$batchId"
+      NdjsonGzSink.write(s.rows, dir)
+      s.job.copy(s3Path = dir, batchBytes = dirBytes(s.rows.sparkSession, dir))
+    } finally Metrics.drainUnpersist() // free the stage checkpoints
 
   private def dirBytes(spark: SparkSession, dir: String): Long = {
     val p = new Path(dir)
@@ -83,9 +48,9 @@ object Batcher {
 
 object Loader {
 
-  /** Load one Job's objects into the target table: skipMerge batches
-    * append straight in (R5), everything else goes through the full merge
-    * (R1-R4). PKs come from the writer schema's key subject via `pks`. */
+  /** Load one Job's objects into the target table through
+    * [[CdcStream.load]]. `pks` are the key schema's primary keys; an
+    * explicit `cfg.primaryKeys` still wins. */
   def load(
       spark: SparkSession,
       job: Job,
@@ -98,7 +63,9 @@ object Loader {
     // and a name-only gate would then let a type-divergent parquet slice
     // into the append path. Casting aligns the types; a genuinely
     // unconvertible value fails loudly under ANSI instead of writing
-    // mixed-type parquet.
+    // mixed-type parquet. NDJSON also drops all-null columns on write;
+    // the load half's column-set gate routes such a batch through the
+    // merge rewrite instead of the append.
     val stage =
       if (catalog.exists(cfg.targetSchema, cfg.targetTable)) {
         val tgtTypes = catalog.load(cfg.targetSchema, cfg.targetTable)
@@ -108,17 +75,8 @@ object Loader {
             .map(t => df.withColumn(c, col(c).cast(t))).getOrElse(df)
         }
       } else raw
-    // Column-set gate before the R5 append (CdcStream.appendGateOk, the
-    // shared single-job gate): NDJSON drops all-null columns on write, so
-    // an append could otherwise slip a schema-divergent slice into the
-    // target; route those through the merge rewrite instead. job.skipMerge
-    // is the Batcher's decision on the event counts; the gate re-checks
-    // the batch's actual columns.
-    val skip = job.skipMerge && CdcStream.appendGateOk(catalog, cfg, stage)
-    if (skip)
-      catalog.append(cfg.targetSchema, cfg.targetTable,
-        CdcMerge.insertable(stage), pks)
-    else
-      catalog.merge(cfg.targetSchema, cfg.targetTable, stage, pks)
+    try Metrics.withTable(CdcStream.tagOf(cfg))(
+      CdcStream.load(CdcStream.Staged(stage, job, pks), catalog, cfg))
+    finally Metrics.drainUnpersist()
   }
 }

@@ -17,8 +17,11 @@ import org.apache.spark.sql.types._
   * SCD-1 merge into the warehouse, per micro-batch.
   *
   * The reference runs this as two processes (batcher → S3+signal → loader);
-  * here a single `foreachBatch` does both, and the Job record survives as
-  * the per-batch audit trail. Checkpointing replaces hand-rolled offset
+  * here the two are the halves [[stage]] and [[load]], and a single
+  * `foreachBatch` ([[processBatch]]) runs one after the other in memory.
+  * The two-stage mode ([[Batcher]]/[[Loader]]) puts NDJSON objects
+  * between the same halves. The Job record survives as the per-batch
+  * audit trail. Checkpointing replaces hand-rolled offset
   * marking (T5/T6): the merge is idempotent (last-writer-wins by
   * kafkaoffset), so at-least-once replay converges — the same design the
   * reference documents ("loader is idempotent").
@@ -132,40 +135,38 @@ object CdcStream {
     (graft.warehouse.CopyOptions.clamp(masked, spec), spec)
   }
 
-  /** R5 column-set gate, shared by the single-job path and
-    * [[Loader.load]]: append only when the batch's data columns exactly
-    * match the live table's (the BucketedCatalog partition column is
-    * layout, not data) — a schema change (D4 add/drop) must go through
-    * the merge rewrite, as the reference migrates before any load
-    * (load_processor.go:395-444). */
-  private[streaming] def appendGateOk(catalog: TableStore, cfg: TopicConfig,
-      stage: org.apache.spark.sql.DataFrame): Boolean =
-    catalog.exists(cfg.targetSchema, cfg.targetTable) && {
-      val tgtCols = catalog.load(cfg.targetSchema, cfg.targetTable)
-        .columns.toSet - graft.warehouse.BucketedCatalog.BucketCol
-      CdcMerge.insertable(stage).columns.toSet == tgtCols
-    }
-
-  /** The foreachBatch body: tombstone filter → per-schema-id groups (T3) →
-    * decode/transform/mask → merge or skipMerge append (R1-R5). Returns the
-    * per-group Job audit records. */
+  /** The foreachBatch body: the batcher half ([[stage]]) handing each
+    * schema-id group straight to the loader half ([[load]]), in memory.
+    * Returns the per-group Job audit records. */
   def processBatch(
       batch: DataFrame,
       fetcher: SchemaFetcher,
       catalog: TableStore,
       cfg: TopicConfig): Seq[Job] = {
-    val tag = s"${cfg.targetSchema}.${cfg.targetTable}"
+    val tag = tagOf(cfg)
     try Metrics.withTable(tag)(Metrics.time(tag, "loader_seconds")(
-      processBatchTagged(batch, fetcher, catalog, cfg, tag)))
-    finally Metrics.drainUnpersist() // free phase-breakdown checkpoints
+      stage(batch, fetcher, cfg)(load(_, catalog, cfg))))
+    finally Metrics.drainUnpersist() // free the stage checkpoints
   }
 
-  private def processBatchTagged(
+  private[streaming] def tagOf(cfg: TopicConfig): String =
+    s"${cfg.targetSchema}.${cfg.targetTable}"
+
+  /** What the batcher half hands the loader half for one schema id: the
+    * staged rows (decoded, transformed and masked), their Job record and
+    * the key schema's primary keys. */
+  private[streaming] final case class Staged(rows: DataFrame, job: Job,
+      keyPks: Seq[String])
+
+  /** The batcher half: tombstone filter → per-schema-id groups (T3) →
+    * decode/transform/mask, each group checkpointed and handed to `each`
+    * in schema-id order. The checkpoints stay cached until the caller's
+    * `Metrics.drainUnpersist()`, after its terminal write. */
+  private[streaming] def stage[T](
       batch: DataFrame,
       fetcher: SchemaFetcher,
-      catalog: TableStore,
-      cfg: TopicConfig,
-      tag: String): Seq[Job] = {
+      cfg: TopicConfig)(each: Staged => T): Seq[T] = {
+    val tag = tagOf(cfg)
     // Primary keys come from the Kafka key schema (the reference's
     // schemaIdKey, serializer/message.go:25-37): one framed key's schema
     // id, resolved against the registry. Keys get the same framing guard
@@ -198,14 +199,15 @@ object CdcStream {
       .localCheckpoint()
     Metrics.deferUnpersist(frames)
     val hdr = observedRow(hdrObs, frames, hdrAggs)
-    val sids = hdr.getSeq[Int](0).toArray
+    val sids = hdr.getSeq[Int](0).toSeq.sorted
     Metrics.add(tag, "batcher_bytes_processed",
       if (hdr.isNullAt(1)) 0L else hdr.getLong(1))
     Metrics.add(tag, "batcher_messages_processed", hdr.getLong(2))
-    val keySchemaJson: Option[String] =
-      if (hdr.isNullAt(3)) None else Some(fetcher.schemaById(hdr.getInt(3)))
+    val keySchemaId = if (hdr.isNullAt(3)) -1 else hdr.getInt(3)
+    val keySchemaJson =
+      Option.when(keySchemaId >= 0)(fetcher.schemaById(keySchemaId))
 
-    sids.sorted.map { sid =>
+    sids.map { sid =>
       val group = frames.filter(col("__sid") === sid)
       val (masked, spec) =
         decodeGroup(group, fetcher.schemaById(sid), cfg, keySchemaJson)
@@ -213,8 +215,6 @@ object CdcStream {
       // result — the reference's staging-table COPY
       // (load_processor.go:386-444 stage population) — and the per-op
       // counts (R6) and offset bounds ride it as an observed metric.
-      // The checkpoint lives until processBatch drains it, after the
-      // target write.
       def opCount(op: String) =
         sum(when(col(Cdc.OperationColumn) === op, 1L).otherwise(0L))
       val stageAggs = Seq(
@@ -223,50 +223,65 @@ object CdcStream {
         min(col(Cdc.OffsetColumn).cast(LongType)).as("lo"),
         max(col(Cdc.OffsetColumn).cast(LongType)).as("hi"))
       val stageObs = Observation()
-      val stage = Metrics.time(tag, "loader_copystage_seconds")(
+      val rows = Metrics.time(tag, "loader_copystage_seconds")(
         masked.observe(stageObs, stageAggs.head, stageAggs.tail: _*)
           .localCheckpoint())
-      Metrics.deferUnpersist(stage)
-      val hdr2 = observedRow(stageObs, stage, stageAggs)
+      Metrics.deferUnpersist(rows)
+      val hdr2 = observedRow(stageObs, rows, stageAggs)
       def cnt(i: Int) = if (hdr2.isNullAt(i)) 0L else hdr2.getLong(i)
-      val (creates, updates, deletes) = (cnt(0), cnt(1), cnt(2))
-      val (startOff, endOff) = (cnt(3), cnt(4))
-      // R5 applies only when the batch's columns match the live table:
-      // parquet append doesn't widen the read schema, so a schema change
-      // (D4 add/drop column) must go through the merge rewrite — the
-      // reference likewise migrates the table before any load
-      // (load_processor.go:395-444).
-      val skip = CdcMerge.skipMergeEligible(creates, updates, deletes) &&
-        appendGateOk(catalog, cfg, stage)
-
-      // PK precedence: explicit config > key schema > first column.
-      val pks =
-        if (cfg.primaryKeys.nonEmpty) cfg.primaryKeys
-        else if (spec.primaryKeys.nonEmpty) spec.primaryKeys
-        else Seq(spec.columns.head.lowerName)
-      // copytarget: the write into the live table (with phase breakdown
-      // on, the merge phases checkpoint themselves first, so this is
-      // the write proper; off, it's the whole fused merge job)
-      Metrics.time(tag, "loader_copytarget_seconds") {
-        if (skip)
-          catalog.append(cfg.targetSchema, cfg.targetTable,
-            CdcMerge.insertable(stage), pks)
-        else
-          catalog.merge(cfg.targetSchema, cfg.targetTable, stage, pks)
-      }
-      Metrics.add(tag, "loader_messages_loaded",
-        creates + updates + deletes)
-
-      Job(
+      each(Staged(rows, Job(
         upstreamTopic = cfg.topic,
-        startOffset = startOff,
-        endOffset = endOff,
+        startOffset = cnt(3),
+        endOffset = cnt(4),
         schemaId = sid,
-        skipMerge = skip,
-        createEvents = creates,
-        updateEvents = updates,
-        deleteEvents = deletes)
-    }.toSeq
+        schemaIdKey = keySchemaId,
+        skipMerge = CdcMerge.skipMergeEligible(cnt(0), cnt(1), cnt(2)),
+        createEvents = cnt(0),
+        updateEvents = cnt(1),
+        deleteEvents = cnt(2)), spec.primaryKeys))
+    }
+  }
+
+  /** The loader half: append a skipMerge-eligible batch straight in (R5),
+    * merge everything else (R1-R4). Returns the Job with the final
+    * skipMerge decision. */
+  private[streaming] def load(
+      staged: Staged,
+      catalog: TableStore,
+      cfg: TopicConfig): Job = {
+    val Staged(stage, job, keyPks) = staged
+    val tag = tagOf(cfg)
+    // PK precedence: explicit config > key schema > first column.
+    val pks =
+      if (cfg.primaryKeys.nonEmpty) cfg.primaryKeys
+      else if (keyPks.nonEmpty) keyPks
+      else stage.columns
+        .find(c => c != Cdc.OffsetColumn && c != Cdc.OperationColumn).toSeq
+    // R5 applies only when the batch's data columns exactly match the
+    // live table's (the BucketedCatalog partition column is layout, not
+    // data): parquet append doesn't widen the read schema, so a schema
+    // change (D4 add/drop column) must go through the merge rewrite — the
+    // reference likewise migrates the table before any load
+    // (load_processor.go:395-444).
+    val skip = job.skipMerge &&
+      catalog.exists(cfg.targetSchema, cfg.targetTable) && {
+        val tgtCols = catalog.load(cfg.targetSchema, cfg.targetTable)
+          .columns.toSet - graft.warehouse.BucketedCatalog.BucketCol
+        CdcMerge.insertable(stage).columns.toSet == tgtCols
+      }
+    // copytarget: the write into the live table (with phase breakdown
+    // on, the merge phases checkpoint themselves first, so this is
+    // the write proper; off, it's the whole fused merge job)
+    Metrics.time(tag, "loader_copytarget_seconds") {
+      if (skip)
+        catalog.append(cfg.targetSchema, cfg.targetTable,
+          CdcMerge.insertable(stage), pks)
+      else
+        catalog.merge(cfg.targetSchema, cfg.targetTable, stage, pks)
+    }
+    Metrics.add(tag, "loader_messages_loaded",
+      job.createEvents + job.updateEvents + job.deleteEvents)
+    job.copy(skipMerge = skip)
   }
 
   /** The observed header row of a checkpoint, or — if the metric never

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 /** O2/O3/O6 — zero-downtime mask reload (tipoca-stream
   * REDSHIFTSINK.md:91-130; controllers/redshiftsink_controller.go:494-548,
   * release.go:69-146): when the mask config changes for a table, the table
-  * is rebuilt under `<table>_reload_<v>` with the new config while the
+  * is rebuilt under `<table>_reload_<sha6>` with the new config while the
   * released table keeps serving, then atomically swapped in.
   *
   * In Spark terms: run a second pipeline (or batch replay) into the reload
@@ -17,7 +17,9 @@ import org.apache.spark.sql.DataFrame
   */
 object MaskReload {
 
-  def reloadSuffix(version: String): String = s"_reload_$version"
+  /** The reload table's suffix: the one [[Reconciler]] releases, so a
+    * table rebuilt under a git sha is the one the reconcile loop swaps. */
+  def reloadSuffix(version: String): String = Reconciler.reloadSuffix(version)
 
   /** Plan: which tables need a rebuild under the new config. */
   def plan(current: MaskConfig, desired: MaskConfig,

@@ -71,19 +71,17 @@ final class BucketedCatalog(spark: SparkSession, root: String, nBuckets: Int = 6
   }
 
   /** Crash recovery for the two swap paths:
-    *  - evolving swap (whole-table two-rename): a crash between the
+    *  - evolving swap ([[AtomicDir.swapInto]]): a crash between the
     *    renames leaves no table dir but a full copy in `<table>__old` —
-    *    restore it (else a replayed batch would silently re-create the
-    *    table from itself);
+    *    [[AtomicDir.recover]] restores it (else a replayed batch would
+    *    silently re-create the table from itself);
     *  - per-bucket swap: a crash between renaming a bucket aside and
     *    renaming its replacement in leaves that bucket in
     *    `<table>__trash/bucket=i` — restore any bucket missing from the
     *    live table. */
   private def recover(schema: String, table: String): Unit = {
     val tgt = new Path(tablePath(schema, table))
-    val old = new Path(tablePath(schema, table) + "__old")
-    if (!fs.exists(tgt) && fs.exists(old) && !fs.rename(old, tgt))
-      throw new IllegalStateException(s"swap recovery failed renaming $old back")
+    AtomicDir.recover(fs, tgt)
     val trash = new Path(tablePath(schema, table) + "__trash")
     if (fs.exists(tgt) && fs.exists(trash)) {
       fs.listStatus(trash).filter(_.getPath.getName.startsWith(s"$BucketCol="))
@@ -198,17 +196,9 @@ final class BucketedCatalog(spark: SparkSession, root: String, nBuckets: Int = 6
         // sidecar travels inside the shadow dir: the rename installs the
         // evolved data and its schema together
         writeSidecar(b, shadow)
-        // rename-aside swap (as ParquetCatalog.swapInto): the table dir
-        // exists at every instant — a crash between a delete and a rename
-        // must never leave no table at all
-        val tgt = new Path(tablePath(schema, table))
-        val trash = new Path(tablePath(schema, table) + "__old")
-        if (fs.exists(trash)) fs.delete(trash, true)
-        if (!fs.rename(tgt, trash))
-          throw new IllegalStateException(s"swap failed renaming $tgt aside")
-        if (!fs.rename(shadow, tgt))
-          throw new IllegalStateException(s"swap failed renaming $shadow in")
-        fs.delete(trash, true)
+        // rename-aside swap: a crash between the renames leaves the table
+        // at `__old`, never no table at all
+        AtomicDir.swapInto(fs, new Path(tablePath(schema, table)), shadow)
         return
       }
       val affected = stagedB.select(BucketCol).distinct()

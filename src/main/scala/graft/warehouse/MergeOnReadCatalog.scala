@@ -94,16 +94,12 @@ final class MergeOnReadCatalog(
     fs.exists(new Path(basePath(schema, table)))
   }
 
-  /** Crash recovery for the compaction swap: base renamed aside but the
-    * shadow never renamed in → restore `base__old`. (Deltas the crashed
-    * compaction meant to delete simply stay live and re-apply.) */
-  private def recover(schema: String, table: String): Unit = {
-    val base = new Path(basePath(schema, table))
-    val old = new Path(basePath(schema, table) + "__old")
-    if (!fs.exists(base) && fs.exists(old) && !fs.rename(old, base))
-      throw new IllegalStateException(
-        s"MOR recovery failed renaming $old back")
-  }
+  /** Crash recovery for the compaction swap ([[AtomicDir.recover]]):
+    * base renamed aside but the shadow never renamed in → restore
+    * `base__old`. (Deltas the crashed compaction meant to delete simply
+    * stay live and re-apply.) */
+  private def recover(schema: String, table: String): Unit =
+    AtomicDir.recover(fs, new Path(basePath(schema, table)))
 
   /** Live delta dirs as (seq, path), seq-ascending. */
   private def deltas(schema: String, table: String): Seq[(Long, String)] = {
@@ -210,10 +206,10 @@ final class MergeOnReadCatalog(
   }
 
   /** Fold the live deltas into the base: materialize the resolved view
-    * into a shadow, two-rename swap, then drop the consumed deltas.
-    * Crash-safe at every point: before the swap nothing changed; between
-    * the renames [[recover]] restores `base__old`; after the swap,
-    * not-yet-deleted deltas re-apply idempotently. */
+    * into a shadow, swap it in ([[AtomicDir.swapInto]]), then drop the
+    * consumed deltas. Crash-safe at every point: before the swap nothing
+    * changed; between the renames [[recover]] restores `base__old`; after
+    * the swap, not-yet-deleted deltas re-apply idempotently. */
   def compact(schema: String, table: String): Unit = {
     val consumed = deltas(schema, table)
     if (consumed.isEmpty) return
@@ -233,15 +229,8 @@ final class MergeOnReadCatalog(
         Layout.zorder(resolved, layoutCols.map(col), nParts, layoutBits)
       }
     arranged.write.mode(SaveMode.Overwrite).parquet(shadow.toString)
-    val base = new Path(basePath(schema, table))
-    val old = new Path(basePath(schema, table) + "__old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(base, old))
-      throw new IllegalStateException(s"compaction failed renaming $base aside")
-    if (!fs.rename(shadow, base))
-      throw new IllegalStateException(s"compaction failed renaming $shadow in")
+    AtomicDir.swapInto(fs, new Path(basePath(schema, table)), shadow)
     consumed.foreach { case (_, p) => fs.delete(new Path(p), true) }
-    fs.delete(old, true)
   }
 
   /** Live delta count (observability + specs). */

@@ -58,13 +58,17 @@ final class ParquetCatalog(spark: SparkSession, root: String)
     * table. The Spark schema the writer stored in that footer's key-value
     * metadata is read here on the driver instead ([[writtenSchema]]);
     * directories without it (foreign writers, partitioned layouts) fall
-    * back to inference. */
+    * back to inference.
+    *
+    * A reader: it mutates nothing, and mid-swap reads the table where
+    * [[AtomicDir.readablePath]] finds it (`<table>__old`). Recovering
+    * here would race a writer's swap ([[AtomicDir]]). */
   def load(schema: String, table: String): DataFrame = {
-    recoverSwap(schema, table)
-    val path = tablePath(schema, table)
-    writtenSchema(new Path(path)) match {
-      case Some(s) => spark.read.schema(s).parquet(path)
-      case None => spark.read.parquet(path)
+    val target = new Path(tablePath(schema, table))
+    val path = AtomicDir.readablePath(fs, target).getOrElse(target)
+    writtenSchema(path) match {
+      case Some(s) => spark.read.schema(s).parquet(path.toString)
+      case None => spark.read.parquet(path.toString)
     }
   }
 
@@ -126,6 +130,7 @@ final class ParquetCatalog(spark: SparkSession, root: String)
   /** D5 — table-replace migration: rewrite with a schema-transforming
     * function, then swap. */
   def migrate(schema: String, table: String)(transform: DataFrame => DataFrame): Unit = {
+    recoverSwap(schema, table)
     val shadow = table + "__migrating"
     transform(load(schema, table)).write.mode(SaveMode.Overwrite)
       .parquet(tablePath(schema, shadow))

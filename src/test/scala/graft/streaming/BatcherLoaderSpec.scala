@@ -91,6 +91,35 @@ class BatcherLoaderSpec extends SparkSpec {
     assert(rows == Seq(("1", "ada")), s"got $rows")
     assert(t.columns.contains("dob"))
   }
+
+  test("job-count guard: one single-schema Batcher.processBatch runs 3 " +
+      "Spark jobs") {
+    // header checkpoint + stage checkpoint + the NDJSON write; a re-added
+    // driver action (distinct, count, aggregate) fails this
+    val out = tmp()
+    Batcher.processBatch(toDf(Seq(10L -> create(1, "ada", 6807))), 0L,
+      fetcher, cfg, out)
+    val (n, jobs) = jobsDuring(Batcher.processBatch(
+      toDf(Seq(12L -> update(1, "ada", "eva"), 13L -> delete(2, "bob"),
+        14L -> create(3, "kim", 7))), 1L, fetcher, cfg, out))
+    assert(jobs.map(j => (j.createEvents, j.updateEvents, j.deleteEvents)) ==
+      Seq((1L, 1L, 1L)))
+    assert(n == 3, s"batcher ran $n jobs")
+  }
+
+  test("both paths' Jobs carry the framed key's schema id (schemaIdKey)") {
+    val f = new StaticSchemaFetcher(
+      Map(1 -> envelopeSchemaJson, 9 -> nameKeyJson))
+    val batch = Seq(
+      (1L, nameKeyFrame("ada"), frame(1, None, Some(User(1, Some("ada"), None)))),
+      (2L, nameKeyFrame("ada"), frame(1, None, Some(User(2, Some("ada"), None))))
+    ).toDF("offset", "key", "value")
+    val direct = CdcStream.processBatch(batch, f,
+      new ParquetCatalog(spark, tmp()), cfg)
+    val staged = Batcher.processBatch(batch, 0L, f, cfg, tmp())
+    assert(direct.map(_.schemaIdKey) == Seq(9))
+    assert(staged.map(_.schemaIdKey) == Seq(9))
+  }
 }
 
 class GraftExtensionsSpec extends SparkSpec {

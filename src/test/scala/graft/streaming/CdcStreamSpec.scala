@@ -75,6 +75,25 @@ object CdcFixture {
     out.toByteArray
   }
 
+  /** A key schema that keys the table by `name`, not by the first
+    * column (id), registered under schema id 9. */
+  val nameKeyJson: String =
+    """{"type": "record", "name": "Key", "fields": [
+      |  {"name": "name", "type": "string"}]}""".stripMargin
+  private val nameKeySchema = new Schema.Parser().parse(nameKeyJson)
+
+  /** A Confluent-framed key under [[nameKeyJson]] (schema id 9). */
+  def nameKeyFrame(name: String): Array[Byte] = {
+    val k = new GenericData.Record(nameKeySchema)
+    k.put("name", name)
+    val out = new ByteArrayOutputStream()
+    out.write(0); out.write(Array[Byte](0, 0, 0, 9))
+    val enc = EncoderFactory.get().binaryEncoder(out, null)
+    new GenericDatumWriter[GenericRecord](nameKeySchema).write(k, enc)
+    enc.flush()
+    out.toByteArray
+  }
+
   def create(id: Int, name: String, dob: Int): (Option[User], Option[User]) =
     (None, Some(User(id, Some(name), Some(dob))))
   def update(id: Int, from: String, to: String): (Option[User], Option[User]) =
@@ -424,32 +443,15 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("primary keys resolved from the Kafka key schema (schemaIdKey)") {
-    import org.apache.avro.Schema
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-    import org.apache.avro.io.EncoderFactory
-    // key schema keys the table by `name`, not by the first column (id)
-    val keyJson =
-      """{"type": "record", "name": "Key", "fields": [
-        |  {"name": "name", "type": "string"}]}""".stripMargin
-    val keySchema = new Schema.Parser().parse(keyJson)
-    def keyFrame(name: String): Array[Byte] = {
-      val k = new GenericData.Record(keySchema)
-      k.put("name", name)
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(0); out.write(Array[Byte](0, 0, 0, 9))
-      val enc = EncoderFactory.get().binaryEncoder(out, null)
-      new GenericDatumWriter[GenericRecord](keySchema).write(k, enc)
-      enc.flush()
-      out.toByteArray
-    }
+    // the key schema keys the table by `name`, not by the first column (id)
     val f = new StaticSchemaFetcher(
-      Map(1 -> envelopeSchemaJson, 9 -> keyJson))
+      Map(1 -> envelopeSchemaJson, 9 -> nameKeyJson))
     val cat = new ParquetCatalog(spark, tmp())
     // two CREATEs with the same name but different ids: PK=name must
     // dedupe them to one row (PK=id would keep both)
     val batch = Seq(
-      (1L, keyFrame("ada"), frame(1, None, Some(User(1, Some("ada"), None)))),
-      (2L, keyFrame("ada"), frame(1, None, Some(User(2, Some("ada"), None))))
+      (1L, nameKeyFrame("ada"), frame(1, None, Some(User(1, Some("ada"), None)))),
+      (2L, nameKeyFrame("ada"), frame(1, None, Some(User(2, Some("ada"), None))))
     ).toDF("offset", "key", "value")
     CdcStream.processBatch(batch, f, cat, cfg)
     val rows = cat.load("inventory", "users")

@@ -50,6 +50,14 @@ class MaskReloadSpec extends SparkSpec {
     assert(!cat.exists("inventory", "users_reload_2"))
   }
 
+  test("reload table name is the reconcile loop's: _reload_<short sha>") {
+    val cfg = CdcStream.TopicConfig("ts.inventory.users", "inventory", "users")
+    val v = MaskConfig(nonPiiKeys = Map("users" -> Seq("id")))
+    assert(MaskReload.reloadConfig(cfg, v, "f00dfeedcafe").targetTable ==
+      "users" + Reconciler.reloadSuffix("f00dfeedcafe"))
+    assert(MaskReload.reloadSuffix("v2") == "_reload_v2")
+  }
+
   test("multi-topic fleet: one query per topic via startAll") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -167,6 +167,19 @@ class ParquetCatalogSpec extends SparkSpec {
       Map(1 -> "a2", 2 -> "b"))
   }
 
+  test("load mid-swap reads the table at __old and renames nothing") {
+    val root = tmp()
+    val cat = new ParquetCatalog(spark, root)
+    cat.save("s", "t", Seq((1, "a"), (2, "b")).toDF("pk", "v"))
+    // a writer's swap between rename(tgt, old) and rename(shadow, tgt)
+    assert(new java.io.File(s"$root/s/t")
+      .renameTo(new java.io.File(s"$root/s/t__old")))
+    assert(cat.load("s", "t").as[(Int, String)].collect().toMap ==
+      Map(1 -> "a", 2 -> "b"))
+    assert(new java.io.File(s"$root/s/t__old").isDirectory)
+    assert(!new java.io.File(s"$root/s/t").exists)
+  }
+
   test("D7 release swaps reload table into place atomically") {
     val cat = new ParquetCatalog(spark, tmp())
     cat.save("s", "t", Seq((1, "old")).toDF("pk", "v"))
