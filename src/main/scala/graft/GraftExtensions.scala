@@ -90,9 +90,9 @@ object GraftExtensions {
   /** Imperative registration on an existing session. Idempotent also
     * against the `spark.sql.extensions` path: injectOptimizerRule'd rules
     * live in the optimizer's batch list (not extraOptimizations), so the
-    * guard checks both — otherwise a GraftSession (extensions config +
-    * register) would install the rule twice and pay two plan traversals
-    * per query. */
+    * guard checks both — otherwise a session built with the extensions
+    * config and then registered would install the rule twice and pay two
+    * plan traversals per query. */
   def register(spark: SparkSession): Unit = {
     definitions.foreach { case (name, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(

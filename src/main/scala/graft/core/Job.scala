@@ -20,10 +20,4 @@ final case class Job(
     batchBytes: Long = 0L,
     createEvents: Long = 0L,
     updateEvents: Long = 0L,
-    deleteEvents: Long = 0L) {
-
-  /** R5 — a batch with only inserts skips the staging merge
-    * (load_processor.go:774-825). */
-  def skipMergeEligible: Boolean =
-    updateEvents == 0 && deleteEvents == 0 && createEvents > 0
-}
+    deleteEvents: Long = 0L)

@@ -41,16 +41,14 @@ object CdcMerge {
   }
 
   /** R2 — delete-common: drop target rows whose PK appears in the stage
-    * (redshift.go:700-753). Stage keys are broadcast by default — the
-    * micro-batch is small, the target is not. Duplicate stage keys are
-    * harmless (a left-anti join only asks whether a key exists), so the
-    * keys are not distinct'ed: that would be a shuffle of its own. */
+    * (redshift.go:700-753). Stage keys are always broadcast — the
+    * micro-batch is small, the target is not, so the target never
+    * shuffles. Duplicate stage keys are harmless (a left-anti join only
+    * asks whether a key exists), so the keys are not distinct'ed: that
+    * would be a shuffle of its own. */
   def deleteCommon(
-      target: DataFrame, stage: DataFrame, pks: Seq[String],
-      broadcastStage: Boolean = true): DataFrame = {
-    val keys = stage.select(pks.map(col): _*)
-    target.join(if (broadcastStage) broadcast(keys) else keys, pks, "left_anti")
-  }
+      target: DataFrame, stage: DataFrame, pks: Seq[String]): DataFrame =
+    target.join(broadcast(stage.select(pks.map(col): _*)), pks, "left_anti")
 
   /** R3/P12 — drop DELETE-op rows before insert (redshift.go:779-795). */
   def dropDeleteOps(stage: DataFrame): DataFrame =
@@ -88,12 +86,11 @@ object CdcMerge {
     * switch, so the observability/throughput trade covers every table the
     * process merges while it is on. Values are identical either way. */
   def merge(
-      target: DataFrame, stage: DataFrame, pks: Seq[String],
-      broadcastStage: Boolean = true): DataFrame =
+      target: DataFrame, stage: DataFrame, pks: Seq[String]): DataFrame =
     graft.core.Metrics.mergeRecorder() match {
       case None =>
         val deduped = dedupe(stage, pks)
-        val kept = deleteCommon(target, stage, pks, broadcastStage)
+        val kept = deleteCommon(target, stage, pks)
         val inserted = insertable(dropDeleteOps(deduped))
         // allowMissingColumns = add-column schema evolution (D4's
         // transact-able class) for free: old target rows read NULL for
@@ -103,7 +100,7 @@ object CdcMerge {
         val deduped = rec.time("dedupe")(
           dedupe(stage, pks).localCheckpoint())
         val kept = rec.time("deletecommon")(
-          deleteCommon(target, stage, pks, broadcastStage)
+          deleteCommon(target, stage, pks)
             .localCheckpoint())
         val inserted = rec.time("deleteop")(
           insertable(dropDeleteOps(deduped)).localCheckpoint())

@@ -8,8 +8,7 @@ import org.apache.spark.sql.types.LongType
 /** Batch sessionization: gap-based session ids via the classic
   * lag → boundary-flag → running-sum formulation. One shuffle on the key,
   * both windows share the same sort — Catalyst plans a single Exchange +
-  * Sort, then two WindowExecs over it. The streaming twin (open-ended
-  * sessions, idle expiry) is `streaming.EventTime.sessionize`.
+  * Sort, then two WindowExecs over it.
   */
 object Sessions {
 

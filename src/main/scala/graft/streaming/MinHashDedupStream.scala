@@ -73,7 +73,7 @@ final class MinHashDedupStream(spark: SparkSession, storePath: String,
   private var dropped = 0L
 
   /** O(store) sketch rebuilds since construction (growth telemetry:
-    * the saturation-rebuild cadence is the thing StoreGrowth audits). */
+    * the saturation-rebuild cadence of the gate). */
   def gateRebuilds: Long = gate.rebuilds
 
   /** Totals since construction: (batches, survivors, dropped). */

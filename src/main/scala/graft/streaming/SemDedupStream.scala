@@ -6,9 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming SemDeDup — the `foreachBatch` twin of
-  * [[graft.ops.SemDedup.incrementalAgainstIndex]], completing the
-  * StreamDedup/AttributionStream pattern family: exact dedup streams via
-  * [[StreamDedup]], semantic dedup streams through this.
+  * [[graft.ops.SemDedup.incrementalAgainstIndex]]: exact dedup streams
+  * go through [[StreamDedup]], semantic dedup streams through this.
   *
   * Per micro-batch of (id, embedding):
   *

@@ -14,20 +14,14 @@ import org.apache.spark.sql.DataFrame
   *    primitive for at-least-once sources (Kafka redeliveries, retried
   *    producers) where duplicates arrive CLOSE to the original.
   *
-  *  - against-all-history dedup keeps one state entry per distinct key
-  *    forever — unboundable by definition. Two scalable shapes:
-  *    [[againstHistoryStateful]] keeps the key set in the ENGINE's state
-  *    store — on the RocksDB provider
-  *    ([[graft.GraftSession.rocksdbStateConfs]]) state lives on
-  *    executor-local disk with O(delta) changelog commits, so per-trigger
-  *    cost tracks the BATCH, not the accumulated history (measured:
-  *    `tools.StateBench`); or `foreachBatch` +
-  *    [[graft.ops.Dedup.incremental]] over a PK-bucketed corpus store
-  *    ([[graft.warehouse.BucketedCatalog]]), where the anti-join
-  *    partition-prunes to the micro-batch's buckets — the right shape when
-  *    the key corpus must ALSO be a queryable table, at the cost of a
-  *    store probe that grows with corpus size
-  *    ([[graft.tools.StoreGrowth]] measures that growth).
+  *  - against-all-history dedup keeps one entry per distinct key
+  *    forever — unboundable as stream state, so it runs as
+  *    `foreachBatch` + [[graft.ops.Dedup.incremental]] over a PK-bucketed
+  *    corpus store ([[graft.warehouse.BucketedCatalog]]): the anti-join
+  *    partition-prunes to the micro-batch's buckets and the key corpus is
+  *    ALSO a queryable table, at the cost of a store probe that grows
+  *    with corpus size. [[bloomGatedBatch]] puts a bloom fast path in
+  *    front of that probe.
   */
 object StreamDedup {
 
@@ -38,22 +32,6 @@ object StreamDedup {
       keys: Seq[String]): DataFrame =
     df.withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark(keys)
-
-  /** Against-ALL-history exact dedup inside the stream engine: the first
-    * row per `keys` value EVER seen is emitted, every later one dropped.
-    * State is the distinct-key set and never expires — it REQUIRES the
-    * RocksDB provider ([[graft.GraftSession.rocksdbStateConfs]], the
-    * [[graft.GraftSession.builder]] DEFAULT) so that set lives on
-    * executor-local disk rather than heap (measured `tools.StateBench`:
-    * equal trigger wall, 709 vs 58–175 MiB resident at 3.6M keys — the
-    * heap provider is the next OOM at 100 TB key counts); with changelog
-    * checkpointing each commit ships only the trigger's new keys. State
-    * shards by `HashPartitioning(keys)` across
-    * `spark.sql.shuffle.partitions` tasks — size that conf for the KEY
-    * CARDINALITY (it is fixed at the first start of a stateful query),
-    * not the batch size. */
-  def againstHistoryStateful(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
 
   /** `foreachBatch` body for against-all-history dedup with the bloom
     * fast path ([[graft.ops.Dedup.bloomGate]]): rows the sketch marks

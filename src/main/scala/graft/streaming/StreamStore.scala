@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * ==Key-bucketed two-tier layout (r17)==
   *
   * With `buckets > 0` and a `keyCol` the store is an LSM-ish pair —
-  * the shape the r9 BucketBench notes prescribed for micro-batch
+  * the shape the BENCHNOTES.md store sweep prescribed for micro-batch
   * writers ("MOR as the streaming substrate; bucketed for key-local
   * reads"):
   *

@@ -53,7 +53,7 @@ final class SubstrDedupStream(spark: SparkSession, storePath: String,
   private var tokensDropped = 0L
 
   /** O(store) sketch rebuilds since construction (growth telemetry:
-    * the saturation-rebuild cadence is the thing StoreGrowth audits). */
+    * the saturation-rebuild cadence of the gate). */
   def gateRebuilds: Long = gate.rebuilds
 
   /** Totals since construction: (batches, tokens kept, tokens cut). */

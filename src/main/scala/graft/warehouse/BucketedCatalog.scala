@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   * co-location key: two bucketed tables with the same nBuckets join
   * bucket-to-bucket without a full shuffle.
   *
-  * STORE SELECTION (measured, graft.tools.BucketBench r10 sweep —
-  * 10 k-row update batches, nBuckets=64, local[32]; full table in
-  * BENCHNOTES.md):
+  * STORE SELECTION (measured, round-10 store sweep — 10 k-row update
+  * batches, nBuckets=64, local[32]; BENCHNOTES.md's measured crossover
+  * table):
   *
   *  - **Bucketed wins only for bucket-LOCALIZED batch keys AND
   *    target/batch ≳ 1000:** parity at a 4 M-row target (0.94 s vs

@@ -66,7 +66,8 @@ import org.apache.spark.sql.functions._
   * Single writer per table, like the reference's per-table loader
   * (load_processor.go:80-104); readers are unrestricted — delta dirs
   * appear atomically (written to a dot-prefixed tmp dir, renamed in)
-  * and the base swap keeps a `__old` copy for [[recover]].
+  * and the base swap keeps a `__old` copy that readers read mid-swap
+  * and writers [[recover]].
   */
 final class MergeOnReadCatalog(
     spark: SparkSession, root: String,
@@ -140,10 +141,14 @@ final class MergeOnReadCatalog(
   }
 
   /** The resolved view: base minus PKs touched by live deltas, plus each
-    * touched PK's last-written surviving row ([[MergeOnReadCatalog.resolve]]). */
+    * touched PK's last-written surviving row ([[MergeOnReadCatalog.resolve]]).
+    * A reader: it mutates nothing, and mid-swap reads the base where
+    * [[AtomicDir.readablePath]] finds it (`base__old`). Recovering here
+    * would race a compaction's swap ([[AtomicDir]]). */
   def load(schema: String, table: String): DataFrame = {
-    recover(schema, table)
-    val base = spark.read.parquet(basePath(schema, table))
+    val target = new Path(basePath(schema, table))
+    val base = spark.read.parquet(
+      AtomicDir.readablePath(fs, target).getOrElse(target).toString)
     val live = deltas(schema, table)
     if (live.isEmpty) base
     else MergeOnReadCatalog.resolve(base,
@@ -211,6 +216,7 @@ final class MergeOnReadCatalog(
     * changed; between the renames [[recover]] restores `base__old`; after
     * the swap, not-yet-deleted deltas re-apply idempotently. */
   def compact(schema: String, table: String): Unit = {
+    recover(schema, table)
     val consumed = deltas(schema, table)
     if (consumed.isEmpty) return
     val shadow = new Path(basePath(schema, table) + "__compacting")

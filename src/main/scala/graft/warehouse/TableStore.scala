@@ -17,8 +17,8 @@ trait TableStore {
 }
 
 /** Store selection, encoded from measurement rather than left to
-  * scaladoc: the round-10 `graft.tools.BucketBench` sweep (10 k-row
-  * update batches, nBuckets=64, local[32]; full table in BENCHNOTES.md
+  * scaladoc: the round-10 store sweep (10 k-row update batches,
+  * nBuckets=64, local[32]; BENCHNOTES.md's measured crossover table,
   * "Bucketed-store crossover MEASURED") found
   *
   *  - merge-on-read flat at O(batch) (0.2–0.5 s) against every target

@@ -11,10 +11,9 @@ import graft.SparkSpec
   * join gets its oversized partition split into parallel sub-reads at
   * runtime — the engine's no-code-change answer to skewed joins (manual
   * salting, `ops.Skew.saltedJoin`, remains for aggregations and for
-  * joins below AQE's size thresholds). This pins that the session
-  * config the engine ships ([[graft.GraftSession]] sets
-  * `adaptive.skewJoin.enabled`) actually triggers on a skewed shape,
-  * so the 100 TB skew story is a tested behavior, not a config comment.
+  * joins below AQE's size thresholds). This pins that
+  * `adaptive.skewJoin.enabled` actually triggers on a skewed shape, so
+  * the skew story is a tested behavior, not a config comment.
   */
 class AqeSkewJoinSpec extends SparkSpec {
 

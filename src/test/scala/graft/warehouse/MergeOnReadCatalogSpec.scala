@@ -128,6 +128,24 @@ class MergeOnReadCatalogSpec extends SparkSpec {
     assert(resolvedBase.as[(Int, String)].collect().toMap == want)
   }
 
+  test("load mid-swap reads the base at base__old and renames nothing") {
+    val root = tmp()
+    val mor = new MergeOnReadCatalog(spark, root, compactEvery = 100)
+    mor.merge("s", "t",
+      stageDF((1 to 5).map(i => (i.toLong, Cdc.OpCreate, i, s"v$i"))),
+      Seq("pk"))
+    mor.merge("s", "t", stageDF(Seq((10L, Cdc.OpUpdate, 2, "v2b"))), Seq("pk"))
+    // a compaction's swap between rename(base, base__old) and
+    // rename(shadow, base)
+    val dir = new java.io.File(s"$root/s/t")
+    assert(new java.io.File(dir, "base")
+      .renameTo(new java.io.File(dir, "base__old")))
+    assert(mor.load("s", "t").as[(Int, String)].collect().toMap ==
+      Map(1 -> "v1", 2 -> "v2b", 3 -> "v3", 4 -> "v4", 5 -> "v5"))
+    assert(new java.io.File(dir, "base__old").isDirectory)
+    assert(!new java.io.File(dir, "base").exists)
+  }
+
   test("crash recovery: stranded shadow and tmp-delta debris never surface; next write/compact overwrites them") {
     val root = tmp()
     val mor = new MergeOnReadCatalog(spark, root, compactEvery = 100)

@@ -3,9 +3,10 @@ package graft.warehouse
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** [[TableStore.recommend]] must replay the round-10 BucketBench
-  * crossover table (BENCHNOTES.md): the measured winners at each
-  * (target, batch, key-shape) point are the recommendations. */
+/** [[TableStore.recommend]] must replay BENCHNOTES.md's measured
+  * crossover table ("Bucketed-store crossover MEASURED"): the measured
+  * winners at each (target, batch, key-shape) point are the
+  * recommendations. */
 class TableStoreRecommendSpec extends SparkSpec {
   import spark.implicits._
   import TableStore.{Bucketed, Mor}
