@@ -236,6 +236,110 @@ class ParquetCatalogSpec extends SparkSpec {
       Seq((1, "new")))
   }
 
+  /** Column → one flag per chunk (every row group of every data file
+    * under `dir`): does the chunk carry a dictionary page? */
+  private def dictionaryPages(dir: String): Map[String, Seq[Boolean]] =
+    chunkSizes(dir).flatten.groupBy(_._1).map { case (c, cs) => c -> cs.map(_._2._1) }
+
+  /** Per data file of `dir` (by name): (column, (dictionary page?, chunk
+    * bytes)) for every chunk of every row group. */
+  private def chunkSizes(dir: String): Seq[Seq[(String, (Boolean, Long))]] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    dataFiles(dir).map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getPath), spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala).map(c =>
+        c.getPath.toDotString -> (c.hasDictionaryPage -> c.getTotalSize))
+      finally r.close()
+    }
+  }
+
+  private def dataFiles(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.isFile && f.getName.endsWith(".parquet")).sortBy(_.getName)
+
+  /** `pk` (unique int), `u` (unique string) and `c` (5 values) for ids in
+    * [from, until). */
+  private def wide(from: Long, until: Long) = spark.range(from, until).select(
+    col("id").cast("int").as("pk"),
+    concat(lit("user-"), sha2(col("id").cast("string"), 256)).as("u"),
+    concat(lit("cat-"), (col("id") % 5).cast("string")).as("c"))
+
+  private def asStage(df: org.apache.spark.sql.DataFrame, op: String) =
+    df.withColumn(Cdc.OffsetColumn, lit("1")).withColumn(Cdc.OperationColumn, lit(op))
+
+  test("writer memo: after save, a merge writes the unique column without a " +
+      "dictionary, keeps it on the 5-value column, and writes default-sized chunks") {
+    val cat = new ParquetCatalog(spark, tmp())
+    cat.save("s", "t", wide(0, 20000))
+    cat.merge("s", "t", asStage(wide(20000, 22000), Cdc.OpCreate), Seq("pk"))
+    val dir = cat.tablePath("s", "t")
+    val dict = dictionaryPages(dir)
+    assert(dict("u").nonEmpty && !dict("u").exists(identity))
+    assert(dict("c").nonEmpty && dict("c").forall(identity))
+    // the same rows in the same files, written with parquet's defaults
+    val ref = tmp()
+    dataFiles(dir).zipWithIndex.foreach { case (f, i) =>
+      spark.read.parquet(f.getPath).coalesce(1).write.parquet(s"$ref/$i") }
+    val refSizes = dataFiles(dir).indices.map(i => chunkSizes(s"$ref/$i").flatten)
+    chunkSizes(dir).zip(refSizes).foreach { case (got, want) =>
+      assert(got.map(_._1) == want.map(_._1))
+      got.zip(want).foreach { case ((c, (_, g)), (_, (_, w))) =>
+        assert(math.abs(g - w) <= 0.01 * w, s"column $c: $g bytes, defaults $w")
+      }
+    }
+  }
+
+  test("writer memo: no ratchet, a table seeded PLAIN regains its dictionary " +
+      "once its largest file has doubled") {
+    val cat = new ParquetCatalog(spark, tmp())
+    val dir = cat.tablePath("s", "t")
+    def largest() = dataFiles(dir).map(_.length).max
+    // two rows: parquet itself writes every column PLAIN
+    cat.save("s", "t", wide(0, 2).coalesce(1))
+    assert(dictionaryPages(dir).values.flatten.forall(!_))
+    val seeded = largest()
+    // the memo still applies: `c` stays PLAIN while the file grows
+    cat.merge("s", "t", asStage(wide(2, 20000), Cdc.OpCreate), Seq("pk"))
+    assert(!dictionaryPages(dir)("c").exists(identity))
+    assert(largest() > 2 * seeded)
+    // doubled: the next merge writes with parquet's defaults again
+    cat.merge("s", "t", asStage(wide(0, 10), Cdc.OpUpdate), Seq("pk"))
+    assert(dictionaryPages(dir)("c").forall(identity))
+    assert(!dictionaryPages(dir)("u").exists(identity))
+  }
+
+  test("writer memo: a D4-added column, a migrated table and a released " +
+      "table start from parquet's defaults") {
+    val cat = new ParquetCatalog(spark, tmp())
+    val dir = cat.tablePath("s", "t")
+    cat.save("s", "t", wide(0, 20000))
+    // D4: the merge adds a 3-value column `d` to every row
+    cat.merge("s", "t", asStage(wide(0, 20000)
+      .withColumn("d", concat(lit("d-"), (col("pk") % 3).cast("string"))),
+      Cdc.OpUpdate), Seq("pk"))
+    assert(dictionaryPages(dir)("d").forall(identity))
+    assert(!dictionaryPages(dir)("u").exists(identity))
+    // migrate turns the unique `u` into 3 values: written with defaults,
+    // it gets a dictionary, and the memo it leaves keeps it
+    cat.migrate("s", "t")(_.withColumn("u", concat(lit("g-"), (col("pk") % 3).cast("string"))))
+    assert(dictionaryPages(dir)("u").forall(identity))
+    cat.merge("s", "t", asStage(wide(0, 10)
+      .withColumn("u", lit("g-0")).withColumn("d", lit("d-0")), Cdc.OpUpdate), Seq("pk"))
+    assert(dictionaryPages(dir)("u").forall(identity))
+    // release: `r`'s memo has `u` PLAIN; the released rows make it pay
+    val rdir = cat.tablePath("s", "r")
+    cat.save("s", "r", wide(0, 20000))
+    assert(!dictionaryPages(rdir)("u").exists(identity))
+    cat.save("s", "r_reload_2", wide(0, 20000).withColumn("u", lit("same")))
+    cat.release("s", "r", "_reload_2")
+    cat.merge("s", "r", asStage(wide(0, 10).withColumn("u", lit("same")),
+      Cdc.OpUpdate), Seq("pk"))
+    assert(dictionaryPages(rdir)("u").forall(identity))
+  }
+
   test("load falls back to inference for directories without a Spark " +
       "footer schema") {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
