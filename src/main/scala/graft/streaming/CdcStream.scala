@@ -258,16 +258,18 @@ object CdcStream {
       else stage.columns
         .find(c => c != Cdc.OffsetColumn && c != Cdc.OperationColumn).toSeq
     // R5 applies only when the batch's data columns exactly match the
-    // live table's (the BucketedCatalog partition column is layout, not
-    // data): parquet append doesn't widen the read schema, so a schema
-    // change (D4 add/drop column) must go through the merge rewrite — the
-    // reference likewise migrates the table before any load
-    // (load_processor.go:395-444).
+    // live table's, by name and type (the BucketedCatalog partition
+    // column is layout, not data): parquet append doesn't widen the read
+    // schema, so a schema change (D4 add/drop column, D5 int → bigint)
+    // must go through the merge rewrite — appended INT64 files in an
+    // INT32 table fail every later read. The reference likewise migrates
+    // the table before any load (load_processor.go:395-444).
     val skip = job.skipMerge &&
       catalog.exists(cfg.targetSchema, cfg.targetTable) && {
-        val tgtCols = catalog.load(cfg.targetSchema, cfg.targetTable)
-          .columns.toSet - graft.warehouse.BucketedCatalog.BucketCol
-        CdcMerge.insertable(stage).columns.toSet == tgtCols
+        def types(s: StructType) = s.fields.map(f => f.name -> f.dataType).toMap
+        val tgt = types(catalog.load(cfg.targetSchema, cfg.targetTable).schema) -
+          graft.warehouse.BucketedCatalog.BucketCol
+        types(CdcMerge.insertable(stage).schema) == tgt
       }
     // copytarget: the write into the live table (with phase breakdown
     // on, the merge phases checkpoint themselves first, so this is

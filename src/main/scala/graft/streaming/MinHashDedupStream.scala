@@ -4,10 +4,9 @@ import graft.ops.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Streaming MinHash near-dup dedup — the text twin of
-  * [[SemDedupStream]], completing the streaming dedup family (exact
-  * keys: [[StreamDedup]]; embeddings: [[SemDedupStream]]; paragraphs:
-  * [[ParaDedupStream]]; whole-document text near-dups: this).
+/** Streaming MinHash near-dup dedup, a member of the streaming dedup
+  * family (exact keys: [[StreamDedup]]; paragraphs: [[ParaDedupStream]];
+  * whole-document text near-dups: this).
   *
   * Per micro-batch of (id, text):
   *
@@ -251,8 +250,8 @@ final class MinHashDedupStream(spark: SparkSession, storePath: String,
         // survivors'; staleness/saturation rules: GateKeeper doc)
         gate.afterAppend(kg)
         batchesSeen += 1; kept += nKept; dropped += total - nKept
-        // cadenced maintenance (the SemDedupStream discipline): folding
-        // bounds the per-trigger probe's file listing, decisions unchanged
+        // cadenced maintenance: folding bounds the per-trigger probe's
+        // file listing, decisions unchanged
         if (compactEvery > 0 && batchesSeen % compactEvery == 0) compact()
         survivors
       } finally pairs.unpersist()

@@ -5,10 +5,10 @@ import org.apache.spark.sql.{Observation, Row}
 /** Bounded read of an [[Observation]] after its action has completed.
   *
   * `Observation.get` blocks FOREVER when the CollectMetrics node was
-  * pruned from the executed plan (AQE empty-relation propagation — the
-  * SemDedupStream r15 finding) or when the materializing action is one
-  * that never posts a SQL-execution end event; a stream trigger must
-  * not hang on a missing metric. The public `future` completes exactly
+  * pruned from the executed plan (AQE empty-relation propagation) or
+  * when the materializing action is one that never posts a
+  * SQL-execution end event; a stream trigger must not hang on a
+  * missing metric. The public `future` completes exactly
   * when metrics arrive, so a short bounded wait (listener-bus delivery
   * is milliseconds) cleanly separates "delivered" from "never coming" —
   * callers fall back to a recount job in the latter, rare, case. */

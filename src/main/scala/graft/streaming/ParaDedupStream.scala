@@ -6,11 +6,11 @@ import org.apache.spark.sql.functions._
 
 /** Streaming paragraph dedup — the stream-side twin of
   * [[graft.ops.Dedup.dedupParagraphs]], completing the family
-  * ([[StreamDedup]] exact rows, [[SemDedupStream]] embeddings, this for
-  * the C4-style paragraph screen): each micro-batch of documents loses
-  * every paragraph already seen — in the accumulated corpus OR earlier
-  * in the batch (first occurrence by (doc, pos) wins) — and documents
-  * reassemble from their surviving paragraphs.
+  * ([[StreamDedup]] exact rows, this for the C4-style paragraph
+  * screen): each micro-batch of documents loses every paragraph
+  * already seen — in the accumulated corpus OR earlier in the batch
+  * (first occurrence by (doc, pos) wins) — and documents reassemble
+  * from their surviving paragraphs.
   *
   * State is a (key, batch_id, lineage) parquet table of md5 paragraph
   * keys. Tagging keys with the batch that introduced them makes replay
@@ -181,8 +181,8 @@ final class ParaDedupStream(spark: SparkSession, storePath: String,
       val d = Observed.long(obs, "d")(
         if (recount.isNullAt(1)) 0L else recount.getLong(1))
       batchesSeen += 1; parasKept += k; parasDropped += d
-      // cadenced maintenance (the SemDedupStream discipline): folding
-      // bounds the per-trigger probe's file listing, decisions unchanged
+      // cadenced maintenance: folding bounds the per-trigger probe's
+      // file listing, decisions unchanged
       if (compactEvery > 0 && batchesSeen % compactEvery == 0) compact()
       out
     } finally {

@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.LongType
 /** Streaming exact-substring dedup — the stream twin of
   * [[graft.ops.Dedup.stripDuplicateSpans]] with `keepFirst=true`,
   * completing the dedup stream family (exact keys: [[StreamDedup]];
-  * embeddings: [[SemDedupStream]]; paragraphs: [[ParaDedupStream]];
-  * signatures: [[MinHashDedupStream]]; n-token substrings: this).
+  * paragraphs: [[ParaDedupStream]]; signatures: [[MinHashDedupStream]];
+  * n-token substrings: this).
   *
   * Per micro-batch of (id, text): every `n`-token window whose md5 key
   * was seen in an EARLIER batch (the accumulated corpus) or earlier in
@@ -92,8 +92,8 @@ final class SubstrDedupStream(spark: SparkSession, storePath: String,
 
   private def processBatchImpl(batch: DataFrame, batchId: Long,
       sink: Option[DataFrame => Unit]): DataFrame = {
-    // LAZY checkpoint (r16, the SemDedupStream discipline): toks is
-    // consumed by the joined checkpoint below AND the reassembly join —
+    // LAZY checkpoint (r16): toks is consumed by the joined checkpoint
+    // below AND the reassembly join —
     // the joined materialization is its first action and persists it,
     // so the trigger spends no standalone job on it. The window explode
     // (previously its own eager checkpoint) rides the same job: it has
@@ -227,8 +227,8 @@ final class SubstrDedupStream(spark: SparkSession, storePath: String,
           val d = Observed.long(obs, "d")(
             if (recount.isNullAt(1)) 0L else recount.getLong(1))
           batchesSeen += 1; tokensKept += k; tokensDropped += d
-          // cadenced maintenance (the SemDedupStream discipline): every
-          // append adds a store file, so a resident stream accumulates
+          // cadenced maintenance: every append adds a store file, so a
+          // resident stream accumulates
           // small files — folding keeps the per-trigger probe's listing
           // and scan bounded without changing any decision
           if (compactEvery > 0 && batchesSeen % compactEvery == 0)

@@ -5,13 +5,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming quote/contamination detection — the stream twin of
-  * [[graft.ops.Dedup.winnowIncremental]], the sixth member of the dedup
-  * stream family (exact keys: [[StreamDedup]]; embeddings:
-  * [[SemDedupStream]]; paragraphs: [[ParaDedupStream]]; signatures:
-  * [[MinHashDedupStream]]; substrings: [[SubstrDedupStream]]; winnowed
-  * fingerprints: this). Each micro-batch of (id, text) emits the doc
-  * pairs sharing at least `minShared` winnowing fingerprints with the
-  * accumulated corpus OR with earlier docs in the same batch — each
+  * [[graft.ops.Dedup.winnowIncremental]], a member of the dedup
+  * stream family (exact keys: [[StreamDedup]]; paragraphs:
+  * [[ParaDedupStream]]; signatures: [[MinHashDedupStream]]; substrings:
+  * [[SubstrDedupStream]]; winnowed fingerprints: this). Each
+  * micro-batch of (id, text) emits the doc pairs sharing at least
+  * `minShared` winnowing fingerprints with the accumulated corpus OR
+  * with earlier docs in the same batch — each
   * shared fingerprint witnesses a shared ≥ w+k−1-token run, so an
   * emission is positional quote evidence at ingest time (eval-set
   * contamination alerts, attribution checks), not just a similarity
@@ -94,7 +94,7 @@ final class WinnowQuoteStream(spark: SparkSession, storePath: String,
     // metric (r16): the r15 body paid two standalone count jobs per
     // trigger (bFps, out) on top of its three real actions — at stream
     // batch sizes the per-job floor sets throughput, so each removed
-    // action is throughput (the SemDedupStream finding)
+    // action is throughput
     // EAGER checkpoint, deliberately (r18 re-audit): a lazy one saves
     // the standalone job (~12% on the 5-batch bench) but breaks the
     // observation — the skipStore path's `bFps.limit(0)` leg is the

@@ -234,10 +234,13 @@ final class ParquetCatalog(spark: SparkSession, root: String)
   }
 
   /** D7 — release: atomically promote `<table><suffix>` (e.g. a
-    * `_reload_v2` rebuild) to `<table>`. */
+    * `_reload_v2` rebuild) to `<table>`. A merge into the source that
+    * crashed mid-swap left it at `<table><suffix>__old`; it is recovered
+    * first, as [[exists]] would, since an empty trigger never calls that. */
   def release(schema: String, table: String, suffix: String): Unit = {
     memos.remove((schema, table))
     memos.remove((schema, table + suffix))
+    recoverSwap(schema, table + suffix)
     swapInto(schema, table, table + suffix)
   }
 

@@ -217,9 +217,8 @@ class SemDedupSpec extends SparkSpec {
   test("incrementalAgainstIndex scale probe: thousands of batch rows " +
     "against the sf0.1 index stay pruned + broadcast + probe-shaped") {
     import org.apache.spark.sql.functions.col
-    // the sf0.1 corpus indexed into a spec-local dir (NOT IndexStore's
-    // shared /tmp scratch, which a concurrently running Bench/Verify JVM
-    // could be rewriting mid-read — its memoization is per-JVM only)
+    // the sf0.1 corpus indexed into a spec-local dir, so no other JVM
+    // can be rewriting the index mid-read
     val corpus = graft.Tables.read(spark, "/root/testdata/sf0.1",
       "embeddings")
     val idxPath = java.nio.file.Files

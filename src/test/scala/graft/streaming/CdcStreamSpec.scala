@@ -341,6 +341,23 @@ class CdcStreamSpec extends SparkSpec {
     assert(cat.load("inventory", "users").count() == 2)
   }
 
+  test("R5 skipMerge: a CREATE-only batch whose column widened int → " +
+      "bigint merges instead of appending, and the table reads bigint") {
+    // appended INT64 files in an INT32 table fail every later read of it
+    val cat = new ParquetCatalog(spark, tmp())
+    cat.save(cfg.targetSchema, cfg.targetTable, Seq((1, 10)).toDF("pk", "v"))
+    val stage = Seq(("2", Cdc.OpCreate, 2, 20L))
+      .toDF(Cdc.OffsetColumn, Cdc.OperationColumn, "pk", "v")
+    val job = CdcStream.load(
+      CdcStream.Staged(stage, graft.core.Job(cfg.topic, 2L, 2L,
+        skipMerge = true, createEvents = 1L), Nil),
+      cat, cfg.copy(primaryKeys = Seq("pk")))
+    assert(!job.skipMerge)
+    val out = cat.load(cfg.targetSchema, cfg.targetTable)
+    assert(out.schema("v").dataType == org.apache.spark.sql.types.LongType)
+    assert(out.as[(Int, Long)].collect().toSet == Set((1, 10L), (2, 20L)))
+  }
+
   test("T3 schema-id change mid-batch: groups processed separately") {
     val cat = new ParquetCatalog(spark, tmp())
     val f2 = new StaticSchemaFetcher(

@@ -10,11 +10,10 @@ import org.apache.spark.sql.DataFrame
   * a compact/swap interrupted BEFORE the first rename (shadow written,
   * store intact), BETWEEN the two renames (store stranded aside), or
   * AFTER the second rename (trash not yet cleaned) must leave the next
-  * trigger with the full screened corpus — for ParaDedupStream and
-  * MinHashDedupStream via the shared [[StreamStore]]/AtomicDir
-  * protocol, for SemDedupStream via Ivf's marker-guarded index swap.
-  * Commit 5ea9739 fixed the same missed-recover window in two files at
-  * once; this matrix pins every crash point on the ONE shared path. */
+  * trigger with the full screened corpus — for ParaDedupStream,
+  * SubstrDedupStream and MinHashDedupStream via the shared
+  * [[StreamStore]]/AtomicDir protocol. Commit 5ea9739 fixed the same
+  * missed-recover window in two files at once; this matrix pins every crash point on the ONE shared path. */
 class DedupStreamCrashMatrixSpec extends SparkSpec {
   import spark.implicits._
 
@@ -108,66 +107,5 @@ class DedupStreamCrashMatrixSpec extends SparkSpec {
       s.compact()
       assert(!fs.exists(new Path(dir + "__old")), "trash must be gone")
       graft.core.Metrics.drainUnpersist()
-    }
-
-  // --- SemDedupStream: the Ivf marker-guarded swap ---------------------
-
-  private val dim = 8
-  private def vec(family: Int, nudge: Double): Array[Float] = {
-    val v = Array.fill(dim)(0.0f)
-    v(family % dim) = 1.0f
-    v((family + 1) % dim) = nudge.toFloat
-    v
-  }
-
-  /** Leave an Ivf index in the given compactIndex crash state. Stale
-    * markers (crash leftovers) get a 20-minute-old mtime so recovery
-    * reclaims them instead of waiting out a live-maintainer window. */
-  private def strandIndex(idx: String, crash: String): Unit = {
-    def marker(aged: Boolean): Unit = {
-      val m = new Path(idx + "__swapping")
-      fs.create(m, true).close()
-      if (aged)
-        fs.setTimes(m, System.currentTimeMillis() - 20 * 60 * 1000L, -1)
-    }
-    crash match {
-      case "before" => // shadow + marker written, target untouched;
-        // marker aged stale → recovery reclaims it (crash leftover)
-        copyDir(idx, idx + "__compacting")
-        marker(aged = true)
-      case "between" => // target renamed aside, shadow not yet in —
-        // recovery must roll FORWARD to the completed shadow
-        copyDir(idx, idx + "__compacting")
-        mv(idx, idx + "__old")
-        marker(aged = false)
-      case "after" => // swap done, trash + marker not yet cleaned
-        copyDir(idx, idx + "__old")
-        marker(aged = true)
-    }
-  }
-
-  for (crash <- Seq("before", "between", "after"))
-    test(s"semdedup: index swap crash $crash — corpus survives") {
-      val idx = Files.createTempDirectory(s"semcrash_$crash")
-        .toString + "/idx"
-      val seed = Seq(1L -> vec(0, 0.0), 2L -> vec(1, 0.0))
-        .toDF("vec_id", "embedding")
-      val model = graft.ops.Ivf.train(seed, "vec_id", "embedding",
-        k = 2, iters = 2)
-      graft.ops.Ivf.index(seed, "embedding", model, idx)
-      strandIndex(idx, crash)
-      val s = new SemDedupStream(spark, idx, "vec_id", "embedding",
-        threshold = 0.95, compactEvery = 0)
-      // near-dup of indexed family 0 must drop; new family 2 must keep
-      val n = s.processBatch(Seq(
-        10L -> vec(0, 0.01), 20L -> vec(2, 0.0))
-        .toDF("vec_id", "embedding"))
-      assert(n == 1,
-        s"crash-$crash: expected only the novel vector to survive")
-      // the index is fully consistent again: a real compact completes
-      graft.ops.Ivf.compactIndex(spark, idx)
-      assert(!fs.exists(new Path(idx + "__old")) &&
-        !fs.exists(new Path(idx + "__swapping")),
-        "compact after recovery must clean trash and marker")
     }
 }

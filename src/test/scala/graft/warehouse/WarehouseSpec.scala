@@ -189,6 +189,20 @@ class ParquetCatalogSpec extends SparkSpec {
     assert(!cat.exists("s", "t_reload_2"))
   }
 
+  test("D7 release recovers a reload table a crashed merge left at __old") {
+    val root = tmp()
+    val cat = new ParquetCatalog(spark, root)
+    cat.save("s", "t", Seq((1, "old")).toDF("pk", "v"))
+    cat.save("s", "t_reload_2", Seq((1, "new")).toDF("pk", "v"))
+    // a merge into the reload table crashed between its swap's renames;
+    // an empty trigger since then never called exists() to recover it
+    assert(new java.io.File(s"$root/s/t_reload_2")
+      .renameTo(new java.io.File(s"$root/s/t_reload_2__old")))
+    cat.release("s", "t", "_reload_2")
+    assert(cat.load("s", "t").as[(Int, String)].collect().toSeq == Seq((1, "new")))
+    assert(new java.io.File(s"$root/s").list().toSet == Set("t"))
+  }
+
   test("D5 migrate rewrites schema through shadow + swap") {
     val cat = new ParquetCatalog(spark, tmp())
     cat.save("s", "t", Seq((1, "a")).toDF("pk", "v"))
