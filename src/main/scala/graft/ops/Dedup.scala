@@ -805,8 +805,8 @@ object Dedup {
 
   /** Ingest-time quote/plagiarism detection against a PERSISTED
     * [[winnowFingerprints]] store — the winnowing member of the
-    * incremental-dedup family (exact keys, MinHash signatures, SemDedup
-    * cells all have one): winnow the new batch, probe the stored
+    * incremental-dedup family (exact keys and MinHash signatures have
+    * one too): winnow the new batch, probe the stored
     * (fp, doc) table, and report batch×corpus doc pairs sharing at
     * least `minShared` fingerprints — each shared fingerprint witnesses
     * a shared token run, so the pair list is positional evidence, not
@@ -821,24 +821,6 @@ object Dedup {
     * witness template text, not quotation; same reasoning as
     * [[stripFrequentParagraphs]]). Output: (id_new, id_corpus,
     * shared_fps), batch self-pairs excluded by construction. */
-  /** Boilerplate governance for fingerprint stores — the batch twin of
-    * [[graft.streaming.WinnowQuoteStream]]'s `maxFpDocs` compact rule:
-    * a fingerprint carried by more than `maxDocs` distinct docs is
-    * navigation/license boilerplate, not quote evidence, and every
-    * probe hit on it fans `|carriers|` pair rows. Drop those fps from
-    * the store side before [[winnowIncremental]]. One aggregate + an
-    * anti-join; the hot set is usually tiny (AQE broadcasts it) but
-    * adversarially unbounded, so no broadcast hint. */
-  def capFpFrequency(fps: DataFrame, docCol: String,
-      maxDocs: Long): DataFrame = {
-    require(maxDocs > 0, "maxDocs must be positive")
-    val hot = fps.groupBy("fp")
-      .agg(countDistinct(col(docCol)).as("__carriers"))
-      .filter(col("__carriers") > maxDocs)
-      .select("fp")
-    fps.join(hot, Seq("fp"), "left_anti")
-  }
-
   def winnowIncremental(batch: DataFrame, idCol: String, textCol: String,
       storedFps: DataFrame, k: Int, w: Int,
       minShared: Long = 2L): DataFrame = {
@@ -851,19 +833,6 @@ object Dedup {
       .groupBy(col("__nid").as("id_new"), col("__oid").as("id_corpus"))
       .agg(count(lit(1)).as("shared_fps"))
       .filter(col("shared_fps") >= minShared)
-  }
-
-  /** MinHash signature: for each of `numHashes` seeds, the min hash over
-    * the document's shingles — per-row expression form (reference shape;
-    * see [[minHashSignatures]] for the at-scale aggregate form). */
-  def minHashSignature(text: Column, n: Int, numHashes: Int): Column = {
-    val sh = shingles(text, n)
-    val init = array_repeat(lit(Long.MaxValue), numHashes)
-    when(size(sh) > 0,
-      aggregate(sh, init, (acc, s) =>
-        zip_with(acc,
-          array((0 until numHashes).map(seed => xxhash64(s, lit(seed))): _*),
-          (a, h) => least(a, h))))
   }
 
   /** MinHash signatures as a DataFrame op: explode shingles, hash each

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   * 10^12). Every per-iteration step — contribution `rank div outdeg`,
   * the incoming-mass sum, the damped update `(85·mass) div 100` — is
   * exact integer arithmetic, so the result is independent of both
-  * aggregation order and engine, and the DuckDB oracle replays it
+  * aggregation order and engine: an external SQL engine replays it
   * bit-for-bit through unrolled CTEs. The quantization the integer
   * floor introduces is ~10^-12 per step — far below anything a ranking
   * consumer can observe — and unlike float PageRank it is EXACTLY
@@ -137,33 +137,5 @@ object Graph {
     out.join(in, Seq("node"), "full")
       .select(col("node"), coalesce(col("out_deg"), lit(0L)).as("out_deg"),
         coalesce(col("in_deg"), lit(0L)).as("in_deg"))
-  }
-
-  /** DuckDB replay of [[pagerank]] over `edgesSql` (a query emitting
-    * src, dst), unrolled to `iters` CTE stages. */
-  def pagerankOracleSql(edgesSql: String, iters: Int, topK: Int): String = {
-    val r0 = s"($Scale // (SELECT count(*) FROM nodes))"
-    val base = s"((15 * $r0) // 100)"
-    val stages = (1 to iters).map { i =>
-      s"""r$i AS (
-         |  SELECT nodes.node,
-         |    $base + (($DampNum * coalesce(s.mass, 0)) // $DampDen)
-         |      AS rank
-         |  FROM nodes LEFT JOIN (
-         |    SELECT e.dst AS node, sum(r.rank // o.od) AS mass
-         |    FROM edges e
-         |    JOIN r${i - 1} r ON e.src = r.node
-         |    JOIN outdeg o ON e.src = o.src
-         |    GROUP BY 1) s ON s.node = nodes.node)"""
-        .stripMargin
-    }.mkString(",\n")
-    s"""WITH edges AS ($edgesSql),
-       |nodes AS (SELECT DISTINCT src AS node FROM edges),
-       |outdeg AS (SELECT src, count(*)::BIGINT AS od FROM edges
-       |  GROUP BY 1),
-       |r0 AS (SELECT node, $r0::BIGINT AS rank FROM nodes),
-       |$stages
-       |SELECT node, CAST(rank AS BIGINT) AS rank FROM r$iters
-       |ORDER BY rank DESC, node LIMIT $topK""".stripMargin
   }
 }

@@ -31,7 +31,7 @@ object Ivf {
         .sortBy(x => (x._1, x._2)).take(nprobe).map(_._2).toSeq
   }
 
-  private[ops] def dist2(a: Array[Double], b: Array[Double]): Double = {
+  private def dist2(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0
     var i = 0
     val n = math.min(a.length, b.length)
@@ -83,11 +83,9 @@ object Ivf {
     * is bit-reproducible across runs, partitionings, cluster sizes AND
     * external engines (a double `avg` would depend on reduction order).
     * This is what lets q_x_ann_ivf carry a full DuckDB value oracle. */
-  /** The k md5-smallest rows' vectors as doubles — the deterministic seed
-    * selection BOTH [[train]] and [[Pq.train]] replay (one shared
-    * definition: a tweak here desynchronizing the two oracles is the
-    * failure mode this helper exists to prevent). */
-  private[ops] def seedRows(df: DataFrame, idCol: String,
+  /** The k md5-smallest rows' vectors as doubles — [[train]]'s
+    * deterministic seed selection. */
+  private def seedRows(df: DataFrame, idCol: String,
       vecCol: String, k: Int): Array[Array[Double]] = df
     .orderBy(md5(col(idCol).cast("string")), col(idCol))
     .limit(k)
@@ -151,8 +149,8 @@ object Ivf {
     * until every cell fits or `maxLevels` splits have run.
     *
     * This is the implemented form of the "skewed cell" answer the
-    * SemDeDup docs give: the within-cell self-joins ([[SemDedup.pairs]],
-    * [[Similarity.knnGraph]]) are quadratic in the LARGEST cell, so one
+    * SemDeDup docs give: the within-cell self-joins ([[Similarity.knnGraph]])
+    * are quadratic in the LARGEST cell, so one
     * pathological dense region (near-identical boilerplate crawls do
     * this) would dominate the whole job. Splitting restores the bound at
     * the cost of missing pairs that straddle a split boundary — the same
@@ -221,7 +219,7 @@ object Ivf {
     * model reproduces assignments bit-for-bit. Prefixed `_` so parquet
     * readers treat it as metadata, exactly like the BucketedCatalog
     * schema sidecar. */
-  private[ops] def writeModel(spark: SparkSession, path: String,
+  private def writeModel(spark: SparkSession, path: String,
       model: Model): Unit = {
     val out = fsFor(spark, path).create(new Path(path, ModelSidecar), true)
     try out.write(model.centroids.map(_.mkString(","))
@@ -430,8 +428,8 @@ object Ivf {
     * shadow + rename (readers see the old layout until the swap; sidecars
     * are preserved — this is maintenance, NOT retraining: cell geometry
     * and codes are unchanged, so probes return identical results
-    * before/after). Works for [[index]] and [[Pq.index]] layouts alike
-    * (schema-agnostic; every `_`-prefixed sidecar is carried over). */
+    * before/after). Schema-agnostic: every `_`-prefixed sidecar is
+    * carried over. */
   def compactIndex(spark: SparkSession, path: String): Unit = {
     recoverIndex(spark, path)
     val fs = fsFor(spark, path)

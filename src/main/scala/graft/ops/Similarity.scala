@@ -97,7 +97,7 @@ object Similarity {
   /** Exact cosine near-duplicate pairs — the all-pairs VERIFICATION
     * baseline (O(n²); use [[cosineDupPairs]] at scale). Deliberately not
     * in the shipped query catalog: it exists to validate the banded-LSH
-    * and SemDeDup paths on small fixtures, and it fails fast above
+    * path on small fixtures, and it fails fast above
     * `maxRows` (the one extra `limit(n+1).count()` job is the price of a
     * cartesian that can never silently run over a corpus). Norms are
     * computed once per vector before the join, so each pair costs a
@@ -108,7 +108,7 @@ object Similarity {
       threshold: Double, maxRows: Long = 100000): DataFrame = {
     require(df.limit((maxRows + 1).toInt).count() <= maxRows,
       s"bruteForcePairs is the O(n²) verification baseline and refuses " +
-        s"inputs over $maxRows rows — use cosineDupPairs/SemDedup at scale")
+        s"inputs over $maxRows rows — use cosineDupPairs at scale")
     val v = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
       sqrt(dot(col(vecCol), col(vecCol))).as("nrm"))
     v.as("a").join(v.as("b"), col("a.id") < col("b.id"))
@@ -190,8 +190,6 @@ object Similarity {
     // verify-side rejoins are COLUMN-PRUNED (they never compute `sig`),
     // so the duplicated work is only a scan + one norm dot, cheaper than
     // materializing the vector payload and re-reading it as rows.
-    // Contrast SemDedup.pairs, whose duplicated subtree is the k-centroid
-    // assignment projection — there the seam wins on CPU and wall.
     val sigs = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
       sqrt(dot(col(vecCol), col(vecCol))).as("nrm"),
       signature(col(vecCol)).as("sig"))
@@ -224,8 +222,8 @@ object Similarity {
   }
 
   /** k-nearest-neighbor graph, cell-bounded: for every vector, its top-k
-    * cosine neighbors WITHIN its k-means cell (the SemDeDup geometry —
-    * [[graft.ops.SemDedup]]). The graph feeds downstream curation:
+    * cosine neighbors WITHIN its k-means cell (the SemDeDup geometry).
+    * The graph feeds downstream curation:
     * connected-component dedup ([[graft.ops.Dedup.clusters]]), diversity
     * scoring, label propagation.
     *
@@ -243,7 +241,7 @@ object Similarity {
       maxCellSize: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // one assignment pass, not two: the self-join consumes `a` on both
-    // sides (the SemDedup.pairs seam — see the measured rationale there)
+    // sides
     val a = maxCellSize
       .map(b => graft.ops.Ivf.assignBounded(df, idCol, vecCol, model, b))
       .getOrElse(graft.ops.Ivf.assign(df, vecCol, model))

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Web-crawl cleanup primitives: HTML → text extraction and URL
   * canonicalization. Both are chains of row-local regex/replace steps —
-  * codegen'd, zero shuffle, and every step is mirrored literally by the
-  * SQL fragments in the catalog oracles (Java and RE2 agree on the
-  * subset used: `(?is)` flags, lazy `.*?`, char classes).
+  * codegen'd, zero shuffle, and kept to the regex subset Java and RE2
+  * agree on (`(?is)` flags, lazy `.*?`, char classes), so an external
+  * SQL engine can replay every step literally.
   *
   * These are the crawl-side front of the curation stack: strip markup
   * BEFORE quality/dedup (tag soup inflates length stats and defeats
@@ -38,23 +38,6 @@ object Web {
     trim(regexp_replace(decoded, "\\s+", " "))
   }
 
-  /** SQL mirror of [[htmlToText]] over a column expression. */
-  def htmlToTextSql(col: String): String = {
-    val noScript =
-      s"regexp_replace(coalesce($col, ''), '(?is)<script[^>]*>.*?</script>', ' ', 'g')"
-    val noStyle =
-      s"regexp_replace($noScript, '(?is)<style[^>]*>.*?</style>', ' ', 'g')"
-    val noComment = s"regexp_replace($noStyle, '(?s)<!--.*?-->', ' ', 'g')"
-    val noTags = s"regexp_replace($noComment, '<[^>]+>', ' ', 'g')"
-    val decoded = Seq(
-      "&nbsp;" -> " ", "&lt;" -> "<", "&gt;" -> ">",
-      "&quot;" -> "\"", "&#39;" -> "''", "&amp;" -> "&"
-    ).foldLeft(noTags) { case (c, (from, to)) =>
-      s"replace($c, '$from', '$to')"
-    }
-    s"trim(regexp_replace($decoded, '\\s+', ' ', 'g'))"
-  }
-
   private val Trackers = "(utm_[a-zA-Z0-9_]+|fbclid|gclid|msclkid|ref)"
 
   /** Canonical URL: lowercase the scheme://host prefix, drop the
@@ -73,19 +56,5 @@ object Web {
     val noFirst = regexp_replace(noMid, s"\\?$Trackers=[^&#]*&", "?")
     val noOnly = regexp_replace(noFirst, s"\\?$Trackers=[^&#]*$$", "")
     regexp_replace(noOnly, "\\?$", "")
-  }
-
-  /** SQL mirror of [[canonicalUrl]]. */
-  def canonicalUrlSql(col: String): String = {
-    val noFrag = s"regexp_replace(coalesce($col, ''), '#.*$$', '')"
-    val prefix =
-      s"regexp_extract($noFrag, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*)', 1)"
-    val rest =
-      s"regexp_replace($noFrag, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*', '')"
-    val lowered = s"lower($prefix) || $rest"
-    val noMid = s"regexp_replace($lowered, '&$Trackers=[^&#]*', '', 'g')"
-    val noFirst = s"regexp_replace($noMid, '\\?$Trackers=[^&#]*&', '?', 'g')"
-    val noOnly = s"regexp_replace($noFirst, '\\?$Trackers=[^&#]*$$', '', 'g')"
-    s"regexp_replace($noOnly, '\\?$$', '', 'g')"
   }
 }

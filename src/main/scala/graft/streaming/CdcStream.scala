@@ -22,9 +22,15 @@ import org.apache.spark.sql.types._
   * The two-stage mode ([[Batcher]]/[[Loader]]) puts NDJSON objects
   * between the same halves. The Job record survives as the per-batch
   * audit trail. Checkpointing replaces hand-rolled offset
-  * marking (T5/T6): the merge is idempotent (last-writer-wins by
-  * kafkaoffset), so at-least-once replay converges — the same design the
-  * reference documents ("loader is idempotent").
+  * marking (T5/T6), so a batch is replayed at least once, and the load
+  * converges on both of its paths — the same design the reference
+  * documents ("loader is idempotent"):
+  *  - the merge (R1-R4) is last-writer-wins by kafkaoffset: a replayed
+  *    batch deletes the keys it wrote and inserts the same last writers;
+  *  - the R5 append alone would land a replayed batch's rows twice, so
+  *    the store records each appended batch's schema id and offset range
+  *    before it writes ([[graft.warehouse.TableStore.claimAppend]]), and
+  *    a batch it finds recorded goes down the merge path instead.
   *
   * Micro-batch semantics (SURVEY §2.5):
   *  - T1/T2: size via `maxOffsetsPerTrigger`, time via processing-time
@@ -263,14 +269,17 @@ object CdcStream {
     // schema, so a schema change (D4 add/drop column, D5 int → bigint)
     // must go through the merge rewrite — appended INT64 files in an
     // INT32 table fail every later read. The reference likewise migrates
-    // the table before any load (load_processor.go:395-444).
+    // the table before any load (load_processor.go:395-444). Last, the
+    // store records the batch's range before the append writes a row: a
+    // replay of an appended batch finds it recorded and merges.
     val skip = job.skipMerge &&
       catalog.exists(cfg.targetSchema, cfg.targetTable) && {
         def types(s: StructType) = s.fields.map(f => f.name -> f.dataType).toMap
         val tgt = types(catalog.load(cfg.targetSchema, cfg.targetTable).schema) -
           graft.warehouse.BucketedCatalog.BucketCol
         types(CdcMerge.insertable(stage).schema) == tgt
-      }
+      } && catalog.claimAppend(cfg.targetSchema, cfg.targetTable,
+        s"${job.schemaId}-${job.startOffset}-${job.endOffset}")
     // copytarget: the write into the live table (with phase breakdown
     // on, the merge phases checkpoint themselves first, so this is
     // the write proper; off, it's the whole fused merge job)

@@ -34,11 +34,18 @@ object AtomicDir {
     if (fs.exists(target)) Some(target)
     else Some(trashPath(target)).filter(fs.exists)
 
-  /** Atomically replace `target` with `source` (both directories). */
+  /** Atomically replace `target` with `source` (both directories). A
+    * target stranded at `__old` by an earlier crashed swap is renamed
+    * back first: deleting it would leave no readable table until the
+    * source is in. */
   def swapInto(fs: FileSystem, target: Path, source: Path): Unit = {
     require(fs.exists(source), s"source $source does not exist")
     val trash = trashPath(target)
-    if (fs.exists(trash)) fs.delete(trash, true)
+    if (fs.exists(trash)) {
+      if (fs.exists(target)) fs.delete(trash, true)
+      else if (!fs.rename(trash, target))
+        throw new IllegalStateException(s"swap failed renaming $trash back")
+    }
     if (fs.exists(target) && !fs.rename(target, trash))
       throw new IllegalStateException(s"swap failed renaming $target aside")
     if (!fs.rename(source, target))

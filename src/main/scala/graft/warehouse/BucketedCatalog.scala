@@ -164,6 +164,10 @@ final class BucketedCatalog(spark: SparkSession, root: String, nBuckets: Int = 6
       writeSidecar(b, new Path(tablePath(schema, table)))
   }
 
+  /** The R5 replay guard ([[AppendLog]]). */
+  def claimAppend(schema: String, table: String, range: String): Boolean =
+    AppendLog.claim(fs, new Path(s"$root/$schema/_appends/$table"), range)
+
   /** SCD-1 merge rewriting only the buckets the stage touches. */
   def merge(schema: String, table: String, stage: DataFrame,
       pks: Seq[String]): Unit = {

@@ -135,6 +135,11 @@ final class JdbcWarehouse(
       pks: Seq[String]): Unit =
     insertInto(schema, table, df)
 
+  /** No record is kept here yet: a replayed creates-only batch is
+    * inserted again. */
+  override def claimAppend(schema: String, table: String,
+      range: String): Boolean = true
+
   private def targetColumns(schema: String, table: String): Seq[String] =
     withConn { c =>
       val rs = c.getMetaData.getColumns(null, schema, table, null)

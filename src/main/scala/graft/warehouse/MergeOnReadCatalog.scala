@@ -168,6 +168,10 @@ final class MergeOnReadCatalog(
     maybeCompact(schema, table, pks)
   }
 
+  /** No record: a replayed append is one more delta of the same rows, and
+    * read-time resolution keeps one row per PK, so the replay converges. */
+  def claimAppend(schema: String, table: String, range: String): Boolean = true
+
   /** O(batch): dedupe the micro-batch, publish it as a delta. The target
     * is neither read nor rewritten (contrast [[ParquetCatalog.merge]]). */
   def merge(schema: String, table: String, stage: DataFrame,
@@ -175,8 +179,8 @@ final class MergeOnReadCatalog(
     if (!exists(schema, table)) {
       fs.mkdirs(new Path(tablePath(schema, table)))
       writePks(schema, table, pks)
-      CdcMerge.insertable(CdcMerge.dropDeleteOps(CdcMerge.dedupe(stage, pks)))
-        .write.mode(SaveMode.Overwrite).parquet(basePath(schema, table))
+      writeBase(schema, table,
+        CdcMerge.insertable(CdcMerge.dropDeleteOps(CdcMerge.dedupe(stage, pks))))
     } else {
       writeDelta(schema, table, CdcMerge.dedupe(stage, pks))
       maybeCompact(schema, table, pks)
@@ -219,7 +223,6 @@ final class MergeOnReadCatalog(
     recover(schema, table)
     val consumed = deltas(schema, table)
     if (consumed.isEmpty) return
-    val shadow = new Path(basePath(schema, table) + "__compacting")
     // the fold is the one moment the base is rewritten anyway — z-cluster
     // it for free file skipping on `layoutCols` (multi-column min/max
     // pruning; a delta append never pays this, only the fold does)
@@ -234,9 +237,18 @@ final class MergeOnReadCatalog(
           math.ceil((db + bb).toDouble / (512L << 20)).toInt)
         Layout.zorder(resolved, layoutCols.map(col), nParts, layoutBits)
       }
-    arranged.write.mode(SaveMode.Overwrite).parquet(shadow.toString)
-    AtomicDir.swapInto(fs, new Path(basePath(schema, table)), shadow)
+    writeBase(schema, table, arranged)
     consumed.foreach { case (_, p) => fs.delete(new Path(p), true) }
+  }
+
+  /** Write `df` as the base through the shadow `base__compacting` and
+    * swap it in ([[AtomicDir.swapInto]]): `base` only ever holds a whole
+    * table, so a crash mid-write cannot leave one [[exists]] would take
+    * for the table. */
+  private def writeBase(schema: String, table: String, df: DataFrame): Unit = {
+    val shadow = new Path(basePath(schema, table) + "__compacting")
+    df.write.mode(SaveMode.Overwrite).parquet(shadow.toString)
+    AtomicDir.swapInto(fs, new Path(basePath(schema, table)), shadow)
   }
 
   /** Live delta count (observability + specs). */

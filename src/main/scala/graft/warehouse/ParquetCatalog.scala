@@ -194,10 +194,14 @@ final class ParquetCatalog(spark: SparkSession, root: String)
   }
 
   /** Create-or-replace from a DataFrame (D3 analogue — schema is carried by
-    * parquet, no DDL needed). */
+    * parquet, no DDL needed). Written through the merge's shadow and
+    * swapped in: a crash mid-write must not leave a half-written table
+    * directory, which [[exists]] would take for the table. */
   def save(schema: String, table: String, df: DataFrame): Unit = {
     memos.remove((schema, table))
-    write(schema, table, df, SaveMode.Overwrite, tablePath(schema, table), 0L)
+    write(schema, table, df, SaveMode.Overwrite,
+      tablePath(schema, table + "__merging"), 0L)
+    swapInto(schema, table, table + "__merging")
   }
 
   /** R5 skipMerge fast path: append-only load. */
@@ -206,6 +210,13 @@ final class ParquetCatalog(spark: SparkSession, root: String)
 
   override def append(schema: String, table: String, df: DataFrame,
       pks: Seq[String]): Unit = append(schema, table, df)
+
+  private def appendLog(schema: String, table: String): Path =
+    new Path(s"$root/$schema/_appends/$table")
+
+  /** The R5 replay guard ([[AppendLog]]). */
+  def claimAppend(schema: String, table: String, range: String): Boolean =
+    AppendLog.claim(fs, appendLog(schema, table), range)
 
   /** Full SCD-1 merge of a CDC micro-batch into the table (R1-R4). The
     * result is rewritten through a shadow dir + swap. */
@@ -265,5 +276,6 @@ final class ParquetCatalog(spark: SparkSession, root: String)
   def drop(schema: String, table: String): Unit = {
     memos.remove((schema, table))
     fs.delete(new Path(tablePath(schema, table)), true)
+    fs.delete(appendLog(schema, table), true)
   }
 }

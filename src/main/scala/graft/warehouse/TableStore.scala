@@ -1,5 +1,6 @@
 package graft.warehouse
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 
 /** Minimal store contract the streaming pipeline writes through —
@@ -14,6 +15,35 @@ trait TableStore {
   /** Full SCD-1 merge of a CDC micro-batch (R1-R4). */
   def merge(schema: String, table: String, stage: DataFrame,
       pks: Seq[String]): Unit
+  /** R5 replay guard, asked before an [[append]]: record `range` (a
+    * creates-only batch's schema id and offset bounds) with the table
+    * before any of its rows are written. False when the range is already
+    * recorded: the batch is a replay, and the caller merges it instead,
+    * since a merge converges where a second append lands the rows twice. */
+  def claimAppend(schema: String, table: String, range: String): Boolean
+}
+
+/** The file stores' R5 replay guard ([[TableStore.claimAppend]]): one
+  * empty marker file per claimed range in a directory beside the table's,
+  * which no merge, migration or swap rewrites. Only the newest [[Keep]]
+  * markers stay: a replay re-delivers a batch not yet committed, and a
+  * batch claims one range per schema id, so an older marker can no longer
+  * match one. Driver-side file work only: no Spark job. */
+object AppendLog {
+  val Keep = 16
+
+  def claim(fs: FileSystem, dir: Path, range: String): Boolean = {
+    val marker = new Path(dir, range)
+    if (fs.exists(marker)) false
+    else {
+      fs.create(marker, false).close()
+      val all = fs.listStatus(dir)
+      if (all.length > Keep)
+        all.sortBy(f => (f.getModificationTime, f.getPath.getName))
+          .dropRight(Keep).foreach(f => fs.delete(f.getPath, false))
+      true
+    }
+  }
 }
 
 /** Store selection, encoded from measurement rather than left to

@@ -104,60 +104,4 @@ class AnnIngestSpec extends SparkSpec {
     all += ((105L, Array(0.05f, 10.95f)))
     assert(probed() == direct(), "append after recovery")
   }
-
-  test("PQ layout: streaming ingest + compaction, probe == direct ADC") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    val all = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float])]
-    all ++= base
-    val coarse = Ivf.train(mkVecs(base), "vec_id", "embedding",
-      k = 2, iters = 2)
-    val cb = Pq.train(mkVecs(base), "vec_id", "embedding",
-      m = 2, dsub = 1, k = 2, iters = 2)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_pq_ingest").toString + "/idx"
-    Pq.index(mkVecs(base), "vec_id", "embedding", coarse, cb, path)
-
-    val q = Array(0.0, 10.0)
-    def probed(): Seq[org.apache.spark.sql.Row] =
-      Pq.probeIndexed(spark, path, "vec_id", q, topK = 5, nprobe = 1)
-        .collect().toSeq
-    def direct(): Seq[org.apache.spark.sql.Row] =
-      Pq.ivfPqTopK(mkVecs(all.toSeq), "vec_id", "embedding", coarse, cb,
-        q, topK = 5, nprobe = 1).collect().toSeq
-
-    assert(probed() == direct())
-
-    val mem = MemoryStream[(Long, Array[Float])]
-    val stream = mem.toDF().toDF("vec_id", "embedding").writeStream
-      .outputMode("append")
-      .option("checkpointLocation", java.nio.file.Files
-        .createTempDirectory("graft_pq_ingest_ckpt").toString)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        Pq.indexAppend(spark, path, batch, "vec_id", "embedding")
-        // compactIndex is layout-agnostic — same maintenance story as
-        // the raw-vector index, codes-only rows this time
-        if (id % 2 == 1) Ivf.compactIndex(spark, path)
-      }.start()
-    try {
-      val b0 = Seq((100L, Array(0.2f, 10.6f)), (101L, Array(10.4f, 0.1f)))
-      all ++= b0; b0.foreach(r => mem.addData(r))
-      stream.processAllAvailable()
-      assert(probed() == direct(), "after append batch 0")
-
-      val b1 = Seq((102L, Array(0.1f, 10.7f)))
-      all ++= b1; b1.foreach(r => mem.addData(r))
-      stream.processAllAvailable()
-      assert(probed() == direct(), "after append + compaction batch 1")
-      // compacted, sidecars intact, still codes-only on disk
-      new java.io.File(path).listFiles()
-        .filter(_.getName.startsWith("cell="))
-        .foreach(d => assert(
-          d.listFiles().count(_.getName.endsWith(".parquet")) == 1,
-          s"${d.getName} not compacted"))
-      val stored = spark.read.parquet(path)
-      assert(!stored.columns.contains("embedding"))
-    } finally stream.stop()
-  }
 }

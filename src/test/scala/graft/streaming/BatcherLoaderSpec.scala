@@ -92,6 +92,21 @@ class BatcherLoaderSpec extends SparkSpec {
     assert(t.columns.contains("dob"))
   }
 
+  test("a creates-only Job loaded twice lands its rows once") {
+    val out = tmp()
+    val cat = new ParquetCatalog(spark, tmp())
+    Batcher.processBatch(toDf(Seq(1L -> create(1, "a", 1))), 0L, fetcher, cfg, out)
+      .foreach(Loader.load(spark, _, cat, cfg, Seq("id")))
+    val job = Batcher.processBatch(toDf(Seq(2L -> create(2, "b", 2))), 1L,
+      fetcher, cfg, out).head
+    assert(job.skipMerge)
+    // the loader crashed after the append, before its Job was acknowledged
+    Loader.load(spark, job, cat, cfg, Seq("id"))
+    Loader.load(spark, job, cat, cfg, Seq("id"))
+    assert(cat.load("inventory", "users").select("id").as[String]
+      .collect().sorted.toSeq == Seq("1", "2"))
+  }
+
   test("job-count guard: one single-schema Batcher.processBatch runs 3 " +
       "Spark jobs") {
     // header checkpoint + stage checkpoint + the NDJSON write; a re-added

@@ -341,6 +341,18 @@ class CdcStreamSpec extends SparkSpec {
     assert(cat.load("inventory", "users").count() == 2)
   }
 
+  test("a replayed creates-only batch lands its rows once") {
+    // a crash after the append wrote and before the streaming commit
+    // replays the batch: recorded, it merges instead of appending again
+    val cat = new ParquetCatalog(spark, tmp())
+    CdcStream.processBatch(toDf(Seq(1L -> create(1, "a", 1))), fetcher, cat, cfg)
+    val creates = toDf(Seq(2L -> create(2, "b", 2)))
+    assert(CdcStream.processBatch(creates, fetcher, cat, cfg).head.skipMerge)
+    assert(!CdcStream.processBatch(creates, fetcher, cat, cfg).head.skipMerge)
+    assert(cat.load("inventory", "users").select("id").as[String]
+      .collect().sorted.toSeq == Seq("1", "2"))
+  }
+
   test("R5 skipMerge: a CREATE-only batch whose column widened int → " +
       "bigint merges instead of appending, and the table reads bigint") {
     // appended INT64 files in an INT32 table fail every later read of it

@@ -1,31 +1,49 @@
 #!/usr/bin/env bash
-# Paired benchmark runs of a parent revision against the working tree.
+# Paired benchmark runs of a parent revision against a change revision.
 #
-#   tools/perf_pairs.sh <parent-rev> <workload> <seed>...
+#   tools/perf_pairs.sh [-c <change-rev>] <parent-rev> <workload> <seed>...
 #
-# Unpacks `git archive <parent-rev>` into a temporary directory, then for
-# each seed runs `python3 perfbench/run.py --seconds 20 --trace 0` once
-# there and once in the working tree, one run at a time; the side that
-# runs first alternates from seed to seed. Host steal time is read from
-# /proc/stat around every run. Prints each run's result, then per
+# Unpacks `git archive` of both revisions into a temporary directory, so
+# that neither side runs in a long-used working tree. The change revision
+# defaults to `git stash create` (the tracked files of the working tree,
+# committed changes and uncommitted edits alike) when the tree has
+# uncommitted changes, else HEAD. Untracked files are in neither side.
+# Then for each seed runs `python3 perfbench/run.py --seconds 20
+# --trace 0` once per side, one run at a time; the side that runs first
+# alternates from seed to seed. Host steal time is read from /proc/stat
+# around every run. Prints both revisions and each run's result, then per
 # end-to-end metric both sides' median and quartiles and how many pairs
-# the working tree won. Exits non-zero if any run fails or reports
+# the change won. Exits non-zero if any run fails or reports
 # `correct: false` or `failed` > 0. Each side builds into its own
 # checkout's .bench_build; nothing is written under perfbench/.
 set -euo pipefail
 
+usage="usage: $0 [-c <change-rev>] <parent-rev> <workload> <seed>...
+(the change defaults to the working tree's tracked files; untracked files
+are not included)"
+here=$(git rev-parse --show-toplevel)
+change_rev=
+if [ "${1:-}" = "-c" ]; then
+  change_rev=${2:?$usage}
+  shift 2
+fi
 if [ $# -lt 3 ]; then
-  echo "usage: $0 <parent-rev> <workload> <seed>..." >&2
+  echo "$usage" >&2
   exit 2
 fi
 rev=$1 workload=$2
 shift 2
-here=$(git rev-parse --show-toplevel)
+if [ -z "$change_rev" ]; then
+  change_rev=$(git -C "$here" stash create)
+  change_rev=${change_rev:-HEAD}
+fi
 tmp=$(mktemp -d "${TMPDIR:-/tmp}/perf_pairs.XXXXXX")
 trap 'rm -rf "$tmp"' EXIT
-parent=$tmp/parent results=$tmp/results
-mkdir "$parent"
+parent=$tmp/parent change=$tmp/change results=$tmp/results
+mkdir "$parent" "$change"
 git -C "$here" archive "$rev" | tar -x -C "$parent"
+git -C "$here" archive "$change_rev" | tar -x -C "$change"
+echo "parent $(git -C "$here" rev-parse "$rev"), change $(git -C "$here" rev-parse "$change_rev")"
 : > "$results"
 # a shared build directory would rebuild on every switch of side
 unset CARGO_TARGET_DIR
@@ -54,14 +72,14 @@ run() { # side dir seed
 i=0
 for seed in "$@"; do
   if [ $((i % 2)) -eq 0 ]; then
-    run parent "$parent" "$seed"; run change "$here" "$seed"
+    run parent "$parent" "$seed"; run change "$change" "$seed"
   else
-    run change "$here" "$seed"; run parent "$parent" "$seed"
+    run change "$change" "$seed"; run parent "$parent" "$seed"
   fi
   i=$((i + 1))
 done
 
-python3 - "$results" "$here/BENCHMARK.json" <<'EOF' || status=1
+python3 - "$results" "$change/BENCHMARK.json" <<'EOF' || status=1
 import json, statistics, sys
 
 rows = [l.rstrip("\n").split("\t", 3) for l in open(sys.argv[1]) if l.strip()]

@@ -6,13 +6,27 @@
 # Reads the JUnit reports sbt leaves in target/test-reports/TEST-*.xml
 # (or in report-dir), prints one line per suite (tests, seconds, name)
 # sorted by seconds, slowest first, then the total tests and seconds.
-# Exits non-zero when there are no reports or any report counts a
-# failure or an error. Writes nothing.
+# sbt never deletes a report, so only reports of suites still defined
+# under src/test count; the stale ones are skipped and their number
+# printed. Exits non-zero when there are no reports or any report counts
+# a failure or an error. Writes nothing.
 set -euo pipefail
 
-dir=${1:-$(git rev-parse --show-toplevel)/target/test-reports}
+top=$(git rev-parse --show-toplevel)
+dir=${1:-$top/target/test-reports}
 shopt -s nullglob
-reports=("$dir"/TEST-*.xml)
+# <package>.<class> of every class under src/test
+suites=$(find "$top/src/test" -name '*.scala' -exec awk '
+  /^package / { pkg = $2 }
+  match($0, /^(final |abstract )?class [A-Za-z0-9_]+/) {
+    n = split(substr($0, RSTART, RLENGTH), w, " "); print pkg "." w[n]
+  }' {} + | sort -u)
+reports=() stale=0
+for r in "$dir"/TEST-*.xml; do
+  name=$(basename "$r" .xml)
+  if grep -qxF "${name#TEST-}" <<< "$suites"; then reports+=("$r"); else stale=$((stale + 1)); fi
+done
+echo "skipped $stale stale reports of suites no longer under src/test" >&2
 if [ ${#reports[@]} -eq 0 ]; then
   echo "no reports in $dir" >&2
   exit 1
