@@ -42,11 +42,4 @@ object Portable {
     * formulas so an oracle can interpolate the same constants. */
   def hashA(i: Int): Long = ((i + 1L) * 2654435761L) % P
   def hashB(i: Int): Long = (i * 40503L + 12345L) % P
-
-  /** DuckDB fragment computing [[h60]] of `expr`. */
-  def h60Sql(expr: String): String =
-    s"CAST(concat('0x', substr(md5($expr),1,15)) AS BIGINT)"
-
-  /** DuckDB fragment computing [[h31]] of `expr`. */
-  def h31Sql(expr: String): String = s"(${h60Sql(expr)} % $P)"
 }

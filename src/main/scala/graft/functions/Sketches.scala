@@ -120,59 +120,13 @@ object Sketches {
 
   /** Cardinality estimate from a register array. Raw branch is a single
     * IEEE division of exact values; small-range branch is linear
-    * counting `m·ln(m/V)` (same closed form in the oracle SQL). */
+    * counting `m·ln(m/V)` (a closed form any SQL engine replays). */
   def hllEstimate(sketch: Column, p: Int = DefaultP): Column = {
     val m = (1 << p).toDouble
     val raw = lit(alphaNum(p)) / hllIntSum(sketch, p).cast(DoubleType)
     val v = hllZeros(sketch)
     when(raw <= lit(2.5 * m) && v > 0,
       lit(m) * log(lit(m) / v.cast(DoubleType))).otherwise(raw)
-  }
-
-  /** DuckDB replay of the full per-group estimate pipeline — the oracle
-    * twin of hllSketch+hllEstimate. `keyExpr` must be the SQL twin of
-    * the Spark key column. Emits (groupCols..., n_zero, intsum,
-    * est_distinct). */
-  def hllOracleSql(table: String, groupCols: Seq[String], keyExpr: String,
-      p: Int = DefaultP): String = {
-    val m = 1 << p
-    val R = maxRank(p)
-    val g = groupCols.mkString(", ")
-    val gq = groupCols.map(c => s"s.$c").mkString(", ")
-    val joinOn = groupCols.map(c => s"regs.$c = s.$c").mkString(" AND ")
-    s"""WITH h AS (
-       |  SELECT $g, ${Portable.h60Sql(keyExpr)} AS h60 FROM $table),
-       |rr AS (
-       |  SELECT $g, h60 % $m AS reg,
-       |    CASE WHEN (h60 // $m) = 0 THEN $R
-       |         ELSE $R - length(bin(h60 // $m)) END AS rnk
-       |  FROM h),
-       |regs AS (SELECT $g, reg, max(rnk) AS mr FROM rr GROUP BY ALL),
-       |allregs AS (
-       |  SELECT $gq, grid.r, coalesce(regs.mr, 0) AS mr
-       |  FROM (SELECT DISTINCT $g FROM $table) s
-       |  CROSS JOIN (SELECT unnest(range(0, $m)) AS r) grid
-       |  LEFT JOIN regs ON $joinOn AND regs.reg = grid.r),
-       |agg AS (
-       |  SELECT $g,
-       |    CAST(sum(1::BIGINT << ($R - mr)) AS BIGINT) AS intsum,
-       |    CAST(sum(CASE WHEN mr = 0 THEN 1 ELSE 0 END) AS BIGINT)
-       |      AS n_zero
-       |  FROM allregs GROUP BY ALL),
-       |est AS (
-       |  SELECT $g, n_zero, intsum,
-       |    ${fullPrecision(alphaNum(p))} / intsum AS raw FROM agg)
-       |SELECT $g, n_zero, intsum,
-       |  round(CASE WHEN raw <= ${2.5 * m} AND n_zero > 0
-       |        THEN ${m.toDouble} * ln(${m.toDouble} / n_zero)
-       |        ELSE raw END, 4) AS est_distinct
-       |FROM est""".stripMargin
-  }
-
-  /** Render a double with enough digits to round-trip exactly. */
-  private def fullPrecision(d: Double): String = {
-    val s = java.lang.Double.toString(d)
-    if (s.contains("E")) f"$d%.17e".replace("e", "E") else s
   }
 
   // ======================================================================
@@ -226,32 +180,6 @@ object Sketches {
       .join(broadcast(sketch), Seq("row", "bucket"), "left")
       .groupBy(keyCol)
       .agg(min(coalesce(col("cnt"), lit(0L))).as("cms_count"))
-
-  /** DuckDB replay of build+lookup for a token stream `streamSql`
-    * (a query yielding one `term` per occurrence): emits
-    * (term, cms_count) for every distinct term. */
-  def cmsOracleSql(streamSql: String, d: Int = CmsD, w: Int = CmsW)
-      : String = {
-    val hashRows = (0 until d).map { i =>
-      s"SELECT ${Portable.hashA(i)}::BIGINT AS a, " +
-        s"${Portable.hashB(i)}::BIGINT AS b, $i AS row"
-    }.mkString(" UNION ALL ")
-    s"""WITH stream AS ($streamSql),
-       |hashes AS ($hashRows),
-       |rb AS (
-       |  SELECT stream.term, hashes.row,
-       |    CAST(((hashes.a * (${Portable.h31Sql("stream.term")})
-       |      + hashes.b) % ${Portable.P}) % $w AS INTEGER) AS bucket
-       |  FROM stream CROSS JOIN hashes),
-       |cms AS (
-       |  SELECT row, bucket, count(*)::BIGINT AS cnt FROM rb
-       |  GROUP BY 1, 2),
-       |cand AS (SELECT DISTINCT term, row, bucket FROM rb)
-       |SELECT cand.term, min(cms.cnt) AS cms_count
-       |FROM cand JOIN cms ON cand.row = cms.row
-       |  AND cand.bucket = cms.bucket
-       |GROUP BY 1""".stripMargin
-  }
 
   // ======================================================================
   // Quantile histogram sketch (DDSketch-flavored): values land in
@@ -329,45 +257,5 @@ object Sketches {
           (qLowerBound(col("__mb")).cast(DoubleType) / lit(QScale))
             .as("est"): _*)
     }.reduce(_.unionByName(_))
-  }
-
-  /** DuckDB replay of sketch-build + quantile extraction. */
-  def qOracleSql(table: String, groupCols: Seq[String], valueExpr: String,
-      qs: Seq[Double]): String = {
-    val g = groupCols.mkString(", ")
-    // force DOUBLE: a bare 0.95 literal is DECIMAL in DuckDB, and
-    // ceil(DECIMAL·N) can disagree with ceil(double·N) exactly when q·N
-    // grazes an integer (0.95·2000 = 1900.0000000000000888 as doubles)
-    val qList = qs.map(q => s"CAST($q AS DOUBLE)").mkString(", ")
-    s"""WITH s AS (
-       |  SELECT $g,
-       |    CAST(floor(CAST($valueExpr AS DOUBLE) * $QScale) AS BIGINT)
-       |      AS sc
-       |  FROM $table),
-       |b AS (
-       |  SELECT $g,
-       |    CASE WHEN sc <= 0 THEN 0
-       |         WHEN sc < 32 THEN CAST(sc AS INTEGER)
-       |         ELSE CAST(length(bin(sc)) * 16
-       |           + ((sc >> (length(bin(sc)) - 5)) & 15) AS INTEGER)
-       |    END AS bucket
-       |  FROM s),
-       |h AS (SELECT $g, bucket, count(*)::BIGINT AS cnt FROM b
-       |  GROUP BY ALL),
-       |c AS (
-       |  SELECT $g, bucket, cnt,
-       |    sum(cnt) OVER (PARTITION BY $g ORDER BY bucket) AS cum,
-       |    sum(cnt) OVER (PARTITION BY $g) AS n
-       |  FROM h),
-       |qq AS (SELECT unnest([$qList]) AS q),
-       |sel AS (
-       |  SELECT $g, qq.q, min(bucket) AS mb
-       |  FROM c CROSS JOIN qq WHERE cum >= ceil(qq.q * n)
-       |  GROUP BY ALL)
-       |SELECT $g, q,
-       |  CAST(CASE WHEN mb < 32 THEN mb
-       |       ELSE (16 + (mb & 15))::BIGINT << ((mb >> 4) - 5)
-       |  END AS DOUBLE) / $QScale AS est
-       |FROM sel""".stripMargin
   }
 }

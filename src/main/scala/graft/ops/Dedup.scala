@@ -308,11 +308,8 @@ object Dedup {
     * corpus keys. Append the survivors' keys back to the store to advance
     * the corpus.
     *
-    * Scale note: the anti-join's right side is the full corpus history —
-    * keep it in a key-bucketed store ([[graft.warehouse.BucketedCatalog]]
-    * keyed on `keyCols`) so the lookup partition-prunes to the batch's
-    * buckets instead of scanning/shuffling all history per micro-batch
-    * (the same bounded-I/O shape as the bucketed CDC merge). */
+    * Scale note: the anti-join's right side is the full corpus history,
+    * so each micro-batch's lookup scans and shuffles all of it. */
   def incremental(batch: DataFrame, corpusKeys: DataFrame,
       keyCols: Seq[String], idCol: String): DataFrame =
     exactKeep(batch, keyCols, idCol)

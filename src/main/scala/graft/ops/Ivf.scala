@@ -217,8 +217,7 @@ object Ivf {
   /** Centroids → sidecar text (one comma-joined line per centroid).
     * `Double.toString`/`parseDouble` round-trips exactly, so the loaded
     * model reproduces assignments bit-for-bit. Prefixed `_` so parquet
-    * readers treat it as metadata, exactly like the BucketedCatalog
-    * schema sidecar. */
+    * readers treat it as metadata. */
   private def writeModel(spark: SparkSession, path: String,
       model: Model): Unit = {
     val out = fsFor(spark, path).create(new Path(path, ModelSidecar), true)
@@ -227,10 +226,11 @@ object Ivf {
     finally out.close()
   }
 
-  /** Crash recovery for the [[compactIndex]] swap (the BucketedCatalog
-    * discipline): a crash between renaming the index aside and renaming
-    * the compacted copy in leaves a complete index in `<path>__old` and
-    * nothing live — restore it. Called by every read path.
+  /** Crash recovery for the [[compactIndex]] swap (the two-rename
+    * discipline of [[graft.warehouse.AtomicDir]]): a crash between renaming
+    * the index aside and renaming the compacted copy in leaves a complete
+    * index in `<path>__old` and nothing live — restore it. Called by every
+    * read path.
     *
     * A LIVE swap is guarded by a `<path>__swapping` marker: while it
     * exists a concurrent reader waits out the (two-rename) window instead

@@ -80,43 +80,4 @@ object LangModel {
             lit(Scale.toDouble) / col("n_bigrams").cast(DoubleType), 4))
           .otherwise(lit(0.0)).as("avg_nll"))
   }
-
-  /** DuckDB replay of [[bigramNll]]. */
-  def bigramNllOracleSql(table: String, idCol: String,
-      textCol: String): String = {
-    val norm = s"trim(regexp_replace(lower(coalesce($textCol, '')), " +
-      s"'[^\\p{L}\\p{N}]+', ' ', 'g'))"
-    s"""WITH t AS (
-       |  SELECT $idCol,
-       |    CASE WHEN $norm = '' THEN []
-       |         ELSE string_split_regex($norm, '\\s+') END AS ls
-       |  FROM $table),
-       |toks AS (SELECT $idCol, unnest(ls) AS w FROM t),
-       |uni AS (SELECT w AS w1, CAST(count(*) AS BIGINT) AS c1
-       |  FROM toks GROUP BY 1),
-       |v AS (SELECT CAST(count(DISTINCT w) AS BIGINT) AS v FROM toks),
-       |bi AS (
-       |  SELECT $idCol,
-       |    unnest(ls[1:len(ls) - 1]) AS w1,
-       |    unnest(ls[2:len(ls)]) AS w2
-       |  FROM t WHERE len(ls) >= 2),
-       |big AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2
-       |  FROM bi GROUP BY 1, 2),
-       |scored AS (
-       |  SELECT bi.$idCol, count(*) AS nb,
-       |    CAST(sum(CAST(round(-ln(
-       |      (CAST(c2 AS DOUBLE) + 1.0) /
-       |      (CAST(c1 AS DOUBLE) + CAST(v.v AS DOUBLE))
-       |    ) * ${Scale.toDouble}) AS BIGINT)) AS BIGINT) AS nq
-       |  FROM bi JOIN big USING (w1, w2) JOIN uni USING (w1) CROSS JOIN v
-       |  GROUP BY 1)
-       |SELECT t.$idCol,
-       |  CAST(coalesce(nb, 0) AS BIGINT) AS n_bigrams,
-       |  coalesce(nq, 0) AS nll_scaled,
-       |  CASE WHEN coalesce(nb, 0) > 0
-       |    THEN round(CAST(nq AS DOUBLE) / ${Scale.toDouble}
-       |      / CAST(nb AS DOUBLE), 4)
-       |    ELSE 0.0 END AS avg_nll
-       |FROM t LEFT JOIN scored USING ($idCol)""".stripMargin
-  }
 }

@@ -44,7 +44,7 @@ object QualityModel {
   private def zExpr(weightsScaled: Seq[Long], feats: Seq[Column]): Column =
     weightsScaled.zip(feats).map { case (wq, f) =>
       lit(wq.toDouble / Scale.toDouble) * f
-    }.reduce(_ + _) // left fold — same association order as the SQL mirror
+    }.reduce(_ + _) // left fold — a fixed association order
 
   /** One gradient-descent step: returns the per-feature EXACT scaled
     * gradient sums Σ round((p−y)·f_j·Scale). */
@@ -77,66 +77,4 @@ object QualityModel {
   /** Score with a trained (scaled) weight vector. */
   def score(feats: Seq[Column], weightsScaled: Seq[Long]): Column =
     fastSigmoid(zExpr(weightsScaled, feats))
-
-  // ---- SQL mirror ---------------------------------------------------
-
-  /** σ as SQL over a z expression. */
-  def sigmoidSql(z: String): String =
-    s"(0.5 + 0.5 * ($z) / (1.0 + abs($z)))"
-
-  private def zSql(wCols: Seq[String], featSql: Seq[String]): String =
-    wCols.zip(featSql).map { case (w, f) =>
-      s"(CAST($w AS DOUBLE) / ${Scale.toDouble}) * ($f)"
-    }.mkString(" + ")
-
-  /** Unrolled-training CTE chain: `feats` (per-row feature columns
-    * f0..fm + label y), `n` (corpus count), then per iteration t a
-    * 1-row CTE `w<t>` whose columns w0..wm hold the scaled weights
-    * after step t. Mirrors [[train]] exactly: same fold order, same
-    * quantization, same truncating division (DuckDB `//`). */
-  def trainCtes(fromTable: String, featSql: Seq[String], labelSql: String,
-      iters: Int, lrNum: Long, passthrough: Seq[String] = Nil): String = {
-    val m = featSql.size
-    val featCols = (passthrough ++ featSql.zipWithIndex
-      .map { case (f, j) => s"($f) AS f$j" }).mkString(",\n    ")
-    def wRefs(t: Int): Seq[String] =
-      (0 until m).map(j => if (t == 0) "0" else s"w$t.w$j")
-    val iterCtes = (1 to iters).map { t =>
-      val prev = t - 1
-      val z = zSql(wRefs(prev), (0 until m).map(j => s"f$j"))
-      val p = sigmoidSql(z)
-      // outer CAST: DuckDB sum(BIGINT) widens to HUGEINT
-      val grads = (0 until m).map(j =>
-        s"CAST(sum(CAST(round((($p) - y) * f$j * ${Scale.toDouble}) " +
-          s"AS BIGINT)) AS BIGINT) AS g$j").mkString(",\n    ")
-      val src =
-        if (prev == 0) "feats"
-        else s"feats CROSS JOIN w$prev"
-      val ws = (0 until m).map(j =>
-        s"CAST(${wRefs(prev)(j)} - (($lrNum * g$prev$t.g$j) // n.n) " +
-          s"AS BIGINT) AS w$j").mkString(",\n    ")
-      s"""g$prev$t AS (
-         |  SELECT
-         |    $grads
-         |  FROM $src),
-         |w$t AS (
-         |  SELECT
-         |    $ws
-         |  FROM g$prev$t CROSS JOIN n${if (prev == 0) ""
-            else s" CROSS JOIN w$prev"})""".stripMargin
-    }.mkString(",\n")
-    s"""feats AS (
-       |  SELECT
-       |    $featCols,
-       |    ($labelSql) AS y
-       |  FROM $fromTable),
-       |n AS (SELECT count(*) AS n FROM feats),
-       |$iterCtes""".stripMargin
-  }
-
-  /** Scoring expression over `feats CROSS JOIN w<iters>` — the σ of the
-    * final-iteration weights, same fold order as [[score]]. */
-  def scoreSql(iters: Int, m: Int): String =
-    sigmoidSql(zSql((0 until m).map(j => s"w$iters.w$j"),
-      (0 until m).map(j => s"f$j")))
 }

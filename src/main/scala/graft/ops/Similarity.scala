@@ -77,23 +77,6 @@ object Similarity {
     bruteForceTopK(candidates.drop("__sig", "__qsig"), idCol, vecCol, query, k)
   }
 
-  /** Portable twin of [[lshTopK]]: signatures from [[portablePlanes]],
-    * the query's signature computed driver-side with the same
-    * left-to-right double dot — so an SQL oracle reproduces the probe set
-    * and the re-rank exactly. */
-  def lshTopKPortable(
-      df: DataFrame, idCol: String, vecCol: String,
-      query: Array[Double], k: Int,
-      numPlanes: Int = 16, probeBits: Int = 6, dim: Int = 64): DataFrame = {
-    val planes = portablePlanes(numPlanes, dim)
-    val querySig = portableQuerySignature(query, planes)
-    val candidates = df
-      .withColumn("__sig", portableSignature(col(vecCol), planes))
-      .filter(bit_count(col("__sig").bitwiseXOR(lit(querySig))) <= probeBits)
-      .drop("__sig")
-    bruteForceTopK(candidates, idCol, vecCol, query, k)
-  }
-
   /** Exact cosine near-duplicate pairs — the all-pairs VERIFICATION
     * baseline (O(n²); use [[cosineDupPairs]] at scale). Deliberately not
     * in the shipped query catalog: it exists to validate the banded-LSH
@@ -129,39 +112,6 @@ object Similarity {
       (Portable.h60(s"p_${i}_$j") % Portable.P).toDouble / Portable.P * 2.0 - 1.0))
   }
 
-  /** Signature from explicit plane literals: bit i = (v · w_i ≥ 0). One
-    * codegen'd dot product per plane. */
-  /** Driver-side signature of a query vector under [[portablePlanes]] —
-    * the same left-to-right double dot the column form computes, so a
-    * probe filter built from it matches [[portableSignature]] exactly. */
-  def portableQuerySignature(query: Array[Double],
-      planes: Array[Array[Double]]): Long =
-    planes.zipWithIndex.map { case (p, i) =>
-      var s = 0.0
-      var j = 0
-      while (j < math.min(p.length, query.length)) {
-        s += query(j) * p(j); j += 1
-      }
-      if (s >= 0) 1L << i else 0L
-    }.reduce(_ | _)
-
-  def portableSignature(vec: Column, planes: Array[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      when(dot(vec, vecLit(p)) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-
-  /** Portable twin of [[cosineDupPairs]]: same banded plan, but
-    * hyperplanes come from [[portablePlanes]] so a SQL oracle reproduces
-    * the candidate set (and hence the verified pairs) exactly. `dim` is
-    * the embedding dimensionality (plane literals are driver-side). */
-  def cosineDupPairsPortable(
-      df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      numPlanes: Int = 16, bands: Int = 8, dim: Int = 64): DataFrame = {
-    val planes = portablePlanes(numPlanes, dim)
-    bandedDupPairs(df, idCol, vecCol, threshold, numPlanes, bands,
-      portableSignature(_, planes))
-  }
-
   /** Embedding-cosine near-duplicate pairs via banded hyperplane LSH +
     * exact cosine verify. The signature's `numPlanes` bits are split into
     * `bands`; vectors sharing any band are candidates (an equi-join on the
@@ -171,12 +121,11 @@ object Similarity {
   def cosineDupPairs(
       df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, numPlanes: Int = 16, bands: Int = 8): DataFrame =
-    bandedDupPairs(df, idCol, vecCol, threshold, numPlanes, bands,
-      hyperplaneSignature(_, numPlanes))
+    bandedDupPairs(df, idCol, vecCol, threshold, numPlanes, bands)
 
   private def bandedDupPairs(
       df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      numPlanes: Int, bands: Int, signature: Column => Column): DataFrame = {
+      numPlanes: Int, bands: Int): DataFrame = {
     // bitsPer=0 would mask every band key to 0 — all rows collide in all
     // bands and the banded join degenerates to the all-pairs cross join
     require(bands > 0 && numPlanes % bands == 0,
@@ -192,7 +141,7 @@ object Similarity {
     // materializing the vector payload and re-reading it as rows.
     val sigs = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
       sqrt(dot(col(vecCol), col(vecCol))).as("nrm"),
-      signature(col(vecCol)).as("sig"))
+      hyperplaneSignature(col(vecCol), numPlanes).as("sig"))
     // Band join on (id, band-key) ONLY — a pair colliding in several bands
     // would otherwise drag its vectors through the join once per band and
     // pay the verification dot product per collision; dedup to one row

@@ -264,8 +264,7 @@ object CdcStream {
       else stage.columns
         .find(c => c != Cdc.OffsetColumn && c != Cdc.OperationColumn).toSeq
     // R5 applies only when the batch's data columns exactly match the
-    // live table's, by name and type (the BucketedCatalog partition
-    // column is layout, not data): parquet append doesn't widen the read
+    // live table's, by name and type: parquet append doesn't widen the read
     // schema, so a schema change (D4 add/drop column, D5 int → bigint)
     // must go through the merge rewrite — appended INT64 files in an
     // INT32 table fail every later read. The reference likewise migrates
@@ -275,9 +274,8 @@ object CdcStream {
     val skip = job.skipMerge &&
       catalog.exists(cfg.targetSchema, cfg.targetTable) && {
         def types(s: StructType) = s.fields.map(f => f.name -> f.dataType).toMap
-        val tgt = types(catalog.load(cfg.targetSchema, cfg.targetTable).schema) -
-          graft.warehouse.BucketedCatalog.BucketCol
-        types(CdcMerge.insertable(stage).schema) == tgt
+        types(CdcMerge.insertable(stage).schema) ==
+          types(catalog.load(cfg.targetSchema, cfg.targetTable).schema)
       } && catalog.claimAppend(cfg.targetSchema, cfg.targetTable,
         s"${job.schemaId}-${job.startOffset}-${job.endOffset}")
     // copytarget: the write into the live table (with phase breakdown

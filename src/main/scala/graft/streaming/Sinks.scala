@@ -17,8 +17,10 @@ object NdjsonGzSink {
       maskVersion: Option[String] = None): String =
     (Seq(root, group, topic) ++ maskVersion.toSeq).mkString("/")
 
+  /** Replaces `dir`: a batch replayed under its batch id rewrites its
+    * objects instead of adding a second copy beside them. */
   def write(df: DataFrame, dir: String): Unit =
-    df.write.mode(SaveMode.Append)
+    df.write.mode(SaveMode.Overwrite)
       .option("compression", "gzip")
       .json(dir)
 

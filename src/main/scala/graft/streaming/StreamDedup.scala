@@ -16,12 +16,10 @@ import org.apache.spark.sql.DataFrame
   *
   *  - against-all-history dedup keeps one entry per distinct key
   *    forever — unboundable as stream state, so it runs as
-  *    `foreachBatch` + [[graft.ops.Dedup.incremental]] over a PK-bucketed
-  *    corpus store ([[graft.warehouse.BucketedCatalog]]): the anti-join
-  *    partition-prunes to the micro-batch's buckets and the key corpus is
-  *    ALSO a queryable table, at the cost of a store probe that grows
-  *    with corpus size. [[bloomGatedBatch]] puts a bloom fast path in
-  *    front of that probe.
+  *    `foreachBatch` + [[graft.ops.Dedup.incremental]] over a corpus
+  *    store: the key corpus is ALSO a queryable table, at the cost of a
+  *    store probe that grows with corpus size. [[bloomGatedBatch]] puts a
+  *    bloom fast path in front of that probe.
   */
 object StreamDedup {
 

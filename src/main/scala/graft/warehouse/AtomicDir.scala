@@ -3,7 +3,7 @@ package graft.warehouse
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The ONE copy of the crash-windowed directory-swap protocol (the
-  * three table stores, StreamStore and DailyRollup all swap through it):
+  * two file table stores, StreamStore and DailyRollup all swap through it):
   * replace a table directory via two renames —
   * target aside to `<target>__old`, source in, trash dropped last — so
   * every crash point leaves either the old table at `target` or the

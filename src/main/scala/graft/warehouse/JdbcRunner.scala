@@ -10,7 +10,7 @@ import java.sql.Connection
   *
   * Deliberately driver-side and tiny: statements come from [[Ddl]] /
   * [[SchemaDiff]]; Spark never sees this path (the Spark-native target is
-  * [[ParquetCatalog]]/[[BucketedCatalog]]). The embedded-Derby spec runs
+  * [[ParquetCatalog]]/[[MergeOnReadCatalog]]). The embedded-Derby spec runs
   * the full D3→D7 lifecycle through it.
   */
 object JdbcRunner {

@@ -135,10 +135,29 @@ final class JdbcWarehouse(
       pks: Seq[String]): Unit =
     insertInto(schema, table, df)
 
-  /** No record is kept here yet: a replayed creates-only batch is
-    * inserted again. */
+  /** Claims live in one table in the target schema, keyed by (table,
+    * range); a claim is inserted before the append writes a row, so a
+    * replayed range finds its claim and merges instead. Only the newest
+    * [[AppendLog.Keep]] claims of a table stay, as in [[AppendLog]]. */
   override def claimAppend(schema: String, table: String,
-      range: String): Boolean = true
+      range: String): Boolean = withConn { c =>
+    val claims = qt(schema, "graft_append_claims")
+    JdbcRunner.executeIgnoring(c, s"CREATE TABLE $claims (" +
+      s"${q("tbl")} VARCHAR(256) NOT NULL, ${q("rng")} VARCHAR(256) NOT NULL, " +
+      s"${q("seq")} BIGINT NOT NULL, PRIMARY KEY (${q("tbl")}, ${q("rng")}))")
+    def str(s: String) = "'" + s.replace("'", "''") + "'"
+    val ofTable = s"${q("tbl")} = ${str(table)}"
+    val st = c.createStatement()
+    val claimed = try st.executeQuery(
+      s"SELECT 1 FROM $claims WHERE $ofTable AND ${q("rng")} = ${str(range)}").next()
+    finally st.close()
+    if (!claimed) JdbcRunner.inTransaction(c, Seq(
+      s"INSERT INTO $claims SELECT ${str(table)}, ${str(range)}, " +
+        s"COALESCE(MAX(${q("seq")}), 0) + 1 FROM $claims WHERE $ofTable",
+      s"DELETE FROM $claims WHERE $ofTable AND ${q("seq")} <= " +
+        s"(SELECT MAX(${q("seq")}) FROM $claims WHERE $ofTable) - ${AppendLog.Keep}"))
+    !claimed
+  }
 
   private def targetColumns(schema: String, table: String): Seq[String] =
     withConn { c =>

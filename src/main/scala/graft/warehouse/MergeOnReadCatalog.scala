@@ -10,12 +10,10 @@ import org.apache.spark.sql.functions._
 /** Merge-on-read table store: O(micro-batch) writes per trigger, the
   * resident-stream answer at 100 TB.
   *
-  * [[ParquetCatalog]] rewrites the WHOLE target per merge and
-  * [[BucketedCatalog]] rewrites the affected buckets — but a CDC batch of
-  * uniformly-hashed keys touches every bucket, so for the common
-  * uniform-key stream BOTH rewrite O(|target|) per trigger. This store
-  * never rewrites the target on the hot path at all: a merge dedupes the
-  * batch and appends it as an immutable delta directory, and conflict
+  * [[ParquetCatalog]] rewrites the WHOLE target per merge, O(|target|)
+  * per trigger whatever the batch's keys. This store never rewrites the
+  * target on the hot path at all: a merge dedupes the batch and appends
+  * it as an immutable delta directory, and conflict
   * resolution (last-writer-wins per PK, DELETE drops the row) moves to
   * read time — the same trade transactional lake formats call
   * merge-on-read, and the shape the reference's staging-table COPY

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Scan-level evidence that the declarative plans keep Catalyst's free
   * optimizations: predicates reach the parquet reader as PushedFilters
   * and projections prune ReadSchema — at 100 TB these decide how much of
@@ -32,15 +30,5 @@ class PushdownSpec extends SparkSpec {
     assert(readSchema.contains("l_orderkey") &&
       readSchema.contains("l_quantity"), readSchema)
     assert(!readSchema.contains("l_extendedprice"), readSchema)
-  }
-
-  test("bucketed-store scan prunes partitions by bucket filter") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pp").toString
-    import spark.implicits._
-    val cat = new graft.warehouse.BucketedCatalog(spark, tmp, nBuckets = 8)
-    cat.save("s", "t", (1 to 50).map(i => (i, s"v$i")).toDF("pk", "v"), Seq("pk"))
-    val plan = cat.load("s", "t").filter(col("bucket") === 3)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan)
   }
 }

@@ -107,6 +107,23 @@ class BatcherLoaderSpec extends SparkSpec {
       .collect().sorted.toSeq == Seq("1", "2"))
   }
 
+  test("a replayed batch rewrites its NDJSON directory: one copy of the " +
+      "objects, the same batchBytes") {
+    val out = tmp()
+    val batch = toDf(Seq(10L -> create(1, "ada", 6807), 11L -> update(1, "ada", "eva")))
+    def objects(dir: String) = new java.io.File(dir).listFiles
+      .count(_.getName.endsWith(".json.gz"))
+    val first = Batcher.processBatch(batch, 0L, fetcher, cfg, out).head
+    val n = objects(first.s3Path)
+    assert(n > 0)
+    // the stream died before the batch's commit and runs it again
+    val replay = Batcher.processBatch(batch, 0L, fetcher, cfg, out).head
+    assert(replay.s3Path == first.s3Path)
+    assert(objects(replay.s3Path) == n)
+    assert(replay.batchBytes == first.batchBytes)
+    assert(NdjsonGzSink.read(spark, replay.s3Path).count() == 2)
+  }
+
   test("job-count guard: one single-schema Batcher.processBatch runs 3 " +
       "Spark jobs") {
     // header checkpoint + stage checkpoint + the NDJSON write; a re-added

@@ -489,19 +489,6 @@ class CdcStreamSpec extends SparkSpec {
     assert(rows.head == (("2", "ada"))) // last writer by offset wins
   }
 
-  test("pipeline runs against the bucketed store (TableStore plug)") {
-    val cat = new graft.warehouse.BucketedCatalog(spark, tmp(), nBuckets = 4)
-    CdcStream.processBatch(
-      toDf(Seq(10L -> create(1, "ada", 6807), 11L -> create(2, "bob", 0))),
-      fetcher, cat, cfg)
-    CdcStream.processBatch(
-      toDf(Seq(12L -> update(1, "ada", "eva"), 13L -> delete(2, "bob"))),
-      fetcher, cat, cfg)
-    assert(cat.load("inventory", "users")
-      .select("id", "name").as[(String, String)].collect().toMap ==
-      Map("1" -> "eva"))
-  }
-
   test("pipeline runs against the merge-on-read store, crossing a compaction") {
     val cat = new graft.warehouse.MergeOnReadCatalog(spark, tmp(),
       compactEvery = 2)

@@ -8,17 +8,25 @@ import perfbench.{Events, Gen}
   * [[Gen]] histories run through both paths into both stores, and the
   * landed table must be the model's last-writer-wins table, masked under
   * the rules the table was built with. Each history is two or three
-  * batches of a few hundred messages; replays model at-least-once
+  * batches of a few hundred messages, or one history of 900 cut into two
+  * to four batches at seeded offsets; replays model at-least-once
   * delivery of the batch just loaded. */
 class SinkModelSpec extends SparkSpec {
   import SinkFixture._
 
   /** A generated history: its batches, the order they are loaded in
-    * (a repeated index is a replay), and whether the table ends with
-    * schema v2's column. */
+    * (a repeated index is a replay), whether the table ends with schema
+    * v2's column, and the events the table must be the model of (the
+    * batches, unless they are slices of one history). */
   private case class History(batches: IndexedSeq[Events], order: Seq[Int],
-      v2: Boolean = false)
+      v2: Boolean = false, model: Seq[Events] = Nil)
   private def inOrder(batches: Events*) = History(batches.toIndexedSeq, batches.indices)
+
+  /** Events `from until until` of `ev`, as their own batch. */
+  private def slice(ev: Events, from: Int, until: Int) = new Events(
+    ev.offset(from), ev.keys.slice(from, until), ev.values.slice(from, until),
+    ev.kinds.slice(from, until), ev.ids.slice(from, until),
+    ev.rows.slice(from, until), ev.versions.slice(from, until))
 
   private case class Behaviour(name: String, history: Long => History)
 
@@ -49,6 +57,20 @@ class SinkModelSpec extends SparkSpec {
       val src = new Gen.Source(seed, Gen.Uniform)
       History(IndexedSeq(src.events(300), src.events(200, onlyCreates = true)),
         Seq(0, 1, 1))
+    }),
+    Behaviour("one history cut at random batch boundaries", { seed =>
+      // 1–3 cuts: one on the v1 → v2 change or between a delete and its
+      // tombstone, the others anywhere
+      val rnd = new SplittableRandom(seed)
+      val v2From = 300 + rnd.nextInt(300)
+      val whole = new Gen.Source(seed, Gen.Uniform).events(900, v2From = v2From)
+      val deletes = (0 until whole.size - 1).filter(whole.kinds(_) == Gen.Delete)
+      val edge = if (rnd.nextBoolean()) v2From else deletes(rnd.nextInt(deletes.size)) + 1
+      val cuts = (edge +: Seq.fill(rnd.nextInt(3))(1 + rnd.nextInt(whole.size - 1)))
+        .distinct.sorted
+      val bounds = 0 +: cuts :+ whole.size
+      val slices = bounds.zip(bounds.tail).map { case (a, b) => slice(whole, a, b) }
+      History(slices.toIndexedSeq, slices.indices, v2 = true, model = Seq(whole))
     }))
 
   /** Each path by name, made afresh per history (the staged one writes
@@ -63,8 +85,10 @@ class SinkModelSpec extends SparkSpec {
         val h = b.history(seed)
         val (via, store) = (p(), s.make(spark, tmp("sink-model")))
         h.order.foreach(i => via.load(spark, frames(spark, h.batches(i)), i, store, cfg()))
-        val chk = check(store.load(Schema, Table), h.batches, v2 = h.v2)
-        assert(chk.mismatches == 0, s"seed $seed order ${h.order}: ${chk.notes}")
+        val model = if (h.model.nonEmpty) h.model else h.batches
+        val chk = check(store.load(Schema, Table), model, v2 = h.v2)
+        assert(chk.mismatches == 0, s"seed $seed order ${h.order} sizes " +
+          s"${h.batches.map(_.size)}: ${chk.notes}")
       }
     }
 

@@ -124,6 +124,22 @@ class JdbcWarehouseSpec extends SparkSpec with BeforeAndAfterAll {
     assert(emails("1").isEmpty) // pre-migration row reads NULL
   }
 
+  test("a creates-only batch replayed through CdcStream.processBatch lands " +
+      "its rows once") {
+    val cat = store
+    val replayCfg = cfg.copy(targetTable = "users_replayed")
+    CdcStream.processBatch(toDf(Seq(30L -> create(1, "ada", 6807))),
+      fetcher, cat, replayCfg)
+    val creates = toDf(Seq(31L -> create(2, "bob", 0), 32L -> create(3, "cyd", 1)))
+    assert(CdcStream.processBatch(creates, fetcher, cat, replayCfg).head.skipMerge)
+    // the stream died after the append, before the batch's commit: the
+    // replay finds the batch's claim and merges instead of appending
+    val replay = CdcStream.processBatch(creates, fetcher, cat, replayCfg)
+    assert(cat.load("inventory", "users_replayed").select("id").as[String]
+      .collect().sorted.toSeq == Seq("1", "2", "3"))
+    assert(!replay.head.skipMerge)
+  }
+
   test("merge transaction rolls back wholesale on failure: " +
       "delete-common is undone when the insert fails") {
     val cat = store
